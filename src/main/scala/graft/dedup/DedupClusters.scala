@@ -39,6 +39,9 @@ object DedupClusters {
     * PAIR, where component = min id reachable. Isolated docs never
     * enter the graph (callers left-join and default to self —
     * [[deduplicate]] does exactly that).
+    *
+    * `maxRounds` is a budget of propagation HOPS. Hops run two per job,
+    * so an odd budget is rounded up to the next even number.
     */
   def components(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
     // Symmetric edge list from ONE scan of the pair relation (explode,
@@ -110,8 +113,8 @@ object DedupClusters {
         }
         round += 2
       }
-      require(converged, s"label propagation did not converge in $maxRounds rounds " +
-        "(component diameter exceeds the budget — raise maxRounds)")
+      require(converged, s"label propagation did not converge in $round hops " +
+        s"(maxRounds = $maxRounds; component diameter exceeds the budget — raise maxRounds)")
       // hand back an owned, lineage-free relation so every cached round
       // (and the edge list) can be dropped here instead of leaking past
       // the call

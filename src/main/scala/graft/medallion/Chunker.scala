@@ -3,6 +3,8 @@ package graft.medallion
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 /** Chunked ingestion producer (reference `flows/landing.py:27-53`):
   * splits a CSV into ≤`maxBytes` chunks, each chunk re-prefixed with the
   * header line, then delivers chunks to the landing layer in buffered
@@ -60,7 +62,10 @@ object Chunker {
 
   /** Firehose-style delivery: concatenate chunks in order into batch
     * objects of ≤ bufferBytes (≥1 chunk each) under `landingDir`,
-    * named deterministically for replayable tests.
+    * named deterministically for replayable tests. Numbering continues
+    * after the highest `part-NNNNN.csv` already in the dir: a second
+    * delivery must neither overwrite the first nor reuse a name the
+    * streaming file source has already seen.
     */
   def deliver(
       chunks: Seq[String],
@@ -80,8 +85,14 @@ object Chunker {
     }
     val last = cur.result()
     if (last.nonEmpty) batches += last
+    val Part = """part-(\d+)\.csv""".r
+    val listing = Files.list(dir)
+    val first =
+      try listing.iterator().asScala.map(_.getFileName.toString)
+        .collect { case Part(n) => n.toInt + 1 }.maxOption.getOrElse(0)
+      finally listing.close()
     batches.result().zipWithIndex.map { case (batch, i) =>
-      val p = dir.resolve(f"part-$i%05d.csv")
+      val p = dir.resolve(f"part-${first + i}%05d.csv")
       Files.write(p, batch.mkString.getBytes(UTF_8))
       p
     }

@@ -17,11 +17,9 @@ import org.apache.spark.sql.types.StructType
   * anchoring the kernel itself.
   *
   * ==Replay contract==
-  * The serving log is partitioned by micro-batch
-  * (`batch_id=N` dirs); the probe is a pure function of (immutable
-  * code index, immutable corpus, batch), so a redelivered batch
-  * overwrites its own partition with identical rows — idempotent
-  * without any marker protocol (nothing else mutates; contrast
+  * The serving log is one [[BatchSink]] partition per micro-batch; the
+  * probe is a pure function of (immutable code index, immutable corpus,
+  * batch), so no marker protocol is needed (contrast
   * [[CurationStream]], whose index APPEND needs sealing).
   *
   * ==Scale shape==
@@ -50,36 +48,28 @@ object AnnServeStream {
     // micro-batch — callers that want per-delivery serving batches
     // (and the batch-partitioned log that goes with them) set it
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    reader.parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        serveBatch(batch, batchId, indexDir, corpus, predicate,
-          outDir, k, candidates)
-      }
-      .start()
+    BatchSink.start(reader.parquet(inDir), trigger, checkpointDir)(
+      serveBatch(_, _, indexDir, corpus, predicate, outDir, k, candidates))
   }
 
   /** One micro-batch of the serving loop (exposed for direct batch use
-    * and the spec): filtered probe + exact rerank, written to the
-    * batch's own partition. Pure in its inputs — see the replay
-    * contract above.
+    * and the spec): filtered probe + exact rerank, published as the
+    * batch's own partition.
     */
   def serveBatch(
       batch: DataFrame, batchId: Long, indexDir: String,
       corpus: DataFrame, predicate: Column, outDir: String,
       k: Int, candidates: Int): Unit = {
     if (batch.isEmpty) return
-    graft.similarity.BinaryAnn
-      .filteredHammingTopKFromIndex(indexDir, corpus, batch, predicate,
-        k, candidates)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    BatchSink.Partitions.publish(
+      graft.similarity.BinaryAnn.filteredHammingTopKFromIndex(
+        indexDir, corpus, batch, predicate, k, candidates),
+      outDir, batchId)
   }
 
   /** The accumulated serving log (all batches), batch_id recovered
     * from the partition path.
     */
   def servingLog(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("basePath", outDir).parquet(s"$outDir/batch_id=*")
+    spark.read.parquet(outDir)
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,9 +17,8 @@ import org.apache.spark.sql.types.StructType
   * state, deletes included.
   *
   * ==Replay contract==
-  * The [[Scd2Stream]] versioned-snapshot chain: batch N reads immutable
-  * `snap_(N+1)` and overwrites only `snap_(N+2)`, so a crashed and
-  * replayed batch is a no-op. Within a batch, multiple ops on one key
+  * A [[BatchSink]] snapshot chain: batch N reads version N+1 and
+  * publishes version N+2. Within a batch, multiple ops on one key
   * resolve by highest `seq` (ties: D wins over U/I — a delete-then-
   * reinsert producer must bump seq), so batch apply is
   * order-insensitive across partitions.
@@ -35,13 +33,11 @@ import org.apache.spark.sql.types.StructType
   */
 object CdcStream {
 
-  private def snapDir(mirrorDir: String, v: Int): String = f"$mirrorDir/snap_$v%05d"
-
   /** Bootstrap the mirror chain: the initial (key, value) state as
-    * `snap_00001`.
+    * version 1.
     */
   def init(snapshot: DataFrame, mirrorDir: String): Unit =
-    snapshot.write.mode("overwrite").parquet(snapDir(mirrorDir, 1))
+    BatchSink.Snapshots.advance(snapshot, mirrorDir, 1)
 
   /** One micro-batch apply (exposed for tests). `delta` columns:
     * (op, key, value, seq).
@@ -49,8 +45,8 @@ object CdcStream {
   def applyBatch(delta: DataFrame, batchId: Long, mirrorDir: String,
       key: String, value: String): Unit = {
     val spark = delta.sparkSession
-    val version = batchId.toInt + 2
-    val mirror = spark.read.parquet(snapDir(mirrorDir, version - 1))
+    val version = batchId + 2
+    val mirror = BatchSink.readSnapshot(spark, mirrorDir, version - 1)
     // pin the batch (streaming sources are not re-readable inside
     // foreachBatch) and compact to one op per key: highest seq wins,
     // delete beats upsert at equal seq
@@ -60,35 +56,13 @@ object CdcStream {
           when(col("op") === "D", 0).otherwise(1), col("op"))))
       .filter(col("rn") === 1)
       .select(col(key), col("op"), col(value).as("new_value"))
-    mirror
-      .join(compacted, Seq(key), "full_outer")
-      .filter(col("op").isNull || col("op") =!= "D")
-      .select(col(key),
-        when(col("op").isNull, col(value)).otherwise(col("new_value")).as(value))
-      .write.mode("overwrite").parquet(snapDir(mirrorDir, version))
-    pruneSnapshots(spark, mirrorDir, keep = KeepSnapshots)
-  }
-
-  /** Trailing snapshots kept by [[applyBatch]]. */
-  val KeepSnapshots: Int = 4
-
-  /** Delete all but the trailing `keep` snapshots (numeric order —
-    * the %05d padding overflows at version 100000 where a name sort
-    * would reap the newest). Safe: every snapshot is the FULL mirror,
-    * and only the latest uncommitted batch can replay under a
-    * Structured Streaming checkpoint (it reads the snapshot one below
-    * its own). Without this a long-running CDC mirror accumulates one
-    * full table copy PER BATCH.
-    */
-  def pruneSnapshots(spark: SparkSession, mirrorDir: String, keep: Int): Unit = {
-    val p = new HPath(mirrorDir)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("snap_\\d+"))
-      .sortBy(_.getPath.getName.stripPrefix("snap_").toLong)
-      .dropRight(keep)
-      .foreach(s => fs.delete(s.getPath, true))
+    BatchSink.Snapshots.advance(
+      mirror
+        .join(compacted, Seq(key), "full_outer")
+        .filter(col("op").isNull || col("op") =!= "D")
+        .select(col(key),
+          when(col("op").isNull, col(value)).otherwise(col("new_value")).as(value)),
+      mirrorDir, version)
   }
 
   /** Start the changelog → mirror stream against an [[init]]-
@@ -97,27 +71,10 @@ object CdcStream {
   def start(spark: SparkSession, inDir: String, schema: StructType,
       mirrorDir: String, checkpointDir: String, key: String, value: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, mirrorDir, key, value)
-      }
-      .start()
-
-  /** Highest snapshot version present in the chain. */
-  def currentVersion(spark: SparkSession, mirrorDir: String): Int = {
-    val p = new HPath(mirrorDir)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("snap_") => n.drop(5).toInt }
-      .maxOption.getOrElse(0)
-  }
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(applyBatch(_, _, mirrorDir, key, value))
 
   /** The current mirror state. */
   def readCurrent(spark: SparkSession, mirrorDir: String): DataFrame =
-    spark.read.parquet(snapDir(mirrorDir, currentVersion(spark, mirrorDir)))
+    BatchSink.readSnapshot(spark, mirrorDir)
 }

@@ -24,38 +24,33 @@ import graft.similarity.Similarity
   * self-pair replay signal).
   *
   * ==Exactly-once accounting==
-  * `foreachBatch` replays a micro-batch after a crash, so the sinks
-  * are made replay-safe rather than transactional:
-  *  - the corpus append writes to a per-batch partition dir
-  *    (`<corpusDir>/batch_id=N`) with overwrite — a replayed batch
-  *    overwrites its own partition, never duplicating rows;
-  *  - the index append is guarded by a per-batch COMMIT MARKER
-  *    (`<indexDir>/_append_commits/batch_id=N`), written only after
-  *    the append's parquet jobs all finish. Marker present ⇒ the
-  *    whole batch completed ⇒ replay is a full no-op. Marker absent ⇒
-  *    the previous attempt may have died ANYWHERE — including mid-way
-  *    through the index append's two parquet jobs — so the replay
-  *    recomputes with the batch's OWN possibly-partial prior append
-  *    excluded from the pair view: it sees exactly the pre-batch
-  *    index, reproduces the original survivors, overwrites its sink
-  *    partitions with identical rows, and re-runs the append. A
-  *    re-run append can duplicate this batch's (sid, sh) / band rows
-  *    in the index — harmless by design: verification collapses
-  *    duplicate pairs, and duplicate band rows only nudge the
-  *    width-cap degrade earlier (degrade, never corruption).
+  * The corpus rows are a [[BatchSink]] partition per batch. The index
+  * append is not: it adds rows to the shared index, so it is guarded by
+  * a per-batch COMMIT MARKER (`<indexDir>/_append_commits`), written
+  * only after the append's parquet jobs all finish. Marker present ⇒
+  * the whole batch completed ⇒ replay is a full no-op. Marker absent ⇒
+  * the previous attempt may have died ANYWHERE — including mid-way
+  * through the index append's two parquet jobs — so the replay
+  * recomputes with the batch's OWN possibly-partial prior append
+  * excluded from the pair view: it sees exactly the pre-batch index,
+  * reproduces the original survivors, and re-runs the append. A re-run
+  * append can duplicate this batch's (sid, sh) / band rows in the
+  * index — harmless by design: verification collapses duplicate pairs,
+  * and duplicate band rows only nudge the width-cap degrade earlier
+  * (degrade, never corruption).
   * The earlier self-collision replay signal could NOT survive a crash
   * inside the append: a partially-appended batch saw only a SUBSET of
   * itself self-collide, dropped those records from the replayed sinks,
   * and lost them from the curated outputs forever.
   *
   * "The batch's own prior append" is decided by a per-batch ids
-  * LEDGER (`<indexDir>/_append_ids/batch_id=N`, the survivors' ids,
-  * written — fully — BEFORE the index append starts): a self-collided
-  * id in batch N's own ledger is batch N's crashed append (keep); a
-  * self-collided id NOT in it is a CROSS-BATCH REDELIVERY — an
-  * at-least-once upstream delivered a record whose id an earlier
-  * batch (or the day-0 corpus) already committed — and is dropped,
-  * exactly like the standalone self-collision signal. The ordering
+  * LEDGER (a [[BatchSink]] partition under `<indexDir>/_append_ids`,
+  * the survivors' ids, published BEFORE the index append starts): a
+  * self-collided id in batch N's own ledger is batch N's crashed
+  * append (keep); a self-collided id NOT in it is a CROSS-BATCH
+  * REDELIVERY — an at-least-once upstream delivered a record whose id
+  * an earlier batch (or the day-0 corpus) already committed — and is
+  * dropped, exactly like the standalone self-collision signal. The ordering
   * makes the ledger sound: an own survivor can only self-collide
   * after the append began, and by then its ledger entry exists; a
   * redelivered id is dropped before survivor resolution on the first
@@ -118,14 +113,8 @@ object CorpusStream {
       indexDir: String, corpusDir: String, checkpointDir: String,
       backend: Backend = MinHashText(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupAndAppend(batch, batchId, indexDir, corpusDir, backend)
-      }
-      .start()
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(dedupAndAppend(_, _, indexDir, corpusDir, backend))
 
   /** One micro-batch of the curation loop (exposed for direct batch use
     * and tests). See class doc for the replay-safety contract.
@@ -137,63 +126,40 @@ object CorpusStream {
     if (appendCommitted(batch.sparkSession, indexDir, batchId)) return
     val survivors = dedupBatch(batch, indexDir, backend, replayOfBatch = Some(batchId))
     if (!survivors.isEmpty) {
-      survivors.write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
+      BatchSink.Partitions.publish(survivors, corpusDir, batchId)
       writeAppendLedger(survivors.select(col(backend.idCol)), indexDir, batchId)
       backend.appendToIndex(survivors, indexDir)
     }
     markAppendCommitted(batch.sparkSession, indexDir, batchId)
   }
 
-  private def appendMarker(indexDir: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(f"$indexDir/_append_commits/batch_id=$batchId%05d")
+  private def commitsRoot(indexDir: String) = s"$indexDir/_append_commits"
 
-  private def ledgerDir(indexDir: String, batchId: Long) =
-    f"$indexDir/_append_ids/batch_id=$batchId%05d"
+  private def ledgerRoot(indexDir: String) = s"$indexDir/_append_ids"
 
   /** Record the ids batch `batchId` is about to append to the index —
     * MUST complete before the append starts (see class doc: the ledger
     * is what lets an unsealed replay tell its own crashed append from a
-    * cross-batch redelivery). Overwrite ⇒ a replayed write is
-    * idempotent. One partition is read back per replay (O(1), never a
-    * history scan); entries are tiny id lists and can be GC'd together
-    * with their batch's commit marker if a retention sweep ever prunes
-    * sealed history.
+    * cross-batch redelivery). One partition is read back per replay
+    * (O(1), never a history scan); entries are tiny id lists and can be
+    * GC'd together with their batch's commit marker if a retention
+    * sweep ever prunes sealed history.
     */
   def writeAppendLedger(ids: DataFrame, indexDir: String, batchId: Long): Unit =
-    ids.write.mode("overwrite").parquet(ledgerDir(indexDir, batchId))
-
-  /** Batch `batchId`'s own ledger entry, if its prior attempt got as
-    * far as COMMITTING one (absent on first attempts and pre-append
-    * crashes). Gated on `_SUCCESS`, not bare dir existence: a crash
-    * mid-ledger-write leaves a dir with only `_temporary` inside, and
-    * reading it would throw schema-inference errors on EVERY replay —
-    * wedging the stream permanently. An uncommitted ledger is safely
-    * equivalent to no ledger: the write precedes the index append, so
-    * no own rows can be in the index yet and no own self-pairs exist
-    * to misclassify.
-    */
-  private def readAppendLedger(
-      spark: SparkSession, indexDir: String, batchId: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerDir(indexDir, batchId))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      Some(spark.read.parquet(p.toString))
-    else None
-  }
+    BatchSink.Partitions.publish(ids, ledgerRoot(indexDir), batchId)
 
   /** Has this batch's index append (and everything before it) fully
     * committed? The replay no-op signal (class doc).
     */
-  def appendCommitted(spark: SparkSession, indexDir: String, batchId: Long): Boolean = {
-    val m = appendMarker(indexDir, batchId)
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
-  }
+  def appendCommitted(spark: SparkSession, indexDir: String, batchId: Long): Boolean =
+    BatchSink.Partitions.find(spark, commitsRoot(indexDir), batchId).nonEmpty
 
   /** Drop the batch's commit marker — called LAST, after every sink and
     * the index append finished.
     */
   def markAppendCommitted(spark: SparkSession, indexDir: String, batchId: Long): Unit = {
-    val m = appendMarker(indexDir, batchId)
+    val m = new org.apache.hadoop.fs.Path(
+      BatchSink.Partitions.dir(commitsRoot(indexDir), batchId))
     val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(m.getParent)
     fs.create(m, true).close()
@@ -231,7 +197,8 @@ object CorpusStream {
     val selfIds = pairs.filter(col("id_a") === col("id_b"))
       .select(col("id_a").as(id)).distinct()
     val redelivered = replayOfBatch
-      .flatMap(n => readAppendLedger(b.sparkSession, indexDir, n))
+      .flatMap(n => BatchSink.Partitions.find(b.sparkSession, ledgerRoot(indexDir), n))
+      .map(b.sparkSession.read.parquet(_))
       .map(own => selfIds.join(own.select(col(id)), Seq(id), "left_anti"))
       .getOrElse(selfIds)
     val fresh = b.join(redelivered, Seq(id), "left_anti")

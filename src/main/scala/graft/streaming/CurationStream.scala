@@ -34,20 +34,13 @@ import graft.dedup.Decontaminate
   * where a production pipeline runs its classifier.
   *
   * ==Exactly-once accounting==
-  * All sinks are per-batch-partition overwrites (`batch_id=N`), the
-  * dedup-index append runs LAST, and the batch is sealed by
-  * [[CorpusStream.markAppendCommitted]]'s per-batch marker. Marker
-  * present ⇒ everything committed ⇒ the replay returns immediately.
-  * Marker absent ⇒ the prior attempt may have died anywhere —
-  * INCLUDING part-way through the index append's two parquet jobs —
-  * so the replay recomputes with the batch's own possibly-partial
-  * prior append excluded from the pair view via the per-batch append
-  * ledger ([[CorpusStream.dedupBatch]] `replayOfBatch`; cross-batch
-  * redeliveries stay dropped): it sees the pre-batch index,
-  * reproduces the identical survivors/cut/packs (pack state reads the
-  * immutable snapshot with batch_id < N), overwrites its own
-  * partitions with identical rows, and re-runs the append (duplicate
-  * index rows are harmless by design — see [[CorpusStream]]).
+  * All sinks are [[BatchSink]] partitions, the dedup-index append runs
+  * LAST, and the batch is sealed by [[CorpusStream]]'s commit-marker
+  * protocol: marker present ⇒ the replay returns immediately; marker
+  * absent ⇒ the replay excludes the batch's own possibly-partial prior
+  * append from the pair view via its append ledger
+  * ([[CorpusStream.dedupBatch]] `replayOfBatch`), so it reproduces the
+  * identical survivors/cut/packs and re-runs the append.
   */
 object CurationStream {
 
@@ -64,15 +57,10 @@ object CurationStream {
       w: Int = Decontaminate.DefaultWindow,
       minScoreMicro: Option[Long] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curateBatch(batch, batchId, dedupIndexDir, evalIndexDir,
-          curatedDir, packDir, stateDir, backend, w, minScoreMicro)
-      }
-      .start()
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(
+      curateBatch(_, _, dedupIndexDir, evalIndexDir, curatedDir, packDir,
+        stateDir, backend, w, minScoreMicro))
 
   /** One micro-batch of the composed loop (exposed for direct batch use
     * and the spec). See class doc for stage order and replay contract.
@@ -118,7 +106,7 @@ object CurationStream {
       val cut = DecontaminateStream
         .cutBatch(survivors, id, textCol, evalIndexDir, w)
         .localCheckpoint(eager = true)
-      cut.write.mode("overwrite").parquet(s"$curatedDir/batch_id=$batchId")
+      BatchSink.Partitions.publish(cut, curatedDir, batchId)
       // stage 3 — pack the DECONTAMINATED text (split keying and token
       // counts follow the final content, the q150→q41 composition)
       PackStream.packAndAppend(

@@ -15,13 +15,9 @@ import graft.dedup.Decontaminate
   * [[CorpusStream]]'s conventions.
   *
   * ==Exactly-once accounting==
-  * `foreachBatch` replays a micro-batch after a crash. The cut is a
-  * PURE function of (batch, stored gram index) and the index is
-  * immutable here — unlike [[CorpusStream]] there is no index append —
-  * so replay safety needs only the per-batch-partition overwrite
-  * (`<outDir>/batch_id=N`): a replayed batch rewrites its own
-  * partition with identical rows, never duplicating or corrupting
-  * neighbors.
+  * The cut is a PURE function of (batch, stored gram index) and the
+  * index is immutable here — unlike [[CorpusStream]] there is no index
+  * append — so a [[BatchSink]] partition per batch is all replay needs.
   */
 object DecontaminateStream {
 
@@ -58,14 +54,8 @@ object DecontaminateStream {
       idCol: String = "doc_id", textCol: String = "text",
       w: Int = Decontaminate.DefaultWindow,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cutAndAppend(batch, batchId, indexDir, outDir, idCol, textCol, w)
-      }
-      .start()
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(cutAndAppend(_, _, indexDir, outDir, idCol, textCol, w))
 
   /** One micro-batch of the loop (exposed for tests). See class doc
     * for the replay contract.
@@ -79,8 +69,7 @@ object DecontaminateStream {
     // re-readability inside foreachBatch, and the cut references the
     // batch through several subtrees
     val b = batch.localCheckpoint(eager = true)
-    cutBatch(b, idCol, textCol, indexDir, w)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    BatchSink.Partitions.publish(cutBatch(b, idCol, textCol, indexDir, w), outDir, batchId)
   }
 
   /** Read the curated training output (all batches; `batch_id` appears

@@ -16,10 +16,8 @@ import org.apache.spark.sql.types.StructType
   *
   * The reference (decile cut points + per-decile counts) is built ONCE
   * from a reference corpus and persisted; batches never touch the
-  * reference corpus again. Replay safety: each batch writes its log
-  * row to a batch-id-keyed path, so a crashed and replayed batch
-  * overwrites its own row (the [[DecontaminateStream]] per-batch-
-  * partition argument).
+  * reference corpus again. Each batch publishes its log row as its own
+  * [[BatchSink]] partition.
   *
   * Scale shape: the reference is 9 cut points + 10 counts (broadcast
   * trivially); scoring a batch is one map-side bucketing + a 10-row
@@ -68,8 +66,8 @@ object DriftStream {
     (nB, psi)
   }
 
-  /** One micro-batch score (exposed for tests): appends the log row at
-    * a batch-keyed path — replay overwrites, never duplicates.
+  /** One micro-batch score (exposed for tests): publishes the log row
+    * as the batch's partition.
     */
   def applyBatch(batch: DataFrame, batchId: Long, refDir: String,
       logDir: String): Unit = {
@@ -79,9 +77,8 @@ object DriftStream {
     val (n, psi) = psiOfBatch(pinned, refDir)
     // batch_id lives in the PATH (partition discovery reads it back):
     // keeping it out of the file sidesteps the duplicate-column clash
-    Seq((n, psi)).toDF("n_docs", "psi_micro")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(f"$logDir/batch_id=$batchId%05d")
+    BatchSink.Partitions.publish(
+      Seq((n, psi)).toDF("n_docs", "psi_micro").coalesce(1), logDir, batchId)
   }
 
   /** Start the document-feed → drift-log stream. */
@@ -91,14 +88,8 @@ object DriftStream {
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    reader.parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, refDir, logDir)
-      }
-      .start()
+    BatchSink.start(reader.parquet(inDir), trigger, checkpointDir)(
+      applyBatch(_, _, refDir, logDir))
   }
 
   /** The accumulated drift log. */

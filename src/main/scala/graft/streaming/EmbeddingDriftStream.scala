@@ -17,10 +17,9 @@ import org.apache.spark.sql.types.StructType
   * The state is per-dimension (Σ quantized value, n) — EXACTLY
   * associative, so each batch writes only its OWN partial sums to a
   * batch-id-keyed path and the readout aggregates partials; there is
-  * no cross-batch read-modify-write at all. Replay safety falls out:
-  * a crashed and replayed batch overwrites its own partition
-  * (the [[DriftStream]]/[[DecontaminateStream]] argument), and the
-  * readout is a pure aggregate over whatever partials exist.
+  * no cross-batch read-modify-write at all: each batch publishes one
+  * [[BatchSink]] partition, and the readout is a pure aggregate over
+  * whatever partials exist.
   *
   * Same micro-quantization and sign-concordant integer division as
   * the batch q205, so a streamed readout is bit-comparable to (and,
@@ -50,12 +49,10 @@ object EmbeddingDriftStream {
     dimSums(vecs).coalesce(1).write.mode("overwrite").parquet(refDir)
 
   /** One micro-batch contribution (exposed for tests): the batch's
-    * per-dim partial sums land at a batch-keyed path — replay
-    * overwrites, never double-counts.
+    * per-dim partial sums, published as its partition.
     */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit =
-    dimSums(batch).coalesce(1).write.mode("overwrite")
-      .parquet(f"$stateDir/batch_id=$batchId%05d")
+    BatchSink.Partitions.publish(dimSums(batch).coalesce(1), stateDir, batchId)
 
   /** Start the vector-feed → drift-state stream. */
   def start(spark: SparkSession, inDir: String, schema: StructType,
@@ -64,14 +61,8 @@ object EmbeddingDriftStream {
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    reader.parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir)
-      }
-      .start()
+    BatchSink.start(reader.parquet(inDir), trigger, checkpointDir)(
+      applyBatch(_, _, stateDir))
   }
 
   /** Compact the accumulated partials into ONE consolidated partial at
@@ -89,7 +80,7 @@ object EmbeddingDriftStream {
       .groupBy(col("dim_idx"))
       .agg(sum(col("sum_q")).as("sum_q"), sum(col("n")).as("n"))
       .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dstDir/batch_id=00000")
+      .parquet(BatchSink.Partitions.dir(dstDir, 0))
 
   /** Current drift readout: reference means (a) vs the accumulated
     * stream means (b), per dimension — the q205 row shape

@@ -30,11 +30,7 @@ import graft.relational.AsofJoin
   * cache the snapshot (`facts.cache()`) for long streams, and
   * pre-filter it to live keys where possible.
   *
-  * ==Replay safety==
-  * `foreachBatch` replays a micro-batch after a crash; the enriched
-  * append writes to a per-batch partition dir
-  * (`<outDir>/batch_id=N`, overwrite) like [[CorpusStream]] — a
-  * replayed batch overwrites its own partition, never duplicating.
+  * Each batch publishes one [[BatchSink]] partition.
   */
 object EnrichStream {
 
@@ -58,19 +54,13 @@ object EnrichStream {
     require(!facts.isStreaming,
       "facts must be a batch DataFrame (stream-static enrichment); " +
         "for stream-stream as-of joins use TemporalJoin")
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        enrichBatch(batch, batchId, facts, key, ts, payload, outDir,
-          tolerance, direction)
-      }
-      .start()
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(
+      enrichBatch(_, _, facts, key, ts, payload, outDir, tolerance, direction))
   }
 
   /** One micro-batch of the enrichment (exposed for tests and direct
-    * batch use). See class doc for the replay-safety contract.
+    * batch use).
     */
   def enrichBatch(
       batch: DataFrame, batchId: Long, facts: DataFrame,
@@ -81,8 +71,9 @@ object EnrichStream {
     // pin the micro-batch — streaming sources don't guarantee
     // re-readability inside foreachBatch
     val b = batch.localCheckpoint(eager = true)
-    AsofJoin.asofJoin(b, facts, key, ts, payload, tolerance, direction)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    BatchSink.Partitions.publish(
+      AsofJoin.asofJoin(b, facts, key, ts, payload, tolerance, direction),
+      outDir, batchId)
   }
 
   /** Read the enriched table (all batches; `batch_id` appears as a

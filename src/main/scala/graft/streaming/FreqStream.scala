@@ -23,11 +23,9 @@ import graft.dedup.MinHashLSH
   * candidate-sized, not stream-sized.
   *
   * ==Replay safety==
-  * `foreachBatch` replays a micro-batch after a crash; each batch
-  * writes its partials to its OWN partition dir
-  * (`countsDir/batch_id=N`) with overwrite — a replayed batch
-  * overwrites its own partials with identical content, never
-  * double-counting. Empty batches write nothing.
+  * Each batch publishes its partials as its own [[BatchSink]]
+  * partition, so a replay never double-counts. Empty batches write
+  * nothing.
   *
   * ==100 TB shape==
   * Per-batch partials are bounded by the batch's vocabulary (not the
@@ -51,20 +49,14 @@ object FreqStream {
       .filter(col("sh") =!= "")
       .groupBy(col("sid").as("source"), col("sh").as("w"))
       .agg(count(lit(1)).as("c"))
-    counts.write.mode("overwrite").parquet(s"$countsDir/batch_id=$batchId")
+    BatchSink.Partitions.publish(counts, countsDir, batchId)
   }
 
   def start(spark: SparkSession, inDir: String, countsDir: String,
             checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        countAndAppend(batch, batchId, countsDir)
-      }
-      .start()
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(countAndAppend(_, _, countsDir))
 
   /** Merged partial counts at (source, w) grain — the maintained view. */
   def mergedCounts(spark: SparkSession, countsDir: String): DataFrame =
@@ -96,7 +88,7 @@ object FreqStream {
     val staging = countsDir + ".compact-staging"
     mergedCounts(spark, countsDir)
       .select(col("source"), col("w"), col("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$staging/batch_id=0")
+      .coalesce(1).write.mode("overwrite").parquet(BatchSink.Partitions.dir(staging, 0))
     graft.medallion.Maintenance.replaceDir(spark, staging, countsDir)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -44,17 +44,13 @@ object LandingStream {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val s = Option(schema).getOrElse(inferLandingSchema(spark, lake.landing(dataset)))
     val staging = stagingDir(lake, dataset)
-    spark.readStream
-      .option("header", "true")
-      .schema(s)
-      .csv(lake.landing(dataset))
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"${lake.root}/_checkpoints/$dataset")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ColumnNormalizer(batch).write.mode("append").parquet(staging)
-      }
-      .start()
+    // an append, not a BatchSink partition: finalizeBronze's anti-join
+    // already absorbs a replayed batch's rows
+    BatchSink.start(
+      spark.readStream.option("header", "true").schema(s).csv(lake.landing(dataset)),
+      trigger, s"${lake.root}/_checkpoints/$dataset") { (batch, _) =>
+      ColumnNormalizer(batch).write.mode("append").parquet(staging)
+    }
   }
 
   /** Staging→bronze dedup, INCREMENTAL: only rows staged since the last

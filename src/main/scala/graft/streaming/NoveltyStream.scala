@@ -24,13 +24,10 @@ import graft.dedup.MinHashLSH
   * an intake monitor reports what was new AT ARRIVAL.
   *
   * ==Exactly-once accounting==
-  * `foreachBatch` replays a micro-batch after a crash. Both writes are
-  * deterministic per-batch partitions (`batch_id=N`): the novelty rows
-  * are a pure function of (batch, min-merged index) — a replayed
-  * batch's grams are already in the index with the SAME owner ids, so
-  * the min-merge is idempotent and the recomputed rows are identical;
-  * the index partition holds exactly the grams whose merged owner is a
-  * batch document, which is replay-stable for the same reason.
+  * Both writes are [[BatchSink]] partitions. A replay that finds the
+  * monitor partition published but not the index one recomputes from
+  * the same index (its own grams are not in it yet), so the index
+  * partition it publishes is the one the first attempt would have.
   */
 object NoveltyStream {
 
@@ -40,7 +37,8 @@ object NoveltyStream {
     * partitions (empty frame when nothing has been indexed yet).
     */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    // Hadoop FS probe, not java.io.File (see PackStream.readState).
+    // Hadoop FS probe, not java.io.File: the index may live on
+    // hdfs:// or s3a://, where a local-File exists() is always false
     val path = new org.apache.hadoop.fs.Path(gramsPath(indexDir))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) {
@@ -59,16 +57,21 @@ object NoveltyStream {
   def noveltyBatch(
       batch: DataFrame, idCol: String, textCol: String,
       indexDir: String): DataFrame = {
-    val sh = MinHashLSH.shingleRows(
+    val sh = grams(batch, idCol, textCol)
+    novelty(sh, mergedOwners(batch.sparkSession, sh, indexDir), idCol)
+  }
+
+  private def grams(batch: DataFrame, idCol: String, textCol: String): DataFrame =
+    MinHashLSH.shingleRows(
       batch.select(col(idCol), col(textCol)), idCol, textCol, n = 3).distinct()
-    val merged = mergedOwners(batch.sparkSession, sh, indexDir)
-    sh.join(merged, Seq("sh"))
+
+  private def novelty(sh: DataFrame, merged: DataFrame, idCol: String): DataFrame =
+    sh.join(merged.select(col("sh"), col("first_id")), Seq("sh"))
       .groupBy(col("sid").as(idCol))
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("first_id") === col("sid"), 1L).otherwise(0L))
           .as("n_novel"))
       .withColumn("novelty_micro", expr("(n_novel * 1000000) div n_grams"))
-  }
 
   /** Per batch gram: min(batch first occurrence, stored owner). */
   private def mergedOwners(
@@ -87,14 +90,8 @@ object NoveltyStream {
       indexDir: String, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreAndAppend(batch, batchId, indexDir, outDir, idCol, textCol)
-      }
-      .start()
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(scoreAndAppend(_, _, indexDir, outDir, idCol, textCol))
 
   /** One micro-batch of the loop (exposed for tests). See class doc
     * for the replay contract.
@@ -107,24 +104,18 @@ object NoveltyStream {
     // writes — streaming sources don't guarantee re-readability inside
     // foreachBatch
     val b = batch.localCheckpoint(eager = true)
-    val sh = MinHashLSH.shingleRows(
-      b.select(col(idCol), col(textCol)), idCol, textCol, n = 3).distinct()
+    val sh = grams(b, idCol, textCol)
     // pin the merge once: novelty rows and the index partition must see
     // the SAME owner view even if the underlying index dir changes
     val merged = mergedOwners(b.sparkSession, sh, indexDir)
       .localCheckpoint(eager = true)
-    sh.join(merged.select(col("sh"), col("first_id")), Seq("sh"))
-      .groupBy(col("sid").as(idCol))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("first_id") === col("sid"), 1L).otherwise(0L))
-          .as("n_novel"))
-      .withColumn("novelty_micro", expr("(n_novel * 1000000) div n_grams"))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    // grams this batch owns after the merge: new grams, plus replayed
-    // ones whose stored owner IS the batch occurrence
-    merged.filter(col("s_first").isNull || col("b_first") <= col("s_first"))
-      .select(col("sh"), col("first_id"))
-      .write.mode("overwrite").parquet(s"${gramsPath(indexDir)}/batch_id=$batchId")
+    BatchSink.Partitions.publish(novelty(sh, merged, idCol), outDir, batchId)
+    // grams this batch owns after the merge: new grams, plus ones whose
+    // stored owner IS the batch occurrence
+    BatchSink.Partitions.publish(
+      merged.filter(col("s_first").isNull || col("b_first") <= col("s_first"))
+        .select(col("sh"), col("first_id")),
+      gramsPath(indexDir), batchId)
   }
 
   /** Read the novelty monitor output (all batches; `batch_id` appears

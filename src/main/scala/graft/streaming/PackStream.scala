@@ -16,13 +16,10 @@ import org.apache.spark.sql.types.StructType
   * (PackStreamSpec pins the rollup equality).
   *
   * ==State==
-  * One long per split: the running token cum. Persisted as VERSIONED
-  * snapshots (`state/batch_id=N` = the cum AFTER batch N, the
-  * CdcStream discipline): processing batch N reads the latest
-  * snapshot with batch_id < N, so a crash-replayed batch recomputes
-  * from exactly the state it saw the first time and both writes
-  * (doc-grain packs, state snapshot) overwrite their own partitions
-  * with identical rows.
+  * One long per split: the running token cum, carried forward in full.
+  * It is a [[BatchSink]] chain of partitions (entry N = the cum AFTER
+  * batch N): batch N reads the newest entry below N, so a replay
+  * recomputes from exactly the state it saw the first time.
   */
 object PackStream {
 
@@ -33,39 +30,25 @@ object PackStream {
     "cast(((locate(substring(md5(text), 1, 1), '0123456789abcdef') - 1) * 16" +
       " + (locate(substring(md5(text), 2, 1), '0123456789abcdef') - 1)) as bigint)")
 
-  /** Latest per-split cum snapshot strictly BEFORE `batchId` (empty
+  /** Per-split cum after the newest batch before `batchId` (empty
     * frame when no prior state exists).
     */
-  def readState(spark: SparkSession, stateDir: String, batchId: Long): DataFrame = {
-    // Hadoop FS probe, not java.io.File: state may live on hdfs://s3a://
-    // where a local-File exists() is always false and prior state would
-    // silently read as empty (the CdcStream.currentVersion discipline).
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("split", "cum0")
-    } else {
-      spark.read.parquet(stateDir)
-        .filter(col("batch_id").cast("long") < batchId)
-        .groupBy(col("split"))
-        .agg(max_by(col("cum"), col("batch_id").cast("long")).as("cum0"))
+  def readState(spark: SparkSession, stateDir: String, batchId: Long): DataFrame =
+    BatchSink.Partitions.latest(spark, stateDir, batchId - 1) match {
+      case Some((_, dir)) =>
+        spark.read.parquet(dir).select(col("split"), col("cum").as("cum0"))
+      case None =>
+        import spark.implicits._
+        Seq.empty[(String, Long)].toDF("split", "cum0")
     }
-  }
 
   /** Start the landing→packed-corpus stream. */
   def start(
       spark: SparkSession, inDir: String, schema: StructType,
       stateDir: String, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packAndAppend(batch, batchId, stateDir, outDir)
-      }
-      .start()
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(packAndAppend(_, _, stateDir, outDir))
 
   /** One micro-batch of the loop (exposed for tests). See class doc
     * for the replay contract.
@@ -86,49 +69,27 @@ object PackStream {
       .localCheckpoint(eager = true)
     val w = Window.partitionBy(col("split")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    assigned
-      .withColumn("bcum", sum(col("n_tokens")).over(w))
-      .join(state, Seq("split"), "left")
-      .withColumn("cum", coalesce(col("cum0"), lit(0L)) + col("bcum"))
-      // q41's assignment rule, operand-for-operand: a doc belongs to the
-      // pack its START position falls into
-      .withColumn("pack_id",
-        floor((col("cum") - col("n_tokens")) / lit(Budget.toDouble)).cast("long"))
-      .select(col("split"), col("doc_id"), col("n_tokens"), col("pack_id"))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    BatchSink.Partitions.publish(
+      assigned
+        .withColumn("bcum", sum(col("n_tokens")).over(w))
+        .join(state, Seq("split"), "left")
+        .withColumn("cum", coalesce(col("cum0"), lit(0L)) + col("bcum"))
+        // q41's assignment rule, operand-for-operand: a doc belongs to
+        // the pack its START position falls into
+        .withColumn("pack_id",
+          floor((col("cum") - col("n_tokens")) / lit(Budget.toDouble)).cast("long"))
+        .select(col("split"), col("doc_id"), col("n_tokens"), col("pack_id")),
+      outDir, batchId)
     // snapshot AFTER this batch: prior cum plus this batch's per-split
     // totals, untouched splits carried forward
     val touched = assigned.groupBy(col("split"))
       .agg(sum(col("n_tokens")).as("add"))
-    state.join(touched, Seq("split"), "full_outer")
-      .select(col("split"),
-        (coalesce(col("cum0"), lit(0L)) + coalesce(col("add"), lit(0L)))
-          .as("cum"))
-      .write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-    pruneState(b.sparkSession, stateDir, keep = KeepSnapshots)
-  }
-
-  /** Trailing state snapshots kept by [[packAndAppend]]. */
-  val KeepSnapshots: Int = 4
-
-  /** Delete all but the trailing `keep` state snapshots (numeric
-    * batch-id order — dirs are written unpadded). Safe: each snapshot
-    * is the FULL per-split cum (untouched splits carried forward), so
-    * [[readState]]'s `max_by` needs only the latest snapshot below the
-    * replaying batch, and only the latest uncommitted batch can replay
-    * under a Structured Streaming checkpoint. Without this a
-    * long-running stream re-reads O(batches) small snapshot files in
-    * EVERY micro-batch's readState.
-    */
-  def pruneState(spark: SparkSession, stateDir: String, keep: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("batch_id=\\d+"))
-      .sortBy(_.getPath.getName.stripPrefix("batch_id=").toLong)
-      .dropRight(keep)
-      .foreach(s => fs.delete(s.getPath, true))
+    BatchSink.Partitions.advance(
+      state.join(touched, Seq("split"), "full_outer")
+        .select(col("split"),
+          (coalesce(col("cum0"), lit(0L)) + coalesce(col("add"), lit(0L)))
+            .as("cum")),
+      stateDir, batchId)
   }
 
   /** Doc-grain packed output (all batches; `batch_id` rides along as a

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -14,19 +13,13 @@ import graft.relational.Scd2
   * dimension table" shape a lakehouse format provides, rebuilt on
   * plain parquet.
   *
-  * ==Versioned snapshots and exactly-once==
-  * Each micro-batch `N` reads snapshot `snap_(N+1)` (written by its
-  * predecessor; `snap_1` is [[init]]'s bootstrap) and writes
-  * `snap_(N+2)` — snapshots are immutable once written, so a crashed
-  * and replayed batch re-reads the SAME immutable input and overwrites
-  * only its own output: replay is a no-op (the [[DecontaminateStream]]
-  * argument, with the per-batch partition generalized to a per-batch
-  * snapshot). Snapshots are pruned to a trailing window
-  * ([[KeepSnapshots]]) — replay only ever needs the one below the
-  * latest batch, and TIME TRAVEL does not need old snapshots at all:
-  * the type-2 history lives in the current snapshot's
-  * valid_from/valid_to rows (any past version is a filter), and q64's
-  * snapshot diff runs against any two versions still in the window.
+  * ==Versioned snapshots==
+  * A [[BatchSink]] snapshot chain: micro-batch `N` reads version N+1
+  * (written by its predecessor; version 1 is [[init]]'s bootstrap) and
+  * publishes version N+2. TIME TRAVEL does not need old snapshots: the
+  * type-2 history lives in the current snapshot's valid_from/valid_to
+  * rows (any past version is a filter), and q64's snapshot diff runs
+  * against any two versions still in the chain's window.
   *
   * Scale shape: dimensions are small against the facts (the SCD
   * premise), so a full snapshot per batch is dimension-sized, not
@@ -37,53 +30,27 @@ import graft.relational.Scd2
   */
 object Scd2Stream {
 
-  private def snapDir(dimDir: String, v: Int): String = f"$dimDir/snap_$v%05d"
-
   /** Bootstrap the history chain: the snapshot's values open at
-    * version 1 in `snap_00001`.
+    * version 1.
     */
   def init(snapshot: DataFrame, dimDir: String, key: String,
       attr: String): Unit =
-    Scd2.init(snapshot, key, attr, version = 1)
-      .write.mode("overwrite").parquet(snapDir(dimDir, 1))
+    BatchSink.Snapshots.advance(Scd2.init(snapshot, key, attr, version = 1), dimDir, 1)
 
-  /** One micro-batch MERGE (exposed for tests). See class doc for the
-    * replay contract; `version = batchId + 2` keys both the snapshot
-    * chain and the emitted valid_from/valid_to stamps.
+  /** One micro-batch MERGE (exposed for tests). `version = batchId + 2`
+    * keys both the snapshot chain and the emitted valid_from/valid_to
+    * stamps.
     */
   def applyBatch(changes: DataFrame, batchId: Long, dimDir: String,
       key: String, attr: String): Unit = {
     val spark = changes.sparkSession
     val version = batchId.toInt + 2
-    val history = spark.read.parquet(snapDir(dimDir, version - 1))
+    val history = BatchSink.readSnapshot(spark, dimDir, version - 1)
     // pin the micro-batch: streaming sources don't guarantee
     // re-readability inside foreachBatch, and the merge references the
     // batch through two join branches
     val b = changes.localCheckpoint(eager = true)
-    Scd2.merge(history, b, key, attr, version)
-      .write.mode("overwrite").parquet(snapDir(dimDir, version))
-    pruneSnapshots(spark, dimDir, keep = KeepSnapshots)
-  }
-
-  /** Trailing snapshots kept by [[applyBatch]]. */
-  val KeepSnapshots: Int = 4
-
-  /** Delete all but the trailing `keep` snapshots (numeric order, the
-    * CdcStream rule). Safe here for the same reason: each snapshot is
-    * the FULL dimension history — valid_from/valid_to rows included —
-    * so the latest snapshot alone serves every as-of question, and
-    * only the latest uncommitted batch can replay (it reads the
-    * snapshot one below its own).
-    */
-  def pruneSnapshots(spark: SparkSession, dimDir: String, keep: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dimDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("snap_\\d+"))
-      .sortBy(_.getPath.getName.stripPrefix("snap_").toLong)
-      .dropRight(keep)
-      .foreach(s => fs.delete(s.getPath, true))
+    BatchSink.Snapshots.advance(Scd2.merge(history, b, key, attr, version), dimDir, version)
   }
 
   /** Start the change-feed → dimension-history stream against an
@@ -92,27 +59,10 @@ object Scd2Stream {
   def start(spark: SparkSession, inDir: String, schema: StructType,
       dimDir: String, checkpointDir: String, key: String, attr: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, dimDir, key, attr)
-      }
-      .start()
-
-  /** Highest snapshot version present in the chain. */
-  def currentVersion(spark: SparkSession, dimDir: String): Int = {
-    val p = new HPath(dimDir)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("snap_") => n.drop(5).toInt }
-      .maxOption.getOrElse(0)
-  }
+    BatchSink.start(spark.readStream.schema(schema).parquet(inDir), trigger,
+        checkpointDir)(applyBatch(_, _, dimDir, key, attr))
 
   /** The current (highest-version) history snapshot. */
   def readCurrent(spark: SparkSession, dimDir: String): DataFrame =
-    spark.read.parquet(snapDir(dimDir, currentVersion(spark, dimDir)))
+    BatchSink.readSnapshot(spark, dimDir)
 }

@@ -20,89 +20,40 @@ import graft.medallion.SchemaEvolution
   * grain).
   *
   * ==Target layout==
-  * The evolving table is a PINNED-NAME snapshot chain (the
-  * CdcStream/WatermarkAuditStream versioned discipline): batch N
-  * reads `snap_N` (immutable — the state before it) and overwrites
-  * `snap_(N+1)` with the full aligned content. Pinned names make
-  * replay idempotence structural — a crash-replayed batch recomputes
-  * from exactly the snapshot it saw and overwrites ITS OWN output
-  * with identical rows, never double-appending (the failure mode an
-  * append-per-batch target cannot avoid without row-level deletes).
-  * Widening is metadata-only here because every version is a full
-  * snapshot (the [[SchemaEvolution.commitEvolved]] argument); prior
-  * snapshots keep their original schema and stay readable.
+  * The evolving table is a [[BatchSink]] snapshot chain: batch N reads
+  * the newest version at or below N (the state before it) and publishes
+  * version N+1 with the full aligned content, so a replay never
+  * double-appends (the failure mode an append-per-batch target cannot
+  * avoid without row-level deletes). Widening is metadata-only here
+  * because every version is a full snapshot (the
+  * [[SchemaEvolution.commitEvolved]] argument); prior snapshots keep
+  * their original schema and stay readable.
   *
   * Scale shape: the chain rewrites O(table) per batch — right for a
   * bronze dimension/control table fed by an evolving producer (the
   * reference's Iceberg bronze is exactly that); a fact-scale stream
   * keeps [[LandingStream]]'s declared-schema fast path and evolves on
-  * a schedule via [[SchemaEvolution.appendEvolved]] instead. Snapshot
-  * retention mirrors [[PackStream]]: all but the trailing
-  * [[KeepSnapshots]] are pruned in-loop.
+  * a schedule via [[SchemaEvolution.appendEvolved]] instead.
   */
 object SchemaEvolveStream {
 
-  /** Trailing snapshots kept (replay needs only `snap_N` of the latest
-    * uncommitted batch; margin beyond that).
-    */
-  val KeepSnapshots: Int = 4
-
-  private def snapDir(tableDir: String, v: Long): String = f"$tableDir/snap_$v%05d"
-
-  /** Latest complete snapshot at or below version `v` (a crashed
-    * partial write lacks `_SUCCESS` and is skipped — it is about to be
-    * overwritten by its batch's replay anyway).
-    */
-  private def latestSnapAt(
-      spark: SparkSession, tableDir: String, v: Long): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("snap_\\d+"))
-      .map(s => (s.getPath.getName.stripPrefix("snap_").toLong, s.getPath))
-      .filter { case (n, dir) =>
-        n <= v && fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-      }
-      .sortBy(_._1).lastOption.map(_._2.toString)
-  }
-
   /** One micro-batch: merge-read the batch's own files (their true
     * schema), reconcile against the pre-batch snapshot, write the full
-    * aligned union as `snap_(batchId+1)`. Exposed for tests.
+    * aligned union as version batchId+1. Exposed for tests.
     */
   def applyBatch(spark: SparkSession, paths: Seq[String], batchId: Long,
       tableDir: String): Unit = {
     if (paths.isEmpty) return
     val batch = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    val next = latestSnapAt(spark, tableDir, batchId) match {
+    val next = BatchSink.Snapshots.latest(spark, tableDir, batchId) match {
       case None => batch
-      case Some(prevDir) =>
+      case Some((_, prevDir)) =>
         val prev = spark.read.parquet(prevDir)
         val target = SchemaEvolution.reconcile(prev.schema, batch.schema)
         SchemaEvolution.align(prev, target)
           .unionByName(SchemaEvolution.align(batch, target))
     }
-    next.write.mode("overwrite").parquet(snapDir(tableDir, batchId + 1))
-    pruneSnapshots(spark, tableDir, KeepSnapshots)
-  }
-
-  /** Delete all but the trailing `keep` snapshots (same argument as
-    * [[PackStream.pruneState]] — only the latest uncommitted batch can
-    * replay, and it reads the snapshot just below itself).
-    */
-  def pruneSnapshots(spark: SparkSession, tableDir: String, keep: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    // numeric sort, not lexicographic: the %05d padding overflows at
-    // batch 100000, where "snap_100000" string-sorts BEFORE
-    // "snap_99999" and a name sort would reap the newest snapshot
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("snap_\\d+"))
-      .sortBy(_.getPath.getName.stripPrefix("snap_").toLong)
-      .dropRight(keep)
-      .foreach(s => fs.delete(s.getPath, true))
+    BatchSink.Snapshots.advance(next, tableDir, batchId + 1)
   }
 
   /** Start the landing→evolving-bronze stream over `inDir`'s parquet
@@ -126,27 +77,17 @@ object SchemaEvolveStream {
       .schema(binaryFileSchema)
       .option("pathGlobFilter", "*.parquet")
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    reader.load(inDir)
-      .select("path")
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (files: DataFrame, batchId: Long) =>
-        // bounded metadata load: one path string per landed file
-        val paths = files.select("path")
-          .collect().map(_.getString(0)).toSeq.sorted
+    // bounded metadata load: one path string per landed file
+    BatchSink.start(reader.load(inDir).select("path"), trigger, checkpointDir) {
+      (files, batchId) =>
+        val paths = files.select("path").collect().map(_.getString(0)).toSeq.sorted
         applyBatch(files.sparkSession, paths, batchId, tableDir)
-      }
-      .start()
+    }
   }
 
-  /** The evolving table's current content (latest complete snapshot).
+  /** The evolving table's current content (latest published snapshot).
     * Fails if no batch has committed yet.
     */
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    latestSnapAt(spark, tableDir, Long.MaxValue) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None => throw new java.io.FileNotFoundException(
-        s"no committed snapshot under $tableDir")
-    }
+    BatchSink.readSnapshot(spark, tableDir)
 }

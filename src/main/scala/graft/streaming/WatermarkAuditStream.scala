@@ -20,11 +20,10 @@ import org.apache.spark.sql.types.StructType
   * same user, so the computation splits exactly at batch boundaries:
   * within the batch a user-partitioned running max (the q211 window),
   * across batches one (user_id, max_ts) state row joined in. State
-  * rides the [[CdcStream]] versioned-snapshot chain — batch N reads
-  * immutable `snap_(N+1)`, overwrites only `snap_(N+2)` — and the
-  * per-type partials land at batch-keyed ledger paths (the
-  * [[DriftStream]] argument), so a crashed and replayed batch is a
-  * no-op on both. Per-type partials aggregate with sum/sum/max/sum —
+  * is a [[BatchSink]] snapshot chain — batch N reads version N+1 and
+  * publishes version N+2 — and the per-type partials are one
+  * [[BatchSink]] ledger partition per batch. Per-type partials
+  * aggregate with sum/sum/max/sum —
   * exactly associative — so the readout is a pure aggregate over the
   * ledger, and for arrival-ordered delivery the streamed report is
   * BIT-IDENTICAL to batch q211 (WatermarkAuditStreamSpec).
@@ -37,12 +36,9 @@ import org.apache.spark.sql.types.StructType
   * ==Retention==
   * Without it, a long-running stream accumulates one snap dir and one
   * ledger partition PER BATCH, and [[currentReport]] re-reads the
-  * whole history — the small-file death at day-N grain. So:
-  * [[applyBatch]] auto-prunes state snapshots to the trailing
-  * [[KeepSnapshots]] (the only replayable batch under a Structured
-  * Streaming checkpoint is the latest uncommitted one, which reads
-  * `snap_(N+1)` — trailing-2 suffices, 4 is margin), and [[compact]]
-  * folds sealed ledger partials into a rollup published through a
+  * whole history — the small-file death at day-N grain. So the state
+  * chain keeps its trailing window, and [[compact]] folds sealed
+  * ledger partials into a rollup published through a
   * [[graft.medallion.Versioned]] pointer (sum/sum/max/sum are
   * associative, so rollup ∪ uncovered partials ≡ all partials). The
   * rollup carries the max batch id it covers; readers take the
@@ -52,16 +48,11 @@ import org.apache.spark.sql.types.StructType
   */
 object WatermarkAuditStream {
 
-  /** Trailing state snapshots kept by [[applyBatch]]. */
-  val KeepSnapshots: Int = 4
-
-  private def snapDir(stateDir: String, v: Int): String = f"$stateDir/snap_$v%05d"
-
   /** Bootstrap an empty state chain. */
   def init(spark: SparkSession, stateDir: String): Unit = {
     import spark.implicits._
-    Seq.empty[(Long, Long)].toDF("user_id", "max_ts_us")
-      .write.mode("overwrite").parquet(snapDir(stateDir, 1))
+    BatchSink.Snapshots.advance(
+      Seq.empty[(Long, Long)].toDF("user_id", "max_ts_us"), stateDir, 1)
   }
 
   /** One micro-batch apply (exposed for tests). `batch` columns:
@@ -70,8 +61,8 @@ object WatermarkAuditStream {
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
       ledgerDir: String): Unit = {
     val spark = batch.sparkSession
-    val version = batchId.toInt + 2
-    val state = spark.read.parquet(snapDir(stateDir, version - 1))
+    val version = batchId + 2
+    val state = BatchSink.readSnapshot(spark, stateDir, version - 1)
       .select(col("user_id"), col("max_ts_us").as("state_max_us"))
     val pinned = batch.localCheckpoint(eager = true)
     val inBatch = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
@@ -84,35 +75,20 @@ object WatermarkAuditStream {
         when(col("prev_max_us") > col("ts_us"), col("prev_max_us") - col("ts_us"))
           .otherwise(0L))
       .localCheckpoint(eager = true)
-    scored.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("lateness_us") > 0, 1L).otherwise(0L)).as("n_out_of_order"),
-        max(col("lateness_us")).as("max_lateness_us"),
-        sum(col("lateness_us")).as("total_lateness_us"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(f"$ledgerDir/batch_id=$batchId%05d")
+    BatchSink.Partitions.publish(
+      scored.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(when(col("lateness_us") > 0, 1L).otherwise(0L)).as("n_out_of_order"),
+          max(col("lateness_us")).as("max_lateness_us"),
+          sum(col("lateness_us")).as("total_lateness_us"))
+        .coalesce(1),
+      ledgerDir, batchId)
     // next state: per-user max over carried state ∪ batch
-    scored.select(col("user_id"), col("ts_us"))
-      .unionByName(state.select(col("user_id"), col("state_max_us").as("ts_us")))
-      .groupBy(col("user_id")).agg(max(col("ts_us")).as("max_ts_us"))
-      .write.mode("overwrite").parquet(snapDir(stateDir, version))
-    pruneState(spark, stateDir, keep = KeepSnapshots)
-  }
-
-  /** Delete all but the trailing `keep` state snapshots. Runs inside
-    * [[applyBatch]]; safe because only the latest uncommitted batch can
-    * replay (class doc).
-    */
-  def pruneState(spark: SparkSession, stateDir: String, keep: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    // numeric sort: the %05d padding overflows at version 100000,
-    // where a lexicographic sort would reap the newest snapshot
-    val snaps = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("snap_\\d+"))
-      .sortBy(_.getPath.getName.stripPrefix("snap_").toLong)
-    snaps.dropRight(keep).foreach(s => fs.delete(s.getPath, true))
+    BatchSink.Snapshots.advance(
+      scored.select(col("user_id"), col("ts_us"))
+        .unionByName(state.select(col("user_id"), col("state_max_us").as("ts_us")))
+        .groupBy(col("user_id")).agg(max(col("ts_us")).as("max_ts_us")),
+      stateDir, version)
   }
 
   private def rollupRoot(ledgerDir: String): String = s"$ledgerDir/_rollup"
@@ -131,45 +107,29 @@ object WatermarkAuditStream {
         .drop("through_batch")))
     } catch { case _: java.io.FileNotFoundException => (-1L, None) }
 
-  /** COMMITTED ledger partition dirs above `through`, by FS listing
-    * (`_SUCCESS` present — a crashed partial write must not be read,
-    * and folding it into the immutable rollup would lose its batch's
-    * events forever once the replayed complete partition is shadowed
-    * by the rollup's coverage; the replay overwrites the partial dir
-    * and commits it properly). Committed zero-row partitions are
-    * included, so compaction also reclaims those.
+  /** Published ledger partitions above `through`. Committed zero-row
+    * partitions are included, so compaction also reclaims those.
     */
   private def partitionsAbove(
-      spark: SparkSession, ledgerDir: String, through: Long): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("batch_id=\\d+"))
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(s => (s.getPath.getName.stripPrefix("batch_id=").toLong, s.getPath))
-      .filter(_._1 > through)
-      .sortBy(_._1)
-  }
+      spark: SparkSession, ledgerDir: String, through: Long): Seq[(Long, String)] =
+    BatchSink.Partitions.list(spark, ledgerDir).filter(_._1 > through)
 
   /** Fold every sealed ledger partial into the rollup and delete the
     * covered partitions. Call from the SAME single-threaded loop that
     * drives `applyBatch`, between triggers — the partial for a batch
     * is final the moment its `applyBatch` returns, and a replay
     * re-writing a covered partition is ignored by readers (they only
-    * see partitions above the rollup's coverage); a compact racing a
-    * concurrent in-flight overwrite is the one schedule the `_SUCCESS`
-    * gate cannot referee. Crash-safe: the rollup publishes through an
-    * atomic [[graft.medallion.Versioned]] pointer BEFORE any partition
-    * is deleted, so every crash point leaves readers a consistent
-    * (rollup, uncovered-partitions) pair.
+    * see partitions above the rollup's coverage). Crash-safe: the
+    * rollup publishes through an atomic [[graft.medallion.Versioned]]
+    * pointer BEFORE any partition is deleted, so every crash point
+    * leaves readers a consistent (rollup, uncovered-partitions) pair.
     */
   def compact(spark: SparkSession, ledgerDir: String): Unit = {
     val (through, rolled) = readRollup(spark, ledgerDir)
     val fresh = partitionsAbove(spark, ledgerDir, through)
     if (fresh.isEmpty) return
     val newThrough = fresh.map(_._1).max
-    val freshRows = spark.read.parquet(fresh.map(_._2.toString): _*)
+    val freshRows = spark.read.parquet(fresh.map(_._2): _*)
     val combined = rolled.fold(freshRows)(_.unionByName(freshRows))
       .groupBy(col("event_type"))
       .agg(sum(col("n_events")).as("n_events"),
@@ -185,7 +145,7 @@ object WatermarkAuditStream {
       combined.unionByName(sentinel).coalesce(1))
     val fs = new org.apache.hadoop.fs.Path(ledgerDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fresh.foreach { case (_, dir) => fs.delete(dir, true) }
+    fresh.foreach { case (_, dir) => fs.delete(new org.apache.hadoop.fs.Path(dir), true) }
   }
 
   /** Start the event-feed → audit stream against an [[init]]-
@@ -198,14 +158,8 @@ object WatermarkAuditStream {
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    reader.parquet(inDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir, ledgerDir)
-      }
-      .start()
+    BatchSink.start(reader.parquet(inDir), trigger, checkpointDir)(
+      applyBatch(_, _, stateDir, ledgerDir))
   }
 
   /** The accumulated per-type report — the q211 row shape: the rollup
@@ -217,7 +171,7 @@ object WatermarkAuditStream {
     val fresh = partitionsAbove(spark, ledgerDir, through)
     val parts =
       if (fresh.isEmpty) None
-      else Some(spark.read.parquet(fresh.map(_._2.toString): _*))
+      else Some(spark.read.parquet(fresh.map(_._2): _*))
     val all = (rolled, parts) match {
       case (Some(r), Some(p)) => r.unionByName(p)
       case (Some(r), None) => r

@@ -53,9 +53,13 @@ class DedupClustersSpec extends SparkTestBase {
 
   test("an exhausted round budget fails loudly instead of returning partial clusters") {
     val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalArgumentException](
-      DedupClusters.components(pairs, maxRounds = 2))
-    assert(e.getMessage.contains("converge"))
+    // an odd budget rounds up to even: 3 runs 4 hops, and says so
+    Seq(2 -> 2, 3 -> 4).foreach { case (budget, hops) =>
+      val e = intercept[IllegalArgumentException](
+        DedupClusters.components(pairs, maxRounds = budget))
+      assert(e.getMessage.contains("converge"))
+      assert(e.getMessage.contains(s"in $hops hops"), e.getMessage)
+    }
   }
 
   test("end-to-end with MinHash pairs: planted near-copies collapse to originals") {

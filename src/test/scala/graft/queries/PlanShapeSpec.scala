@@ -655,8 +655,8 @@ class PlanShapeSpec extends SparkTestBase {
     // size stats, so the bound is exercised deterministically with no
     // data materialized.
     import spark.implicits._
-    val bound = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").toLong *
-      spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").toLong
+    val bound = threshold * spark.conf.get("spark.sql.shuffle.partitions").toLong
     val rows = bound / 8 * 2 // 2× over the local-map bound at 8 B/row
     val big1 = spark.range(rows).toDF("id")
     val big2 = spark.range(rows).withColumnRenamed("id", "id2")
@@ -665,10 +665,13 @@ class PlanShapeSpec extends SparkTestBase {
       s"an over-bound build side must plan SMJ, got:\n" +
         over.linesIterator.filter(_.contains("Join")).mkString("\n"))
     // and the optimization itself stays on: an in-bound, non-broadcastable
-    // build side (> 64 MB broadcast threshold, < the local-map bound,
-    // 3× smaller than the probe side) plans ShuffledHashJoin
-    val build = spark.range(bound / 8 / 16).toDF("id") // bound/16: safely in-bound
-    val probe = spark.range(rows).withColumnRenamed("id", "id2")
+    // build side (> the broadcast threshold, < the local-map bound, 3×
+    // smaller than the probe side) plans ShuffledHashJoin. Halfway
+    // between threshold and bound keeps both margins at any partition
+    // count ≥ 2.
+    val buildBytes = threshold + (bound - threshold) / 2
+    val build = spark.range(buildBytes / 8).toDF("id")
+    val probe = spark.range(buildBytes / 8 * 4).withColumnRenamed("id", "id2")
     val in = plan(build.join(probe, $"id" === $"id2"))
     assert(in.contains("ShuffledHashJoin"),
       s"an in-bound build side should plan SHJ, got:\n" +

@@ -50,7 +50,7 @@ class CdcStreamSpec extends SparkTestBase {
       }
       .start().awaitTermination()
 
-    assert(CdcStream.currentVersion(spark, mir) === 3)
+    assert(BatchSink.currentVersion(spark, mir) === 3)
     assert(state(CdcStream.readCurrent(spark, mir)) ==
       Map(1L -> "ONE", 2L -> "two-again", 3L -> "three", 4L -> "FOUR"))
     // intermediate snapshot: after batch A only
@@ -66,7 +66,7 @@ class CdcStreamSpec extends SparkTestBase {
     CdcStream.applyBatch(d, 0L, mir, "key", "value")
     val afterOnce = state(CdcStream.readCurrent(spark, mir))
     CdcStream.applyBatch(d, 0L, mir, "key", "value") // replay
-    assert(CdcStream.currentVersion(spark, mir) === 2)
+    assert(BatchSink.currentVersion(spark, mir) === 2)
     assert(state(CdcStream.readCurrent(spark, mir)) == afterOnce)
   }
 }

@@ -57,7 +57,7 @@ class Scd2StreamSpec extends SparkTestBase {
     val h2 = Scd2.merge(h1, batchA.toDF("key", "segment"), "key", "segment", 2)
     val h3 = Scd2.merge(h2, batchB.toDF("key", "segment"), "key", "segment", 3)
 
-    assert(Scd2Stream.currentVersion(spark, dim) === 3)
+    assert(BatchSink.currentVersion(spark, dim) === 3)
     assert(rows(Scd2Stream.readCurrent(spark, dim)) === rows(h3))
 
     // the expected history, spelled out: no-ops kept open, closures
@@ -86,7 +86,7 @@ class Scd2StreamSpec extends SparkTestBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snaps = fs.listStatus(new org.apache.hadoop.fs.Path(dim)).toSeq
       .map(_.getPath.getName).filter(_.startsWith("snap_"))
-    assert(snaps.size == Scd2Stream.KeepSnapshots, s"snapshots: $snaps")
+    assert(snaps.size == BatchSink.KeepSnapshots, s"snapshots: $snaps")
     // the full change history is still answerable from the CURRENT
     // snapshot alone: seven closed versions plus the open row
     val hist = Scd2Stream.readCurrent(spark, dim)
@@ -101,7 +101,7 @@ class Scd2StreamSpec extends SparkTestBase {
     Scd2Stream.applyBatch(batchA.toDF("key", "segment"), 0L, dim, "key", "segment")
     val once = rows(Scd2Stream.readCurrent(spark, dim))
     Scd2Stream.applyBatch(batchA.toDF("key", "segment"), 0L, dim, "key", "segment")
-    assert(Scd2Stream.currentVersion(spark, dim) === 2)
+    assert(BatchSink.currentVersion(spark, dim) === 2)
     assert(rows(Scd2Stream.readCurrent(spark, dim)) === once)
   }
 

@@ -109,7 +109,7 @@ class SchemaEvolveStreamSpec extends SparkTestBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snaps = fs.listStatus(new org.apache.hadoop.fs.Path(table)).toSeq
       .map(_.getPath.getName).filter(_.startsWith("snap_"))
-    assert(snaps.size == SchemaEvolveStream.KeepSnapshots, s"snapshots: $snaps")
+    assert(snaps.size == BatchSink.KeepSnapshots, s"snapshots: $snaps")
     // and the surviving content accumulated all seven batches
     assert(SchemaEvolveStream.read(spark, table).count() == 7)
   }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.medallion.{BronzeFlow, Lake, LandingFlow}
+import graft.medallion.{BronzeFlow, Chunker, Lake, LandingFlow}
 
 /** Streaming landing→bronze must produce exactly the batch result
   * (SURVEY §2.9: AvailableNow = batch-equivalent, replayable), and the
@@ -26,6 +26,24 @@ class StreamingSpec extends SparkTestBase {
 
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("a second Chunker delivery into one landing dir keeps the first, and both stream into bronze") {
+    val lake = Lake(Files.createTempDirectory("stream-two-deliveries").toString)
+    val landing = lake.landing("reviews")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, text STRING")
+    def bronzeIds: Set[Int] = spark.read
+      .parquet(LandingStream.runAvailableNow(spark, lake, "reviews", schema))
+      .select("id").collect().map(_.getInt(0)).toSet
+
+    // 12-byte chunks against a 12-byte buffer: one object per chunk
+    val first = Chunker.deliver(Seq("id,text\n1,a\n", "id,text\n2,b\n"), landing, bufferBytes = 12)
+    assert(bronzeIds == Set(1, 2))
+    val second = Chunker.deliver(Seq("id,text\n3,c\n"), landing, bufferBytes = 12)
+    val names = (first ++ second).map(_.getFileName.toString)
+    assert(names == Seq("part-00000.csv", "part-00001.csv", "part-00002.csv"))
+    assert(new java.io.File(landing).list().count(_.endsWith(".csv")) == 3)
+    assert(bronzeIds == Set(1, 2, 3), "the second delivery's rows must reach bronze")
   }
 
   test("declared-schema stream skips the inference scan and lands the same bronze") {

@@ -103,8 +103,8 @@ class WatermarkAuditStreamSpec extends SparkTestBase {
     // state snapshots are auto-pruned to the trailing window
     val snaps = fs.listStatus(new org.apache.hadoop.fs.Path(state)).toSeq
       .map(_.getPath.getName).filter(_.startsWith("snap_"))
-    assert(snaps.size == WatermarkAuditStream.KeepSnapshots,
-      s"expected ${WatermarkAuditStream.KeepSnapshots} snapshots, got $snaps")
+    assert(snaps.size == BatchSink.KeepSnapshots,
+      s"expected ${BatchSink.KeepSnapshots} snapshots, got $snaps")
 
     // a REPLAY of a covered batch re-creates its partition — readers
     // must ignore it (coverage excludes it), not double-count
