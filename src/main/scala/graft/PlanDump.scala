@@ -14,7 +14,7 @@ import graft.core.Sessions
   *
   * Reads SPARK_GRAFT_SF_DIR like Bench. Writes <outDir>/<query>.txt.
   * explain("formatted") plans — note that CONSTRUCTING a query whose
-  * definition contains eager localCheckpoints runs those subtrees as
+  * definition contains eager pins (`Materialize.pin`) runs those subtrees as
   * real Spark jobs over SPARK_GRAFT_SF_DIR during the dump, and the
   * checkpointed subtrees appear only as `Scan ExistingRDD` /
   * LogicalRDD leaves in the emitted plan — an `_after.txt` therefore

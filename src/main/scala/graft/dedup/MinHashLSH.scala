@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.text.TextFunctions
 
 /** MinHash + LSH banding near-duplicate detection, built entirely from
@@ -333,45 +334,26 @@ object MinHashLSH {
     *
     * EAGER: this method runs the full shingle→signature→banding→verify
     * job before returning — the candidate set and the result (both
-    * small by construction) are checkpointed and the shingle cache is
-    * unpersisted deterministically before the method returns, so
-    * repeated calls in a long-lived session never accumulate cache
-    * storage. The intermediate candidates always use `localCheckpoint`
-    * (consumed before return; an executor loss mid-verify fails the
-    * query and the caller re-runs — cheaper than a reliable write per
-    * call). The RESULT is reliably checkpointed when a `sparkContext`
-    * checkpoint dir is configured (its files are deleted under
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`, or clear the
-    * dir yourself); otherwise it is a `localCheckpoint` — fine in
-    * local mode, write it out promptly on a cluster.
+    * small by construction) are pinned ([[graft.core.Materialize]])
+    * and the shingle cache is released before the method returns.
     */
   def nearDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3, k: Int = 128, b: Int = 16,
       maxBucket: Int = DefaultMaxBandBucket): DataFrame = {
-    val sh = shingleRows(docs, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // localCheckpoint by choice, even when a checkpoint dir exists:
-      // the candidate set is consumed before this method returns, and a
-      // reliable checkpoint would add a blocking distributed write per
-      // call whose files outlive their usefulness (Spark only deletes
-      // them under cleanCheckpoints). Cost of the trade: an executor
-      // loss mid-verify fails this query and the caller re-runs it.
-      // The capped band relation checkpoints FIRST (evaluating the
+    Materialize.cached(shingleRows(docs, idCol, textCol, n)) { sh =>
+      // The capped band relation is pinned FIRST (evaluating the
       // bucket-width observation exactly once, and sparing the pair
       // self-join a double signature recompute); drops warn loudly.
       val obs = Observation()
-      val kept = cappedBands(bandedFromShingles(sh, k, b), maxBucket, Some(obs))
-        .localCheckpoint(eager = true)
+      val kept = Materialize.pin(
+        cappedBands(bandedFromShingles(sh, k, b), maxBucket, Some(obs)))
       warnDrops(obs, maxBucket, s"nearDuplicates(n=$n,k=$k,b=$b)")
-      val pairs = pairsFromBands(kept).localCheckpoint(eager = true)
-      // materialize the (small) verified set so the shingle cache can be
-      // released before returning — no reliance on ContextCleaner GC.
-      // kept's checkpoint blocks free with the RDD (ContextCleaner),
-      // like every other localCheckpoint here.
-      materialize(verifyPairs(pairs, sh, threshold))
-    } finally sh.unpersist()
+      val pairs = Materialize.pin(pairsFromBands(kept))
+      // pin the (small) verified set so the shingle cache can be
+      // released before returning
+      Materialize.pin(verifyPairs(pairs, sh, threshold))
+    }
   }
 
   /** Exact-Jaccard verification of candidate `pairs` against an
@@ -451,12 +433,10 @@ object MinHashLSH {
     // distinct: signatures/bands are min-aggregates over the hashed
     // shingles and verification collapses duplicates, so storing each
     // (sid, sh) once is free index compression
-    val sh = shingleRows(docs, idCol, textCol, n).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.cached(shingleRows(docs, idCol, textCol, n).distinct()) { sh =>
       sh.write.mode(mode).parquet(shinglesPath(indexDir))
       bandedFromShingles(sh, k, b).write.mode(mode).parquet(bandsPath(indexDir))
-    } finally sh.unpersist()
+    }
   }
 
   /** Candidate pairs touching the batch: batch×batch (id_a < id_b)
@@ -524,10 +504,9 @@ object MinHashLSH {
       maxBucket: Int = DefaultMaxBandBucket): DataFrame = {
     val bands = spark.read.parquet(bandsPath(indexDir))
     val obs = Observation()
-    val kept = cappedBands(bands, maxBucket, Some(obs))
-      .localCheckpoint(eager = true)
+    val kept = Materialize.pin(cappedBands(bands, maxBucket, Some(obs)))
     warnDrops(obs, maxBucket, s"nearDuplicatesFromIndex($indexDir)")
-    val pairs = pairsFromBands(kept).localCheckpoint(eager = true)
+    val pairs = Materialize.pin(pairsFromBands(kept))
     val candIds = pairs.select(col("id_a").as("sid"))
       .union(pairs.select(col("id_b").as("sid"))).distinct()
     // NO broadcast hint here, unlike the batch-probe path: a corpus-wide
@@ -536,7 +515,7 @@ object MinHashLSH {
     // driver memory; AQE still broadcasts when it actually fits
     val sh = spark.read.parquet(shinglesPath(indexDir))
       .join(candIds, Seq("sid"), "left_semi")
-    materialize(verifyPairs(pairs, sh, threshold))
+    Materialize.pin(verifyPairs(pairs, sh, threshold))
   }
 
   /** Near-duplicate pairs between `batch` and the persisted index at
@@ -554,14 +533,12 @@ object MinHashLSH {
       threshold: Double, n: Int = 3, k: Int = 128, b: Int = 16,
       maxBucket: Int = DefaultMaxBandBucket): DataFrame = {
     val spark = batch.sparkSession
-    val batchSh = shingleRows(batch, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.cached(shingleRows(batch, idCol, textCol, n)) { batchSh =>
       probeAgainst(batchSh, bandedFromShingles(batchSh, k, b),
         spark.read.parquet(shinglesPath(indexDir)),
         spark.read.parquet(bandsPath(indexDir)),
         threshold, maxBucket, s"nearDuplicatesAgainst($indexDir,n=$n,k=$k,b=$b)")
-    } finally batchSh.unpersist()
+    }
   }
 
   /** Incremental near-dup where the BATCH side is itself a persisted
@@ -606,12 +583,11 @@ object MinHashLSH {
       threshold: Double, maxBucket: Int, what: String): DataFrame = {
     val obs = Observation()
     val batchObs = Observation()
-    val batchAnn = cappedBands(batchBands, maxBucket, Some(batchObs),
-        keepSingletons = true)
-      .localCheckpoint(eager = true)
+    val batchAnn = Materialize.pin(cappedBands(batchBands, maxBucket, Some(batchObs),
+        keepSingletons = true))
     warnDrops(batchObs, maxBucket, s"$what batch side")
-    val pairs = incrementalCandidatesAnnotated(corpusBands, batchAnn, maxBucket, Some(obs))
-      .localCheckpoint(eager = true)
+    val pairs = Materialize.pin(
+      incrementalCandidatesAnnotated(corpusBands, batchAnn, maxBucket, Some(obs)))
     warnDrops(obs, maxBucket, s"$what corpus side")
     // verification reads corpus shingles for CANDIDATE docs only: the
     // candidate id set is small by construction, so a broadcast
@@ -620,19 +596,8 @@ object MinHashLSH {
       .union(pairs.select(col("id_b").as("sid"))).distinct()
     val sh = batchSh.union(
       corpusSh.join(broadcast(candIds), Seq("sid"), "left_semi"))
-    materialize(verifyPairs(pairs, sh, threshold))
+    Materialize.pin(verifyPairs(pairs, sh, threshold))
   }
-
-  /** Eagerly cut lineage. With a checkpoint dir configured this is a
-    * reliable checkpoint — the verify join survives executor loss on a
-    * cluster (its files are cleaned per
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`, or by clearing
-    * the dir). Without one it is a `localCheckpoint`: executor-local
-    * blocks, fine in local mode.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
 
   /** [[nearDuplicates]] with the VERIFIED PAIR RELATION persisted under
     * [[graft.core.Warehouse]] (build-once, fingerprint-keyed on the

@@ -135,8 +135,8 @@ object GoldFlow {
     // Reused by two outputs + the brazilian derivation → cache once
     // (allowed improvement over the reference's per-task recompute,
     // SURVEY §4 "Caching / reuse").
-    music.cache(); reviews.cache()
-    try {
+    graft.core.Materialize.cached(music) { music =>
+    graft.core.Materialize.cached(reviews) { reviews =>
       val result = Map.newBuilder[String, String]
       def parts(name: String): Seq[String] = partitionSpec.getOrElse(name, Nil)
       val avgScores = createBandAvgScores(music, reviews)
@@ -149,8 +149,6 @@ object GoldFlow {
       writeGold(createBandAlbumCounts(music), lake.gold("band_album_counts"),
         parts("band_album_counts"), versioned).foreach(result += "band_album_counts" -> _)
       result.result()
-    } finally {
-      music.unpersist(); reviews.unpersist()
-    }
+    }}
   }
 }

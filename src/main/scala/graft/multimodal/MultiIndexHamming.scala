@@ -81,7 +81,7 @@ object MultiIndexHamming {
       maxDist: Int = MaxDistance): DataFrame = {
     require(maxDist <= MaxDistance,
       s"maxDist=$maxDist loses the multi-probe guarantee beyond $MaxDistance")
-    val h = hashes.localCheckpoint(eager = true)
+    val h = graft.core.Materialize.pin(hashes)
     chunked(h, hashCol, probe = true).select(col("chunk_idx"), col("chunk_value"),
         col("media_id").as("id_a"), col(hashCol).as("h_a"))
       .join(chunked(h, hashCol).select(col("chunk_idx"), col("chunk_value"),

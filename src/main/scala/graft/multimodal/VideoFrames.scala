@@ -122,7 +122,7 @@ object VideoFrames {
     */
   def nearDuplicates(media: Dataset[MediaRecord], every: Int = 2,
       maxDist: Int = MaxDistance, minFrac: Double = 0.5): DataFrame = {
-    val frames = framePhashes(media, every).localCheckpoint(eager = true)
+    val frames = graft.core.Materialize.pin(framePhashes(media, every))
     val sizes = frames.groupBy(col("media_id")).agg(count(lit(1)).as("n"))
     // frame-grain candidates through the shared chunk-join core; the
     // sample ordinal rides packed into the frame id
@@ -167,7 +167,7 @@ object VideoFrames {
   def nearDuplicatesAgainst(media: Dataset[MediaRecord], indexDir: String,
       every: Int = 2, maxDist: Int = MaxDistance,
       minFrac: Double = 0.5): DataFrame = {
-    val batch = framePhashes(media, every).localCheckpoint(eager = true)
+    val batch = graft.core.Materialize.pin(framePhashes(media, every))
     val index = media.sparkSession.read.parquet(indexDir)
     val bSizes = batch.groupBy(col("media_id")).agg(count(lit(1)).as("n"))
     val iSizes = index.groupBy(col("media_id")).agg(count(lit(1)).as("n"))

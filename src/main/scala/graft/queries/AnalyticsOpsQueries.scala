@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.streaming.EventStream
 
 /** Multidimensional-report and pipeline operators over the corpus and
@@ -1304,7 +1304,7 @@ object AnalyticsOpsQueries {
       // eager checkpoint: q118 reads baskets three times (item counts +
       // both self-join sides) and q131 twice — without it each consumer
       // re-runs the events scan + per-event JSON parse + two aggregates
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
   }
 
   def q118ItemCooccurrence(s: SparkSession, dir: String): DataFrame = {
@@ -1429,7 +1429,7 @@ object AnalyticsOpsQueries {
     * Scale shape: each iteration is one join of the edge list with the
     * ≤-node-sized rank relation plus one hash aggregate on dst — the
     * standard Pregel-on-relations shape, linear per iteration. The
-    * edge relation (with out-weights) is localCheckpointed ONCE so the
+    * edge relation (with out-weights) is pinned ONCE so the
     * basket self-join isn't recomputed per iteration, and each
     * iteration's rank relation is checkpointed to keep lineage flat
     * (the DedupClusters discipline). Per-user pair volume is bounded
@@ -1446,12 +1446,12 @@ object AnalyticsOpsQueries {
       // eager checkpoint: the symmetric edge union reads pairs twice and
       // the out-weight join reads edges twice — without this the basket
       // self-join would run 4× before withOut's own checkpoint
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val edges = pairs.select(col("item_a").as("src"), col("item_b").as("dst"), col("w"))
       .union(pairs.select(col("item_b").as("src"), col("item_a").as("dst"), col("w")))
     val withOut = edges
       .join(edges.groupBy(col("src")).agg(sum(col("w")).as("outw")), "src")
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val nodes = withOut.select(col("src").as("item")).distinct()
     // the rank relations are deliberately NOT checkpointed: each
     // iteration's pr has exactly ONE consumer (the next iteration) and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.dedup.MinHashLSH
 import graft.streaming.EventStream
 
@@ -198,7 +198,7 @@ object CorpusOpsQueries {
     val tf = tokenRows(docs)
       .groupBy(col("sid").as("doc_id"), col("sh").as("term"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val byDoc = Window.partitionBy(col("doc_id"))
@@ -450,7 +450,7 @@ object CorpusOpsQueries {
     val tf = tokenRows(docs)
       .groupBy(col("sid").as("doc_id"), col("sh").as("term"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     // ≤5-entry term-sorted profile per doc; <4 terms can never share ≥4.
@@ -471,7 +471,7 @@ object CorpusOpsQueries {
           "'term', e.key, 'wm', cast(floor(e.score * 1000 + 0.5) as bigint)))"))
         .as("vec"))
       .filter(size(col("vec")) >= 4)
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val combos = vecs
       .withColumn("drop_i",
         explode(when(size(col("vec")) === 5, sequence(lit(0), lit(4)))
@@ -609,7 +609,7 @@ object CorpusOpsQueries {
         regexp_extract_all(col("nrm"), lit("(?:^| )(?=([^ ]+ [^ ]+))"), lit(1)))).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("c"))
       .filter(!col("g").contains(" ") || col("c") >= 5)
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val uni = grams.filter(!col("g").contains(" ")).select(col("g").as("tok"), col("c"))
     val nTok = uni.agg(sum(col("c")).as("n_tokens"))
     val bi = grams.filter(col("g").contains(" "))
@@ -673,7 +673,7 @@ object CorpusOpsQueries {
       .filter(col("sh") =!= "")
       .groupBy(col("sid").as("source"), col("sh").as("w"))
       .agg(count(lit(1)).as("c_sw"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val srcTot = sw.groupBy(col("source")).agg(sum(col("c_sw")).as("n_s"))
     val wTot = sw.groupBy(col("w")).agg(sum(col("c_sw")).as("c_w"))
     val n = srcTot.agg(sum(col("n_s")).as("n_total"))
@@ -943,7 +943,7 @@ object CorpusOpsQueries {
       // eager checkpoint: the total, the candidate filter and the pick
       // join all read the block relation — the tokenize + vocabulary
       // aggregate behind it must run once, not three times
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val targets = s.range(0, 3).select(
       element_at(array(lit(5000), lit(9000), lit(9900)), col("id").cast("int") + 1)
         .as("p_bps"))
@@ -1621,7 +1621,7 @@ object CorpusOpsQueries {
       .filter(col("sh") =!= "")
       .groupBy(col("sid").as("source"), col("sh").as("w"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val srcTot = sw.groupBy(col("source")).agg(sum(col("o")).as("rt"))
     val wTot = sw.groupBy(col("w")).agg(sum(col("o")).as("ct"))
     val n = srcTot.agg(sum(col("rt")).as("nd"))
@@ -1633,7 +1633,7 @@ object CorpusOpsQueries {
         "cast(floor(((cast(o as double) * nd - cast(rt as double) * ct)" +
           " * (cast(o as double) * nd - cast(rt as double) * ct))" +
           " / (cast(nd as double) * rt * ct) * 1000000 + 0.5) as bigint)"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     scored
       .groupBy(col("source"))
       .agg(graft.functions.TopKStrAgg.topkByStr(

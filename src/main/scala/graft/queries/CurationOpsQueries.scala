@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.dedup.MinHashLSH
 
 /** Corpus-curation analytics beyond the reference's operator set
@@ -415,7 +415,7 @@ object CurationOpsQueries {
         explode(sequence(lit(0), size(col("ws")) - w)).as("i"))
       .select(col("doc_id"), col("i"),
         unhex(md5(array_join(slice(col("ws"), col("i") + 1, lit(w)), " "))).as("h"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val dupH = wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1).select(col("h"))
     val flagged = wins.join(dupH, Seq("h"))
@@ -491,7 +491,7 @@ object CurationOpsQueries {
       // h self-join consume this relation — without it the explode +
       // md5 + distinct subtree runs three times (8 scans in the r21
       // before-plan)
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val sizes = wins.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     val shared = wins.as("a")
       .join(wins.as("b"),
@@ -589,7 +589,7 @@ object CurationOpsQueries {
       // bytes per window row (guide §2.3 narrower types)
       .select(col("doc_id"), col("i"),
         unhex(md5(array_join(slice(col("ws"), col("i") + 1, lit(w)), " "))).as("h"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     // duplicated-window inventory as an AGGREGATE, not a window: the
     // former count + row_number pair shuffled and SORTED every window
     // row by (h, doc_id, i); the aggregate partial-combines map-side,
@@ -603,8 +603,14 @@ object CurationOpsQueries {
     // planned as SortAggregate — a full sort of the window relation,
     // the exact cost this aggregate exists to avoid. Packed-long min
     // is lexicographic-equivalent while doc_id < 2^39 and i < 2^24
-    // (16M words/doc) — far beyond any real corpus shard's bounds.
-    val packed = shiftleft(col("doc_id"), 24) + col("i")
+    // (16M words/doc); past that the long overflows and the wrong
+    // occurrence would silently become canonical, so a row outside the
+    // bound fails the aggregate's own job instead.
+    val packed = when(col("doc_id") < lit(1L << 39) && col("i") < lit(1 << 24),
+        shiftleft(col("doc_id"), 24) + col("i"))
+      .otherwise(raise_error(concat(
+        lit("dedup cut: packed canonical key needs doc_id < 2^39 and i < 2^24, got doc_id="),
+        col("doc_id").cast("string"), lit(", i="), col("i").cast("string"))))
     val dups = wins.groupBy(col("h"))
       .agg(count(lit(1)).as("c"), min(packed).as("m"))
       .filter(col("c") > 1)
@@ -774,7 +780,7 @@ object CurationOpsQueries {
     * words_after_dedup → words_decon_cut → final_text — the
     * per-document attrition ledger of both cuts.
     *
-    * Stage 1 is evaluated once (localCheckpoint — it feeds stage 2's
+    * Stage 1 is evaluated once (pinned — it feeds stage 2's
     * input AND the final ledger join; the q74/q33 eager convention).
     * Docs fully consumed by dedup (kept_text = '') skip stage 2 and
     * report zero decon attrition — '' would otherwise split to a
@@ -794,7 +800,7 @@ object CurationOpsQueries {
     val stage1 = dedupCutOf(train)
       .select(col("doc_id"), col("words_total"),
         col("words_cut").as("words_dedup_cut"), col("kept_text"))
-      .localCheckpoint(eager = true)
+      .transform(Materialize.pin)
     val grams = graft.dedup.Decontaminate.evalGrams(
       docs.filter(col("doc_id") < 200), "doc_id", "text")
     val stage2 = graft.dedup.Decontaminate.cut(
@@ -952,11 +958,11 @@ object CurationOpsQueries {
           .otherwise(concat_ws(" ",
             when(array_join(col("kept"), " ") =!= "", array_join(col("kept"), " ")),
             when(tailCol =!= "", tailCol))).as("text0"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val stage1 = dedupCutOf(stage0.select(col("doc_id"), col("text0").as("text")))
       .select(col("doc_id"), col("words_total").as("words_after_intra"),
         col("words_cut").as("words_dedup_cut"), col("kept_text"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val grams = graft.dedup.Decontaminate.evalGrams(
       docs.filter(col("doc_id") < 200), "doc_id", "text")
     val stage2 = graft.dedup.Decontaminate.cut(
@@ -1145,7 +1151,7 @@ object CurationOpsQueries {
     // sides + the star branch); keyed itself is a cheap map-side
     // explode over the caller's checkpointed doc relation
     val sized = keyed.join(blocks, Seq("bi", "bk"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val inCap = sized.filter(col("bsz") <= maxBlock)
     val a = inCap.select(col("bi"), col("bk"), col("doc_id").as("a_id"),
       col("len").as("a_len"))
@@ -1208,7 +1214,7 @@ object CurationOpsQueries {
     // normalize over the full text is the expensive part and must run
     // once, not once per consumer
     val all = norm.union(variants).withColumn("len", length(col("nt")))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     fuzzyCandidates(all, FuzzyMaxBlock)
       .filter(abs(col("a_len") - col("b_len")) <= 12)
       // dedupe BEFORE attaching text and running the DP: a pair
@@ -1511,7 +1517,7 @@ object CurationOpsQueries {
       // eager checkpoint: the per-doc sizes and BOTH sides of the tile
       // self-join consume this relation (the q86 pattern — without it
       // the split + explode + md5 + distinct subtree runs three times)
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val na = tiles.groupBy(col("doc_id").as("id_a")).agg(count(lit(1)).as("n_a"))
     tiles.select(col("doc_id").as("id_a"), col("h"))
       .join(tiles.select(col("doc_id").as("id_b"), col("h")), "h")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,10 +25,15 @@ object MultimodalQueries {
     * action). Worker threads are created by the submitting thread at
     * call time, so Spark's inheritable thread-locals (job group, job
     * description — what Bench's watchdog cancels by) propagate into
-    * the pool. Result order matches input order; failures rethrow.
+    * the pool. Result order matches input order; the first failure
+    * cancels the other modalities' Spark jobs, then rethrows.
     */
-  private def materializeConcurrently(
-      rel: Seq[(String, () => DataFrame)]): Seq[(String, DataFrame)] = {
+  private[queries] def materializeConcurrently(
+      sc: SparkContext, rel: Seq[(String, () => DataFrame)]): Seq[(String, DataFrame)] = {
+    // one job tag per call, added in each pool thread: a failure
+    // cancels exactly this call's jobs, and the caller's job group
+    // stays as it was (setJobGroup would overwrite it)
+    val tag = s"graft-modality-${java.util.UUID.randomUUID()}"
     // named daemon threads: identifiable in dumps, never block JVM exit
     val tf = new java.util.concurrent.ThreadFactory {
       private val n = new java.util.concurrent.atomic.AtomicInteger()
@@ -39,21 +45,29 @@ object MultimodalQueries {
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(rel.size, tf)
     try {
-      val futs = rel.map { case (m, thunk) =>
-        m -> pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = thunk()
+      val done = new java.util.concurrent.ExecutorCompletionService[DataFrame](pool)
+      val futs = rel.map { case (_, thunk) =>
+        done.submit(new java.util.concurrent.Callable[DataFrame] {
+          override def call(): DataFrame = {
+            sc.addJobTag(tag)
+            sc.setInterruptOnCancel(true)
+            thunk()
+          }
         })
       }
-      try futs.map { case (m, fut) =>
-        m -> (try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-      } catch {
+      // wait in completion order, so a failure is seen when it happens,
+      // not after the modalities listed before it have finished
+      try rel.foreach(_ => done.take().get())
+      catch {
         case e: Throwable =>
-          // one modality failed: cancel the others' in-flight Spark
-          // jobs instead of letting them hold executors past the query
-          futs.foreach(_._2.cancel(true))
-          throw e
+          // one modality failed: interrupt the other threads and cancel
+          // their running Spark jobs (interrupting their tasks) instead
+          // of letting them hold executors past the query
+          futs.foreach(_.cancel(true))
+          sc.cancelJobsWithTag(tag)
+          throw (e match { case ee: java.util.concurrent.ExecutionException => ee.getCause; case _ => e })
       }
+      rel.map(_._1).zip(futs.map(_.get()))
     } finally pool.shutdownNow()
   }
 
@@ -266,7 +280,7 @@ object MultimodalQueries {
     import s.implicits._
     val groups = 8
     graft.dedup.SimHashDedup.ensureRegistered(s)
-    // One eager localCheckpoint per modality: each decode+near-dup
+    // One pin per modality: each decode+near-dup
     // pipeline executes EXACTLY once, its lineage truncates to the
     // materialized pair rows, and everything downstream — the
     // distributed rollup AND the oracle literal capture — reads those
@@ -277,12 +291,12 @@ object MultimodalQueries {
     // test-scale-only oracle capture below.
     def once(df: DataFrame): DataFrame =
       df.select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .localCheckpoint(eager = true)
+        .transform(graft.core.Materialize.pin)
     // the four modality pipelines are independent — materialize them
     // concurrently (guide §2.6: actions are only sequential because
     // the driver calls them sequentially; each pipeline's tail would
     // otherwise leave the other three waiting)
-    val rel = materializeConcurrently(Seq(
+    val rel = materializeConcurrently(s.sparkContext, Seq(
       "text" -> (() => once(graft.dedup.SimHashDedup
         .nearDuplicates(crossmodalTexts(s, groups), "doc_id", "text"))),
       "image" -> (() => once(graft.multimodal.ImagePhash
@@ -411,7 +425,7 @@ object MultimodalQueries {
     * Oracled by q219's literal-injection pattern: the four captured
     * probe-pair lists ride as VALUES and DuckDB recomputes the
     * merge/rollup independently. Each relation is eagerly
-    * localCheckpointed (the q219 discipline): probes decode once, the
+    * pinned (the q219 discipline): probes decode once, the
     * report is a distributed union.
     */
   def q227IncrementalCrossmodal(s: SparkSession, dir: String): DataFrame = {
@@ -445,7 +459,7 @@ object MultimodalQueries {
     }
     def once(df: DataFrame): DataFrame =
       df.select(col("probe_id").cast("long"), col("index_id").cast("long"))
-        .localCheckpoint(eager = true)
+        .transform(graft.core.Materialize.pin)
     // simhash's incremental face also emits within-batch pairs (its
     // CorpusStream contract); the day-2 report keys on batch→corpus
     // edges, so keep cross pairs only (id_a < 1000 ≤ id_b: the stored
@@ -457,7 +471,7 @@ object MultimodalQueries {
       .select(col("id_b").as("probe_id"), col("id_a").as("index_id"))
     // the four index probes are independent — materialize concurrently
     // (guide §2.6; the q219 discipline)
-    val rel = materializeConcurrently(Seq(
+    val rel = materializeConcurrently(s.sparkContext, Seq(
       "text" -> (() => once(textPairs)),
       "image" -> (() => once(graft.multimodal.ImagePhash
         .nearDuplicatesAgainst(imgCorpus.filter(_.media_id >= 1000), imgIdx))),

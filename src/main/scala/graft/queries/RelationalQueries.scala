@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.relational.{AsofJoin, IntervalJoin, RangeJoin}
 
 /** Relational-join queries over the events table — the oracled call
@@ -266,13 +266,13 @@ object RelationalQueries {
     val m = trans
       .join(trans.groupBy(col("from_type")).agg(sum(col("c")).as("rt")),
         "from_type")
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val states = ev.select(col("event_type").as("state")).distinct()
     var pi = states
       .crossJoin(broadcast(states.agg(count(lit(1)).as("n"))))
       .select(col("state"),
         floor(lit(1e9) / col("n") + lit(0.5)).cast("long").as("pn"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     for (_ <- 1 to 3) {
       val contrib = m
         .join(pi.select(col("state").as("from_type"), col("pn")), "from_type")
@@ -284,7 +284,7 @@ object RelationalQueries {
         .join(contrib.select(col("to_type").as("state"), col("mass")),
           Seq("state"), "left")
         .select(col("state"), coalesce(col("mass"), lit(0L)).as("pn"))
-        .localCheckpoint(true)
+        .transform(Materialize.pin)
     }
     pi.select(col("state"), col("pn").as("stat_nano")).orderBy(col("state"))
   }
@@ -1016,7 +1016,7 @@ object RelationalQueries {
     // materialized relation is one narrow row per session
     val f = q102SessionFunnel(s, dir)
       .select(col("t_view"), col("t_click"), col("t_purchase"))
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     // the q137 discrete-quantile convention: smallest delta whose
     // cumulative count reaches ⌈p·n⌉ — pure integer µs, no
     // interpolation to drift between engines (an interpolated

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.dedup.MinHashLSH
 import graft.similarity.{IvfIndex, Similarity}
 
@@ -65,7 +65,7 @@ object RetrievalQueries {
     // the assignment — without it the per-vector nearest-centroid scan
     // runs three times
     val assigned = IvfIndex(cents).assign(planted)  // (vec_id, cell_id, emb)
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val dups = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell_id") === col("b.cell_id") && col("a.vec_id") > col("b.vec_id"))
@@ -187,7 +187,7 @@ object RetrievalQueries {
         Bm25Terms.zipWithIndex.map { case (t, i) =>
           count(when(col("sh") === t, 1)).as(s"tf_$i")
         }: _*)
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val stats = perDoc.agg(
       count(lit(1)).as("n_docs"),
       sum(col("dl")).as("tot_dl") +:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.text.TextFunctions._
 
 /** Driver-verifiable text-analysis queries over `documents`
@@ -252,7 +252,7 @@ object TextQueries {
     // the self-join — pin it so the regex explode over the tripled
     // corpus runs once, not three times
     val sh = shingleRows(corpus, "doc_id", "text", n = 3).distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     jaccardPairsFromShingles(sh)
   }
 
@@ -850,7 +850,7 @@ object TextQueries {
     // join — one shingle pass over the eval side
     val evalGrams = shingleRows(evalSet, "doc_id", "text", n = 8)
       .select(col("sh")).distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val hits = shingleRows(train, "doc_id", "text", n = 8)
       .join(broadcast(evalGrams), Seq("sh"))
       .distinct()
@@ -1106,7 +1106,7 @@ object TextQueries {
         qualityScore(col("text")).as("q"), fingerprint(col("text")).as("fp"))
       .withColumn("lang_ok", col("lang").isin(langs.map(x => x: Any): _*))
       .withColumn("quality_ok", col("lang_ok") && col("q") >= 0.5)
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
     val reps = docs.filter(col("quality_ok"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("rep_id"))
     docs.join(reps, Seq("fp"), "left")

@@ -278,38 +278,32 @@ object Similarity {
     graft.functions.VectorOps.register(spark)
     val corpusBuckets = spark.read.parquet(bucketsPath(indexDir))
     val corpusEmb = spark.read.parquet(embeddingsPath(indexDir))
-    // persisted, not checkpointed: four subtrees of the one probe job
-    // consume the batch's buckets (both self-join sides, the corpus
-    // candidate join, the candidate-key set) — the cache fills on
-    // first evaluation with no extra job and is dropped before return
-    val batchBuckets = lsh.bucketed(batch)
-      .select(col("lsh_table"), col("lsh_bucket"), col("vec_id"))
-      .persist()
-    val pairs = incrementalBucketCandidates(corpusBuckets, batchBuckets)
-    // verification reads corpus embeddings for CANDIDATE ids only: the
-    // candidate id set is small by construction, so a broadcast
-    // semi-join prunes the stored-embedding scan before the pair joins.
-    // Candidate CORPUS ids are exactly the corpus vectors sharing a
-    // bucket with the batch (batch ids are all in `emb` anyway), so the
-    // set is derived straight from the stored-bucket scan — not from
-    // `pairs` — leaving `pairs` single-consumer: the whole probe is ONE
-    // job instead of a candidate-checkpoint job plus a verify job.
-    val candIds = corpusBuckets
-      .join(broadcast(batchBuckets.select(col("lsh_table"), col("lsh_bucket")).distinct()),
-        Seq("lsh_table", "lsh_bucket"), "left_semi")
-      .select(col("vec_id")).distinct()
-    // dropDuplicates: a crash-replayed batch doc already persisted in
-    // the index would otherwise appear in `emb` twice (batch side and
-    // stored side) and duplicate every pair row it touches
-    val emb = batch
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .unionByName(corpusEmb.join(broadcast(candIds), Seq("vec_id"), "left_semi"))
-      .dropDuplicates("vec_id")
-    val verified = verifyCosinePairs(pairs, emb, threshold)
-    // eager lineage cut, mirroring MinHashLSH.nearDuplicatesAgainst
-    try {
-      if (spark.sparkContext.getCheckpointDir.isDefined) verified.checkpoint(eager = true)
-      else verified.localCheckpoint(eager = true)
-    } finally batchBuckets.unpersist(false)
+    // cached, not pinned: four subtrees of the one probe job consume
+    // the batch's buckets (both self-join sides, the corpus candidate
+    // join, the candidate-key set)
+    graft.core.Materialize.cached(lsh.bucketed(batch)
+        .select(col("lsh_table"), col("lsh_bucket"), col("vec_id"))) { batchBuckets =>
+      val pairs = incrementalBucketCandidates(corpusBuckets, batchBuckets)
+      // verification reads corpus embeddings for CANDIDATE ids only: the
+      // candidate id set is small by construction, so a broadcast
+      // semi-join prunes the stored-embedding scan before the pair joins.
+      // Candidate CORPUS ids are exactly the corpus vectors sharing a
+      // bucket with the batch (batch ids are all in `emb` anyway), so the
+      // set is derived straight from the stored-bucket scan — not from
+      // `pairs` — leaving `pairs` single-consumer: the whole probe is ONE
+      // job instead of a candidate-checkpoint job plus a verify job.
+      val candIds = corpusBuckets
+        .join(broadcast(batchBuckets.select(col("lsh_table"), col("lsh_bucket")).distinct()),
+          Seq("lsh_table", "lsh_bucket"), "left_semi")
+        .select(col("vec_id")).distinct()
+      // dropDuplicates: a crash-replayed batch doc already persisted in
+      // the index would otherwise appear in `emb` twice (batch side and
+      // stored side) and duplicate every pair row it touches
+      val emb = batch
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+        .unionByName(corpusEmb.join(broadcast(candIds), Seq("vec_id"), "left_semi"))
+        .dropDuplicates("vec_id")
+      graft.core.Materialize.pin(verifyCosinePairs(pairs, emb, threshold))
+    }
   }
 }

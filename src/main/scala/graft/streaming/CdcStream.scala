@@ -50,7 +50,7 @@ object CdcStream {
     // pin the batch (streaming sources are not re-readable inside
     // foreachBatch) and compact to one op per key: highest seq wins,
     // delete beats upsert at equal seq
-    val compacted = delta.localCheckpoint(eager = true)
+    val compacted = graft.core.Materialize.pin(delta)
       .withColumn("rn", row_number().over(Window.partitionBy(col(key))
         .orderBy(col("seq").desc,
           when(col("op") === "D", 0).otherwise(1), col("op"))))

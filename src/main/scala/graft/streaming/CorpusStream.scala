@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Materialize
 import graft.dedup.{DedupClusters, MinHashLSH, SimHashDedup}
 import graft.similarity.Similarity
 
@@ -189,7 +190,7 @@ object CorpusStream {
     // pin the micro-batch: it feeds the pair job, two joins, and the
     // writes — streaming sources don't guarantee re-readability inside
     // foreachBatch
-    val b = batch.localCheckpoint(eager = true)
+    val b = Materialize.pin(batch)
     val pairs = backend.pairsAgainst(b, indexDir)
 
     // records already in the index collide with themselves
@@ -218,7 +219,7 @@ object CorpusStream {
     val flagged = pairs.filter(col("id_a") =!= col("id_b"))
       .join(ids.select(col(id).as("id_a"), col("in_batch").as("a_in")), Seq("id_a"), "left")
       .join(ids.select(col(id).as("id_b"), col("in_batch").as("b_in")), Seq("id_b"), "left")
-      .localCheckpoint(eager = true)
+      .transform(Materialize.pin)
     val corpusDups = flagged.filter(col("a_in").isNull || col("b_in").isNull)
       .select(when(col("a_in").isNotNull, col("id_a")).otherwise(col("id_b")).as(id))
       .distinct()
@@ -227,7 +228,7 @@ object CorpusStream {
 
     DedupClusters.deduplicate(
         fresh.join(corpusDups, Seq(id), "left_anti"), id, batchPairs)
-      .localCheckpoint(eager = true)
+      .transform(Materialize.pin)
   }
 
   /** Read the curated corpus (all ingested batches; `batch_id` appears

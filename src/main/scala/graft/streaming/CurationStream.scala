@@ -99,13 +99,13 @@ object CurationStream {
           .filter(col("score_micro") >= t)
           .select(col(id))
         dedupSurvivors.join(pass, Seq(id), "left_semi")
-          .localCheckpoint(eager = true)
+          .transform(graft.core.Materialize.pin)
     }
     if (!survivors.isEmpty) {
       // stage 2 — span decontamination of survivors (pure)
       val cut = DecontaminateStream
         .cutBatch(survivors, id, textCol, evalIndexDir, w)
-        .localCheckpoint(eager = true)
+        .transform(graft.core.Materialize.pin)
       BatchSink.Partitions.publish(cut, curatedDir, batchId)
       // stage 3 — pack the DECONTAMINATED text (split keying and token
       // counts follow the final content, the q150→q41 composition)

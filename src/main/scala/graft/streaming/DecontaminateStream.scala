@@ -68,7 +68,7 @@ object DecontaminateStream {
     // pin the micro-batch: streaming sources don't guarantee
     // re-readability inside foreachBatch, and the cut references the
     // batch through several subtrees
-    val b = batch.localCheckpoint(eager = true)
+    val b = graft.core.Materialize.pin(batch)
     BatchSink.Partitions.publish(cutBatch(b, idCol, textCol, indexDir, w), outDir, batchId)
   }
 

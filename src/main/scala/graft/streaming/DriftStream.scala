@@ -73,7 +73,7 @@ object DriftStream {
       logDir: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val pinned = batch.localCheckpoint(eager = true)
+    val pinned = graft.core.Materialize.pin(batch)
     val (n, psi) = psiOfBatch(pinned, refDir)
     // batch_id lives in the PATH (partition discovery reads it back):
     // keeping it out of the file sidesteps the duplicate-column clash

@@ -70,7 +70,7 @@ object EnrichStream {
     if (batch.isEmpty) return
     // pin the micro-batch — streaming sources don't guarantee
     // re-readability inside foreachBatch
-    val b = batch.localCheckpoint(eager = true)
+    val b = graft.core.Materialize.pin(batch)
     BatchSink.Partitions.publish(
       AsofJoin.asofJoin(b, facts, key, ts, payload, tolerance, direction),
       outDir, batchId)

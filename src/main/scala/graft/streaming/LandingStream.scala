@@ -122,16 +122,14 @@ object LandingStream {
         import graft.core.Cols.quoted
         val aligned = staged.select(bronze.columns.toSeq.map(c => staged(quoted(c))): _*)
         val dup = bronze.columns.map(c => aligned(quoted(c)) <=> bronze(quoted(c))).reduce(_ && _)
-        val fresh = aligned.join(bronze, dup, "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // persist: isEmpty and the append below share one evaluation of
+        // cached: isEmpty and the append below share one evaluation of
         // the staged-dedup + anti-join instead of running it twice
-        try {
+        graft.core.Materialize.cached(aligned.join(bronze, dup, "left_anti")) { fresh =>
           // appended files are invisible to the bronze scan above (its
           // file listing is fixed at read time), so read-then-append is
           // safe
           if (!fresh.isEmpty) fresh.write.mode("append").parquet(bronzeDir)
-        } finally fresh.unpersist()
+        }
       }
     }
     stagedFiles.foreach(p => f.delete(p, false))

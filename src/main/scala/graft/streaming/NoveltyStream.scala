@@ -103,12 +103,12 @@ object NoveltyStream {
     // pin the micro-batch: it feeds the gram relation twice and the
     // writes — streaming sources don't guarantee re-readability inside
     // foreachBatch
-    val b = batch.localCheckpoint(eager = true)
+    val b = graft.core.Materialize.pin(batch)
     val sh = grams(b, idCol, textCol)
     // pin the merge once: novelty rows and the index partition must see
     // the SAME owner view even if the underlying index dir changes
     val merged = mergedOwners(b.sparkSession, sh, indexDir)
-      .localCheckpoint(eager = true)
+      .transform(graft.core.Materialize.pin)
     BatchSink.Partitions.publish(novelty(sh, merged, idCol), outDir, batchId)
     // grams this batch owns after the merge: new grams, plus ones whose
     // stored owner IS the batch occurrence

@@ -56,7 +56,7 @@ object PackStream {
   def packAndAppend(
       batch: DataFrame, batchId: Long, stateDir: String, outDir: String): Unit = {
     if (batch.isEmpty) return
-    val b = batch.localCheckpoint(eager = true)
+    val b = graft.core.Materialize.pin(batch)
     val assigned = b
       .withColumn("bucket", md5Bucket)
       .withColumn("split",
@@ -66,7 +66,7 @@ object PackStream {
         size(graft.text.TextFunctions.tokens(col("text"))).cast("long"))
       .select(col("split"), col("doc_id"), col("n_tokens"))
     val state = readState(b.sparkSession, stateDir, batchId)
-      .localCheckpoint(eager = true)
+      .transform(graft.core.Materialize.pin)
     val w = Window.partitionBy(col("split")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     BatchSink.Partitions.publish(

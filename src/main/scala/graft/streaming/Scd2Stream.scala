@@ -49,7 +49,7 @@ object Scd2Stream {
     // pin the micro-batch: streaming sources don't guarantee
     // re-readability inside foreachBatch, and the merge references the
     // batch through two join branches
-    val b = changes.localCheckpoint(eager = true)
+    val b = graft.core.Materialize.pin(changes)
     BatchSink.Snapshots.advance(Scd2.merge(history, b, key, attr, version), dimDir, version)
   }
 

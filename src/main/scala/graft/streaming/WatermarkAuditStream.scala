@@ -64,7 +64,7 @@ object WatermarkAuditStream {
     val version = batchId + 2
     val state = BatchSink.readSnapshot(spark, stateDir, version - 1)
       .select(col("user_id"), col("max_ts_us").as("state_max_us"))
-    val pinned = batch.localCheckpoint(eager = true)
+    val pinned = graft.core.Materialize.pin(batch)
     val inBatch = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val scored = pinned
@@ -74,7 +74,7 @@ object WatermarkAuditStream {
       .withColumn("lateness_us",
         when(col("prev_max_us") > col("ts_us"), col("prev_max_us") - col("ts_us"))
           .otherwise(0L))
-      .localCheckpoint(eager = true)
+      .transform(graft.core.Materialize.pin)
     BatchSink.Partitions.publish(
       scored.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),

@@ -173,6 +173,22 @@ class CurationOpsSpec extends SparkTestBase {
     assert(out._4 == s"$p $g", s"got ${out._4}")
   }
 
+  test("q87 fails loudly past the packed-long bound instead of picking a wrong canonical") {
+    // (doc_id << 24) + i overflows at doc_id = 2^39: doc 2^39's packed
+    // key wraps negative and would silently win the canonical min
+    val p = (0 until 10).map(i => s"q$i").mkString(" ")
+    val dir = writeDocs(Seq(
+      (1L, p, "en", "web", 0L),
+      (1L << 39, p, "en", "web", 0L)))
+    val e = intercept[Exception] {
+      CurationOpsQueries.q87DedupCut(spark, dir).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("doc_id < 2^39 and i < 2^24")),
+      s"the failure must name the bound, got: ${messages.mkString(" | ")}")
+  }
+
   test("q89 planted eval copies are cut to empty; clean training docs untouched") {
     // ids < 200 are held-out; ids >= 200 train. doc 300 embeds the
     // eval passage mid-document → exactly that span is cut; doc 301 is

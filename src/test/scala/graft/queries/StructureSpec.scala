@@ -1,0 +1,106 @@
+package graft.queries
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Tooling guard for the policies that are decided once, in one file.
+  *
+  * Streaming publish path, in `graft/streaming/BatchSink.scala`: how a
+  * loop starts, how its per-batch output is named, how a published
+  * entry is recognised and how long a chain is kept. Any other main
+  * source that starts a stream, and any other streaming source that
+  * spells a `batch_id=` or `snap_` path, probes `_SUCCESS` or defines
+  * `KeepSnapshots`, fails here.
+  *
+  * Materialization, in `graft/core/Materialize.scala`: every eager
+  * lineage cut and every scoped cache. Any other main source that
+  * checkpoints or reads the checkpoint dir fails here, and so does any
+  * other `persist`/`cache` outside the two caches that outlive a block
+  * (the rolling per-round caches of `DedupClusters` and the session
+  * memo of `ScaleOpsQueries`).
+  *
+  * Comments are ignored.
+  */
+class StructureSpec extends AnyFunSuite {
+
+  private val mainRoot = Paths.get("src/main/scala")
+  private val streamingRoot = mainRoot.resolve("graft/streaming")
+  private val sinkFile = streamingRoot.resolve("BatchSink.scala")
+  private val materializeFile = mainRoot.resolve("graft/core/Materialize.scala")
+  private val longLivedCaches = Set("DedupClusters.scala", "ScaleOpsQueries.scala")
+
+  private val startRules = Seq(
+    """\.writeStream\b""" -> "starts a stream (use BatchSink.start)",
+    """\bforeachBatch\b""" -> "runs a foreachBatch loop (use BatchSink.start)")
+  private val layoutRules = Seq(
+    "batch_id=" -> "spells a partition path (use BatchSink.Partitions)",
+    "snap_" -> "spells a snapshot path (use BatchSink.Snapshots)",
+    "_SUCCESS" -> "probes a commit marker (a published entry is complete)",
+    """\b(val|def|var)\s+KeepSnapshots\b""" -> "defines a retention (use BatchSink.KeepSnapshots)")
+  private val pinRules = Seq(
+    """\blocalCheckpoint\b""" -> "checkpoints locally (use Materialize.pin)",
+    """\.checkpoint\(""" -> "checkpoints (use Materialize.pin)",
+    """\bgetCheckpointDir\b""" -> "reads the checkpoint dir (use Materialize.pin)")
+  private val cacheRules = Seq(
+    """\.persist\(""" -> "persists (use Materialize.cached)",
+    """\.cache\(\)""" -> "caches (use Materialize.cached)")
+
+  /** Source text without comments: block comments that open a line,
+    * and `//` comments that follow whitespace (so `hdfs://` survives).
+    */
+  private def code(file: Path): String =
+    new String(Files.readAllBytes(file), "UTF-8")
+      .replaceAll("""(?ms)^\s*/\*.*?\*/""", "")
+      .replaceAll("""(?m)(^|\s)//.*$""", "$1")
+
+  private def scalaFiles(root: Path): Seq[Path] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally s.close()
+  }
+
+  private def violations(
+      files: Seq[Path], owner: Path, rules: Seq[(String, String)]): Seq[String] =
+    for {
+      f <- files if f != owner
+      (pattern, what) <- rules
+      if pattern.r.findFirstIn(code(f)).nonEmpty
+    } yield s"$f $what"
+
+  private def unmatched(owner: Path, rules: Seq[(String, String)]): Seq[String] = {
+    assert(Files.isRegularFile(owner), s"run from the repository root: no $owner")
+    rules.map(_._1).filter(_.r.findFirstIn(code(owner)).isEmpty)
+  }
+
+  test("the rules match the policy where it lives") {
+    val missed = unmatched(sinkFile, startRules ++ layoutRules.filter(_._1 != "_SUCCESS"))
+    assert(missed.isEmpty, s"rules that no longer match BatchSink.scala: $missed")
+  }
+
+  test("only BatchSink starts a stream or spells the publish layout") {
+    val found = violations(scalaFiles(mainRoot), sinkFile, startRules) ++
+      violations(scalaFiles(streamingRoot), sinkFile, layoutRules)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("the materialization rules match Materialize.scala") {
+    val missed = unmatched(materializeFile,
+      pinRules ++ cacheRules.filter(_._1 != """\.cache\(\)"""))
+    assert(missed.isEmpty, s"rules that no longer match Materialize.scala: $missed")
+    val exempt = scalaFiles(mainRoot).filter(f => longLivedCaches(f.getFileName.toString))
+    assert(exempt.map(_.getFileName.toString).toSet == longLivedCaches)
+    val stale = exempt.filter(f => """\.persist\(""".r.findFirstIn(code(f)).isEmpty)
+    assert(stale.isEmpty, s"exempt from the cache rule but no longer caching: $stale")
+  }
+
+  test("only Materialize pins or scopes a cache") {
+    val main = scalaFiles(mainRoot)
+    val found = violations(main, materializeFile, pinRules) ++
+      violations(main.filterNot(f => longLivedCaches(f.getFileName.toString)),
+        materializeFile, cacheRules)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+}
