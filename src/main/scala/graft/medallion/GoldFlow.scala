@@ -1,7 +1,7 @@
 package graft.medallion
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,12 +10,22 @@ import org.apache.spark.sql.functions._
   * truncate-before-write (`gold.py:45-51`) and empty-result guard
   * (`gold.py:62-65`).
   *
-  * Scale notes: the shared reviews⟕music join shuffles once on album_id
-  * (music is the dim side — broadcast-able by AQE below threshold);
-  * every aggregate is a partial/final hash agg on low-cardinality keys.
-  * The reference's `collect()`-based emptiness checks (`gold.py:151`)
-  * become `df.isEmpty` (a limit-1 job), never a full driver
-  * materialization.
+  * Scale notes: `top10_by_country`, `band_avg_scores` and
+  * `brazilian_bands` are all views of one band grouping of
+  * reviews⟕music ([[bandStats]]), so [[run]] computes that aggregate
+  * once and pins it ([[graft.core.Materialize.pin]]): the only plan that
+  * scans silver `reviews` is the pin's, and the three tables, a window
+  * and a filter over a few thousand pinned rows, read it back. Two
+  * probes are left: `music.isEmpty` (a limit-1 job) and one count over
+  * the pinned rows that answers both the reviews guard (the left join
+  * keeps every review, so the aggregate is empty exactly when reviews
+  * is) and `brazilian_bands`' empty guard; the other tables are then
+  * known non-empty. The reference's `collect()`-based emptiness checks
+  * (`gold.py:151`) never materialize a table on the driver. Each table
+  * is written as one file sorted within its one partition
+  * (`coalesce(1).sortWithinPartitions`), the reference's single-file
+  * layout, instead of a range `orderBy`, which pays a sampling job and
+  * a range shuffle per table.
   */
 object GoldFlow {
 
@@ -28,26 +38,16 @@ object GoldFlow {
   private def reviewsWithCatalog(music: DataFrame, reviews: DataFrame): DataFrame =
     preprocessReviews(reviews).join(music, Seq("album_id"), "left")
 
-  /** `gold.py:82-94`: top-10 bands per country by review count.
-    * Reference shape is sort + group_by(country).head(10); Spark-first
-    * equivalent is a row_number window — one shuffle on the partition
-    * key, deterministic band_id tie-break (SURVEY §7.1 D1), no global
-    * sort of the fact side.
-    */
-  def createTop10ByCountry(music: DataFrame, reviews: DataFrame): DataFrame = {
-    val agg = reviewsWithCatalog(music, reviews)
-      .groupBy(col("country"), col("band_id"), col("band_name"))
-      .agg(count(lit(1)).as("review_count"), avg(col("score")).as("avg_score"))
-    val w = Window.partitionBy(col("country"))
-      .orderBy(col("review_count").desc, col("band_id"))
-    agg.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .drop("rn")
-      .orderBy(col("country"), col("review_count").desc, col("band_id"))
-  }
+  /** The gold tables' sort orders, `band_id` breaking every tie. */
+  private val Top10Order = Seq(col("country"), col("review_count").desc, col("band_id"))
+  private val ScoreOrder = Seq(col("avg_score").desc, col("band_id"))
+  private val AlbumCountOrder = Seq(col("album_count").desc, col("band_id"))
 
-  /** `gold.py:98-111`: per-band score summary (std = Polars ddof=1). */
-  def createBandAvgScores(music: DataFrame, reviews: DataFrame): DataFrame =
+  /** `gold.py:82-111`'s shared band grouping: per band, its review count
+    * and score summary (std = Polars ddof=1). Reviews of albums missing
+    * from the catalog form the null band's group.
+    */
+  private def bandStats(music: DataFrame, reviews: DataFrame): DataFrame =
     reviewsWithCatalog(music, reviews)
       .groupBy(col("band_id"), col("band_name"), col("country"))
       .agg(
@@ -56,20 +56,50 @@ object GoldFlow {
         min(col("score")).as("min_score"),
         max(col("score")).as("max_score"),
         stddev_samp(col("score")).as("std_score"))
-      .orderBy(col("avg_score").desc, col("band_id"))
+
+  /** `gold.py:82-94` over [[bandStats]], unordered. Reference shape is
+    * sort + group_by(country).head(10); Spark-first equivalent is a
+    * row_number window with a deterministic band_id tie-break (SURVEY
+    * §7.1 D1). Over a single partition the window needs no shuffle.
+    */
+  private def top10ByCountry(bandStats: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("country"))
+      .orderBy(col("review_count").desc, col("band_id"))
+    bandStats.select("country", "band_id", "band_name", "review_count", "avg_score")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 10)
+      .drop("rn")
+  }
+
+  /** `gold.py:115-122`'s match: the normalized country is either spelling. */
+  private def isBrazilian(country: Column): Column =
+    lower(trim(country)).isin("brazil", "brasil")
+
+  /** `gold.py:115-122` over band_avg_scores, unordered. */
+  private def brazilianBands(bandAvgScores: DataFrame): DataFrame =
+    bandAvgScores
+      .withColumn("country_normalized", lower(trim(col("country"))))
+      .filter(isBrazilian(col("country")))
+
+  private def albumCounts(music: DataFrame): DataFrame =
+    music.groupBy(col("band_id"), col("band_name"), col("country"))
+      .agg(count(lit(1)).as("album_count"))
+
+  /** `gold.py:82-94`: top-10 bands per country by review count. */
+  def createTop10ByCountry(music: DataFrame, reviews: DataFrame): DataFrame =
+    top10ByCountry(bandStats(music, reviews)).orderBy(Top10Order: _*)
+
+  /** `gold.py:98-111`: per-band score summary. */
+  def createBandAvgScores(music: DataFrame, reviews: DataFrame): DataFrame =
+    bandStats(music, reviews).orderBy(ScoreOrder: _*)
 
   /** `gold.py:115-122`: normalized-country filter over band_avg_scores. */
   def createBrazilianBands(bandAvgScores: DataFrame): DataFrame =
-    bandAvgScores
-      .withColumn("country_normalized", lower(trim(col("country"))))
-      .filter(col("country_normalized").isin("brazil", "brasil"))
-      .orderBy(col("avg_score").desc, col("band_id"))
+    brazilianBands(bandAvgScores).orderBy(ScoreOrder: _*)
 
   /** `gold.py:126-131`: album counts per band. */
   def createBandAlbumCounts(music: DataFrame): DataFrame =
-    music.groupBy(col("band_id"), col("band_name"), col("country"))
-      .agg(count(lit(1)).as("album_count"))
-      .orderBy(col("album_count").desc, col("band_id"))
+    albumCounts(music).orderBy(AlbumCountOrder: _*)
 
   /** `gold.py:45-51`: delete everything under gold/ before rewriting. */
   def clearGold(spark: SparkSession, lake: Lake): Unit = {
@@ -88,13 +118,16 @@ object GoldFlow {
       df: DataFrame, path: String,
       partitions: Seq[String] = Nil,
       versioned: Boolean = false): Option[String] =
-    if (df.isEmpty) None
-    else if (versioned)
-      Some(Versioned.commit(df.sparkSession, path, df, partitions = partitions))
+    if (df.isEmpty) None else Some(publish(df, path, partitions, versioned))
+
+  /** [[writeGold]] for a table already known to be non-empty. */
+  private def publish(
+      df: DataFrame, path: String, partitions: Seq[String], versioned: Boolean): String =
+    if (versioned) Versioned.commit(df.sparkSession, path, df, partitions = partitions)
     else {
       val w = df.write.mode("overwrite")
       (if (partitions.nonEmpty) w.partitionBy(partitions: _*) else w).parquet(path)
-      Some(path)
+      path
     }
 
   /** `gold.py:135-167`: the gold DAG with its input guard. Missing or
@@ -130,25 +163,28 @@ object GoldFlow {
           log.warn(s"gold: silver inputs unavailable: ${e.getMessage}")
           return Map.empty
       }
-    if (music.isEmpty || reviews.isEmpty) return Map.empty
+    if (music.isEmpty) return Map.empty
 
-    // Reused by two outputs + the brazilian derivation → cache once
-    // (allowed improvement over the reference's per-task recompute,
-    // SURVEY §4 "Caching / reuse").
-    graft.core.Materialize.cached(music) { music =>
-    graft.core.Materialize.cached(reviews) { reviews =>
-      val result = Map.newBuilder[String, String]
-      def parts(name: String): Seq[String] = partitionSpec.getOrElse(name, Nil)
-      val avgScores = createBandAvgScores(music, reviews)
-      writeGold(createTop10ByCountry(music, reviews), lake.gold("top10_by_country"),
-        parts("top10_by_country"), versioned).foreach(result += "top10_by_country" -> _)
-      writeGold(avgScores, lake.gold("band_avg_scores"),
-        parts("band_avg_scores"), versioned).foreach(result += "band_avg_scores" -> _)
-      writeGold(createBrazilianBands(avgScores), lake.gold("brazilian_bands"),
-        parts("brazilian_bands"), versioned).foreach(result += "brazilian_bands" -> _)
-      writeGold(createBandAlbumCounts(music), lake.gold("band_album_counts"),
-        parts("band_album_counts"), versioned).foreach(result += "band_album_counts" -> _)
-      result.result()
-    }}
+    // the one evaluation of reviews⟕music (SURVEY §4 "Caching / reuse")
+    val stats = graft.core.Materialize.pin(bandStats(music, reviews))
+    // one count over the pinned rows answers two guards: the aggregate
+    // is empty exactly when reviews is (the left join keeps every
+    // review), and brazilian_bands is empty when no band is Brazilian
+    val counts = stats.coalesce(1)
+      .agg(count(lit(1)), count_if(isBrazilian(col("country"))))
+      .head()
+    if (counts.getLong(0) == 0) return Map.empty
+
+    val result = Map.newBuilder[String, String]
+    // each table is one file, sorted within its one partition
+    def write(name: String, df: DataFrame, order: Seq[Column]): Unit =
+      result += name -> publish(df.coalesce(1).sortWithinPartitions(order: _*),
+        lake.gold(name), partitionSpec.getOrElse(name, Nil), versioned)
+    // one partition already clusters the window by country
+    write("top10_by_country", top10ByCountry(stats.coalesce(1)), Top10Order)
+    write("band_avg_scores", stats, ScoreOrder)
+    if (counts.getLong(1) > 0) write("brazilian_bands", brazilianBands(stats), ScoreOrder)
+    write("band_album_counts", albumCounts(music), AlbumCountOrder)
+    result.result()
   }
 }

@@ -2,6 +2,7 @@ package graft.medallion
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -16,6 +17,14 @@ import java.nio.charset.StandardCharsets
   *   <root>/.v_000002.claim             writer's claim marker
   *   <root>/_current                    names the active version
   * }}}
+  *
+  * `_current` holds the active version's name on its first line. For an
+  * unpartitioned table a second line holds the schema the version was
+  * committed with, as Spark schema JSON (every field nullable, as a
+  * parquet read reports it), so [[read]] hands it to the reader and
+  * skips the footer-inference job. A one-line pointer (written by older
+  * code, or for a partitioned table, whose partition columns are
+  * discovered from its dirs) reads by inference, as before.
   *
   * [[commit]] writes a fresh version dir, then publishes it by renaming
   * a temp pointer over `_current` with `Options.Rename.OVERWRITE` via
@@ -69,15 +78,28 @@ object Versioned {
     * FileNotFoundException — which is what [[commit]] keys
     * first-commit detection on.
     */
-  def resolve(spark: SparkSession, root: String): String = {
+  def resolve(spark: SparkSession, root: String): String = current(spark, root)._1
+
+  /** Read the active version: with the schema its pointer records, or
+    * by inference from a one-line pointer. */
+  def read(spark: SparkSession, root: String): DataFrame = current(spark, root) match {
+    case (dir, Some(schema)) => spark.read.schema(schema).parquet(dir)
+    case (dir, None) => spark.read.parquet(dir)
+  }
+
+  /** The active version dir and, from the pointer's second line, the
+    * schema it was committed with; retried as [[resolve]] describes. */
+  private def current(spark: SparkSession, root: String): (String, Option[StructType]) = {
     val ptr = new HPath(s"$root/$Pointer")
     val f = fs(spark, ptr)
-    def readOnce(): String = {
+    def readOnce(): (String, Option[StructType]) = {
       val in = f.open(ptr)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(_.trim).toList
       finally in.close()
+      val v = lines.headOption.getOrElse("")
       require(v.nonEmpty, s"$ptr is empty")
-      s"$root/$v"
+      (s"$root/$v",
+        lines.drop(1).find(_.nonEmpty).map(DataType.fromJson(_).asInstanceOf[StructType]))
     }
     var attempt = 0
     while (true) {
@@ -92,9 +114,15 @@ object Versioned {
     sys.error("unreachable")
   }
 
-  /** Read the active version. */
-  def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(resolve(spark, root))
+  /** `t` with every field, element and value nullable: the schema a
+    * parquet read of data written at `t` reports. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   private def versionDirs(f: FileSystem, rootP: HPath): Seq[(Int, HPath)] =
     if (!f.exists(rootP)) Seq.empty
@@ -150,12 +178,15 @@ object Versioned {
       try Some(new HPath(resolve(spark, root)).getName)
       catch { case _: java.io.FileNotFoundException => None }
 
-    // publish: write the pointer beside _current, then atomic-overwrite
-    // rename it into place (FileContext supports OVERWRITE; the plain
-    // FileSystem.rename does not)
+    // publish: write the pointer (the version's name, and an
+    // unpartitioned version's schema) beside _current, then
+    // atomic-overwrite rename it into place (FileContext supports
+    // OVERWRITE; the plain FileSystem.rename does not)
+    val pointer =
+      if (partitions.nonEmpty) vName else s"$vName\n${nullable(df.schema).json}"
     val tmp = new HPath(s"$root/._current.tmp")
     val out = f.create(tmp, true)
-    try out.write(vName.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(pointer.getBytes(StandardCharsets.UTF_8)) finally out.close()
     val fc = FileContext.getFileContext(rootP.toUri, spark.sparkContext.hadoopConfiguration)
     fc.rename(tmp, new HPath(s"$root/$Pointer"), Options.Rename.OVERWRITE)
 

@@ -72,15 +72,20 @@ class MaterializeSpec extends SparkTestBase {
   }
 
   test("cached releases its frame even when the body throws") {
-    val before = sc.getPersistentRDDs.size
+    // by RDD id, not by count: the ContextCleaner may release an earlier
+    // suite's persisted RDD at any moment
+    val before = sc.getPersistentRDDs.keySet
+    var persisted = Set.empty[Int]
     val e = intercept[IllegalStateException] {
       Materialize.cached(spark.range(0, 1000, 1, 2).select((col("id") * 3).as("x"))) { c =>
         assert(c.count() == 1000L)
-        assert(sc.getPersistentRDDs.size == before + 1, "the body must read a cached frame")
+        persisted = (sc.getPersistentRDDs.keySet -- before).toSet
+        assert(persisted.size == 1, "the body must read a cached frame")
         throw new IllegalStateException("body failed")
       }
     }
     assert(e.getMessage == "body failed")
-    assert(sc.getPersistentRDDs.size == before, "cached leaked its frame past a throwing body")
+    assert(!persisted.exists(sc.getPersistentRDDs.contains),
+      "cached leaked its frame past a throwing body")
   }
 }
