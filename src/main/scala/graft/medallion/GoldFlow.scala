@@ -141,7 +141,10 @@ object GoldFlow {
     * truncate-before-write is SKIPPED — deleting gold first is exactly
     * the absent-table window the atomic pointer publish exists to
     * close, and superseded versions are garbage-collected by commit
-    * retention instead. An empty result still skips its table, which
+    * retention instead. `band_album_counts` over an unchanged
+    * `music_catalog` version keeps its version (the commit's input key
+    * matches); the three tables served from the pinned aggregate always
+    * publish. An empty result still skips its table, which
     * in versioned mode leaves the previous version visible rather than
     * truncating — reruns only ever move tables forward.
     */

@@ -2,6 +2,7 @@ package graft.medallion
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 
 /** Lake-maintenance operators: small-file compaction and keyed upsert
@@ -202,28 +203,43 @@ object Maintenance {
   // resolve old or new, never neither, and in-flight scans of the
   // previous version finish against files GC keeps for one more commit.
 
-  /** [[compact]] for a [[Versioned]] table root. Returns the new file
-    * count.
+  /** The file relation a [[Versioned.read]] frame scans: the active
+    * version's listing, and its partition columns discovered from its
+    * dirs. */
+  private def relationOf(active: DataFrame): HadoopFsRelation =
+    active.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }.get
+
+  /** [[compact]] for a [[Versioned]] table root. A partitioned version
+    * stays partitioned by the same columns, one file per partition dir.
+    * Returns the new file count.
     */
   def compactVersioned(
       spark: SparkSession, root: String, targetFileBytes: Long,
       gcGraceMs: Long = Versioned.DefaultGcGraceMs): Int = {
-    val active = Versioned.resolve(spark, root)
+    val active = Versioned.read(spark, root)
+    val relation = relationOf(active)
+    val partitions = relation.partitionSchema.fieldNames.toSeq
     val parts = math.max(1,
-      math.ceil(dirBytes(spark, active).toDouble / targetFileBytes).toInt)
+      math.ceil(relation.location.sizeInBytes.toDouble / targetFileBytes).toInt)
     val vDir = Versioned.commit(spark, root,
-      spark.read.parquet(active).repartition(parts), gcGraceMs)
+      active.repartition(parts, partitions.map(col): _*), gcGraceMs, partitions)
     val p = new HPath(vDir)
-    fs(spark, p).listStatus(p)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val files = fs(spark, p).listFiles(p, true)
+    var n = 0
+    while (files.hasNext) if (files.next().getPath.getName.endsWith(".parquet")) n += 1
+    n
   }
 
-  /** [[upsertByKey]] for a [[Versioned]] table root. */
+  /** [[upsertByKey]] for a [[Versioned]] table root; a partitioned
+    * version stays partitioned by the same columns. */
   def upsertVersionedByKey(
       spark: SparkSession, root: String, updates: DataFrame,
       keys: Seq[String], gcGraceMs: Long = Versioned.DefaultGcGraceMs): Unit = {
-    Versioned.commit(spark, root,
-      mergeByKey(Versioned.read(spark, root), updates, keys), gcGraceMs)
+    val active = Versioned.read(spark, root)
+    Versioned.commit(spark, root, mergeByKey(active, updates, keys), gcGraceMs,
+      relationOf(active).partitionSchema.fieldNames.toSeq)
     ()
   }
 }

@@ -101,7 +101,9 @@ object SilverFlow {
     * `versioned = true` routes every write through [[Versioned.commit]]
     * — an atomic pointer publish, so a rerun never exposes a
     * half-overwritten or absent table to concurrent readers (a bare
-    * `mode("overwrite")` deletes before it rewrites). Manifest entries
+    * `mode("overwrite")` deletes before it rewrites). A table whose
+    * bronze inputs are unchanged keeps its version: the commit's input
+    * key matches and nothing is written. Manifest entries
     * are then the immutable committed version dirs; consumers that
     * should follow future commits read `Versioned.read(lake.silver(name))`
     * instead. Pair with `GoldFlow.run(versioned = true)` so gold reads

@@ -2,9 +2,14 @@ package graft.medallion
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 
 /** Atomic-publish layout for plain-parquet tables — the manifest-pointer
   * idea table formats (Iceberg snapshot pointer, reference
@@ -19,12 +24,42 @@ import java.nio.charset.StandardCharsets
   * }}}
   *
   * `_current` holds the active version's name on its first line. For an
-  * unpartitioned table a second line holds the schema the version was
+  * unpartitioned table the next line holds the schema the version was
   * committed with, as Spark schema JSON (every field nullable, as a
   * parquet read reports it), so [[read]] hands it to the reader and
-  * skips the footer-inference job. A one-line pointer (written by older
-  * code, or for a partitioned table, whose partition columns are
-  * discovered from its dirs) reads by inference, as before.
+  * skips the footer-inference job; a partitioned table has no schema
+  * line (its partition columns are discovered from its dirs). A last
+  * line tagged `input-key ` holds the version's input key, when its
+  * frame has one:
+  *
+  * {{{
+  *   v_000002
+  *   {"type":"struct","fields":[...]}      unpartitioned only
+  *   input-key 3f9a...                     keyed frames only
+  * }}}
+  *
+  * A pointer without a schema line reads by inference; one without a
+  * key line (a non-keyed frame, or older code) never matches a commit.
+  *
+  * Publish only what changed: the input key is a SHA-256 digest of what
+  * decides the committed rows — every file the frame's analyzed plan
+  * reads (path, length, modification time, from the relation's own
+  * file-index listing, so no file-system call per file), with each
+  * relation's format, options and schemas; the plan in canonical form
+  * and its output schema; the session settings that change its rows
+  * (ANSI mode, time zone, the legacy, parquet and ignore-files read
+  * switches); and the partition columns. When the active version's key
+  * equals the key of the frame being committed, [[commit]] writes
+  * nothing — no claim marker, no version dir, no GC pass — and returns
+  * the active version dir. A frame has no key, and always publishes,
+  * when a leaf of its plan (subqueries included) is not a batch file
+  * relation — local rows, `range`, a pinned or checkpointed RDD, a
+  * streaming micro-batch — or when the plan holds code its text cannot
+  * show or rows it cannot fix: a nondeterministic expression (`rand`,
+  * `uuid`, ...), a current-time or current-session function, a
+  * user-defined function, or a typed (closure) operator. The key rests
+  * on files being replaced under new names or with a new length or
+  * modification time, as Spark's own writers do.
   *
   * [[commit]] writes a fresh version dir, then publishes it by renaming
   * a temp pointer over `_current` with `Options.Rename.OVERWRITE` via
@@ -57,6 +92,13 @@ object Versioned {
 
   private val Pointer = "_current"
 
+  /** The tag of the pointer line that holds the input key. */
+  private val KeyTag = "input-key "
+
+  /** A parsed `_current`: the active version dir, and the schema and
+    * input key it was committed with, where the pointer records them. */
+  private final case class Active(dir: String, schema: Option[StructType], key: Option[String])
+
   /** Default GC grace: long enough for any realistic in-flight write or
     * read of a superseded version to finish.
     */
@@ -75,31 +117,32 @@ object Versioned {
     * single retry can land inside the NEXT commit's window, so the
     * budget is 10 attempts × 10 ms. A genuinely never-committed root
     * pays the full budget once, then surfaces the original
-    * FileNotFoundException — which is what [[commit]] keys
-    * first-commit detection on.
+    * FileNotFoundException; [[commit]] checks that the pointer exists
+    * first, so a first commit pays none of it.
     */
-  def resolve(spark: SparkSession, root: String): String = current(spark, root)._1
+  def resolve(spark: SparkSession, root: String): String = current(spark, root).dir
 
   /** Read the active version: with the schema its pointer records, or
-    * by inference from a one-line pointer. */
+    * by inference from a pointer without a schema line. */
   def read(spark: SparkSession, root: String): DataFrame = current(spark, root) match {
-    case (dir, Some(schema)) => spark.read.schema(schema).parquet(dir)
-    case (dir, None) => spark.read.parquet(dir)
+    case Active(dir, Some(schema), _) => spark.read.schema(schema).parquet(dir)
+    case Active(dir, None, _) => spark.read.parquet(dir)
   }
 
-  /** The active version dir and, from the pointer's second line, the
-    * schema it was committed with; retried as [[resolve]] describes. */
-  private def current(spark: SparkSession, root: String): (String, Option[StructType]) = {
+  /** The parsed pointer; retried as [[resolve]] describes. */
+  private def current(spark: SparkSession, root: String): Active = {
     val ptr = new HPath(s"$root/$Pointer")
     val f = fs(spark, ptr)
-    def readOnce(): (String, Option[StructType]) = {
+    def readOnce(): Active = {
       val in = f.open(ptr)
       val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(_.trim).toList
       finally in.close()
       val v = lines.headOption.getOrElse("")
       require(v.nonEmpty, s"$ptr is empty")
-      (s"$root/$v",
-        lines.drop(1).find(_.nonEmpty).map(DataType.fromJson(_).asInstanceOf[StructType]))
+      val (keys, rest) = lines.drop(1).filter(_.nonEmpty).partition(_.startsWith(KeyTag))
+      Active(s"$root/$v",
+        rest.headOption.map(DataType.fromJson(_).asInstanceOf[StructType]),
+        keys.headOption.map(_.stripPrefix(KeyTag)))
     }
     var attempt = 0
     while (true) {
@@ -122,6 +165,56 @@ object Versioned {
     case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
     case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
     case other => other
+  }
+
+  /** True for an expression whose rows the plan's text does not fix:
+    * nondeterministic, reading the clock or the session, or user code. */
+  private def unfixed(e: Expression): Boolean = e match {
+    case _: CurrentTimestampLike | _: CurrentDate | _: CurrentTime | _: LocalTimestamp |
+        _: CurrentBatchTimestamp | _: CurrentUser | _: CurrentDatabase | _: CurrentCatalog |
+        _: UserDefinedExpression => true
+    case _ => !e.deterministic
+  }
+
+  /** The input key [[commit]] compares (see the class doc), or None
+    * when the frame's rows are not fixed by its files and plan. */
+  private def inputKey(df: DataFrame, partitions: Seq[String]): Option[String] = {
+    val spark = df.sparkSession
+    val plan = df.queryExecution.analyzed
+    val nodes = plan.collectWithSubqueries { case n => n }
+    val opaque = nodes.exists {
+      case _: ObjectProducer | _: ObjectConsumer | _: TypedFilter | _: AppendColumns => true
+      case n => n.expressions.exists(_.exists(unfixed))
+    }
+    val leaves = nodes.collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, false, _) => r.location match {
+        case index: PartitioningAwareFileIndex => Some((r, index))
+        case _ => None
+      }
+      case _: LeafNode => None
+    }
+    if (plan.isStreaming || opaque || leaves.exists(_.isEmpty)) return None
+    val relations = leaves.flatten.map { case (r, index) =>
+      (Seq(r.fileFormat.getClass.getName, r.dataSchema.json, r.partitionSchema.json,
+        r.bucketSpec.toString) ++
+        r.options.toSeq.map { case (k, v) => s"${k.toLowerCase(java.util.Locale.ROOT)}=$v" }.sorted ++
+        index.allFiles().map(s => s"${s.getPath}\t${s.getLen}\t${s.getModificationTime}").sorted
+      ).mkString("\n")
+    }
+    // expression strings truncate past maxToStringFields; the key must not
+    val fullText = new SQLConf
+    fullText.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+    val planText = SQLConf.withExistingConf(fullText)(
+      plan.canonicalized.treeString(verbose = true, maxFields = Int.MaxValue))
+    val settings = Seq(SQLConf.ANSI_ENABLED.key, SQLConf.SESSION_LOCAL_TIMEZONE.key)
+      .map(k => k -> spark.conf.get(k)) ++
+      spark.conf.getAll.toSeq.filter { case (k, _) =>
+        Seq("spark.sql.legacy.", "spark.sql.parquet.", "spark.sql.files.ignore").exists(k.startsWith)
+      }.sorted
+    val text = (relations ++ Seq(planText, df.schema.json, partitions.mkString(",")) ++
+      settings.map { case (k, v) => s"$k=$v" }).mkString("\u0000")
+    Some(MessageDigest.getInstance("SHA-256").digest(text.getBytes(StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString)
   }
 
   private def versionDirs(f: FileSystem, rootP: HPath): Seq[(Int, HPath)] =
@@ -154,7 +247,9 @@ object Versioned {
   /** Write `df` as the next version and atomically publish it. Returns
     * the new version dir. Readers in flight keep their resolved dir;
     * new resolves see the new version the instant the pointer rename
-    * lands.
+    * lands. When the active version's input key equals `df`'s (see the
+    * class doc), nothing is written and the active version dir is
+    * returned.
     */
   def commit(
       spark: SparkSession, root: String, df: DataFrame,
@@ -162,6 +257,15 @@ object Versioned {
       partitions: Seq[String] = Nil): String = {
     val rootP = new HPath(root)
     val f = fs(spark, rootP)
+    val ptr = new HPath(s"$root/$Pointer")
+    val key = inputKey(df, partitions)
+    // a pointer caught mid-rename reads as absent: the commit then
+    // publishes, which is always safe
+    val active =
+      try if (f.exists(ptr)) Some(current(spark, root)) else None
+      catch { case _: java.io.FileNotFoundException => None }
+    if (key.isDefined && active.exists(_.key == key)) return active.get.dir
+
     if (!f.exists(rootP)) f.mkdirs(rootP)
     val floor = versionDirs(f, rootP).lastOption.fold(1)(_._1 + 1)
     val vName = claimNext(f, root, floor)
@@ -173,22 +277,25 @@ object Versioned {
     // in-flight readers. ONLY a missing pointer means "first commit";
     // any other resolve failure aborts (a transient error must not be
     // mistaken for an empty history — GC would then delete the version
-    // readers are on)
+    // readers are on). A root with no pointer before the write pays no
+    // retry budget for one that is still absent after it
     val prevActive: Option[String] =
-      try Some(new HPath(resolve(spark, root)).getName)
+      if (active.isEmpty && !f.exists(ptr)) None
+      else try Some(new HPath(resolve(spark, root)).getName)
       catch { case _: java.io.FileNotFoundException => None }
 
-    // publish: write the pointer (the version's name, and an
-    // unpartitioned version's schema) beside _current, then
+    // publish: write the pointer (the version's name, an unpartitioned
+    // version's schema and the input key) beside _current, then
     // atomic-overwrite rename it into place (FileContext supports
     // OVERWRITE; the plain FileSystem.rename does not)
-    val pointer =
-      if (partitions.nonEmpty) vName else s"$vName\n${nullable(df.schema).json}"
+    val pointer = (Seq(vName) ++
+      (if (partitions.nonEmpty) None else Some(nullable(df.schema).json)) ++
+      key.map(KeyTag + _)).mkString("\n")
     val tmp = new HPath(s"$root/._current.tmp")
     val out = f.create(tmp, true)
     try out.write(pointer.getBytes(StandardCharsets.UTF_8)) finally out.close()
     val fc = FileContext.getFileContext(rootP.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new HPath(s"$root/$Pointer"), Options.Rename.OVERWRITE)
+    fc.rename(tmp, ptr, Options.Rename.OVERWRITE)
 
     // GC everything outside {new, previously-active}, graced by a REAP
     // TOMBSTONE: the first commit that sees a version superseded drops

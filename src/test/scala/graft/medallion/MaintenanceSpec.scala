@@ -203,6 +203,30 @@ class MaintenanceSpec extends SparkTestBase {
     assert(Versioned.resolve(spark, root).endsWith(versions.last))
   }
 
+  test("versioned compact and upsert keep a partitioned root partitioned") {
+    val root = Files.createTempDirectory("versioned-maint-parted").toString + "/t"
+    val rows = Seq((1L, "Sweden", 7.5), (2L, "Brazil", 9.0), (3L, "Sweden", 6.0), (4L, "Norway", 8.0))
+    Versioned.commit(spark, root, rows.toDF("id", "country", "score").repartition(8),
+      gcGraceMs = 0L, partitions = Seq("country"))
+    def countryDirs: Set[String] =
+      new java.io.File(Versioned.resolve(spark, root)).list().filter(_.startsWith("country=")).toSet
+    def content = Versioned.read(spark, root).select("id", "country", "score")
+      .as[(Long, String, Double)].collect().toSet
+    val dirs = Set("country=Sweden", "country=Brazil", "country=Norway")
+    assert(countryDirs == dirs)
+
+    val files = Maintenance.compactVersioned(spark, root, targetFileBytes = 1L << 20, gcGraceMs = 0L)
+    assert(countryDirs == dirs, "compaction flattened the partition layout")
+    assert(content == rows.toSet)
+    assert(files == 3, s"$files files after compaction, one per partition dir expected")
+
+    Maintenance.upsertVersionedByKey(spark, root,
+      Seq((2L, "Brazil", 9.5), (5L, "Chile", 5.0)).toDF("id", "country", "score"), Seq("id"),
+      gcGraceMs = 0L)
+    assert(countryDirs == dirs + "country=Chile", "upsert flattened the partition layout")
+    assert(content == rows.toSet - ((2L, "Brazil", 9.0)) + ((2L, "Brazil", 9.5)) + ((5L, "Chile", 5.0)))
+  }
+
   test("upsert with composite key") {
     val dir = Files.createTempDirectory("upsert2").toString + "/t"
     Seq((1L, "x", 1.0), (1L, "y", 2.0), (2L, "x", 3.0))
