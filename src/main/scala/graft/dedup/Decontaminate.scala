@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * window whose text occurs in the held-out set is cut, with NO
   * canonical exemption (eval text must not survive anywhere in
   * training). Shared verbatim by the batch gate (q89) and the
-  * streaming loop ([[graft.streaming.DecontaminateStream]]), so
-  * streamed ≡ batch holds by construction and is proven by spec.
+  * curation pipelines (q94, q150), so every stage that cuts spans
+  * cuts them the same way.
   *
   * Scale shape: window generation is linear and shuffle-free; the flag
   * is ONE equi-join on the md5 window hash (held-out side aggregated

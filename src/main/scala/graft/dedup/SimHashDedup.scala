@@ -107,8 +107,8 @@ object SimHashDedup {
     * (corpus ∪ batch) restricted to pairs touching the batch, without
     * re-fingerprinting the corpus. Ids must be globally unique; a
     * batch doc already present in the index surfaces as its own
-    * (id, id) pair at distance 0, the replay signal
-    * [[graft.streaming.CorpusStream]]-style loops key on.
+    * (id, id) pair at distance 0, which an incremental caller can
+    * key a replay on.
     */
   def nearDuplicatesAgainst(
       batch: DataFrame, idCol: String, textCol: String, indexDir: String,

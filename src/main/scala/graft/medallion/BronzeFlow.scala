@@ -28,32 +28,25 @@ object BronzeFlow {
     * byte TWICE — once for inference, once for parsing — a 2× ingest
     * tax at scale. Callers with a declared contract should pass
     * `schema` (raw column names, pre-normalization): the inference
-    * scan disappears entirely and landing is read exactly once. When
-    * inference is unavoidable, `samplingRatio < 1` cuts its parse cost
-    * (the inference pass still reads the bytes to split lines, but
-    * only type-infers the sampled rows — the reference's
-    * `infer_schema_length=5000` analogue, `flows/bronze.py:74`).
+    * scan disappears entirely and landing is read exactly once.
+    * The reference bounds inference to a 5000-row window
+    * (`flows/bronze.py:74`); Spark's CSV inference has no such bound.
     */
   def read(
       spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType = null,
-      samplingRatio: Double = 1.0): DataFrame = {
+      schema: org.apache.spark.sql.types.StructType = null): DataFrame = {
     val reader = spark.read.option("header", "true")
     val raw =
       if (schema != null) reader.schema(schema).csv(landingDir)
-      else reader
-        .option("inferSchema", "true")
-        .option("samplingRatio", samplingRatio.toString)
-        .csv(landingDir)
+      else reader.option("inferSchema", "true").csv(landingDir)
     ColumnNormalizer(raw).dropDuplicates()
   }
 
   /** Ingest one dataset landing→bronze; returns the bronze path. */
   def ingest(
       spark: SparkSession, landingDir: String, bronzeDir: String,
-      schema: org.apache.spark.sql.types.StructType = null,
-      samplingRatio: Double = 1.0): String = {
-    read(spark, landingDir, schema, samplingRatio).write.mode("overwrite").parquet(bronzeDir)
+      schema: org.apache.spark.sql.types.StructType = null): String = {
+    read(spark, landingDir, schema).write.mode("overwrite").parquet(bronzeDir)
     bronzeDir
   }
 

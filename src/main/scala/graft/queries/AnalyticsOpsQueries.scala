@@ -701,8 +701,7 @@ object AnalyticsOpsQueries {
     * v1 row open — the full MERGE decomposition every table format
     * runs under the hood, which the reference's overwrite-only flows
     * cannot express. This is the oracled call-site for
-    * [[graft.relational.Scd2.merge]]; [[graft.streaming.Scd2Stream]]
-    * runs the same operator per micro-batch.
+    * [[graft.relational.Scd2.merge]].
     *
     * Scale shape: one full-outer equi-join on the key + a linear
     * 3-branch union; no windows, no skew surface beyond the key join.

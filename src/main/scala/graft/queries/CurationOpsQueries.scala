@@ -718,9 +718,8 @@ object CurationOpsQueries {
     val train = docs.filter(col("doc_id") >= 200)
       .union(docs.filter(col("doc_id") < 10)
         .select((col("doc_id") + 3000000).as("doc_id"), col("text")))
-    // shared span-cut kernel ([[graft.dedup.Decontaminate]]) — the SAME
-    // code path DecontaminateStream runs per micro-batch, so the
-    // streaming spec's streamed ≡ batch claim is against this query
+    // shared span-cut kernel ([[graft.dedup.Decontaminate]]) — the same
+    // code path q94 and q150 run as their second stage
     val contamGrams = graft.dedup.Decontaminate.evalGrams(
       docs.filter(col("doc_id") < 200), "doc_id", "text")
     graft.dedup.Decontaminate.cut(train, "doc_id", "text", contamGrams)

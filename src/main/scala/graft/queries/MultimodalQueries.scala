@@ -460,10 +460,10 @@ object MultimodalQueries {
     def once(df: DataFrame): DataFrame =
       df.select(col("probe_id").cast("long"), col("index_id").cast("long"))
         .transform(graft.core.Materialize.pin)
-    // simhash's incremental face also emits within-batch pairs (its
-    // CorpusStream contract); the day-2 report keys on batch→corpus
-    // edges, so keep cross pairs only (id_a < 1000 ≤ id_b: the stored
-    // side is always the smaller id by the planted convention)
+    // simhash's incremental face also emits within-batch pairs; the
+    // day-2 report keys on batch→corpus edges, so keep cross pairs
+    // only (id_a < 1000 ≤ id_b: the stored side is always the
+    // smaller id by the planted convention)
     val textPairs = graft.dedup.SimHashDedup
       .nearDuplicatesAgainst(texts.filter(col("doc_id") >= 1000),
         "doc_id", "text", textIdx)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * table format: versioned (key, attr, valid_from, valid_to) rows where
   * `valid_to IS NULL` marks the open version — the MERGE decomposition
   * every lakehouse format runs under the hood, exposed as a pure
-  * DataFrame → DataFrame operator so it also composes into streaming
-  * micro-batches ([[graft.streaming.Scd2Stream]]).
+  * DataFrame → DataFrame operator (oracled through q101,
+  * [[graft.queries.AnalyticsOpsQueries.q101ScdMerge]]).
   *
   * Change semantics per key in a batch: an equal attribute value is a
   * recognized no-op (the open row keeps its original valid_from); a

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.StructType
   * ==Replay contract==
   * The serving log is one [[BatchSink]] partition per micro-batch; the
   * probe is a pure function of (immutable code index, immutable corpus,
-  * batch), so no marker protocol is needed (contrast
-  * [[CurationStream]], whose index APPEND needs sealing).
+  * batch), so a replay recomputes the same rows and no marker
+  * protocol is needed.
   *
   * ==Scale shape==
   * Per batch: the slice predicate prunes the 16×-compressed code scan

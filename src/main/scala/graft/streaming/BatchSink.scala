@@ -6,8 +6,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.medallion.Maintenance
 
-/** The one publish path of the `foreachBatch` loops: how a loop starts,
-  * how a micro-batch's output is laid out, and how it becomes visible.
+/** The one publish path of the `foreachBatch` loops: how a loop starts
+  * (every loop: [[LandingStream]], [[SchemaEvolveStream]],
+  * [[AnnServeStream]]), and how a micro-batch's output is laid out and
+  * becomes visible (the chain of [[SchemaEvolveStream]] and the log of
+  * [[AnnServeStream]]; [[LandingStream]] appends to a staging dir).
   *
   * ==Replay contract==
   * Structured Streaming replays the latest uncommitted micro-batch after
@@ -16,7 +19,7 @@ import graft.medallion.Maintenance
   * partition discovery) or a [[Snapshots]] entry `snap_NNNNN` (one full
   * table version). A publish writes the rows into a hidden staging dir
   * under the root (a `.` name, which neither partition discovery nor
-  * [[Layout.list]] sees) and moves it into place with one rename
+  * the entry listing sees) and moves it into place with one rename
   * ([[Maintenance.replaceDir]] on an absent target). So an entry that
   * exists is complete; a crash at any point, inside the write job
   * included, leaves readers exactly the entries published before it;
@@ -51,10 +54,10 @@ object BatchSink {
   final class Layout private[BatchSink] (prefix: String, name: Long => String) {
     private val Entry = s"$prefix(\\d+)".r
 
-    def dir(root: String, n: Long): String = s"$root/${name(n)}"
+    private def dir(root: String, n: Long): String = s"$root/${name(n)}"
 
     /** Entry `n`, if published. */
-    def find(spark: SparkSession, root: String, n: Long): Option[String] = {
+    private def find(spark: SparkSession, root: String, n: Long): Option[String] = {
       val p = new HPath(dir(root, n))
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
         Some(p.toString)
@@ -64,7 +67,7 @@ object BatchSink {
     /** Published entries as (n, dir), in numeric order: a name sort
       * misorders `snap_` once `%05d` overflows at 100000.
       */
-    def list(spark: SparkSession, root: String): Seq[(Long, String)] = {
+    private def list(spark: SparkSession, root: String): Seq[(Long, String)] = {
       val p = new HPath(root)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) Seq.empty
@@ -110,10 +113,6 @@ object BatchSink {
 
   /** Full table versions, `snap_NNNNN`. */
   val Snapshots: Layout = new Layout("snap_", n => f"snap_$n%05d")
-
-  /** The newest published snapshot version, 0 when there is none. */
-  def currentVersion(spark: SparkSession, root: String): Long =
-    Snapshots.latest(spark, root).fold(0L)(_._1)
 
   /** The newest published snapshot at or below `atOrBelow`. */
   def readSnapshot(spark: SparkSession, root: String,

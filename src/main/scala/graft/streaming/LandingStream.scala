@@ -21,17 +21,13 @@ import graft.medallion.{ColumnNormalizer, Lake}
   */
 object LandingStream {
 
-  /** Streaming CSV needs a declared schema: sample the landing dir with
-    * the batch reader (same inference the batch path uses). Prefer
+  /** Streaming CSV needs a declared schema: infer it from the landing
+    * dir with the batch reader (same inference the batch path uses). Prefer
     * passing a declared schema to [[start]] — inference is a full extra
-    * scan of landing; `samplingRatio < 1` at least bounds its parse
-    * cost (see [[graft.medallion.BronzeFlow.read]]).
+    * scan of landing (see [[graft.medallion.BronzeFlow.read]]).
     */
-  def inferLandingSchema(
-      spark: SparkSession, landingDir: String,
-      samplingRatio: Double = 1.0): StructType =
+  def inferLandingSchema(spark: SparkSession, landingDir: String): StructType =
     spark.read.option("header", "true").option("inferSchema", "true")
-      .option("samplingRatio", samplingRatio.toString)
       .csv(landingDir).schema
 
   def stagingDir(lake: Lake, dataset: String): String =

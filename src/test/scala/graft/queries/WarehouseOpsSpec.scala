@@ -61,6 +61,20 @@ class WarehouseOpsSpec extends SparkTestBase {
     assert(rows.filter(_._4.isEmpty).groupBy(_._1).forall(_._2.size == 1))
   }
 
+  test("Scd2.merge recognizes equal-value no-ops and leaves absent keys untouched") {
+    import graft.relational.Scd2
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Int, Option[Int])] =
+      df.select($"key", $"segment", $"valid_from", $"valid_to")
+        .as[(Long, String, Int, Option[Int])].collect().toSet
+    val h1 = Scd2.init(Seq(1L -> "AUTO", 2L -> "BIKE", 3L -> "SHIP").toDF("key", "segment"),
+      "key", "segment")
+    val noop = Scd2.merge(h1, Seq(2L -> "BIKE").toDF("key", "segment"), "key", "segment", 2)
+    assert(rows(noop) === rows(h1))
+    val empty = Scd2.merge(h1, Seq.empty[(Long, String)].toDF("key", "segment"),
+      "key", "segment", 2)
+    assert(rows(empty) === rows(h1))
+  }
+
   test("q103 cohorts: offset-0 retention is 100%, bps bounded, users conserved") {
     val rows = AnalyticsOpsQueries.q103RetentionCohorts(spark, sf)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq

@@ -5,19 +5,31 @@ import java.nio.file.Files
 
 import scala.util.Try
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
+import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.Tables
+import graft.similarity.BinaryAnn
 
 /** Crash points of the shared publish path ([[BatchSink]]), driven
-  * through one partition sink ([[FreqStream.countAndAppend]]) and one
-  * snapshot chain ([[CdcStream.applyBatch]]). The crash is a real job
-  * failure: every write task of the attempt fails inside its Spark job
-  * ([[FailingCommitProtocol]]), after the job has set up its output
-  * directory. CdcStream pins its batch with a local checkpoint before
-  * the write, so a failing expression inside the batch would fail
-  * before the write job instead.
+  * through the partition sink of [[AnnServeStream.serveBatch]] (the
+  * serving log) and the snapshot chain of
+  * [[SchemaEvolveStream.applyBatch]] (the evolving table).
+  *
+  * Two kinds of crash:
+  *  - a write that fails inside its own Spark job: every write task of
+  *    the attempt fails ([[FailingCommitProtocol]]) after the job has
+  *    set up its output directory;
+  *  - a stream whose batch was published but whose offset commit was
+  *    lost: the checkpoint's last `commits/N` is deleted and the stream
+  *    restarted, so Structured Streaming replays batch N.
+  *
+  * Either way readers see only complete entries, and a replay leaves a
+  * published entry's files in place.
   */
 class BatchSinkSpec extends SparkTestBase {
   import spark.implicits._
@@ -31,93 +43,202 @@ class BatchSinkSpec extends SparkTestBase {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  private val docs = Seq(
-    (1L, "alpha beta beta", "s1"), (2L, "gamma alpha", "s2"),
-    (3L, "beta gamma gamma delta", "s1"), (4L, "delta alpha", "s2"))
-    .toDF("doc_id", "text", "source")
-  private val docs0 = docs.filter($"doc_id" <= 2)
-  private val docs1 = docs.filter($"doc_id" > 2)
+  /** The parquet files of one published entry, by name and mtime. */
+  private def files(entry: String): Set[(String, Long)] =
+    Option(new File(entry).listFiles()).toSet.flatten
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.lastModified())
 
-  private def counts(dir: String): Set[(String, String, Long)] =
-    FreqStream.mergedCounts(spark, dir).as[(String, String, Long)].collect().toSet
+  private def tempRoot(tag: String): String =
+    Files.createTempDirectory(s"sink-$tag").toString
 
-  private def freqRoot(tag: String): String =
-    Files.createTempDirectory(s"sink-$tag").toString + "/counts"
+  // ---- partition sink: the ANN serving log ----
 
-  private val initial = Seq(1L -> "one", 2L -> "two").toDF("key", "value")
-  private val changes0 = Seq(("U", 1L, "ONE", 1L), ("I", 3L, "three", 2L))
-    .toDF("op", "key", "value", "seq")
-  private val changes1 = Seq(("D", 2L, null.asInstanceOf[String], 3L), ("I", 4L, "four", 4L))
-    .toDF("op", "key", "value", "seq")
+  private val (k, cands) = (5, 32)
+  private val slice = col("label") === 3
+  private lazy val vecs = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+  private lazy val annIndex: String = {
+    val idx = tempRoot("ann-index") + "/idx"
+    BinaryAnn.buildDecoratedIndex(vecs, idx, Seq("label"))
+    idx
+  }
+  private lazy val probes = vecs.filter($"vec_id" < 50).select($"vec_id", $"embedding")
+  private lazy val probes0 = probes.filter($"vec_id" < 25)
+  private lazy val probes1 = probes.filter($"vec_id" >= 25)
 
-  private def mirror(dir: String): Map[Long, String] =
-    CdcStream.readCurrent(spark, dir).as[(Long, String)].collect().toMap
+  private def serve(probes: DataFrame, batchId: Long, log: String): Unit =
+    AnnServeStream.serveBatch(probes, batchId, annIndex, vecs, slice, log, k, cands)
 
-  private def cdcRoot(tag: String): String = {
-    val dir = Files.createTempDirectory(s"sink-$tag").toString + "/mirror"
-    CdcStream.init(initial, dir)
-    CdcStream.applyBatch(changes0, 0L, dir, "key", "value")
+  private def served(log: String): Set[(Long, Long, Int, Long, Long, Double)] =
+    AnnServeStream.servingLog(spark, log)
+      .select($"batch_id".cast("long"), $"query_id", $"rank", $"vec_id", $"hamming",
+        round($"cosine", 6))
+      .as[(Long, Long, Int, Long, Long, Double)].collect().toSet
+
+  private def logRoot(tag: String): String = tempRoot(tag) + "/log"
+
+  // ---- snapshot chain: the evolving table ----
+
+  private val chainInput: String = tempRoot("chain-input")
+
+  /** One parquet file holding `df` under `chainInput`; its path is what
+    * a micro-batch of [[SchemaEvolveStream.start]] hands to `applyBatch`.
+    */
+  private def landed(tag: String, df: DataFrame): Seq[String] = {
+    val dir = s"$chainInput/$tag"
+    df.coalesce(1).write.parquet(dir)
+    new File(dir).listFiles().toSeq.map(_.toString).filter(_.endsWith(".parquet"))
+  }
+
+  // written up front: a first use inside withFailingWrites would fail
+  private val v1 = landed("v1",
+    Seq((1, "alpha"), (2, "beta")).toDF("id", "title"))
+  private val v2 = landed("v2",
+    Seq((3, "gamma", 7L)).toDF("id", "title", "rating"))
+
+  /** The table's rows; `rating` reads null before v2 adds it. */
+  private def table(dir: String): Seq[(Long, String, Option[Long])] = {
+    val t = SchemaEvolveStream.read(spark, dir)
+    val rating = if (t.columns.contains("rating")) $"rating" else lit(null).cast("long")
+    t.select($"id".cast("long"), $"title", rating)
+      .orderBy("id").as[(Long, String, Option[Long])].collect().toSeq
+  }
+
+  private def chainRoot(tag: String): String = {
+    val dir = tempRoot(tag) + "/table"
+    SchemaEvolveStream.applyBatch(spark, v1, 0L, dir)
     dir
   }
 
   test("partition sink: a write that fails inside its job publishes no batch_id=N") {
-    val dir = freqRoot("freq-fail")
-    FreqStream.countAndAppend(docs0, 0L, dir)
-    val before = counts(dir)
-    val attempt = withFailingWrites(FreqStream.countAndAppend(docs1, 1L, dir))
+    val dir = logRoot("ann-fail")
+    serve(probes0, 0L, dir)
+    val before = served(dir)
+    val attempt = withFailingWrites(serve(probes1, 1L, dir))
     assert(attempt.isFailure, "the injected failure must fail the write")
     assert(!new File(dir, "batch_id=1").exists(),
       "a failed write left a batch_id=1 partition for readers")
-    assert(counts(dir) == before)
+    assert(served(dir) == before)
   }
 
   test("snapshot chain: after a failed write readCurrent still serves the previous version") {
-    val dir = cdcRoot("cdc-fail")
-    val before = mirror(dir)
-    val attempt = withFailingWrites(CdcStream.applyBatch(changes1, 1L, dir, "key", "value"))
+    val dir = chainRoot("chain-fail")
+    val before = table(dir)
+    val attempt = withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
     assert(attempt.isFailure, "the injected failure must fail the write")
-    assert(mirror(dir) == before)
-    assert(!new File(dir, "snap_00003").exists(), "a failed write left snap_00003")
+    assert(table(dir) == before)
+    assert(!new File(dir, "snap_00002").exists(), "a failed write left snap_00002")
   }
 
   test("partition sink: a failed replay never removes the published partition") {
-    val dir = freqRoot("freq-replay-fail")
-    FreqStream.countAndAppend(docs0, 0L, dir)
-    FreqStream.countAndAppend(docs1, 1L, dir)
-    val published = counts(dir)
-    withFailingWrites(FreqStream.countAndAppend(docs1, 1L, dir))
-    assert(Option(new File(dir, "batch_id=1").list()).exists(_.exists(_.endsWith(".parquet"))),
+    val dir = logRoot("ann-replay-fail")
+    serve(probes0, 0L, dir)
+    serve(probes1, 1L, dir)
+    val published = served(dir)
+    withFailingWrites(serve(probes1, 1L, dir))
+    assert(files(s"$dir/batch_id=1").nonEmpty,
       "a failed replay emptied the published batch_id=1")
-    assert(counts(dir) == published)
+    assert(served(dir) == published)
   }
 
   test("snapshot chain: a failed replay never removes the published version") {
-    val dir = cdcRoot("cdc-replay-fail")
-    CdcStream.applyBatch(changes1, 1L, dir, "key", "value")
-    val published = mirror(dir)
-    withFailingWrites(CdcStream.applyBatch(changes1, 1L, dir, "key", "value"))
-    assert(mirror(dir) == published)
+    val dir = chainRoot("chain-replay-fail")
+    SchemaEvolveStream.applyBatch(spark, v2, 1L, dir)
+    val published = table(dir)
+    withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
+    assert(table(dir) == published)
   }
 
+  // A converged table alone cannot tell a staged publish from a direct
+  // overwrite, since the clean replay rewrites what the crash broke.
+  // So each of the next two also replays the published batch once more
+  // (its offset commit lost), through a failed and a clean attempt,
+  // and checks that the published files stayed in place.
+
   test("partition sink: a clean replay after a failed attempt converges to a single run") {
-    val once = freqRoot("freq-once")
-    FreqStream.countAndAppend(docs0, 0L, once)
-    FreqStream.countAndAppend(docs1, 1L, once)
-    val dir = freqRoot("freq-converge")
-    FreqStream.countAndAppend(docs0, 0L, dir)
-    withFailingWrites(FreqStream.countAndAppend(docs1, 1L, dir))
-    FreqStream.countAndAppend(docs1, 1L, dir)
-    assert(counts(dir) == counts(once))
+    val once = logRoot("ann-once")
+    serve(probes0, 0L, once)
+    serve(probes1, 1L, once)
+    val dir = logRoot("ann-converge")
+    serve(probes0, 0L, dir)
+    withFailingWrites(serve(probes1, 1L, dir))
+    serve(probes1, 1L, dir)
+    val published = files(s"$dir/batch_id=1")
+    withFailingWrites(serve(probes1, 1L, dir))
+    serve(probes1, 1L, dir)
+    assert(served(dir) == served(once))
+    assert(files(s"$dir/batch_id=1") == published, "a replay rewrote batch_id=1")
   }
 
   test("snapshot chain: a clean replay after a failed attempt converges to a single run") {
-    val once = cdcRoot("cdc-once")
-    CdcStream.applyBatch(changes1, 1L, once, "key", "value")
-    val dir = cdcRoot("cdc-converge")
-    withFailingWrites(CdcStream.applyBatch(changes1, 1L, dir, "key", "value"))
-    CdcStream.applyBatch(changes1, 1L, dir, "key", "value")
-    assert(mirror(dir) == mirror(once))
-    assert(mirror(dir) == Map(1L -> "ONE", 3L -> "three", 4L -> "four"))
+    val once = chainRoot("chain-once")
+    SchemaEvolveStream.applyBatch(spark, v2, 1L, once)
+    val dir = chainRoot("chain-converge")
+    withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
+    SchemaEvolveStream.applyBatch(spark, v2, 1L, dir)
+    val published = files(s"$dir/snap_00002")
+    withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
+    SchemaEvolveStream.applyBatch(spark, v2, 1L, dir)
+    assert(table(dir) == table(once))
+    assert(table(dir) == Seq((1L, "alpha", None), (2L, "beta", None), (3L, "gamma", Some(7L))))
+    assert(files(s"$dir/snap_00002") == published, "a replay rewrote snap_00002")
+  }
+
+  // ---- stream level: published, offset commit lost ----
+
+  /** Delete the checkpoint's last `commits/N`, as a crash between the
+    * publish and the offset commit leaves it; returns N.
+    */
+  private def dropLastCommit(checkpoint: String): Long = {
+    val commits = new HPath(s"$checkpoint/commits")
+    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val last = fs.listStatus(commits).map(_.getPath.getName)
+      .filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(fs.delete(new HPath(commits, last.toString), false))
+    last
+  }
+
+  private def committed(checkpoint: String, n: Long): Boolean =
+    new File(s"$checkpoint/commits/$n").exists()
+
+  test("stream: a snapshot chain batch published before its offset commit replays as a no-op") {
+    val root = tempRoot("chain-stream")
+    val (dir, cp) = (s"$root/table", s"$root/cp")
+    // the stream lands v1's and v2's files, one per micro-batch
+    def run(): Unit = SchemaEvolveStream.start(spark, s"$chainInput/*", dir, cp,
+      maxFilesPerTrigger = Some(1)).awaitTermination()
+
+    run()
+    val single = table(dir)
+    assert(single.size == 3 && committed(cp, 1) && !committed(cp, 2),
+      "two files at maxFilesPerTrigger = 1 must commit batches 0 and 1")
+    val published = files(s"$dir/snap_00002")
+    assert(dropLastCommit(cp) == 1L)
+    run()
+    assert(committed(cp, 1), "the restart must replay and commit batch 1")
+    assert(table(dir) == single)
+    assert(files(s"$dir/snap_00002") == published, "the replay rewrote snap_00002")
+  }
+
+  test("stream: a serving-log batch published before its offset commit replays as a no-op") {
+    val root = tempRoot("ann-stream")
+    val (in, log, cp) = (s"$root/in", s"$root/log", s"$root/cp")
+    probes0.coalesce(1).write.parquet(s"$in/f1")
+    probes1.coalesce(1).write.parquet(s"$in/f2")
+    val schema = spark.read.parquet(s"$in/f1").schema
+    def run(): Unit = AnnServeStream.start(spark, s"$in/*", schema, annIndex, vecs,
+      slice, log, cp, k, cands, maxFilesPerTrigger = Some(1)).awaitTermination()
+
+    run()
+    val single = served(log)
+    assert(single.map(_._1) == Set(0L, 1L) && committed(cp, 1) && !committed(cp, 2),
+      "two files at maxFilesPerTrigger = 1 must serve batches 0 and 1")
+    val published = files(s"$log/batch_id=1")
+    assert(dropLastCommit(cp) == 1L)
+    run()
+    assert(committed(cp, 1), "the restart must replay and commit batch 1")
+    assert(served(log) == single)
+    assert(files(s"$log/batch_id=1") == published, "the replay rewrote batch_id=1")
   }
 }
 
