@@ -414,30 +414,13 @@ object MinHashLSH {
   def buildIndex(
       docs: DataFrame, idCol: String, textCol: String, indexDir: String,
       n: Int = 3, k: Int = 128, b: Int = 16): Unit =
-    writeIndex(docs, idCol, textCol, indexDir, n, k, b, mode = "overwrite")
-
-  /** Append a (disjoint-id) batch's shingles+bands to an existing
-    * index — call after a batch survives dedup so tomorrow's batch is
-    * checked against it too. `appendToIndex(batch)` after
-    * `buildIndex(corpus)` leaves the same index contents as
-    * `buildIndex(corpus ∪ batch)`.
-    */
-  def appendToIndex(
-      docs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      n: Int = 3, k: Int = 128, b: Int = 16): Unit =
-    writeIndex(docs, idCol, textCol, indexDir, n, k, b, mode = "append")
-
-  private def writeIndex(
-      docs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      n: Int, k: Int, b: Int, mode: String): Unit = {
     // distinct: signatures/bands are min-aggregates over the hashed
     // shingles and verification collapses duplicates, so storing each
     // (sid, sh) once is free index compression
     Materialize.cached(shingleRows(docs, idCol, textCol, n).distinct()) { sh =>
-      sh.write.mode(mode).parquet(shinglesPath(indexDir))
-      bandedFromShingles(sh, k, b).write.mode(mode).parquet(bandsPath(indexDir))
+      sh.write.mode("overwrite").parquet(shinglesPath(indexDir))
+      bandedFromShingles(sh, k, b).write.mode("overwrite").parquet(bandsPath(indexDir))
     }
-  }
 
   /** Candidate pairs touching the batch: batch×batch (id_a < id_b)
     * plus batch×corpus (ordered with least/greatest). Lazy — exposed
@@ -526,7 +509,7 @@ object MinHashLSH {
     * and batch. (n, k, b) must match the index build. EAGER, like
     * [[nearDuplicates]] — the result is materialized and the batch
     * shingle cache released before returning, so the caller may
-    * immediately [[appendToIndex]] (or even delete the index).
+    * immediately rebuild (or even delete) the index.
     */
   def nearDuplicatesAgainst(
       batch: DataFrame, idCol: String, textCol: String, indexDir: String,
@@ -549,8 +532,8 @@ object MinHashLSH {
     * only the PROBE — two stored-band scans, the candidate join, and
     * the exact verify — never re-shingling or re-signing either side.
     * This is the steady-state day-N shape: every batch pays its
-    * derivation exactly once (on arrival, when it is appended to the
-    * index anyway), and every later question — re-dedup after a
+    * derivation exactly once (on arrival, when its own index is
+    * built), and every later question — re-dedup after a
     * threshold change, audit of a past batch, the q33 gate — probes
     * stored state. At 100 TB the regex+k-hash derivation is the
     * dominant cost and must never run twice for the same bytes.

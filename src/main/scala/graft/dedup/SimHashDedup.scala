@@ -94,14 +94,6 @@ object SimHashDedup {
       docs: DataFrame, idCol: String, textCol: String, indexDir: String): Unit =
     chunkedDocs(docs, idCol, textCol).write.mode("overwrite").parquet(chunksPath(indexDir))
 
-  /** Append a (disjoint-id) batch to an existing index —
-    * `appendToIndex(batch)` after `buildIndex(corpus)` leaves the same
-    * index contents as `buildIndex(corpus ∪ batch)`.
-    */
-  def appendToIndex(
-      docs: DataFrame, idCol: String, textCol: String, indexDir: String): Unit =
-    chunkedDocs(docs, idCol, textCol).write.mode("append").parquet(chunksPath(indexDir))
-
   /** Near-duplicate pairs between `batch` and the persisted index
     * (plus within-batch pairs) — equal to [[nearDuplicates]] on
     * (corpus ∪ batch) restricted to pairs touching the batch, without

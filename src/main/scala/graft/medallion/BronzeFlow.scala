@@ -22,31 +22,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object BronzeFlow {
 
-  /** Read one dataset's landing CSVs → normalized, deduped DataFrame.
+  /** A landing dir's CSVs with their types inferred: the one schema
+    * policy of every landing reader.
     *
     * Scan economics: `inferSchema=true` makes Spark read every landing
-    * byte TWICE — once for inference, once for parsing — a 2× ingest
-    * tax at scale. Callers with a declared contract should pass
-    * `schema` (raw column names, pre-normalization): the inference
-    * scan disappears entirely and landing is read exactly once.
-    * The reference bounds inference to a 5000-row window
-    * (`flows/bronze.py:74`); Spark's CSV inference has no such bound.
+    * byte TWICE — once for inference, once for parsing. The reference
+    * bounds inference to a 5000-row window (`flows/bronze.py:74`);
+    * Spark's CSV inference has no such bound.
     */
-  def read(
-      spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType = null): DataFrame = {
-    val reader = spark.read.option("header", "true")
-    val raw =
-      if (schema != null) reader.schema(schema).csv(landingDir)
-      else reader.option("inferSchema", "true").csv(landingDir)
-    ColumnNormalizer(raw).dropDuplicates()
-  }
+  def inferred(spark: SparkSession, landingDir: String): DataFrame =
+    spark.read.option("header", "true").option("inferSchema", "true").csv(landingDir)
+
+  /** Read one dataset's landing CSVs → normalized, deduped DataFrame. */
+  def read(spark: SparkSession, landingDir: String): DataFrame =
+    ColumnNormalizer(inferred(spark, landingDir)).dropDuplicates()
 
   /** Ingest one dataset landing→bronze; returns the bronze path. */
-  def ingest(
-      spark: SparkSession, landingDir: String, bronzeDir: String,
-      schema: org.apache.spark.sql.types.StructType = null): String = {
-    read(spark, landingDir, schema).write.mode("overwrite").parquet(bronzeDir)
+  def ingest(spark: SparkSession, landingDir: String, bronzeDir: String): String = {
+    read(spark, landingDir).write.mode("overwrite").parquet(bronzeDir)
     bronzeDir
   }
 
@@ -81,9 +74,7 @@ object BronzeFlow {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{coalesce, concat_ws, count}
     import org.apache.spark.sql.types.StringType
-    val dataSchema = Option(schema).getOrElse(
-      spark.read.option("header", "true").option("inferSchema", "true")
-        .csv(landingDir).schema)
+    val dataSchema = Option(schema).getOrElse(inferred(spark, landingDir).schema)
     // backtick-quote when resolving: a dotted CSV header like
     // `album.score` otherwise parses as struct-field access and fails
     // analysis (graft.core.Cols)
@@ -126,33 +117,8 @@ object BronzeFlow {
 
   /** Flow over datasets with landing data; manifest of bronze paths
     * (reference `bronze.py:102-113`: empty landing → empty manifest).
-    * `parallel` mirrors the reference's Prefect `.map` fan-out
-    * (`bronze.py:112`): per-dataset ingests run as concurrent Spark
-    * jobs from separate threads — useful when each dataset is small
-    * enough that job-submission latency dominates.
     */
-  def run(
-      spark: SparkSession, lake: Lake, datasets: Seq[String],
-      parallel: Boolean = false,
-      schemas: Map[String, org.apache.spark.sql.types.StructType] = Map.empty): Map[String, String] = {
-    def one(ds: String): Option[(String, String)] =
-      if (hasLanding(spark, lake.landing(ds)))
-        Some(ds -> ingest(spark, lake.landing(ds), lake.bronze(ds),
-          schemas.getOrElse(ds, null)))
-      else None
-    if (!parallel) datasets.flatMap(one).toMap
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.util.{Failure, Try}
-      // await ALL ingests (Try-wrapped) before surfacing any failure:
-      // fail-fast would return while sibling ingests still write bronze
-      // dirs in background threads, racing a caller's retry
-      val results = Await.result(
-        Future.traverse(datasets)(ds => Future(Try(one(ds)))), Duration.Inf)
-      results.collectFirst { case Failure(e) => e }.foreach(throw _)
-      results.flatMap(_.get).toMap
-    }
-  }
+  def run(spark: SparkSession, lake: Lake, datasets: Seq[String]): Map[String, String] =
+    datasets.filter(ds => hasLanding(spark, lake.landing(ds)))
+      .map(ds => ds -> ingest(spark, lake.landing(ds), lake.bronze(ds))).toMap
 }

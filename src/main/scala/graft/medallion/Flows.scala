@@ -48,30 +48,21 @@ object Flows {
     * flow's manifest — the composition of the reference's four flow
     * `__main__`s).
     *
-    * The per-flow capabilities thread through so the one orchestration
-    * entry point can run the whole pipeline the way a cluster should:
-    *  - `schemas`: declared raw landing schemas per dataset —
-    *    skips bronze's CSV inference scan (single-scan ingest,
-    *    [[BronzeFlow.read]]).
-    *  - `partitionSpec`: silver/gold table name → partition columns
-    *    (hive-style layout; downstream scans partition-prune).
-    *  - `versioned = true`: silver and gold writes become atomic
-    *    [[Versioned]] pointer publishes — a rerun never exposes an
-    *    absent or half-written table to concurrent readers; their
-    *    manifest entries are then immutable `v_NNNNNN` dirs and gold
-    *    reads silver through the `_current` pointer.
+    * `versioned = true`: silver and gold writes become atomic
+    * [[Versioned]] pointer publishes — a rerun never exposes an absent
+    * or half-written table to concurrent readers; their manifest
+    * entries are then immutable `v_NNNNNN` dirs and gold reads silver
+    * through the `_current` pointer.
     */
   def runAll(
       spark: SparkSession, csvFolder: String, lake: Lake,
       maxChunkBytes: Int = Chunker.DefaultMaxBytes,
       bufferBytes: Int = Chunker.DefaultBufferBytes,
-      schemas: Map[String, org.apache.spark.sql.types.StructType] = Map.empty,
-      partitionSpec: Map[String, Seq[String]] = Map.empty,
       versioned: Boolean = false): Map[String, Map[String, String]] = {
     val landed = LandingFlow.run(csvFolder, lake, maxChunkBytes, bufferBytes)
-    val bronze = BronzeFlow.run(spark, lake, landed.keys.toSeq.sorted, schemas = schemas)
-    val silver = SilverFlow.run(spark, lake, bronze, partitionSpec, versioned)
-    val gold = GoldFlow.run(spark, lake, partitionSpec, versioned)
+    val bronze = BronzeFlow.run(spark, lake, landed.keys.toSeq.sorted)
+    val silver = SilverFlow.run(spark, lake, bronze, versioned)
+    val gold = GoldFlow.run(spark, lake, versioned)
     Map(
       "landing" -> landed.map { case (k, v) => k -> v.mkString(",") },
       "bronze" -> bronze,

@@ -76,7 +76,7 @@ object GoldFlow {
     lower(trim(country)).isin("brazil", "brasil")
 
   /** `gold.py:115-122` over band_avg_scores, unordered. */
-  private def brazilianBands(bandAvgScores: DataFrame): DataFrame =
+  private[medallion] def brazilianBands(bandAvgScores: DataFrame): DataFrame =
     bandAvgScores
       .withColumn("country_normalized", lower(trim(col("country"))))
       .filter(isBrazilian(col("country")))
@@ -85,22 +85,6 @@ object GoldFlow {
     music.groupBy(col("band_id"), col("band_name"), col("country"))
       .agg(count(lit(1)).as("album_count"))
 
-  /** `gold.py:82-94`: top-10 bands per country by review count. */
-  def createTop10ByCountry(music: DataFrame, reviews: DataFrame): DataFrame =
-    top10ByCountry(bandStats(music, reviews)).orderBy(Top10Order: _*)
-
-  /** `gold.py:98-111`: per-band score summary. */
-  def createBandAvgScores(music: DataFrame, reviews: DataFrame): DataFrame =
-    bandStats(music, reviews).orderBy(ScoreOrder: _*)
-
-  /** `gold.py:115-122`: normalized-country filter over band_avg_scores. */
-  def createBrazilianBands(bandAvgScores: DataFrame): DataFrame =
-    brazilianBands(bandAvgScores).orderBy(ScoreOrder: _*)
-
-  /** `gold.py:126-131`: album counts per band. */
-  def createBandAlbumCounts(music: DataFrame): DataFrame =
-    albumCounts(music).orderBy(AlbumCountOrder: _*)
-
   /** `gold.py:45-51`: delete everything under gold/ before rewriting. */
   def clearGold(spark: SparkSession, lake: Lake): Unit = {
     val p = new HPath(lake.goldRoot)
@@ -108,32 +92,9 @@ object GoldFlow {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** Empty-guarded write (`gold.py:62-65`); returns path or None.
-    * `partitions` enables hive-style partitioned layout — off by
-    * default for reference parity (single-dir tables,
-    * `flows/gold.py:70`), on at scale so downstream scans
-    * partition-prune (SURVEY §7.3 #6).
-    */
-  def writeGold(
-      df: DataFrame, path: String,
-      partitions: Seq[String] = Nil,
-      versioned: Boolean = false): Option[String] =
-    if (df.isEmpty) None else Some(publish(df, path, partitions, versioned))
-
-  /** [[writeGold]] for a table already known to be non-empty. */
-  private def publish(
-      df: DataFrame, path: String, partitions: Seq[String], versioned: Boolean): String =
-    if (versioned) Versioned.commit(df.sparkSession, path, df, partitions = partitions)
-    else {
-      val w = df.write.mode("overwrite")
-      (if (partitions.nonEmpty) w.partitionBy(partitions: _*) else w).parquet(path)
-      path
-    }
-
   /** `gold.py:135-167`: the gold DAG with its input guard. Missing or
     * unreadable silver inputs return an empty manifest, not an error
-    * (`gold.py:144-148` try/except). `partitionSpec` maps gold table
-    * name → partition columns (empty = flat layout).
+    * (`gold.py:144-148` try/except).
     *
     * `versioned = true` (pair with `SilverFlow.run(versioned = true)`):
     * silver inputs resolve through the `_current` pointer, gold writes
@@ -148,10 +109,7 @@ object GoldFlow {
     * in versioned mode leaves the previous version visible rather than
     * truncating — reruns only ever move tables forward.
     */
-  def run(
-      spark: SparkSession, lake: Lake,
-      partitionSpec: Map[String, Seq[String]] = Map.empty,
-      versioned: Boolean = false): Map[String, String] = {
+  def run(spark: SparkSession, lake: Lake, versioned: Boolean = false): Map[String, String] = {
     if (!versioned) clearGold(spark, lake)
     val (music, reviews) =
       try {
@@ -181,8 +139,8 @@ object GoldFlow {
     val result = Map.newBuilder[String, String]
     // each table is one file, sorted within its one partition
     def write(name: String, df: DataFrame, order: Seq[Column]): Unit =
-      result += name -> publish(df.coalesce(1).sortWithinPartitions(order: _*),
-        lake.gold(name), partitionSpec.getOrElse(name, Nil), versioned)
+      result += name -> Versioned.write(df.coalesce(1).sortWithinPartitions(order: _*),
+        lake.gold(name), versioned)
     // one partition already clusters the window by country
     write("top10_by_country", top10ByCountry(stats.coalesce(1)), Top10Order)
     write("band_avg_scores", stats, ScoreOrder)

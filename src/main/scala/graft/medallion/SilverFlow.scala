@@ -80,23 +80,9 @@ object SilverFlow {
       .select("review_id", "album_id", "album_title", "score", "content")
   }
 
-  private def write(
-      df: DataFrame, path: String,
-      partitions: Seq[String] = Nil,
-      versioned: Boolean = false): String =
-    if (versioned)
-      Versioned.commit(df.sparkSession, path, df, partitions = partitions)
-    else {
-      val w = df.write.mode("overwrite")
-      (if (partitions.nonEmpty) w.partitionBy(partitions: _*) else w).parquet(path)
-      path
-    }
-
   /** Conditional-DAG flow (`flows/silver.py:161-185`): albums+bands
     * gate the catalog; reviews gates album_reviews (which also needs
-    * albums). Returns the written-path manifest. `partitionSpec` maps
-    * dataset name → partition columns (empty = flat layout, reference
-    * parity), mirroring GoldFlow.
+    * albums). Returns the written-path manifest.
     *
     * `versioned = true` routes every write through [[Versioned.commit]]
     * — an atomic pointer publish, so a rerun never exposes a
@@ -111,28 +97,24 @@ object SilverFlow {
     */
   def run(
       spark: SparkSession, lake: Lake, bronze: Map[String, String],
-      partitionSpec: Map[String, Seq[String]] = Map.empty,
       versioned: Boolean = false): Map[String, String] = {
-    def parts(name: String): Seq[String] = partitionSpec.getOrElse(name, Nil)
     val result = Map.newBuilder[String, String]
+    def publish(name: String, df: DataFrame): Unit =
+      result += name -> Versioned.write(df, lake.silver(name), versioned)
     val albumsOpt =
       if (bronze.contains("albums") && bronze.contains("bands")) {
         val albums = transformAlbums(spark.read.parquet(bronze("albums")))
         val bands = transformBands(spark.read.parquet(bronze("bands")))
-        result += "albums" -> write(albums, lake.silver("albums"), parts("albums"), versioned)
-        result += "bands" -> write(bands, lake.silver("bands"), parts("bands"), versioned)
-        result += "music_catalog" -> write(createMusicCatalog(albums, bands),
-          lake.silver("music_catalog"), parts("music_catalog"), versioned)
+        publish("albums", albums)
+        publish("bands", bands)
+        publish("music_catalog", createMusicCatalog(albums, bands))
         Some(albums)
       } else None
 
     if (bronze.contains("reviews")) {
       val reviews = transformReviews(spark.read.parquet(bronze("reviews")))
-      result += "reviews" -> write(reviews, lake.silver("reviews"), parts("reviews"), versioned)
-      albumsOpt.foreach { albums =>
-        result += "album_reviews" -> write(createAlbumReviews(albums, reviews),
-          lake.silver("album_reviews"), parts("album_reviews"), versioned)
-      }
+      publish("reviews", reviews)
+      albumsOpt.foreach(albums => publish("album_reviews", createAlbumReviews(albums, reviews)))
     }
     result.result()
   }

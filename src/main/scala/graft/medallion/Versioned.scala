@@ -23,22 +23,21 @@ import java.security.MessageDigest
   *   <root>/_current                    names the active version
   * }}}
   *
-  * `_current` holds the active version's name on its first line. For an
-  * unpartitioned table the next line holds the schema the version was
-  * committed with, as Spark schema JSON (every field nullable, as a
-  * parquet read reports it), so [[read]] hands it to the reader and
-  * skips the footer-inference job; a partitioned table has no schema
-  * line (its partition columns are discovered from its dirs). A last
-  * line tagged `input-key ` holds the version's input key, when its
-  * frame has one:
+  * `_current` holds the active version's name on its first line. The
+  * next line holds the schema the version was committed with, as Spark
+  * schema JSON (every field nullable, as a parquet read reports it), so
+  * [[read]] hands it to the reader and skips the footer-inference job.
+  * A last line tagged `input-key ` holds the version's input key, when
+  * its frame has one:
   *
   * {{{
   *   v_000002
-  *   {"type":"struct","fields":[...]}      unpartitioned only
+  *   {"type":"struct","fields":[...]}
   *   input-key 3f9a...                     keyed frames only
   * }}}
   *
-  * A pointer without a schema line reads by inference; one without a
+  * A pointer without a schema line (written by older code, which left
+  * it out for partitioned versions) reads by inference; one without a
   * key line (a non-keyed frame, or older code) never matches a commit.
   *
   * Publish only what changed: the input key is a SHA-256 digest of what
@@ -48,7 +47,7 @@ import java.security.MessageDigest
   * relation's format, options and schemas; the plan in canonical form
   * and its output schema; the session settings that change its rows
   * (ANSI mode, time zone, the legacy, parquet and ignore-files read
-  * switches); and the partition columns. When the active version's key
+  * switches). When the active version's key
   * equals the key of the frame being committed, [[commit]] writes
   * nothing — no claim marker, no version dir, no GC pass — and returns
   * the active version dir. A frame has no key, and always publishes,
@@ -178,7 +177,7 @@ object Versioned {
 
   /** The input key [[commit]] compares (see the class doc), or None
     * when the frame's rows are not fixed by its files and plan. */
-  private def inputKey(df: DataFrame, partitions: Seq[String]): Option[String] = {
+  private def inputKey(df: DataFrame): Option[String] = {
     val spark = df.sparkSession
     val plan = df.queryExecution.analyzed
     val nodes = plan.collectWithSubqueries { case n => n }
@@ -211,7 +210,7 @@ object Versioned {
       spark.conf.getAll.toSeq.filter { case (k, _) =>
         Seq("spark.sql.legacy.", "spark.sql.parquet.", "spark.sql.files.ignore").exists(k.startsWith)
       }.sorted
-    val text = (relations ++ Seq(planText, df.schema.json, partitions.mkString(",")) ++
+    val text = (relations ++ Seq(planText, df.schema.json) ++
       settings.map { case (k, v) => s"$k=$v" }).mkString("\u0000")
     Some(MessageDigest.getInstance("SHA-256").digest(text.getBytes(StandardCharsets.UTF_8))
       .map(b => f"${b & 0xff}%02x").mkString)
@@ -253,12 +252,11 @@ object Versioned {
     */
   def commit(
       spark: SparkSession, root: String, df: DataFrame,
-      gcGraceMs: Long = DefaultGcGraceMs,
-      partitions: Seq[String] = Nil): String = {
+      gcGraceMs: Long = DefaultGcGraceMs): String = {
     val rootP = new HPath(root)
     val f = fs(spark, rootP)
     val ptr = new HPath(s"$root/$Pointer")
-    val key = inputKey(df, partitions)
+    val key = inputKey(df)
     // a pointer caught mid-rename reads as absent: the commit then
     // publishes, which is always safe
     val active =
@@ -270,8 +268,7 @@ object Versioned {
     val floor = versionDirs(f, rootP).lastOption.fold(1)(_._1 + 1)
     val vName = claimNext(f, root, floor)
     val vDir = s"$root/$vName"
-    val w = df.write.mode("overwrite")
-    (if (partitions.nonEmpty) w.partitionBy(partitions: _*) else w).parquet(vDir)
+    df.write.mode("overwrite").parquet(vDir)
 
     // the version active until this instant stays retained for its
     // in-flight readers. ONLY a missing pointer means "first commit";
@@ -284,13 +281,11 @@ object Versioned {
       else try Some(new HPath(resolve(spark, root)).getName)
       catch { case _: java.io.FileNotFoundException => None }
 
-    // publish: write the pointer (the version's name, an unpartitioned
-    // version's schema and the input key) beside _current, then
+    // publish: write the pointer (the version's name, its schema and
+    // the input key) beside _current, then
     // atomic-overwrite rename it into place (FileContext supports
     // OVERWRITE; the plain FileSystem.rename does not)
-    val pointer = (Seq(vName) ++
-      (if (partitions.nonEmpty) None else Some(nullable(df.schema).json)) ++
-      key.map(KeyTag + _)).mkString("\n")
+    val pointer = (Seq(vName, nullable(df.schema).json) ++ key.map(KeyTag + _)).mkString("\n")
     val tmp = new HPath(s"$root/._current.tmp")
     val out = f.create(tmp, true)
     try out.write(pointer.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -337,4 +332,13 @@ object Versioned {
       .foreach(v => f.delete(new HPath(s"$root/.$v.claim"), false))
     vDir
   }
+
+  /** Publish `df` at `path`: a [[commit]] when `versioned`, else a plain
+    * overwrite of the dir. Returns the dir that holds the rows. */
+  private[medallion] def write(df: DataFrame, path: String, versioned: Boolean): String =
+    if (versioned) commit(df.sparkSession, path, df)
+    else {
+      df.write.mode("overwrite").parquet(path)
+      path
+    }
 }

@@ -249,8 +249,8 @@ object CorpusOpsQueries {
     * shuffle), then ONE hash-agg shuffle on (window, type); the
     * distinct-user count is the exact anchor — at 100 TB swap in
     * `approx_count_distinct` (the q51/q52 pairing) and the plan shape
-    * is unchanged. Streaming twin: the same `window()` call under a
-    * watermark is [[EventStream.hourlyRollup]]'s shape with a slide.
+    * is unchanged. The same `window()` call runs unchanged over a
+    * stream under a watermark.
     */
   def q57HoppingWindows(s: SparkSession, dir: String): DataFrame = {
     val slide = "5 minutes"

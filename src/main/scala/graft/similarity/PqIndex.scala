@@ -255,20 +255,6 @@ object PqIndex {
     codes.write.mode("overwrite").parquet(s"$dir/codes")
   }
 
-  /** Append a (disjoint-id) batch's codes to a persisted index under
-    * the index's own FROZEN codebooks — the day-2 shape of the family
-    * ([[graft.dedup.MinHashLSH.appendToIndex]] convention): the corpus
-    * is never re-encoded, the batch pays one encode projection, and
-    * `appendCodes(batch)` after `save(cb, encode(corpus))` leaves the
-    * same codes table as `encode(corpus ∪ batch)` because encoding is
-    * per-row under fixed codebooks. Codebook drift is the trade: a
-    * materially different batch distribution eventually warrants a
-    * re-fit + re-encode (recall is the canary — re-measure it on
-    * append-heavy indexes).
-    */
-  def appendCodes(cb: PqCodebooks, batch: DataFrame, dir: String): Unit =
-    cb.encode(batch).write.mode("append").parquet(s"$dir/codes")
-
   /** Load a persisted index: (codebooks, encoded corpus). Feed both to
     * [[PqCodebooks.adcTopK]] — nothing on this path re-fits or
     * re-encodes.

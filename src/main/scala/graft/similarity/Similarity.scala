@@ -220,25 +220,11 @@ object Similarity {
     * seed).
     */
   def buildCosineIndex(
-      vecs: DataFrame, lsh: RandomHyperplaneLsh, indexDir: String): Unit =
-    writeCosineIndex(vecs, lsh, indexDir, mode = "overwrite")
-
-  /** Append a (disjoint-id) batch's buckets+embeddings to an existing
-    * index — call after a batch survives dedup so tomorrow's batch is
-    * checked against it too. `appendToCosineIndex(batch)` after
-    * `buildCosineIndex(corpus)` leaves the same index contents as
-    * `buildCosineIndex(corpus ∪ batch)`.
-    */
-  def appendToCosineIndex(
-      vecs: DataFrame, lsh: RandomHyperplaneLsh, indexDir: String): Unit =
-    writeCosineIndex(vecs, lsh, indexDir, mode = "append")
-
-  private def writeCosineIndex(
-      vecs: DataFrame, lsh: RandomHyperplaneLsh, indexDir: String, mode: String): Unit = {
+      vecs: DataFrame, lsh: RandomHyperplaneLsh, indexDir: String): Unit = {
     lsh.bucketed(vecs).select(col("lsh_table"), col("lsh_bucket"), col("vec_id"))
-      .write.mode(mode).parquet(bucketsPath(indexDir))
+      .write.mode("overwrite").parquet(bucketsPath(indexDir))
     vecs.select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .write.mode(mode).parquet(embeddingsPath(indexDir))
+      .write.mode("overwrite").parquet(embeddingsPath(indexDir))
   }
 
   /** Candidate pairs touching the batch: batch×batch (id_a < id_b)
@@ -269,7 +255,7 @@ object Similarity {
     * touching the batch, without re-bucketing anything corpus-side.
     * Ids must be globally unique across corpus and batch; `lsh` must
     * match the index build. EAGER: the result is materialized before
-    * returning, so the caller may immediately [[appendToCosineIndex]].
+    * returning, so the caller may immediately rebuild the index.
     */
   def cosineNearDuplicatesAgainst(
       batch: DataFrame, lsh: RandomHyperplaneLsh, indexDir: String,

@@ -1,114 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Event-time streaming aggregation over the `events` table — the
-  * beyond-reference streaming surface (the reference has no stateful
-  * streaming; SURVEY §2.9): tumbling windows + watermark, the
-  * streaming twin of the batch q14 hourly rollup.
-  *
-  * `ts` arrives either as epoch-nanos LongType (legacy nanosAsLong
-  * files) or as a timestamp column (standard TIMESTAMP(MICROS)
-  * parquet); every entry point normalizes to epoch-nanos via
-  * [[graft.core.Tables.normalizeEventTs]] before converting to a
-  * proper timestamp for event-time semantics. At scale the state
-  * store holds one row per (window, event_type) — low cardinality —
-  * and the watermark bounds state growth.
+/** Event-time conversion for the `events` table. `ts` is canonical
+  * epoch-nanos LongType once read through
+  * [[graft.core.Tables.normalizeEventTs]]; event-time windows need it
+  * as a proper timestamp.
   */
 object EventStream {
 
-  private def norm(events: DataFrame): DataFrame =
-    graft.core.Tables.normalizeEventTs(events)
-
   /** Epoch-nanos long → timestamp (microsecond precision). Integer
     * division (`div`): the double-division form `(c / 1000)` has a
-    * ~256 ns ulp at 1.7e18, which would make the streaming rollup
-    * diverge from its batch twin q14 (`ts div 1000`) near hour edges.
+    * ~256 ns ulp at 1.7e18, which would make an event-time window
+    * diverge from the batch q14 bucketing (`ts div 1000`) near hour
+    * edges.
     */
-  def nanosToTs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def nanosToTs(c: Column): Column =
     timestamp_micros(call_function("div", c, lit(1000L)))
-
-  /** Hourly (window, event_type) counts/sums with a watermark. */
-  def hourlyRollup(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    norm(events)
-      .withColumn("event_ts", nanosToTs(col("ts")))
-      .withWatermark("event_ts", watermark)
-      .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("hour"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
-  /** Hopping-window (window, event_type) counts/sums — the streaming
-    * twin of batch q57 ([[graft.queries.CorpusOpsQueries]]): each event
-    * lands in size/slide windows, all finalized by the same watermark.
-    * State per (window, type) key is one row; window count per event
-    * is a constant (size/slide), so state growth stays bounded by the
-    * watermark horizon exactly as in the tumbling case.
-    */
-  def hoppingRollup(events: DataFrame, size: String = "10 minutes",
-      slide: String = "5 minutes", watermark: String = "2 hours"): DataFrame =
-    norm(events)
-      .withColumn("event_ts", nanosToTs(col("ts")))
-      .withWatermark("event_ts", watermark)
-      .groupBy(window(col("event_ts"), size, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** Session-window per-user event counts — the streaming twin of the
-    * batch q70 ([[graft.queries.AnalyticsOpsQueries.q70SessionWindow]]),
-    * demonstrating the claim in its doc: the SAME `session_window`
-    * expression under a watermark IS the streaming sessionizer. Same
-    * gap, same merge rule (events exactly `gap` apart chain), same
-    * output shape (session end = last event + gap).
-    *
-    * State per (user, open session) is one row; the watermark closes a
-    * session once no mergeable event can still arrive (event time past
-    * session end + delay), so state is bounded by the horizon times
-    * the active-user cardinality — the q14/q57 batch-twin pattern
-    * applied to sessions.
-    */
-  def sessionRollup(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    norm(events)
-      .withColumn("ts_ev", nanosToTs(col("ts")))
-      .withWatermark("ts_ev", watermark)
-      .groupBy(session_window(col("ts_ev"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("sess_start"),
-        unix_micros(col("session_window.end")).as("sess_end"),
-        col("n_events"))
-
-  /** At-least-once → effectively-once: drop redelivered events by id
-    * within the watermark horizon. `dropDuplicatesWithinWatermark`
-    * keeps state only until the watermark passes a key's event time —
-    * bounded state no matter how long the stream runs, unlike a plain
-    * streaming `dropDuplicates` whose key state grows forever. This is
-    * the streaming twin of bronze's batch dedup for a Kinesis-style
-    * at-least-once delivery (reference `infra/main.tf:66-124`).
-    */
-  def dedupedEvents(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    norm(events)
-      .withColumn("event_ts", nanosToTs(col("ts")))
-      .withWatermark("event_ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-      .drop("event_ts") // helper column out: output keeps the events schema
-
-  /** File-source stream over the events parquet (schema from a batch
-    * sample), for AvailableNow replays in tests and backfills.
-    */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    // declared schema must match the files' physical encoding; normalize
-    // AFTER source creation (it's a plain projection, streaming-safe) so
-    // consumers always see the canonical epoch-nanos LongType `ts`
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // file stream sources take a directory; glob-filter to the table
-    norm(spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
-  }
 }

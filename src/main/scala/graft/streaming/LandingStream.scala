@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
-import graft.medallion.{ColumnNormalizer, Lake}
+import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake}
 
 /** Streaming landing→bronze (reference §2.9: Kinesis→Firehose delivery,
   * `infra/main.tf:66-124`, with batch layers polling afterwards).
@@ -21,30 +20,22 @@ import graft.medallion.{ColumnNormalizer, Lake}
   */
 object LandingStream {
 
-  /** Streaming CSV needs a declared schema: infer it from the landing
-    * dir with the batch reader (same inference the batch path uses). Prefer
-    * passing a declared schema to [[start]] — inference is a full extra
-    * scan of landing (see [[graft.medallion.BronzeFlow.read]]).
-    */
-  def inferLandingSchema(spark: SparkSession, landingDir: String): StructType =
-    spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(landingDir).schema
-
   def stagingDir(lake: Lake, dataset: String): String =
     s"${lake.root}/bronze_staging/$dataset"
 
-  /** Start the landing→staging stream for one dataset. */
-  def start(
-      spark: SparkSession, lake: Lake, dataset: String,
-      schema: StructType = null,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val s = Option(schema).getOrElse(inferLandingSchema(spark, lake.landing(dataset)))
+  /** Start the landing→staging stream for one dataset. Streaming CSV
+    * needs a declared schema: it is inferred from the landing dir by
+    * the batch reader ([[graft.medallion.BronzeFlow.inferred]]), one
+    * extra scan of landing.
+    */
+  def start(spark: SparkSession, lake: Lake, dataset: String): StreamingQuery = {
+    val schema = BronzeFlow.inferred(spark, lake.landing(dataset)).schema
     val staging = stagingDir(lake, dataset)
     // an append, not a BatchSink partition: finalizeBronze's anti-join
     // already absorbs a replayed batch's rows
     BatchSink.start(
-      spark.readStream.option("header", "true").schema(s).csv(lake.landing(dataset)),
-      trigger, s"${lake.root}/_checkpoints/$dataset") { (batch, _) =>
+      spark.readStream.option("header", "true").schema(schema).csv(lake.landing(dataset)),
+      Trigger.AvailableNow(), s"${lake.root}/_checkpoints/$dataset") { (batch, _) =>
       ColumnNormalizer(batch).write.mode("append").parquet(staging)
     }
   }
@@ -63,15 +54,12 @@ object LandingStream {
     * always exactly `dropDuplicates` over everything ever staged.
     *
     * Concurrency contract: bronze mutation happens under the table's
-    * [[graft.core.FsLock]] writer lock, shared with
-    * [[graft.medallion.Maintenance.compact]]/`upsertByKey` — see
-    * WriterContractSpec. A crash mid-finalize leaves the lock behind;
-    * the next writer breaks it after the stale horizon and the
-    * staged-file protocol above makes the rerun safe.
+    * [[graft.core.FsLock]] writer lock, so two finalizes of one table
+    * never interleave — see WriterContractSpec. A crash mid-finalize
+    * leaves the lock behind; the next writer breaks it after the stale
+    * horizon and the staged-file protocol above makes the rerun safe.
     */
-  def finalizeBronze(
-      spark: SparkSession, lake: Lake, dataset: String,
-      lockStaleMs: Long = graft.core.FsLock.DefaultStaleMs): String = {
+  def finalizeBronze(spark: SparkSession, lake: Lake, dataset: String): String = {
     val staging = stagingDir(lake, dataset)
     val bronzeDir = lake.bronze(dataset)
     val sp = new HPath(staging)
@@ -82,14 +70,13 @@ object LandingStream {
         .map(_.getPath)
     if (stagedFiles.isEmpty) return bronzeDir // nothing new → no-op
 
-    // writer lock on bronze: an append landing between a concurrent
-    // Maintenance.compact's read and swap would be silently lost with
-    // the compacted rewrite winning; under the lock the race is a loud
-    // FsLock.LockHeld and the staged batch stays in staging for the
-    // retry. The streaming side (start → staging appends) needs no
-    // lock — it never touches bronze.
+    // writer lock on bronze: a second finalize reading bronze while
+    // this one appends or swaps would anti-join against a stale table;
+    // under the lock the race is a loud FsLock.LockHeld and the staged
+    // batch stays in staging for the retry. The streaming side (start →
+    // staging appends) needs no lock — it never touches bronze.
     graft.core.FsLock.withLock(spark, bronzeDir,
-      s"finalizeBronze-${ProcessHandle.current().pid()}", lockStaleMs) {
+      s"finalizeBronze-${ProcessHandle.current().pid()}") {
 
     val staged = spark.read.parquet(staging).dropDuplicates()
     val bp = new HPath(bronzeDir)
@@ -133,16 +120,9 @@ object LandingStream {
     bronzeDir
   }
 
-  /** Convenience: stream everything currently landed, then finalize.
-    * Pass `schema` (the raw landing contract, pre-normalization) to
-    * skip the pre-stream inference scan entirely — the streaming twin
-    * of [[graft.medallion.BronzeFlow.read]]'s single-scan ingest.
-    */
-  def runAvailableNow(
-      spark: SparkSession, lake: Lake, dataset: String,
-      schema: StructType = null): String = {
-    val q = start(spark, lake, dataset, schema)
-    q.awaitTermination()
+  /** Convenience: stream everything currently landed, then finalize. */
+  def runAvailableNow(spark: SparkSession, lake: Lake, dataset: String): String = {
+    start(spark, lake, dataset).awaitTermination()
     finalizeBronze(spark, lake, dataset)
   }
 
@@ -150,16 +130,12 @@ object LandingStream {
     * [[graft.medallion.Flows.runAll]]'s bronze leg: start every
     * dataset's landing→staging stream (they run concurrently off the
     * shared scheduler), await them all, then finalize each into
-    * bronze. `schemas` carries the declared raw landing contract per
-    * dataset, same as `Flows.runAll(schemas = …)` — a dataset with an
-    * entry skips the pre-stream inference scan entirely; one without
-    * pays it ([[inferLandingSchema]]).
+    * bronze.
     */
   def runAllAvailableNow(
-      spark: SparkSession, lake: Lake, datasets: Seq[String],
-      schemas: Map[String, StructType] = Map.empty): Map[String, String] = {
-    val qs = datasets.map(d => d -> start(spark, lake, d, schemas.get(d).orNull))
-    qs.foreach(_._2.awaitTermination())
+      spark: SparkSession, lake: Lake, datasets: Seq[String]): Map[String, String] = {
+    val qs = datasets.map(d => start(spark, lake, d))
+    qs.foreach(_.awaitTermination())
     datasets.map(d => d -> finalizeBronze(spark, lake, d)).toMap
   }
 }

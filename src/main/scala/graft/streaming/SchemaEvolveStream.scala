@@ -32,7 +32,7 @@ import graft.medallion.SchemaEvolution
   * Scale shape: the chain rewrites O(table) per batch — right for a
   * bronze dimension/control table fed by an evolving producer (the
   * reference's Iceberg bronze is exactly that); a fact-scale stream
-  * keeps [[LandingStream]]'s declared-schema fast path and evolves on
+  * keeps [[LandingStream]]'s fixed-schema append and evolves on
   * a schedule via [[SchemaEvolution.appendEvolved]] instead.
   */
 object SchemaEvolveStream {

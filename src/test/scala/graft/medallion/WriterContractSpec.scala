@@ -2,83 +2,37 @@ package graft.medallion
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkTestBase
 import graft.core.FsLock
 import graft.streaming.LandingStream
 
-/** Single-writer contract between the plain-dir bronze mutators:
-  * [[LandingStream.finalizeBronze]] appending while
-  * [[Maintenance.compact]] reads-then-swaps the same dir would silently
-  * lose the appended batch — under the shared [[FsLock]] the late
-  * writer fails LOUDLY and nothing is lost.
+/** Single-writer contract of bronze: [[LandingStream.finalizeBronze]]
+  * mutates bronze under the table's [[FsLock]], so a second writer
+  * holding that lock makes it fail LOUDLY, and nothing is lost.
   */
 class WriterContractSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def lakeWithStaged(): (Lake, String, String) = {
+  test("finalize fails loudly while another writer holds the bronze lock; a retry lands the batch once") {
     val lake = Lake(Files.createTempDirectory("writer-contract").toString)
     val bronze = lake.bronze("events")
-    // bronze starts with two rows scattered over several small files
-    Seq(1 -> "a", 2 -> "b").toDF("id", "v").repartition(4)
-      .write.parquet(bronze)
+    val staging = LandingStream.stagingDir(lake, "events")
+    Seq(1 -> "a", 2 -> "b").toDF("id", "v").write.parquet(bronze)
     // one fresh row staged by the streaming side
-    Seq(3 -> "c").toDF("id", "v")
-      .write.parquet(LandingStream.stagingDir(lake, "events"))
-    (lake, bronze, LandingStream.stagingDir(lake, "events"))
-  }
+    Seq(3 -> "c").toDF("id", "v").write.parquet(staging)
 
-  test("compact fails loudly while a finalize holds the bronze writer lock") {
-    val (_, bronze, _) = lakeWithStaged()
-    FsLock.acquire(spark, bronze, "finalizeBronze-in-progress")
+    FsLock.acquire(spark, bronze, "other-writer")
     try {
-      val e = intercept[FsLock.LockHeld](
-        Maintenance.compact(spark, bronze, targetFileBytes = 1 << 20))
-      assert(e.owner == "finalizeBronze-in-progress")
-    } finally FsLock.release(spark, bronze)
-  }
-
-  test("finalize fails loudly while a compact holds the lock; the batch is NOT lost") {
-    val (lake, bronze, staging) = lakeWithStaged()
-    FsLock.acquire(spark, bronze, "compact-in-progress")
-    try {
-      intercept[FsLock.LockHeld](LandingStream.finalizeBronze(spark, lake, "events"))
+      val e = intercept[FsLock.LockHeld](LandingStream.finalizeBronze(spark, lake, "events"))
+      assert(e.owner == "other-writer")
       // the conflicted batch survives in staging for the retry
       assert(spark.read.parquet(staging).count() == 1)
       assert(spark.read.parquet(bronze).count() == 2)
     } finally FsLock.release(spark, bronze)
 
-    // after the compactor releases, the retried finalize lands the batch
+    // after the other writer releases, the retried finalize lands the batch
     LandingStream.finalizeBronze(spark, lake, "events")
-    assert(spark.read.parquet(bronze).as[(Int, String)].collect().toSet ==
-      Set(1 -> "a", 2 -> "b", 3 -> "c"))
-  }
-
-  test("serialized compact-then-finalize loses nothing either way round") {
-    val (lake, bronze, _) = lakeWithStaged()
-    val n = Maintenance.compact(spark, bronze, targetFileBytes = 1 << 20)
-    assert(n == 1, "4 small files should compact to 1")
-    LandingStream.finalizeBronze(spark, lake, "events")
-    assert(spark.read.parquet(bronze).as[(Int, String)].collect().toSet ==
-      Set(1 -> "a", 2 -> "b", 3 -> "c"))
-    // and the other order: stage another row, finalize, then compact
-    Seq(4 -> "d").toDF("id", "v")
-      .write.mode("append").parquet(LandingStream.stagingDir(lake, "events"))
-    LandingStream.finalizeBronze(spark, lake, "events")
-    Maintenance.compact(spark, bronze, targetFileBytes = 1 << 20)
-    assert(spark.read.parquet(bronze).as[(Int, String)].collect().toSet ==
-      Set(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d"))
-  }
-
-  test("upsertByKey participates in the same writer contract") {
-    val (_, bronze, _) = lakeWithStaged()
-    FsLock.acquire(spark, bronze, "other-writer")
-    try intercept[FsLock.LockHeld](
-      Maintenance.upsertByKey(spark, bronze, Seq(1 -> "z").toDF("id", "v"), Seq("id")))
-    finally FsLock.release(spark, bronze)
-    Maintenance.upsertByKey(spark, bronze, Seq(1 -> "z").toDF("id", "v"), Seq("id"))
-    assert(spark.read.parquet(bronze).as[(Int, String)].collect().toSet ==
-      Set(1 -> "z", 2 -> "b"))
+    assert(spark.read.parquet(bronze).as[(Int, String)].collect().sorted.toSeq ==
+      Seq(1 -> "a", 2 -> "b", 3 -> "c"))
   }
 }

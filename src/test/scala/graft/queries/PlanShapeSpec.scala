@@ -136,21 +136,6 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct"), "window generation must not join")
   }
 
-  test("partitioned gold write partition-prunes a country filter at the scan") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("gold-part").toString + "/t"
-    val gold = Seq(("brazil", 1L, 4.5), ("norway", 2L, 3.0), ("sweden", 3L, 2.0))
-      .toDF("country", "band_id", "avg_score")
-    graft.medallion.GoldFlow.writeGold(gold, dir, partitions = Seq("country"))
-    val scan = spark.read.parquet(dir).filter(col("country") === "brazil")
-    val p = plan(scan)
-    assert(p.contains("PartitionFilters: [isnotnull(country"),
-      p.linesIterator.find(_.contains("PartitionFilters")).getOrElse(p.take(400)))
-    assert(p.contains("= brazil"), "country predicate not in PartitionFilters")
-    assert(scan.select("band_id").as[Long].collect().toSeq == Seq(1L))
-  }
-
   test("q60 rollup plans one Expand + one aggregate, not three scans") {
     val p = plan(AnalyticsOpsQueries.q60RollupScorecard(spark, sf))
     assert(p.contains("Expand"), "rollup must plan an Expand over grouping sets")

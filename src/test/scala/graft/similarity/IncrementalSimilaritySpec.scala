@@ -60,36 +60,11 @@ class IncrementalSimilaritySpec extends SparkTestBase {
     assert(!ids.exists(p => p._1 == 103L || p._2 == 103L))
   }
 
-  test("appendToCosineIndex(batch) leaves the same index as a full rebuild") {
-    val corpusDf = df(corpus)
-    val batchDf = df(batch)
-    val incrIdx = Files.createTempDirectory("incr-cos-append").toString
-    val fullIdx = Files.createTempDirectory("incr-cos-full").toString
-    Similarity.buildCosineIndex(corpusDf, lsh, incrIdx)
-    Similarity.appendToCosineIndex(batchDf, lsh, incrIdx)
-    Similarity.buildCosineIndex(corpusDf.union(batchDf), lsh, fullIdx)
-
-    def buckets(dir: String) = spark.read.parquet(s"$dir/buckets")
-      .as[(Int, Long, Long)].collect().toSet
-    def embs(dir: String) = spark.read.parquet(s"$dir/embeddings")
-      .as[(Long, Seq[Double])].collect().toMap
-    assert(buckets(incrIdx) == buckets(fullIdx))
-    assert(embs(incrIdx) == embs(fullIdx))
-
-    // day-3 dedup against the grown index sees the appended vectors
-    val day3 = df(Seq(201L -> Seq(1f, 0.95f, -1f, -0.95f)))
-    val hits = pairsOf(
-      Similarity.cosineNearDuplicatesAgainst(day3, lsh, incrIdx, threshold))
-      .map(p => (p._1, p._2))
-    assert(hits == Set((104L, 201L), (105L, 201L)))
-  }
-
   test("replay (batch already appended) yields self-pairs without duplicated rows") {
     val corpusDf = df(corpus)
     val batchDf = df(batch)
     val idx = Files.createTempDirectory("incr-cos-replay").toString
-    Similarity.buildCosineIndex(corpusDf, lsh, idx)
-    Similarity.appendToCosineIndex(batchDf, lsh, idx)
+    Similarity.buildCosineIndex(corpusDf.union(batchDf), lsh, idx)
     // crash-replay: every batch doc is already in the index
     val rows = Similarity.cosineNearDuplicatesAgainst(batchDf, lsh, idx, threshold)
       .select(col("id_a"), col("id_b")).as[(Long, Long)].collect()

@@ -115,21 +115,6 @@ class PqAnnSpec extends SparkTestBase {
     assert(recall >= 0.5, s"partial-probe recall collapsed: $recall")
   }
 
-  test("appendCodes(batch) leaves the same index as encoding corpus ∪ batch") {
-    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
-    val corpus = vecs.filter($"vec_id" < 400).select($"vec_id", $"embedding")
-    val batch = vecs.filter($"vec_id" >= 400)
-      .select(($"vec_id" + 9000).as("vec_id"), $"embedding")
-    val cb = PqIndex.fit(corpus, m = 8, ksub = 16)
-    val idx = java.nio.file.Files.createTempDirectory("pq-append").toString
-    PqIndex.save(cb, cb.encode(corpus), idx)
-    PqIndex.appendCodes(cb, batch, idx)
-    val (_, codes) = PqIndex.load(spark, idx)
-    val stored = codes.as[(Long, Seq[Int])].collect().toMap
-    val direct = cb.encode(corpus.unionByName(batch)).as[(Long, Seq[Int])].collect().toMap
-    assert(stored == direct, "appended index diverges from a full re-encode")
-  }
-
   test("candidates < k is rejected; ragged codebooks are rejected") {
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
     val cb = PqIndex.fit(vecs, m = 8, ksub = 16)

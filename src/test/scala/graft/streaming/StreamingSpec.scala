@@ -8,8 +8,8 @@ import graft.SparkTestBase
 import graft.medallion.{BronzeFlow, Chunker, Lake, LandingFlow}
 
 /** Streaming landing→bronze must produce exactly the batch result
-  * (SURVEY §2.9: AvailableNow = batch-equivalent, replayable), and the
-  * event-time rollup must match its batch twin.
+  * (SURVEY §2.9: AvailableNow = batch-equivalent, replayable), also
+  * when a crash makes the stream replay a batch.
   */
 class StreamingSpec extends SparkTestBase {
 
@@ -31,9 +31,8 @@ class StreamingSpec extends SparkTestBase {
   test("a second Chunker delivery into one landing dir keeps the first, and both stream into bronze") {
     val lake = Lake(Files.createTempDirectory("stream-two-deliveries").toString)
     val landing = lake.landing("reviews")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, text STRING")
     def bronzeIds: Set[Int] = spark.read
-      .parquet(LandingStream.runAvailableNow(spark, lake, "reviews", schema))
+      .parquet(LandingStream.runAvailableNow(spark, lake, "reviews"))
       .select("id").collect().map(_.getInt(0)).toSet
 
     // 12-byte chunks against a 12-byte buffer: one object per chunk
@@ -44,63 +43,6 @@ class StreamingSpec extends SparkTestBase {
     assert(names == Seq("part-00000.csv", "part-00001.csv", "part-00002.csv"))
     assert(new java.io.File(landing).list().count(_.endsWith(".csv")) == 3)
     assert(bronzeIds == Set(1, 2, 3), "the second delivery's rows must reach bronze")
-  }
-
-  test("declared-schema stream skips the inference scan and lands the same bronze") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val fixtures = Paths.get(getClass.getResource("/fixtures/albums.csv").toURI)
-      .getParent.toString
-
-    class BytesRead extends SparkListener {
-      val bytes = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        bytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    }
-    def measure(f: => Unit): Long = {
-      val l = new BytesRead
-      spark.sparkContext.addSparkListener(l)
-      try {
-        f
-        // listener bus is async: poll until the count settles
-        var prev = -1L
-        var settled = 0
-        while (settled < 3) {
-          Thread.sleep(100)
-          val now = l.bytes.get
-          if (now == prev) settled += 1 else { settled = 0; prev = now }
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      l.bytes.get
-    }
-
-    def landingBytes(lake: Lake): Long = {
-      val d = new java.io.File(lake.landing("reviews"))
-      d.listFiles().filter(_.isFile).map(_.length()).sum
-    }
-
-    // inference path: pre-stream schema scan + the stream's own read
-    val lakeInfer = Lake(Files.createTempDirectory("stream-infer").toString)
-    LandingFlow.run(fixtures, lakeInfer, maxBytes = 100, bufferBytes = 1000)
-    val inferBytes = measure(LandingStream.runAvailableNow(spark, lakeInfer, "reviews"))
-
-    // declared-contract path: the stream's read only
-    val lakeDecl = Lake(Files.createTempDirectory("stream-decl").toString)
-    LandingFlow.run(fixtures, lakeDecl, maxBytes = 100, bufferBytes = 1000)
-    val schema = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(lakeInfer.landing("reviews")).schema
-    val declBytes = measure(
-      LandingStream.runAvailableNow(spark, lakeDecl, "reviews", schema))
-
-    // the declared path saves at least one full landing scan
-    val lb = landingBytes(lakeDecl)
-    assert(declBytes <= inferBytes - lb * 9 / 10,
-      s"declared=$declBytes inferred=$inferBytes landing=$lb")
-
-    // and both paths land the same bronze
-    val a = spark.read.parquet(lakeInfer.bronze("reviews"))
-    val b = spark.read.parquet(lakeDecl.bronze("reviews"))
-    assert(a.schema == b.schema)
-    assert(a.collect().map(_.toSeq).toSet == b.collect().map(_.toSeq).toSet)
   }
 
   test("stream restart is exactly-once: re-running adds nothing") {
@@ -116,67 +58,6 @@ class StreamingSpec extends SparkTestBase {
     LandingStream.runAvailableNow(spark, lake, "albums")
     val second = spark.read.parquet(lake.bronze("albums")).count()
     assert(first == second)
-  }
-
-  test("multi-dataset entry threads declared schemas: no inference scan, same bronze") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val fixtures = Paths.get(getClass.getResource("/fixtures/albums.csv").toURI)
-      .getParent.toString
-    val datasets = Seq("albums", "reviews")
-
-    class BytesRead extends SparkListener {
-      val bytes = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        bytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    }
-    def measure(f: => Unit): Long = {
-      val l = new BytesRead
-      spark.sparkContext.addSparkListener(l)
-      try {
-        f
-        var prev = -1L
-        var settled = 0
-        while (settled < 3) {
-          Thread.sleep(100)
-          val now = l.bytes.get
-          if (now == prev) settled += 1 else { settled = 0; prev = now }
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      l.bytes.get
-    }
-    def landingBytes(lake: Lake): Long = datasets.map { d =>
-      new java.io.File(lake.landing(d)).listFiles().filter(_.isFile).map(_.length()).sum
-    }.sum
-
-    // inference path: each dataset pays a pre-stream schema scan
-    val lakeInfer = Lake(Files.createTempDirectory("streamall-infer").toString)
-    LandingFlow.run(fixtures, lakeInfer, maxBytes = 100, bufferBytes = 1000)
-    val inferBytes = measure(
-      LandingStream.runAllAvailableNow(spark, lakeInfer, datasets))
-
-    // declared-contract path: every dataset's schema passed through
-    val lakeDecl = Lake(Files.createTempDirectory("streamall-decl").toString)
-    LandingFlow.run(fixtures, lakeDecl, maxBytes = 100, bufferBytes = 1000)
-    val schemas = datasets.map { d =>
-      d -> spark.read.option("header", "true").option("inferSchema", "true")
-        .csv(lakeInfer.landing(d)).schema
-    }.toMap
-    val declBytes = measure(
-      LandingStream.runAllAvailableNow(spark, lakeDecl, datasets, schemas))
-
-    // declared schemas save at least one full landing scan across the set
-    val lb = landingBytes(lakeDecl)
-    assert(declBytes <= inferBytes - lb * 9 / 10,
-      s"declared=$declBytes inferred=$inferBytes landing=$lb")
-
-    // and each dataset lands the same bronze either way
-    for (d <- datasets) {
-      val a = spark.read.parquet(lakeInfer.bronze(d))
-      val b = spark.read.parquet(lakeDecl.bronze(d))
-      assert(a.schema == b.schema, s"schema mismatch for $d")
-      assert(a.collect().map(_.toSeq).toSet == b.collect().map(_.toSeq).toSet,
-        s"row mismatch for $d")
-    }
   }
 
   test("finalize is incremental: a rerun over unchanged landing rewrites nothing") {
@@ -237,87 +118,79 @@ class StreamingSpec extends SparkTestBase {
     assert(out.count() == 5, "pre-crash bronze rows lost after self-heal")
   }
 
-  test("streaming dedup-within-watermark collapses redelivered events") {
-    val dir = Files.createTempDirectory("stream-dedup").toString
-    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(2000)
-    ev.write.parquet(s"$dir/in")
-    ev.write.mode("append").parquet(s"$dir/in") // at-least-once redelivery
-    val stream = spark.readStream.schema(ev.schema).parquet(s"$dir/in")
-    // horizon wider than the dataset's time span: every redelivery is
-    // deduped, nothing is dropped as late
-    val q = EventStream.dedupedEvents(stream, watermark = "30 days")
-      .writeStream.format("memory").queryName("events_dedup_stream")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table("events_dedup_stream")
-    assert(out.count() == ev.select("event_id").distinct().count())
-    assert(out.select("event_id").distinct().count() == out.count())
-    // output keeps the events schema — the watermark helper must not leak
-    assert(out.columns.toSeq == ev.columns.toSeq, out.columns.mkString(","))
+  // Crash points of the landing stream. The stream appends each
+  // micro-batch to staging in its foreachBatch, then commits the batch
+  // to the checkpoint's commit log. A crash between the two replays the
+  // batch on restart; finalizeBronze must absorb that replay.
+
+  private val Deliveries = Seq(
+    Seq("id,text\n1,a\n", "id,text\n2,b\n"),
+    Seq("id,text\n2,b\n", "id,text\n3,c\n")) // (2,b) is redelivered
+
+  private def bronzeRows(lake: Lake): Seq[(Int, String)] = {
+    import spark.implicits._
+    spark.read.parquet(lake.bronze("reviews")).as[(Int, String)].collect().toSeq.sorted
   }
 
-  test("event-time hourly rollup: streaming result ≡ batch result") {
-    val dir = "/root/testdata/sf0.001"
-    val stream = EventStream.readEventsStream(spark, dir)
-    val q = EventStream.hourlyRollup(stream)
-      .writeStream
-      .format("memory")
-      .queryName("events_hourly_stream")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  private def staged(lake: Lake): Seq[java.io.File] =
+    Option(new java.io.File(LandingStream.stagingDir(lake, "reviews")).listFiles())
+      .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet")).toSeq
 
-    val streamed = spark.table("events_hourly_stream")
-    val batch = EventStream.hourlyRollup(spark.read.parquet(s"$dir/events.parquet"))
-    assert(streamed.count() > 0)
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  /** Bronze after streaming and finalizing each delivery, crash-free. */
+  private def cleanBronze(): Seq[(Int, String)] = {
+    val lake = Lake(Files.createTempDirectory("stream-clean").toString)
+    Deliveries.foreach { d =>
+      Chunker.deliver(d, lake.landing("reviews"), bufferBytes = 12)
+      LandingStream.runAvailableNow(spark, lake, "reviews")
+    }
+    bronzeRows(lake)
   }
 
-  test("event-time hopping rollup: streaming result ≡ batch result") {
-    val dir = "/root/testdata/sf0.001"
-    val stream = EventStream.readEventsStream(spark, dir)
-    val q = EventStream.hoppingRollup(stream)
-      .writeStream
-      .format("memory")
-      .queryName("events_hopping_stream")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val streamed = spark.table("events_hopping_stream")
-    val batch = EventStream.hoppingRollup(spark.read.parquet(s"$dir/events.parquet"))
-    assert(streamed.count() > 0)
-    // each event lands in exactly size/slide = 2 windows
-    val nEvents = spark.read.parquet(s"$dir/events.parquet").count()
-    assert(streamed.agg(sum("n_events")).head.getLong(0) == 2 * nEvents)
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  /** Lose the newest batch's entry in the checkpoint's commit log. */
+  private def dropLastCommit(lake: Lake): Unit = {
+    val commits = new java.io.File(s"${lake.root}/_checkpoints/reviews/commits")
+    val last = commits.list().filter(_.matches("\\d+")).map(_.toLong).max
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
   }
 
-  test("event-time session rollup: streaming result ≡ batch q70") {
-    val dir = "/root/testdata/sf0.001"
-    val stream = EventStream.readEventsStream(spark, dir)
-    val q = EventStream.sessionRollup(stream)
-      .writeStream
-      .format("memory")
-      .queryName("events_session_stream")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  /** Stream and finalize the first delivery, then stream the second and
+    * let `crash` undo what a crash would not have reached (given the
+    * staged files of the second batch). Restart on the same checkpoint
+    * and finalize. Returns bronze and the staged row count the restart
+    * left for finalize.
+    */
+  private def crashedBronze(crash: (Lake, Seq[java.io.File]) => Unit): (Seq[(Int, String)], Long) = {
+    val lake = Lake(Files.createTempDirectory("stream-crash").toString)
+    Chunker.deliver(Deliveries(0), lake.landing("reviews"), bufferBytes = 12)
+    LandingStream.runAvailableNow(spark, lake, "reviews")
+    Chunker.deliver(Deliveries(1), lake.landing("reviews"), bufferBytes = 12)
+    LandingStream.start(spark, lake, "reviews").awaitTermination()
+    crash(lake, staged(lake))
+    LandingStream.start(spark, lake, "reviews").awaitTermination()
+    val stagedRows = spark.read.parquet(LandingStream.stagingDir(lake, "reviews")).count()
+    LandingStream.finalizeBronze(spark, lake, "reviews")
+    assert(staged(lake).isEmpty, "finalize left staged files behind")
+    (bronzeRows(lake), stagedRows)
+  }
 
-    val streamed = spark.table("events_session_stream")
-    assert(streamed.count() > 0)
-    // the claim under test (q70's doc): the same session_window
-    // expression under a watermark is the streaming sessionizer —
-    // streamed sessions must equal the batch q70 result exactly
-    val batch = graft.queries.AnalyticsOpsQueries.q70SessionWindow(spark, dir)
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-    // every event is in exactly one session
-    val nEvents = spark.read.parquet(s"$dir/events.parquet").count()
-    assert(streamed.agg(sum("n_events")).head.getLong(0) == nEvents)
+  test("landing stream crash after the staged write, before the offset commit: bronze equals a clean run") {
+    val (bronze, stagedRows) = crashedBronze((lake, _) => dropLastCommit(lake))
+    // the replay appended the second batch's 2 rows a second time
+    assert(stagedRows == 4)
+    assert(bronze == cleanBronze())
+    assert(bronze.distinct == bronze, "duplicate rows in bronze")
+  }
+
+  test("landing stream crash after the offset log, before the staged write: bronze equals a clean run") {
+    val (bronze, stagedRows) = crashedBronze { (lake, batchFiles) =>
+      dropLastCommit(lake)
+      assert(batchFiles.nonEmpty)
+      batchFiles.foreach(f => assert(f.delete()))
+    }
+    // the replay wrote the second batch's 2 rows once
+    assert(stagedRows == 2)
+    assert(bronze == cleanBronze())
+    assert(bronze.distinct == bronze, "duplicate rows in bronze")
   }
 }
