@@ -5,15 +5,15 @@ import org.apache.spark.sql.SparkSession
 
 import java.nio.charset.StandardCharsets
 
-/** Filesystem-level single-writer mutex for plain-parquet table dirs.
+/** Filesystem-level single-writer mutex for parquet tables.
   *
-  * Plain directories have no transaction log, so two writers mutating
-  * the same table concurrently (e.g. a streaming finalize appending
-  * while a compaction reads-then-swaps) can silently lose one writer's
-  * data. This lock makes that race a LOUD conflict instead: the lock
-  * file `<resource>.__lock` is created atomically
-  * (create-no-overwrite), a second writer gets [[FsLock.LockHeld]], and
-  * the holder deletes the file when done.
+  * A table without compare-and-set commits can silently lose one
+  * writer's data when two writers change it concurrently (e.g. two
+  * [[graft.medallion.Versioned.append]]s to one root, each publishing
+  * the segments it read before the other's flip). This lock makes that
+  * race a LOUD conflict instead: the lock file `<resource>.__lock` is
+  * created atomically (create-no-overwrite), a second writer gets
+  * [[FsLock.LockHeld]], and the holder deletes the file when done.
   *
   * Crash recovery: a writer that dies leaves its lock behind, so a lock
   * older than `staleMs` is broken (deleted and re-acquired) — pick

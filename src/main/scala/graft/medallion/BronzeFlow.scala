@@ -19,6 +19,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference does (`bronze.py:74-80`) — embedded chunk-header rows force
   * the affected columns to string and must collapse identically
   * (SURVEY §7.3 risk 4).
+  *
+  * Bronze is a [[Versioned]] root, like silver and gold (the reference's
+  * lakehouse variant keeps bronze as a snapshot table,
+  * `flows_iceberg/bronze_iceberg.py:36-44`): an ingest commits a full
+  * version, and [[graft.streaming.LandingStream.finalizeBronze]] appends
+  * segments. Read it with [[Versioned.read]].
   */
 object BronzeFlow {
 
@@ -37,17 +43,17 @@ object BronzeFlow {
   def read(spark: SparkSession, landingDir: String): DataFrame =
     ColumnNormalizer(inferred(spark, landingDir)).dropDuplicates()
 
-  /** Ingest one dataset landing→bronze; returns the bronze path. */
-  def ingest(spark: SparkSession, landingDir: String, bronzeDir: String): String = {
-    read(spark, landingDir).write.mode("overwrite").parquet(bronzeDir)
-    bronzeDir
-  }
+  /** Ingest one dataset landing→bronze: commit it as a version of the
+    * bronze root; returns the version dir that holds its rows. */
+  def ingest(spark: SparkSession, landingDir: String, bronzeRoot: String): String =
+    Versioned.commit(spark, bronzeRoot, read(spark, landingDir))
 
   /** Ingest with malformed-record routing — the Firehose error-prefix
     * analogue (`infra/main.tf:82` routes failed records to
     * `errors/<ds>/`): lines the CSV parser cannot fit to the schema
     * land raw in `errorsDir` instead of silently polluting bronze.
-    * Returns (bronzePath, malformedCount).
+    * Commits bronze as [[ingest]] does; returns (the version dir that
+    * holds its rows, malformedCount).
     *
     * No caching: the old implementation cached the ENTIRE landing zone
     * to work around Spark's corrupt-record-column restriction — at
@@ -69,7 +75,7 @@ object BronzeFlow {
     * otherwise widen a column to string and mask itself).
     */
   def ingestWithErrorRouting(
-      spark: SparkSession, landingDir: String, bronzeDir: String,
+      spark: SparkSession, landingDir: String, bronzeRoot: String,
       errorsDir: String, schema: org.apache.spark.sql.types.StructType = null): (String, Long) = {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{coalesce, concat_ws, count}
@@ -104,9 +110,7 @@ object BronzeFlow {
       if (fs.exists(ep)) fs.delete(ep, true)
     }
     val good = parsed.filter(parsed("_corrupt_record").isNull).drop("_corrupt_record")
-    ColumnNormalizer(good).dropDuplicates()
-      .write.mode("overwrite").parquet(bronzeDir)
-    (bronzeDir, nBad)
+    (Versioned.commit(spark, bronzeRoot, ColumnNormalizer(good).dropDuplicates()), nBad)
   }
 
   private def hasLanding(spark: SparkSession, dir: String): Boolean = {
@@ -115,10 +119,12 @@ object BronzeFlow {
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
-  /** Flow over datasets with landing data; manifest of bronze paths
+  /** Flow over datasets with landing data; manifest of bronze roots
     * (reference `bronze.py:102-113`: empty landing → empty manifest).
     */
   def run(spark: SparkSession, lake: Lake, datasets: Seq[String]): Map[String, String] =
-    datasets.filter(ds => hasLanding(spark, lake.landing(ds)))
-      .map(ds => ds -> ingest(spark, lake.landing(ds), lake.bronze(ds))).toMap
+    datasets.filter(ds => hasLanding(spark, lake.landing(ds))).map { ds =>
+      ingest(spark, lake.landing(ds), lake.bronze(ds))
+      ds -> lake.bronze(ds)
+    }.toMap
 }

@@ -48,9 +48,10 @@ object Flows {
     * flow's manifest — the composition of the reference's four flow
     * `__main__`s).
     *
-    * `versioned = true`: silver and gold writes become atomic
-    * [[Versioned]] pointer publishes — a rerun never exposes an absent
-    * or half-written table to concurrent readers; their manifest
+    * Bronze is always a [[Versioned]] root, and the manifest names the
+    * root. `versioned = true`: silver and gold writes become atomic
+    * [[Versioned]] pointer publishes too — a rerun never exposes an
+    * absent or half-written table to concurrent readers; their manifest
     * entries are then immutable `v_NNNNNN` dirs and gold reads silver
     * through the `_current` pointer.
     */

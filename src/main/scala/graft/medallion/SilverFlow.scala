@@ -82,7 +82,9 @@ object SilverFlow {
 
   /** Conditional-DAG flow (`flows/silver.py:161-185`): albums+bands
     * gate the catalog; reviews gates album_reviews (which also needs
-    * albums). Returns the written-path manifest.
+    * albums). `bronze` maps each dataset to its bronze [[Versioned]]
+    * root ([[BronzeFlow.run]]'s manifest), read with the schema its
+    * pointer records. Returns the written-path manifest.
     *
     * `versioned = true` routes every write through [[Versioned.commit]]
     * — an atomic pointer publish, so a rerun never exposes a
@@ -103,8 +105,8 @@ object SilverFlow {
       result += name -> Versioned.write(df, lake.silver(name), versioned)
     val albumsOpt =
       if (bronze.contains("albums") && bronze.contains("bands")) {
-        val albums = transformAlbums(spark.read.parquet(bronze("albums")))
-        val bands = transformBands(spark.read.parquet(bronze("bands")))
+        val albums = transformAlbums(Versioned.read(spark, bronze("albums")))
+        val bands = transformBands(Versioned.read(spark, bronze("bands")))
         publish("albums", albums)
         publish("bands", bands)
         publish("music_catalog", createMusicCatalog(albums, bands))
@@ -112,7 +114,7 @@ object SilverFlow {
       } else None
 
     if (bronze.contains("reviews")) {
-      val reviews = transformReviews(spark.read.parquet(bronze("reviews")))
+      val reviews = transformReviews(Versioned.read(spark, bronze("reviews")))
       publish("reviews", reviews)
       albumsOpt.foreach(albums => publish("album_reviews", createAlbumReviews(albums, reviews)))
     }

@@ -23,22 +23,27 @@ import java.security.MessageDigest
   *   <root>/_current                    names the active version
   * }}}
   *
-  * `_current` holds the active version's name on its first line. The
-  * next line holds the schema the version was committed with, as Spark
-  * schema JSON (every field nullable, as a parquet read reports it), so
-  * [[read]] hands it to the reader and skips the footer-inference job.
-  * A last line tagged `input-key ` holds the version's input key, when
-  * its frame has one:
+  * `_current`'s first line names the active version's segments: one
+  * or more version dirs, separated by spaces. [[commit]] publishes a
+  * full version, one segment; [[append]] publishes the active segments
+  * plus one new dir that holds only the appended rows, so no row lives
+  * in two segments of one version. The next line holds the schema the
+  * version was committed with, as Spark schema JSON (every field
+  * nullable, as a parquet read reports it), so [[read]] hands it to the
+  * reader and skips the footer-inference job. A last line tagged
+  * `input-key ` holds the version's input key, when a [[commit]]ed
+  * frame has one:
   *
   * {{{
-  *   v_000002
+  *   v_000002 v_000005                    segments, oldest first
   *   {"type":"struct","fields":[...]}
-  *   input-key 3f9a...                     keyed frames only
+  *   input-key 3f9a...                     keyed commits only
   * }}}
   *
   * A pointer without a schema line (written by older code, which left
   * it out for partitioned versions) reads by inference; one without a
-  * key line (a non-keyed frame, or older code) never matches a commit.
+  * key line (an append, a non-keyed frame, or older code) never matches
+  * a commit.
   *
   * Publish only what changed: the input key is a SHA-256 digest of what
   * decides the committed rows — every file the frame's analyzed plan
@@ -60,32 +65,42 @@ import java.security.MessageDigest
   * on files being replaced under new names or with a new length or
   * modification time, as Spark's own writers do.
   *
-  * [[commit]] writes a fresh version dir, then publishes it by renaming
-  * a temp pointer over `_current` with `Options.Rename.OVERWRITE` via
-  * `FileContext` — atomic on HDFS and local filesystems. A concurrent
-  * reader therefore resolves either the previous or the new version,
-  * never an absent table: this closes the old-nor-new visibility window
-  * a directory swap ([[Maintenance]] rename protocol) necessarily has.
+  * [[commit]] and [[append]] write a fresh version dir, then publish it
+  * by renaming a temp pointer over `_current` with
+  * `Options.Rename.OVERWRITE` via `FileContext` — atomic on HDFS and
+  * local filesystems. A concurrent reader therefore resolves either the
+  * previous or the new version, never an absent or half-written table;
+  * a writer that dies before the rename leaves the previous version
+  * active.
   *
-  * Retention: each commit keeps the newly published version and the
-  * version that was active just before it (in-flight readers of the
-  * previous version finish against immutable files). Everything else —
-  * superseded versions, orphan dirs, and orphan claim markers left by
-  * crashed committers — is garbage-collected, but only `gcGraceMs`
-  * after a commit FIRST saw it superseded (a `.v_N.reap` tombstone
-  * starts the clock; publishing clears it). Retention is keyed on the
-  * pointer history, not directory count, so an orphan can never evict
-  * the previously-active version, and the supersession-keyed grace is
-  * what keeps a racing committer's just-claimed (still-writing) or
-  * just-published version safe from another committer's GC regardless
-  * of how long its write runs. `gcGraceMs = 0` reaps immediately —
-  * single-writer-only.
+  * Retention: each publish keeps every segment of the newly published
+  * version and of the version that was active just before it (in-flight
+  * readers of the previous version finish against immutable files).
+  * Everything else — superseded versions, orphan dirs, and orphan claim
+  * markers left by crashed committers — is garbage-collected, but only
+  * `gcGraceMs` after a publish FIRST saw it superseded (a `.v_N.reap`
+  * tombstone starts the clock; publishing clears it). Retention is
+  * keyed on the pointer history, not directory count, so an orphan can
+  * never evict the previously-active version, and the supersession-keyed
+  * grace is what keeps a racing committer's just-claimed (still-writing)
+  * or just-published version safe from another committer's GC
+  * regardless of how long its write runs. `gcGraceMs = 0` reaps
+  * immediately — single-writer-only.
   *
   * Concurrent writers: version numbers are allocated by atomically
   * creating a `.v_NNNNNN.claim` marker (create-no-overwrite), so two
-  * committers can never write into the same version dir. The pointer
-  * flip then serializes publication (last flip wins — both versions are
-  * fully written, so the loser's data is superseded, never interleaved).
+  * writers can never write into the same version dir. The pointer flip
+  * then serializes publication: last flip wins. Two [[commit]]s lose
+  * nothing by it — both versions are fully written, so the loser's data
+  * is superseded, never interleaved. An [[append]] racing another
+  * publish on the same root CAN lose rows: its pointer lists the
+  * segments it read before writing, so a version published in between
+  * drops out of the chain (or the append's own segment does, if the
+  * other flip lands last). Appends must therefore be serialized by
+  * their caller — bronze's are, by the [[graft.core.FsLock]] that
+  * [[graft.streaming.LandingStream.finalizeBronze]] holds. Lock-free
+  * appends would need a compare-and-set on the base version, which this
+  * layout does not have.
   */
 object Versioned {
 
@@ -94,9 +109,13 @@ object Versioned {
   /** The tag of the pointer line that holds the input key. */
   private val KeyTag = "input-key "
 
-  /** A parsed `_current`: the active version dir, and the schema and
-    * input key it was committed with, where the pointer records them. */
-  private final case class Active(dir: String, schema: Option[StructType], key: Option[String])
+  /** A parsed `_current`: the active version's segment names, and the
+    * schema and input key it was published with, where the pointer
+    * records them. */
+  private final case class Active(
+      root: String, segments: Seq[String], schema: Option[StructType], key: Option[String]) {
+    def dirs: Seq[String] = segments.map(v => s"$root/$v")
+  }
 
   /** Default GC grace: long enough for any realistic in-flight write or
     * read of a superseded version to finish.
@@ -106,7 +125,9 @@ object Versioned {
   private def fs(spark: SparkSession, p: HPath): FileSystem =
     FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
 
-  /** Active version dir (absolute path). Fails if never committed.
+  /** Active version dir (absolute path) of a one-segment version.
+    * Fails if never committed, and on a version with several segments
+    * (an appended root), which only [[read]] reads whole.
     * Retries briefly on ANY transient read failure: a checksummed local
     * FS renames the pointer and its .crc sidecar in two steps (a read
     * between them throws ChecksumException), and the local
@@ -119,13 +140,27 @@ object Versioned {
     * FileNotFoundException; [[commit]] checks that the pointer exists
     * first, so a first commit pays none of it.
     */
-  def resolve(spark: SparkSession, root: String): String = current(spark, root).dir
+  def resolve(spark: SparkSession, root: String): String = current(spark, root).dirs match {
+    case Seq(dir) => dir
+    case dirs => throw new IllegalStateException(
+      s"$root's active version has ${dirs.size} segments; read it with Versioned.read")
+  }
 
-  /** Read the active version: with the schema its pointer records, or
-    * by inference from a pointer without a schema line. */
-  def read(spark: SparkSession, root: String): DataFrame = current(spark, root) match {
-    case Active(dir, Some(schema), _) => spark.read.schema(schema).parquet(dir)
-    case Active(dir, None, _) => spark.read.parquet(dir)
+  /** Read the active version, every segment: with the schema its
+    * pointer records, or by inference from a pointer without a schema
+    * line. */
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val active = current(spark, root)
+    active.schema.fold(spark.read)(s => spark.read.schema(s)).parquet(active.dirs: _*)
+  }
+
+  /** The active version's segment dirs (absolute paths), oldest first. */
+  def segments(spark: SparkSession, root: String): Seq[String] = current(spark, root).dirs
+
+  /** True once `root` has a published version. */
+  def exists(spark: SparkSession, root: String): Boolean = {
+    val ptr = new HPath(s"$root/$Pointer")
+    fs(spark, ptr).exists(ptr)
   }
 
   /** The parsed pointer; retried as [[resolve]] describes. */
@@ -136,10 +171,10 @@ object Versioned {
       val in = f.open(ptr)
       val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(_.trim).toList
       finally in.close()
-      val v = lines.headOption.getOrElse("")
-      require(v.nonEmpty, s"$ptr is empty")
+      val segments = lines.headOption.toSeq.flatMap(_.split(' ')).filter(_.nonEmpty)
+      require(segments.nonEmpty, s"$ptr is empty")
       val (keys, rest) = lines.drop(1).filter(_.nonEmpty).partition(_.startsWith(KeyTag))
-      Active(s"$root/$v",
+      Active(root, segments,
         rest.headOption.map(DataType.fromJson(_).asInstanceOf[StructType]),
         keys.headOption.map(_.stripPrefix(KeyTag)))
     }
@@ -253,17 +288,44 @@ object Versioned {
   def commit(
       spark: SparkSession, root: String, df: DataFrame,
       gcGraceMs: Long = DefaultGcGraceMs): String = {
+    val key = inputKey(df)
+    val active = activeOrNone(spark, root)
+    // a keyed pointer is always a commit's, so it has one segment
+    if (key.isDefined && active.exists(_.key == key)) active.get.dirs.head
+    else publish(spark, root, df, active, Nil, key, gcGraceMs)
+  }
+
+  /** Append `df`'s rows to the active version: publish a version whose
+    * segments are the active ones plus one new dir holding only `df`'s
+    * rows, with no input key. `df` must have the active version's
+    * schema. Returns the new segment dir. Callers serialize appends to
+    * one root (class doc).
+    */
+  def append(spark: SparkSession, root: String, df: DataFrame): String = {
+    val active = activeOrNone(spark, root)
+    active.flatMap(_.schema).foreach(s => require(s == nullable(df.schema),
+      s"append to $root: schema ${df.schema.simpleString} differs from the active ${s.simpleString}"))
+    publish(spark, root, df, active, active.fold(Seq.empty[String])(_.segments), None,
+      DefaultGcGraceMs)
+  }
+
+  /** The parsed pointer, or None before the first publish. A pointer
+    * caught mid-rename reads as absent: a commit then publishes, which
+    * is always safe (an append racing that rename is unsafe anyway,
+    * class doc). */
+  private def activeOrNone(spark: SparkSession, root: String): Option[Active] =
+    try if (exists(spark, root)) Some(current(spark, root)) else None
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Claim, write and publish `df` as a new segment after `base` (Nil
+    * for a full version), then GC; `active` is the pointer read before.
+    */
+  private def publish(
+      spark: SparkSession, root: String, df: DataFrame, active: Option[Active],
+      base: Seq[String], key: Option[String], gcGraceMs: Long): String = {
     val rootP = new HPath(root)
     val f = fs(spark, rootP)
     val ptr = new HPath(s"$root/$Pointer")
-    val key = inputKey(df)
-    // a pointer caught mid-rename reads as absent: the commit then
-    // publishes, which is always safe
-    val active =
-      try if (f.exists(ptr)) Some(current(spark, root)) else None
-      catch { case _: java.io.FileNotFoundException => None }
-    if (key.isDefined && active.exists(_.key == key)) return active.get.dir
-
     if (!f.exists(rootP)) f.mkdirs(rootP)
     val floor = versionDirs(f, rootP).lastOption.fold(1)(_._1 + 1)
     val vName = claimNext(f, root, floor)
@@ -276,32 +338,34 @@ object Versioned {
     // mistaken for an empty history — GC would then delete the version
     // readers are on). A root with no pointer before the write pays no
     // retry budget for one that is still absent after it
-    val prevActive: Option[String] =
-      if (active.isEmpty && !f.exists(ptr)) None
-      else try Some(new HPath(resolve(spark, root)).getName)
-      catch { case _: java.io.FileNotFoundException => None }
+    val prevActive: Seq[String] =
+      if (active.isEmpty && !f.exists(ptr)) Nil
+      else try current(spark, root).segments
+      catch { case _: java.io.FileNotFoundException => Nil }
 
-    // publish: write the pointer (the version's name, its schema and
-    // the input key) beside _current, then
-    // atomic-overwrite rename it into place (FileContext supports
-    // OVERWRITE; the plain FileSystem.rename does not)
-    val pointer = (Seq(vName, nullable(df.schema).json) ++ key.map(KeyTag + _)).mkString("\n")
+    // publish: write the pointer (the segments, the schema and the
+    // input key) beside _current, then atomic-overwrite rename it into
+    // place (FileContext supports OVERWRITE; the plain FileSystem.rename
+    // does not)
+    val segments = base :+ vName
+    val pointer = (Seq(segments.mkString(" "), nullable(df.schema).json) ++
+      key.map(KeyTag + _)).mkString("\n")
     val tmp = new HPath(s"$root/._current.tmp")
     val out = f.create(tmp, true)
     try out.write(pointer.getBytes(StandardCharsets.UTF_8)) finally out.close()
     val fc = FileContext.getFileContext(rootP.toUri, spark.sparkContext.hadoopConfiguration)
     fc.rename(tmp, ptr, Options.Rename.OVERWRITE)
 
-    // GC everything outside {new, previously-active}, graced by a REAP
-    // TOMBSTONE: the first commit that sees a version superseded drops
-    // `.v_N.reap` beside it; only a commit running gcGraceMs after that
-    // sighting deletes. Keying the clock on supersession time (tombstone
-    // creation) rather than dir mtime matters — a dir's mtime does not
-    // advance during a long in-flight parquet write (and is synthetic on
-    // object stores), so an mtime-keyed grace would reap a slow racing
-    // committer mid-write. A version that later publishes clears its
-    // tombstone below.
-    val keep = Set(vName) ++ prevActive
+    // GC everything outside {new, previously-active} segments, graced by
+    // a REAP TOMBSTONE: the first publish that sees a version superseded
+    // drops `.v_N.reap` beside it; only a publish running gcGraceMs
+    // after that sighting deletes. Keying the clock on supersession time
+    // (tombstone creation) rather than dir mtime matters — a dir's mtime
+    // does not advance during a long in-flight parquet write (and is
+    // synthetic on object stores), so an mtime-keyed grace would reap a
+    // slow racing committer mid-write. A version that later publishes
+    // clears its tombstone below.
+    val keep = segments.toSet ++ prevActive
     val cutoff = System.currentTimeMillis() - gcGraceMs
     def reapTomb(v: String) = new HPath(s"$root/.$v.reap")
     keep.foreach(v => f.delete(reapTomb(v), false)) // published → not reapable

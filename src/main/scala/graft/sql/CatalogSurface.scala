@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 
-import graft.medallion.Lake
+import graft.medallion.{Lake, Versioned}
 
 /** Catalog-table surface: namespaces `bronze`/`silver`/`gold` with the
   * lake's parquet layers registered as external tables, plus the
@@ -11,8 +11,11 @@ import graft.medallion.Lake
   * — same catalog, same storage, one engine instead of two).
   *
   * External `LOCATION`-based tables mean zero data movement: the
-  * catalog points at the flow-written parquet, so pipeline reruns are
-  * immediately visible to SQL. An Iceberg runtime would slot in via
+  * catalog points at the flow-written parquet. A plain dir's table sees
+  * a pipeline rerun after [[refreshAll]]; a [[Versioned]] root's table
+  * (bronze always, silver and gold when versioned) points at the
+  * version active when it was registered, so a rerun is visible after
+  * [[registerLake]] runs again. An Iceberg runtime would slot in via
   * `spark.sql.catalog.*` without changing callers; nothing the
   * reference queries depends on snapshots/branches (SURVEY §3 E2).
   */
@@ -33,14 +36,28 @@ object CatalogSurface {
     Namespaces.foreach(ns => spark.sql(s"CREATE DATABASE IF NOT EXISTS $ns"))
     def register(ns: String, name: String, path: String): Unit =
       if (exists(spark, path)) {
+        val (columns, location) = source(spark, path)
         spark.sql(s"DROP TABLE IF EXISTS $ns.$name")
         spark.sql(
-          s"CREATE TABLE $ns.$name USING PARQUET LOCATION '${q(path)}'")
+          s"CREATE TABLE $ns.$name $columns USING PARQUET LOCATION '${q(location)}'")
       }
     bronze.foreach(d => register("bronze", d, lake.bronze(d)))
     silver.foreach(d => register("silver", d, lake.silver(d)))
     gold.foreach(d => register("gold", d, lake.gold(d)))
   }
+
+  /** The declared columns and the location of a table over `path`: a
+    * [[Versioned]] root's active segments (a glob over their names when
+    * there are several) with the schema its pointer records — exactly
+    * the rows [[Versioned.read]] returns — else the plain dir, with its
+    * schema inferred. */
+  private def source(spark: SparkSession, path: String): (String, String) =
+    if (!Versioned.exists(spark, path)) ("", path)
+    else {
+      val names = Versioned.segments(spark, path).map(new org.apache.hadoop.fs.Path(_).getName)
+      (s"(${Versioned.read(spark, path).schema.toDDL})",
+        s"$path/${if (names.size == 1) names.head else names.mkString("{", ",", "}")}")
+    }
 
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

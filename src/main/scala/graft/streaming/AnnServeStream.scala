@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming metadata-filtered ANN SERVING — the RAG retrieval loop
@@ -41,14 +41,13 @@ object AnnServeStream {
       indexDir: String, corpus: DataFrame, predicate: Column,
       outDir: String, checkpointDir: String,
       k: Int, candidates: Int,
-      trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     // without this, AvailableNow folds every pending file into ONE
     // micro-batch — callers that want per-delivery serving batches
     // (and the batch-partitioned log that goes with them) set it
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    BatchSink.start(reader.parquet(inDir), trigger, checkpointDir)(
+    BatchSink.start(reader.parquet(inDir), checkpointDir)(
       serveBatch(_, _, indexDir, corpus, predicate, outDir, k, candidates))
   }
 

@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.medallion.Maintenance
-
 /** The one publish path of the `foreachBatch` loops: how a loop starts
   * (every loop: [[LandingStream]], [[SchemaEvolveStream]],
   * [[AnnServeStream]]), and how a micro-batch's output is laid out and
@@ -19,8 +17,8 @@ import graft.medallion.Maintenance
   * partition discovery) or a [[Snapshots]] entry `snap_NNNNN` (one full
   * table version). A publish writes the rows into a hidden staging dir
   * under the root (a `.` name, which neither partition discovery nor
-  * the entry listing sees) and moves it into place with one rename
-  * ([[Maintenance.replaceDir]] on an absent target). So an entry that
+  * the entry listing sees) and moves it into place with one checked
+  * rename onto the absent entry. So an entry that
   * exists is complete; a crash at any point, inside the write job
   * included, leaves readers exactly the entries published before it;
   * and a replay leaves an already-published entry in place. Each loop
@@ -39,13 +37,15 @@ object BatchSink {
   val KeepSnapshots: Int = 4
 
   /** Run `apply` on every micro-batch of `source`, checkpointed at
-    * `checkpointDir`. Reader options (schema, `maxFilesPerTrigger`,
-    * format) stay with the caller's source.
+    * `checkpointDir`, under `Trigger.AvailableNow`: everything pending
+    * at start, then stop — batch-equivalent and replayable. Reader
+    * options (schema, `maxFilesPerTrigger`, format) stay with the
+    * caller's source.
     */
-  def start(source: DataFrame, trigger: Trigger, checkpointDir: String)(
+  def start(source: DataFrame, checkpointDir: String)(
       apply: (DataFrame, Long) => Unit): StreamingQuery =
     source.writeStream
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(apply)
       .start()
@@ -93,7 +93,9 @@ object BatchSink {
       val target = new HPath(dir(root, n))
       val staging = new HPath(target.getParent, s".${target.getName}.staging").toString
       df.write.mode("overwrite").parquet(staging)
-      Maintenance.replaceDir(spark, staging, target.toString)
+      if (!target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .rename(new HPath(staging), target))
+        sys.error(s"could not publish $staging as $target")
     }
 
     /** Publish `df` as version `n` of a chain, then delete all but the

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake}
+import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake, Versioned}
 
 /** Streaming landing→bronze (reference §2.9: Kinesis→Firehose delivery,
   * `infra/main.tf:66-124`, with batch layers polling afterwards).
@@ -16,7 +16,8 @@ import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake}
   * (the Firehose role); [[finalizeBronze]] then applies the global
   * full-row dedup — dedup must see all data, exactly like the batch
   * path (`flows/bronze.py:80`), so it runs once at the end rather than
-  * per micro-batch.
+  * per micro-batch — and appends the new rows to the bronze
+  * [[graft.medallion.Versioned]] root.
   */
 object LandingStream {
 
@@ -35,89 +36,81 @@ object LandingStream {
     // already absorbs a replayed batch's rows
     BatchSink.start(
       spark.readStream.option("header", "true").schema(schema).csv(lake.landing(dataset)),
-      Trigger.AvailableNow(), s"${lake.root}/_checkpoints/$dataset") { (batch, _) =>
+      s"${lake.root}/_checkpoints/$dataset") { (batch, _) =>
       ColumnNormalizer(batch).write.mode("append").parquet(staging)
     }
   }
 
   /** Staging→bronze dedup, INCREMENTAL: only rows staged since the last
     * finalize are read (the checkpoint makes staging append-only and
-    * new-data-only), deduped among themselves, anti-joined against the
-    * existing bronze (null-safe on every column — the same full-row
-    * identity `dropDuplicates` uses), and appended. Incorporated staged
-    * files are then removed, so each finalize costs O(new data) + one
-    * bronze-side join — never a full-history rewrite.
+    * new-data-only), deduped among themselves, anti-joined against
+    * bronze (null-safe on every column — the same full-row identity
+    * `dropDuplicates` uses), and appended to bronze as one new
+    * [[Versioned.append]] segment. Incorporated staged files are then
+    * removed, so each finalize costs O(new data) + one bronze-side join
+    * — never a full-history rewrite. Returns the bronze root.
     *
-    * Crash-safe and idempotent: a failure after the append but before
-    * the staged-file cleanup just re-presents already-incorporated rows
-    * next time, and the anti-join drops them again. The result is
-    * always exactly `dropDuplicates` over everything ever staged.
+    * Schema drift (a column appeared, disappeared or changed type
+    * upstream) cannot be appended to the active schema: the rare path
+    * commits `bronze ∪ staged`, deduplicated, as one full version with
+    * the union of columns.
     *
-    * Concurrency contract: bronze mutation happens under the table's
-    * [[graft.core.FsLock]] writer lock, so two finalizes of one table
+    * Crash-safe and idempotent: a failure before the pointer flip
+    * leaves readers the previous version and staging intact; a failure
+    * after it but before the staged-file cleanup re-presents
+    * already-incorporated rows next time, and the anti-join drops them
+    * again. The result is always exactly `dropDuplicates` over
+    * everything ever staged.
+    *
+    * Concurrency contract: appends to one root must be serialized
+    * ([[Versioned]]), so finalize holds the table's
+    * [[graft.core.FsLock]] writer lock and two finalizes of one table
     * never interleave — see WriterContractSpec. A crash mid-finalize
     * leaves the lock behind; the next writer breaks it after the stale
     * horizon and the staged-file protocol above makes the rerun safe.
     */
   def finalizeBronze(spark: SparkSession, lake: Lake, dataset: String): String = {
     val staging = stagingDir(lake, dataset)
-    val bronzeDir = lake.bronze(dataset)
+    val bronzeRoot = lake.bronze(dataset)
     val sp = new HPath(staging)
     val f = FileSystem.get(sp.toUri, spark.sparkContext.hadoopConfiguration)
     val stagedFiles =
       if (!f.exists(sp)) Array.empty[HPath]
       else f.listStatus(sp).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         .map(_.getPath)
-    if (stagedFiles.isEmpty) return bronzeDir // nothing new → no-op
+    if (stagedFiles.isEmpty) return bronzeRoot // nothing new → no-op
 
-    // writer lock on bronze: a second finalize reading bronze while
-    // this one appends or swaps would anti-join against a stale table;
-    // under the lock the race is a loud FsLock.LockHeld and the staged
-    // batch stays in staging for the retry. The streaming side (start →
-    // staging appends) needs no lock — it never touches bronze.
-    graft.core.FsLock.withLock(spark, bronzeDir,
+    // writer lock on bronze: a second finalize appending between this
+    // one's read and its pointer flip would drop a segment; under the
+    // lock the race is a loud FsLock.LockHeld and the staged batch stays
+    // in staging for the retry. The streaming side (start → staging
+    // appends) needs no lock — it never touches bronze.
+    graft.core.FsLock.withLock(spark, bronzeRoot,
       s"finalizeBronze-${ProcessHandle.current().pid()}") {
-
-    val staged = spark.read.parquet(staging).dropDuplicates()
-    val bp = new HPath(bronzeDir)
-    // self-heal a crashed drift rewrite: replaceDir below moves bronze
-    // aside before moving the merge in; dying mid-protocol leaves
-    // bronze absent (data at _old) or a stale _old copy. Healing first
-    // keeps the rerun idempotent instead of rebuilding bronze from the
-    // staged rows alone.
-    graft.medallion.Maintenance.healStranded(spark, bronzeDir)
-    if (!f.exists(bp)) staged.write.mode("overwrite").parquet(bronzeDir)
-    else {
-      val bronze = spark.read.parquet(bronzeDir)
-      if (staged.columns.toSet != bronze.columns.toSet) {
-        // schema drift (a column appeared or disappeared upstream):
-        // the incremental anti-join cannot align rows, so fall back to
-        // one full merge rewrite that preserves the union of columns —
-        // the rare path; steady-state stays incremental
-        val merged = bronze
-          .unionByName(staged, allowMissingColumns = true).dropDuplicates()
-        val tmp = bronzeDir + "_rewriting"
-        merged.write.mode("overwrite").parquet(tmp)
-        graft.medallion.Maintenance.replaceDir(spark, tmp, bronzeDir)
-      } else {
-        // backtick-quoted resolution: dotted CSV-derived column names
-        // otherwise parse as struct-field access (graft.core.Cols)
-        import graft.core.Cols.quoted
-        val aligned = staged.select(bronze.columns.toSeq.map(c => staged(quoted(c))): _*)
-        val dup = bronze.columns.map(c => aligned(quoted(c)) <=> bronze(quoted(c))).reduce(_ && _)
-        // cached: isEmpty and the append below share one evaluation of
-        // the staged-dedup + anti-join instead of running it twice
-        graft.core.Materialize.cached(aligned.join(bronze, dup, "left_anti")) { fresh =>
-          // appended files are invisible to the bronze scan above (its
-          // file listing is fixed at read time), so read-then-append is
-          // safe
-          if (!fresh.isEmpty) fresh.write.mode("append").parquet(bronzeDir)
+      val staged = spark.read.parquet(staging).dropDuplicates()
+      if (!Versioned.exists(spark, bronzeRoot)) Versioned.append(spark, bronzeRoot, staged)
+      else {
+        val bronze = Versioned.read(spark, bronzeRoot)
+        def fields(df: DataFrame) = df.schema.map(c => c.name -> c.dataType).toMap
+        if (fields(staged) != fields(bronze))
+          Versioned.commit(spark, bronzeRoot,
+            bronze.unionByName(staged, allowMissingColumns = true).dropDuplicates())
+        else {
+          // backtick-quoted resolution: dotted CSV-derived column names
+          // otherwise parse as struct-field access (graft.core.Cols)
+          import graft.core.Cols.quoted
+          val aligned = staged.select(bronze.columns.toSeq.map(c => staged(quoted(c))): _*)
+          val dup = bronze.columns.map(c => aligned(quoted(c)) <=> bronze(quoted(c))).reduce(_ && _)
+          // cached: isEmpty and the append below share one evaluation of
+          // the staged-dedup + anti-join instead of running it twice
+          graft.core.Materialize.cached(aligned.join(bronze, dup, "left_anti")) { fresh =>
+            if (!fresh.isEmpty) Versioned.append(spark, bronzeRoot, fresh)
+          }
         }
       }
+      stagedFiles.foreach(p => f.delete(p, false))
     }
-    stagedFiles.foreach(p => f.delete(p, false))
-    } // release writer lock
-    bronzeDir
+    bronzeRoot
   }
 
   /** Convenience: stream everything currently landed, then finalize. */

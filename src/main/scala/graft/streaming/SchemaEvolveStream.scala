@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.medallion.SchemaEvolution
 
@@ -63,7 +63,6 @@ object SchemaEvolveStream {
     */
   def start(spark: SparkSession, inDir: String, tableDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     // binaryFile's fixed source schema, declared explicitly (streaming
     // sources refuse to infer); only `path` is ever selected, so the
@@ -78,7 +77,7 @@ object SchemaEvolveStream {
       .option("pathGlobFilter", "*.parquet")
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
     // bounded metadata load: one path string per landed file
-    BatchSink.start(reader.load(inDir).select("path"), trigger, checkpointDir) {
+    BatchSink.start(reader.load(inDir).select("path"), checkpointDir) {
       (files, batchId) =>
         val paths = files.select("path").collect().map(_.getString(0)).toSeq.sorted
         applyBatch(files.sparkSession, paths, batchId, tableDir)

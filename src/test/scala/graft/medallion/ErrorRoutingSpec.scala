@@ -88,6 +88,6 @@ class ErrorRoutingSpec extends SparkTestBase {
       spark, lake.landing("albums"), lake.bronze("albums"), lake.errors("albums"))
     assert(nBad == 0)
     assert(!Files.exists(Paths.get(lake.errors("albums"))))
-    assert(spark.read.parquet(lake.bronze("albums")).count() == 2)
+    assert(Versioned.read(spark, lake.bronze("albums")).count() == 2)
   }
 }

@@ -22,72 +22,6 @@ class MaintenanceSpec extends SparkTestBase {
     assert(rowsAfter.toSeq == rowsBefore.toSeq)
   }
 
-  test("upsert replaces matched keys and appends new ones") {
-    val root = Files.createTempDirectory("upsert").toString + "/t"
-    Versioned.commit(spark, root,
-      Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("id", "name", "score"))
-
-    val updates = Seq((2L, "b2", 21), (4L, "d", 40)).toDF("id", "name", "score")
-    Maintenance.upsertVersionedByKey(spark, root, updates, Seq("id"))
-
-    val out = Versioned.read(spark, root).as[(Long, String, Int)].collect().toSet
-    assert(out == Set((1L, "a", 10), (2L, "b2", 21), (3L, "c", 30), (4L, "d", 40)))
-    // idempotence: same upsert again changes nothing
-    Maintenance.upsertVersionedByKey(spark, root, updates, Seq("id"))
-    assert(Versioned.read(spark, root).as[(Long, String, Int)].collect().toSet == out)
-  }
-
-  test("double rename failure names the backup and staging paths, not a false restore") {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val root = Files.createTempDirectory("swap-fail").toString
-    val target = s"$root/t"
-    val staging = s"$root/t_staging"
-    Files.createDirectories(java.nio.file.Paths.get(target))
-    Files.createDirectories(java.nio.file.Paths.get(staging))
-    val local = new java.io.File(root)
-    def realRename(a: HPath, b: HPath): Boolean =
-      new java.io.File(a.toUri.getPath).renameTo(new java.io.File(b.toUri.getPath))
-    // fail the staging→target move AND the backup→target restore
-    def failingRename(a: HPath, b: HPath): Boolean =
-      if (a.toString.endsWith("t_staging") || a.toString.endsWith("t_old")) false
-      else realRename(a, b)
-    val e = intercept[RuntimeException] {
-      Maintenance.swapSteps(
-        failingRename,
-        p => new java.io.File(p.toUri.getPath).exists(),
-        p => { def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }; rm(new java.io.File(p.toUri.getPath)) },
-        staging, target)
-    }
-    assert(e.getMessage.contains("TWICE"), e.getMessage)
-    assert(e.getMessage.contains("t_old"), s"backup path not named: ${e.getMessage}")
-    assert(e.getMessage.contains("t_staging"), s"staging path not named: ${e.getMessage}")
-    // the data really is where the message says
-    assert(new java.io.File(s"$root/t_old").exists())
-    assert(new java.io.File(staging).exists())
-  }
-
-  test("single rename failure restores the old table and says so") {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val root = Files.createTempDirectory("swap-restore").toString
-    val target = s"$root/t"
-    val staging = s"$root/t_staging"
-    Files.createDirectories(java.nio.file.Paths.get(target))
-    Files.createDirectories(java.nio.file.Paths.get(staging))
-    def realRename(a: HPath, b: HPath): Boolean =
-      new java.io.File(a.toUri.getPath).renameTo(new java.io.File(b.toUri.getPath))
-    def failStaging(a: HPath, b: HPath): Boolean =
-      if (a.toString.endsWith("t_staging")) false else realRename(a, b)
-    val e = intercept[RuntimeException] {
-      Maintenance.swapSteps(
-        failStaging,
-        p => new java.io.File(p.toUri.getPath).exists(),
-        p => { def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }; rm(new java.io.File(p.toUri.getPath)) },
-        staging, target)
-    }
-    assert(e.getMessage.contains("old table restored"), e.getMessage)
-    assert(new java.io.File(target).exists(), "old table was not actually restored")
-  }
-
   test("versioned commit: concurrent readers never observe an absent table") {
     val root = Files.createTempDirectory("versioned").toString + "/t"
     // gcGraceMs = 0: single-writer tests want aggressive GC so the
@@ -136,7 +70,7 @@ class MaintenanceSpec extends SparkTestBase {
     assert(Versioned.read(spark, root).count() == 30)
   }
 
-  test("versioned compact and upsert publish atomically with same semantics") {
+  test("versioned compact publishes atomically with the same rows") {
     val root = Files.createTempDirectory("versioned-maint").toString + "/t"
     Versioned.commit(spark, root,
       Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("id", "name", "score")
@@ -145,12 +79,8 @@ class MaintenanceSpec extends SparkTestBase {
     val files = Maintenance.compactVersioned(spark, root,
       targetFileBytes = 1L << 20, gcGraceMs = 0L)
     assert(files <= 2, s"still $files files after compaction")
-    assert(Versioned.read(spark, root).count() == 3)
-
-    val updates = Seq((2L, "b2", 21), (4L, "d", 40)).toDF("id", "name", "score")
-    Maintenance.upsertVersionedByKey(spark, root, updates, Seq("id"), gcGraceMs = 0L)
     val out = Versioned.read(spark, root).as[(Long, String, Int)].collect().toSet
-    assert(out == Set((1L, "a", 10), (2L, "b2", 21), (3L, "c", 30), (4L, "d", 40)))
+    assert(out == Set((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)))
     // the pointer file resolves to an existing dir at every step, and
     // the previous version is retained for in-flight readers
     val versions = new java.io.File(root).list().filter(_.startsWith("v_")).sorted
@@ -158,13 +88,19 @@ class MaintenanceSpec extends SparkTestBase {
     assert(Versioned.resolve(spark, root).endsWith(versions.last))
   }
 
-  test("upsert with composite key") {
-    val root = Files.createTempDirectory("upsert2").toString + "/t"
-    Versioned.commit(spark, root,
-      Seq((1L, "x", 1.0), (1L, "y", 2.0), (2L, "x", 3.0)).toDF("k1", "k2", "v"))
-    Maintenance.upsertVersionedByKey(spark,
-      root, Seq((1L, "y", 9.0)).toDF("k1", "k2", "v"), Seq("k1", "k2"))
-    val out = Versioned.read(spark, root).as[(Long, String, Double)].collect().toSet
-    assert(out == Set((1L, "x", 1.0), (1L, "y", 9.0), (2L, "x", 3.0)))
+  test("compacting an appended root leaves one segment with the same rows") {
+    val root = Files.createTempDirectory("compact-appended").toString + "/t"
+    Versioned.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    Versioned.append(spark, root, Seq((3L, "c")).toDF("id", "name"))
+    Versioned.append(spark, root, Seq((4L, "d"), (5L, "e")).toDF("id", "name"))
+    assert(Versioned.segments(spark, root).size == 3)
+    val before = Versioned.read(spark, root).as[(Long, String)].collect().sorted.toSeq
+
+    Maintenance.compactVersioned(spark, root, targetFileBytes = 1L << 20)
+    val segments = Versioned.segments(spark, root)
+    assert(segments.size == 1, segments.mkString(","))
+    assert(Versioned.resolve(spark, root) == segments.head)
+    assert(Versioned.read(spark, root).as[(Long, String)].collect().sorted.toSeq == before)
+    assert(before.map(_._1) == (1L to 5L))
   }
 }

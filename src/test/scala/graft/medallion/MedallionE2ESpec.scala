@@ -46,13 +46,13 @@ class MedallionE2ESpec extends SparkTestBase {
   // (PERMISSIVE). Either way the artifact collapses to ONE bronze row and
   // reaches the same silver end state after casts.
   test("bronze reviews: dup row collapsed, embedded header rows collapse to one") {
-    val bronze = spark.read.parquet(lake.bronze("reviews"))
+    val bronze = Versioned.read(spark, lake.bronze("reviews"))
     assert(bronze.count() == 7) // 6 distinct data rows + 1 header-artifact row
     assert(bronze.filter(col("id").isNull && col("title") === "title").count() == 1)
   }
 
   test("bronze albums: chunk headers become one artifact row; names normalized") {
-    val bronze = spark.read.parquet(lake.bronze("albums"))
+    val bronze = Versioned.read(spark, lake.bronze("albums"))
     assert(bronze.columns.toSeq == Seq("id", "title", "band", "year"))
     assert(bronze.count() == 7) // 6 albums + 1 header-artifact row
     assert(bronze.filter(col("id").isNull && trim(col("title")) === "Title").count() == 1)

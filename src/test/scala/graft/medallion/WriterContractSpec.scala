@@ -7,7 +7,7 @@ import graft.core.FsLock
 import graft.streaming.LandingStream
 
 /** Single-writer contract of bronze: [[LandingStream.finalizeBronze]]
-  * mutates bronze under the table's [[FsLock]], so a second writer
+  * appends to bronze under the table's [[FsLock]], so a second writer
   * holding that lock makes it fail LOUDLY, and nothing is lost.
   */
 class WriterContractSpec extends SparkTestBase {
@@ -17,7 +17,7 @@ class WriterContractSpec extends SparkTestBase {
     val lake = Lake(Files.createTempDirectory("writer-contract").toString)
     val bronze = lake.bronze("events")
     val staging = LandingStream.stagingDir(lake, "events")
-    Seq(1 -> "a", 2 -> "b").toDF("id", "v").write.parquet(bronze)
+    Versioned.commit(spark, bronze, Seq(1 -> "a", 2 -> "b").toDF("id", "v"))
     // one fresh row staged by the streaming side
     Seq(3 -> "c").toDF("id", "v").write.parquet(staging)
 
@@ -27,12 +27,12 @@ class WriterContractSpec extends SparkTestBase {
       assert(e.owner == "other-writer")
       // the conflicted batch survives in staging for the retry
       assert(spark.read.parquet(staging).count() == 1)
-      assert(spark.read.parquet(bronze).count() == 2)
+      assert(Versioned.read(spark, bronze).count() == 2)
     } finally FsLock.release(spark, bronze)
 
     // after the other writer releases, the retried finalize lands the batch
     LandingStream.finalizeBronze(spark, lake, "events")
-    assert(spark.read.parquet(bronze).as[(Int, String)].collect().sorted.toSeq ==
+    assert(Versioned.read(spark, bronze).as[(Int, String)].collect().sorted.toSeq ==
       Seq(1 -> "a", 2 -> "b", 3 -> "c"))
   }
 }

@@ -39,6 +39,25 @@ class CatalogSurfaceSpec extends SparkTestBase {
     assert(spark.table("gold.band_avg_scores").count() == before)
   }
 
+  test("a versioned root registers exactly the rows Versioned.read returns, across appended segments") {
+    import org.apache.spark.sql.functions.col
+    val l = MedallionTestKit.versionedSilverLake(spark, "catalog-versioned")
+    val reviews = Versioned.read(spark, l.bronze("reviews"))
+    def shifted(n: Int, by: Int) =
+      reviews.limit(n).withColumn("id", (col("id") + by).cast(reviews.schema("id").dataType))
+    Versioned.append(spark, l.bronze("reviews"), shifted(2, 1000))
+    Versioned.append(spark, l.bronze("reviews"), shifted(1, 2000))
+    assert(Versioned.segments(spark, l.bronze("reviews")).size == 3)
+    // a second silver reviews version; the first stays retained beside it
+    SilverFlow.run(spark, l, Flows.Datasets.map(d => d -> l.bronze(d)).toMap, versioned = true)
+    CatalogSurface.registerLake(spark, l)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString)
+    assert(rows(spark.table("bronze.reviews")) == rows(Versioned.read(spark, l.bronze("reviews"))))
+    assert(spark.table("bronze.reviews").count() == 10)
+    assert(spark.table("bronze.reviews").schema == reviews.schema)
+    assert(rows(spark.table("silver.reviews")) == rows(Versioned.read(spark, l.silver("reviews"))))
+  }
+
   test("managed write path: create-from-schema, overwrite and append modes") {
     import spark.implicits._
     val df = Seq((1L, "x"), (2L, "y")).toDF("id", "v")

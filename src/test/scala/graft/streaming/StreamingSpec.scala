@@ -2,16 +2,28 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.medallion.{BronzeFlow, Chunker, Lake, LandingFlow}
+import graft.medallion.{BronzeFlow, Chunker, Lake, LandingFlow, Versioned}
 
 /** Streaming landing→bronze must produce exactly the batch result
   * (SURVEY §2.9: AvailableNow = batch-equivalent, replayable), also
   * when a crash makes the stream replay a batch.
   */
 class StreamingSpec extends SparkTestBase {
+
+  /** Every parquet file under `dir`, segments included, with its mtime. */
+  private def listing(dir: String): Map[String, Long] =
+    if (!Files.exists(Paths.get(dir))) Map.empty
+    else {
+      val s = Files.walk(Paths.get(dir))
+      try s.iterator().asScala.map(_.toFile).filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getPath -> f.lastModified()).toMap
+      finally s.close()
+    }
 
   test("stream landing->bronze ≡ batch bronze on the fixture CSVs") {
     val root = Files.createTempDirectory("stream-e2e").toString
@@ -21,7 +33,7 @@ class StreamingSpec extends SparkTestBase {
     LandingFlow.run(fixtures, lake, maxBytes = 100, bufferBytes = 1000)
 
     val bronzePath = LandingStream.runAvailableNow(spark, lake, "reviews")
-    val streamed = spark.read.parquet(bronzePath)
+    val streamed = Versioned.read(spark, bronzePath)
     val batch = BronzeFlow.read(spark, lake.landing("reviews"))
 
     assert(streamed.count() == batch.count())
@@ -31,8 +43,8 @@ class StreamingSpec extends SparkTestBase {
   test("a second Chunker delivery into one landing dir keeps the first, and both stream into bronze") {
     val lake = Lake(Files.createTempDirectory("stream-two-deliveries").toString)
     val landing = lake.landing("reviews")
-    def bronzeIds: Set[Int] = spark.read
-      .parquet(LandingStream.runAvailableNow(spark, lake, "reviews"))
+    def bronzeIds: Set[Int] = Versioned
+      .read(spark, LandingStream.runAvailableNow(spark, lake, "reviews"))
       .select("id").collect().map(_.getInt(0)).toSet
 
     // 12-byte chunks against a 12-byte buffer: one object per chunk
@@ -53,10 +65,10 @@ class StreamingSpec extends SparkTestBase {
     LandingFlow.run(fixtures, lake, maxBytes = 100, bufferBytes = 1000)
 
     LandingStream.runAvailableNow(spark, lake, "albums")
-    val first = spark.read.parquet(lake.bronze("albums")).count()
+    val first = Versioned.read(spark, lake.bronze("albums")).count()
     // second AvailableNow run against the same checkpoint: no new files
     LandingStream.runAvailableNow(spark, lake, "albums")
-    val second = spark.read.parquet(lake.bronze("albums")).count()
+    val second = Versioned.read(spark, lake.bronze("albums")).count()
     assert(first == second)
   }
 
@@ -68,12 +80,6 @@ class StreamingSpec extends SparkTestBase {
     LandingFlow.run(fixtures, lake, maxBytes = 100, bufferBytes = 1000)
 
     val bronzePath = LandingStream.runAvailableNow(spark, lake, "reviews")
-    def listing(dir: String): Map[String, Long] = {
-      val d = new java.io.File(dir)
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
     // incorporated staged files are cleared → next finalize sees nothing
     assert(listing(LandingStream.stagingDir(lake, "reviews")).isEmpty,
       "staging still holds incorporated files")
@@ -90,32 +96,67 @@ class StreamingSpec extends SparkTestBase {
   test("finalize handles schema drift with a full merge, preserving new columns") {
     val root = Files.createTempDirectory("stream-drift").toString
     val lake = Lake(root)
-    spark.range(3).selectExpr("id", "id * 2 AS v").write.parquet(lake.bronze("d"))
+    Versioned.commit(spark, lake.bronze("d"), spark.range(3).selectExpr("id", "id * 2 AS v"))
     // newly staged rows carry a column bronze has never seen
     spark.range(3, 5).selectExpr("id", "id * 2 AS v", "'x' AS tag")
       .write.parquet(LandingStream.stagingDir(lake, "d"))
     LandingStream.finalizeBronze(spark, lake, "d")
-    val out = spark.read.parquet(lake.bronze("d"))
+    val out = Versioned.read(spark, lake.bronze("d"))
     assert(out.columns.toSet == Set("id", "v", "tag"))
     assert(out.count() == 5)
     assert(out.filter(col("tag").isNotNull).count() == 2, "drifted column values lost")
     // drift rewrite also consumes staging: a rerun is a no-op
     LandingStream.finalizeBronze(spark, lake, "d")
-    assert(spark.read.parquet(lake.bronze("d")).count() == 5)
+    assert(Versioned.read(spark, lake.bronze("d")).count() == 5)
   }
 
-  test("finalize self-heals a crashed drift rewrite (bronze stranded at _old)") {
-    val root = Files.createTempDirectory("stream-heal").toString
-    val lake = Lake(root)
-    spark.range(3).selectExpr("id", "id * 2 AS v").write.parquet(lake.bronze("d"))
-    spark.range(3, 5).selectExpr("id", "id * 2 AS v")
+  test("finalize treats a changed column type as drift: one full version with the widened type") {
+    val lake = Lake(Files.createTempDirectory("stream-type-drift").toString)
+    Versioned.commit(spark, lake.bronze("d"), spark.range(3).selectExpr("id", "id * 2 AS v"))
+    // upstream now delivers v as text: the staged rows cannot be
+    // appended under the active schema
+    spark.range(2, 5).selectExpr("id", "CAST(id * 2 AS STRING) AS v")
       .write.parquet(LandingStream.stagingDir(lake, "d"))
-    // simulate dying inside the swap: bronze moved aside, never moved back
-    assert(new java.io.File(lake.bronze("d"))
-      .renameTo(new java.io.File(lake.bronze("d") + "_old")))
     LandingStream.finalizeBronze(spark, lake, "d")
-    val out = spark.read.parquet(lake.bronze("d"))
-    assert(out.count() == 5, "pre-crash bronze rows lost after self-heal")
+    assert(Versioned.segments(spark, lake.bronze("d")).size == 1)
+    val out = Versioned.read(spark, lake.bronze("d"))
+    assert(out.schema("v").dataType == org.apache.spark.sql.types.StringType)
+    // (2, "4") is staged again in text form and collapses with bronze's
+    assert(out.selectExpr("id", "CAST(v AS BIGINT)").distinct().count() == 5)
+    assert(out.count() == 5)
+  }
+
+  test("a finalize append that fails inside its write job leaves bronze and staging as they were; the rerun equals a clean run") {
+    def seeded(tag: String): Lake = {
+      val lake = Lake(Files.createTempDirectory(tag).toString)
+      Versioned.commit(spark, lake.bronze("d"), spark.range(3).selectExpr("id", "id * 2 AS v"))
+      spark.range(2, 5).selectExpr("id", "id * 2 AS v")
+        .write.parquet(LandingStream.stagingDir(lake, "d"))
+      lake
+    }
+    def rows(lake: Lake): Seq[(Long, Long)] = {
+      import spark.implicits._
+      Versioned.read(spark, lake.bronze("d")).as[(Long, Long)].collect().toSeq.sorted
+    }
+    val clean = seeded("finalize-clean")
+    LandingStream.finalizeBronze(spark, clean, "d")
+
+    val lake = seeded("finalize-crash")
+    val base = rows(lake)
+    val stagedBefore = listing(LandingStream.stagingDir(lake, "d"))
+    val key = "spark.sql.sources.commitProtocolClass"
+    spark.conf.set(key, classOf[FailingCommitProtocol].getName)
+    val crashed =
+      try scala.util.Try(LandingStream.finalizeBronze(spark, lake, "d"))
+      finally spark.conf.unset(key)
+    assert(crashed.isFailure, "the injected write failure did not surface")
+    assert(rows(lake) == base, "readers saw a partial append")
+    assert(Versioned.segments(spark, lake.bronze("d")).size == 1)
+    assert(listing(LandingStream.stagingDir(lake, "d")) == stagedBefore, "staging changed")
+
+    LandingStream.finalizeBronze(spark, lake, "d")
+    assert(rows(lake) == rows(clean))
+    assert(rows(lake) == (0L until 5L).map(i => (i, i * 2)))
   }
 
   // Crash points of the landing stream. The stream appends each
@@ -129,7 +170,7 @@ class StreamingSpec extends SparkTestBase {
 
   private def bronzeRows(lake: Lake): Seq[(Int, String)] = {
     import spark.implicits._
-    spark.read.parquet(lake.bronze("reviews")).as[(Int, String)].collect().toSeq.sorted
+    Versioned.read(spark, lake.bronze("reviews")).as[(Int, String)].collect().toSeq.sorted
   }
 
   private def staged(lake: Lake): Seq[java.io.File] =
