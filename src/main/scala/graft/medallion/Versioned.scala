@@ -193,7 +193,7 @@ object Versioned {
 
   /** `t` with every field, element and value nullable: the schema a
     * parquet read of data written at `t` reports. */
-  private def nullable(t: DataType): DataType = t match {
+  private[graft] def nullable(t: DataType): DataType = t match {
     case s: StructType =>
       StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
     case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)

@@ -1,8 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake, Versioned}
 
@@ -41,6 +45,24 @@ object LandingStream {
     }
   }
 
+  /** The Spark schema every file in `files` carries in its parquet
+    * footer, made nullable as a parquet read reports it; None when the
+    * files disagree or one carries none, so the caller reads by
+    * inference as Spark would. Read by the calling thread: no Spark job. */
+  private def footerSchema(conf: Configuration, files: Seq[HPath]): Option[StructType] = {
+    val schemas = files.map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+    }
+    schemas.distinct match {
+      case Seq(Some(t: StructType)) => Some(Versioned.nullable(t).asInstanceOf[StructType])
+      case _ => None
+    }
+  }
+
   /** Staging→bronze dedup, INCREMENTAL: only rows staged since the last
     * finalize are read (the checkpoint makes staging append-only and
     * new-data-only), deduped among themselves, anti-joined against
@@ -61,6 +83,10 @@ object LandingStream {
     * already-incorporated rows next time, and the anti-join drops them
     * again. The result is always exactly `dropDuplicates` over
     * everything ever staged.
+    *
+    * Staging is read with the schema its files' footers record
+    * ([[footerSchema]]), so finalize runs no schema-inference job; files
+    * that disagree fall back to inference.
     *
     * Concurrency contract: appends to one root must be serialized
     * ([[Versioned]]), so finalize holds the table's
@@ -87,7 +113,8 @@ object LandingStream {
     // appends) needs no lock — it never touches bronze.
     graft.core.FsLock.withLock(spark, bronzeRoot,
       s"finalizeBronze-${ProcessHandle.current().pid()}") {
-      val staged = spark.read.parquet(staging).dropDuplicates()
+      val schema = footerSchema(spark.sparkContext.hadoopConfiguration, stagedFiles.toSeq)
+      val staged = schema.fold(spark.read)(spark.read.schema(_)).parquet(staging).dropDuplicates()
       if (!Versioned.exists(spark, bronzeRoot)) Versioned.append(spark, bronzeRoot, staged)
       else {
         val bronze = Versioned.read(spark, bronzeRoot)
