@@ -121,10 +121,12 @@ object BronzeFlow {
 
   /** Flow over datasets with landing data; manifest of bronze roots
     * (reference `bronze.py:102-113`: empty landing → empty manifest).
+    * The datasets are independent, so they are ingested concurrently
+    * ([[graft.core.Concurrent]]), each root atomic on its own.
     */
   def run(spark: SparkSession, lake: Lake, datasets: Seq[String]): Map[String, String] =
-    datasets.filter(ds => hasLanding(spark, lake.landing(ds))).map { ds =>
-      ingest(spark, lake.landing(ds), lake.bronze(ds))
-      ds -> lake.bronze(ds)
-    }.toMap
+    graft.core.Concurrent.run(spark.sparkContext,
+      datasets.filter(ds => hasLanding(spark, lake.landing(ds))).map { ds =>
+        ds -> (() => { ingest(spark, lake.landing(ds), lake.bronze(ds)); lake.bronze(ds) })
+      }).toMap
 }

@@ -1,7 +1,7 @@
 package graft.medallion
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,17 +15,19 @@ import org.apache.spark.sql.functions._
   * reviews⟕music ([[bandStats]]), so [[run]] computes that aggregate
   * once and pins it ([[graft.core.Materialize.pin]]): the only plan that
   * scans silver `reviews` is the pin's, and the three tables, a window
-  * and a filter over a few thousand pinned rows, read it back. Two
-  * probes are left: `music.isEmpty` (a limit-1 job) and one count over
-  * the pinned rows that answers both the reviews guard (the left join
-  * keeps every review, so the aggregate is empty exactly when reviews
-  * is) and `brazilian_bands`' empty guard; the other tables are then
-  * known non-empty. The reference's `collect()`-based emptiness checks
-  * (`gold.py:151`) never materialize a table on the driver. Each table
-  * is written as one file sorted within its one partition
-  * (`coalesce(1).sortWithinPartitions`), the reference's single-file
-  * layout, instead of a range `orderBy`, which pays a sampling job and
-  * a range shuffle per table.
+  * and a filter over a few thousand pinned rows, read it back. No job
+  * only probes for emptiness: the pin's own job counts music rows,
+  * aggregate rows (the left join keeps every review, so the aggregate is
+  * empty exactly when reviews is) and Brazilian bands with
+  * `Observation`s, which answer the reference's three empty guards;
+  * the other tables are then known non-empty. The reference's
+  * `collect()`-based emptiness checks (`gold.py:151`) never materialize
+  * a table on the driver. The four tables are independent and are
+  * written concurrently ([[graft.core.Concurrent]]), each one atomic on
+  * its own. Each table is written as one file sorted within its one
+  * partition (`coalesce(1).sortWithinPartitions`), the reference's
+  * single-file layout, instead of a range `orderBy`, which pays a
+  * sampling job and a range shuffle per table.
   */
 object GoldFlow {
 
@@ -124,28 +126,33 @@ object GoldFlow {
           log.warn(s"gold: silver inputs unavailable: ${e.getMessage}")
           return Map.empty
       }
-    if (music.isEmpty) return Map.empty
 
-    // the one evaluation of reviews⟕music (SURVEY §4 "Caching / reuse")
-    val stats = graft.core.Materialize.pin(bandStats(music, reviews))
-    // one count over the pinned rows answers two guards: the aggregate
-    // is empty exactly when reviews is (the left join keeps every
-    // review), and brazilian_bands is empty when no band is Brazilian
-    val counts = stats.coalesce(1)
-      .agg(count(lit(1)), count_if(isBrazilian(col("country"))))
-      .head()
-    if (counts.getLong(0) == 0) return Map.empty
+    // the one evaluation of reviews⟕music (SURVEY §4 "Caching / reuse"),
+    // counting what the guards need inside its own job. `music` itself
+    // stays unobserved for band_album_counts, whose commit keys on its plan
+    val musicRows = Observation()
+    val statsRows = Observation()
+    val stats = graft.core.Materialize.pin(
+      bandStats(music.observe(musicRows, count(lit(1)).as("rows")), reviews)
+        .observe(statsRows, count(lit(1)).as("rows"),
+          count_if(isBrazilian(col("country"))).as("brazilian")))
+    // an empty reviews side can leave music unscanned: no row seen
+    def observed(o: Observation, name: String): Long =
+      o.get.get(name).fold(0L)(_.asInstanceOf[Long])
+    if (observed(statsRows, "rows") == 0 || observed(musicRows, "rows") == 0) return Map.empty
 
-    val result = Map.newBuilder[String, String]
-    // each table is one file, sorted within its one partition
-    def write(name: String, df: DataFrame, order: Seq[Column]): Unit =
-      result += name -> Versioned.write(df.coalesce(1).sortWithinPartitions(order: _*),
-        lake.gold(name), versioned)
-    // one partition already clusters the window by country
-    write("top10_by_country", top10ByCountry(stats.coalesce(1)), Top10Order)
-    write("band_avg_scores", stats, ScoreOrder)
-    if (counts.getLong(1) > 0) write("brazilian_bands", brazilianBands(stats), ScoreOrder)
-    write("band_album_counts", albumCounts(music), AlbumCountOrder)
-    result.result()
+    // each table is one file, sorted within its one partition; the four
+    // are independent, so they are written concurrently
+    def table(name: String, df: DataFrame, order: Seq[Column]) =
+      name -> (() => Versioned.write(df.coalesce(1).sortWithinPartitions(order: _*),
+        lake.gold(name), versioned))
+    graft.core.Concurrent.run(spark.sparkContext, Seq(
+      // one partition already clusters the window by country
+      Some(table("top10_by_country", top10ByCountry(stats.coalesce(1)), Top10Order)),
+      Some(table("band_avg_scores", stats, ScoreOrder)),
+      Option.when(observed(statsRows, "brazilian") > 0)(
+        table("brazilian_bands", brazilianBands(stats), ScoreOrder)),
+      Some(table("band_album_counts", albumCounts(music), AlbumCountOrder))
+    ).flatten).toMap
   }
 }

@@ -91,7 +91,9 @@ object SilverFlow {
     * half-overwritten or absent table to concurrent readers (a bare
     * `mode("overwrite")` deletes before it rewrites). A table whose
     * bronze inputs are unchanged keeps its version: the commit's input
-    * key matches and nothing is written. Manifest entries
+    * key matches and nothing is written. The tables are independent,
+    * so they are published concurrently ([[graft.core.Concurrent]]),
+    * each one atomic on its own. Manifest entries
     * are then the immutable committed version dirs; consumers that
     * should follow future commits read `Versioned.read(lake.silver(name))`
     * instead. Pair with `GoldFlow.run(versioned = true)` so gold reads
@@ -100,24 +102,24 @@ object SilverFlow {
   def run(
       spark: SparkSession, lake: Lake, bronze: Map[String, String],
       versioned: Boolean = false): Map[String, String] = {
-    val result = Map.newBuilder[String, String]
-    def publish(name: String, df: DataFrame): Unit =
-      result += name -> Versioned.write(df, lake.silver(name), versioned)
+    val tables = Seq.newBuilder[(String, DataFrame)]
     val albumsOpt =
       if (bronze.contains("albums") && bronze.contains("bands")) {
         val albums = transformAlbums(Versioned.read(spark, bronze("albums")))
         val bands = transformBands(Versioned.read(spark, bronze("bands")))
-        publish("albums", albums)
-        publish("bands", bands)
-        publish("music_catalog", createMusicCatalog(albums, bands))
+        tables += "albums" -> albums
+        tables += "bands" -> bands
+        tables += "music_catalog" -> createMusicCatalog(albums, bands)
         Some(albums)
       } else None
 
     if (bronze.contains("reviews")) {
       val reviews = transformReviews(Versioned.read(spark, bronze("reviews")))
-      publish("reviews", reviews)
-      albumsOpt.foreach(albums => publish("album_reviews", createAlbumReviews(albums, reviews)))
+      tables += "reviews" -> reviews
+      albumsOpt.foreach(albums => tables += "album_reviews" -> createAlbumReviews(albums, reviews))
     }
-    result.result()
+    graft.core.Concurrent.run(spark.sparkContext, tables.result().map { case (name, df) =>
+      name -> (() => Versioned.write(df, lake.silver(name), versioned))
+    }).toMap
   }
 }

@@ -1,10 +1,11 @@
 package graft.medallion
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -27,7 +28,12 @@ import java.security.MessageDigest
   * or more version dirs, separated by spaces. [[commit]] publishes a
   * full version, one segment; [[append]] publishes the active segments
   * plus one new dir that holds only the appended rows, so no row lives
-  * in two segments of one version. The next line holds the schema the
+  * in two segments of one version. An append of no rows to a root that
+  * already has a version publishes nothing: the rows are counted inside
+  * the write's own job (an `Observation`, no extra job), and the empty
+  * segment's dir and claim marker are removed, so the pointer stays as
+  * it was. The first publish of an absent root publishes even when
+  * empty, so the root gets its schema. The next line holds the schema the
   * version was committed with, as Spark schema JSON (every field
   * nullable, as a parquet read reports it), so [[read]] hands it to the
   * reader and skips the footer-inference job. A last line tagged
@@ -101,6 +107,13 @@ import java.security.MessageDigest
   * [[graft.streaming.LandingStream.finalizeBronze]] holds. Lock-free
   * appends would need a compare-and-set on the base version, which this
   * layout does not have.
+  *
+  * Different roots share nothing — no pointer, no lock, no version
+  * numbers — so a layer publishes its independent tables concurrently
+  * ([[graft.core.Concurrent]]). Each table stays atomic on its own;
+  * there is no transaction across roots, so a failure leaves the tables
+  * that already flipped at their new versions and the others at their
+  * previous ones.
   */
 object Versioned {
 
@@ -292,21 +305,30 @@ object Versioned {
     val active = activeOrNone(spark, root)
     // a keyed pointer is always a commit's, so it has one segment
     if (key.isDefined && active.exists(_.key == key)) active.get.dirs.head
-    else publish(spark, root, df, active, Nil, key, gcGraceMs)
+    else publish(spark, root, writeVersion(spark, root, df), df.schema, active, Nil, key, gcGraceMs)
   }
 
   /** Append `df`'s rows to the active version: publish a version whose
     * segments are the active ones plus one new dir holding only `df`'s
     * rows, with no input key. `df` must have the active version's
-    * schema. Returns the new segment dir. Callers serialize appends to
-    * one root (class doc).
+    * schema. Returns the new segment dir, or None when `df` has no rows
+    * and the root already has a version: the rows are counted inside
+    * the write's own job, and an empty segment is removed unpublished
+    * (class doc). Callers serialize appends to one root (class doc).
     */
-  def append(spark: SparkSession, root: String, df: DataFrame): String = {
+  def append(spark: SparkSession, root: String, df: DataFrame): Option[String] = {
     val active = activeOrNone(spark, root)
     active.flatMap(_.schema).foreach(s => require(s == nullable(df.schema),
       s"append to $root: schema ${df.schema.simpleString} differs from the active ${s.simpleString}"))
-    publish(spark, root, df, active, active.fold(Seq.empty[String])(_.segments), None,
-      DefaultGcGraceMs)
+    val rows = Observation()
+    val vName = writeVersion(spark, root, df.observe(rows, count(lit(1)).as("rows")))
+    if (active.isDefined && rows.get("rows") == 0L) {
+      val f = fs(spark, new HPath(root))
+      f.delete(new HPath(s"$root/$vName"), true)
+      f.delete(new HPath(s"$root/.$vName.claim"), false)
+      None
+    } else Some(publish(spark, root, vName, df.schema, active,
+      active.fold(Seq.empty[String])(_.segments), None, DefaultGcGraceMs))
   }
 
   /** The parsed pointer, or None before the first publish. A pointer
@@ -317,20 +339,28 @@ object Versioned {
     try if (exists(spark, root)) Some(current(spark, root)) else None
     catch { case _: java.io.FileNotFoundException => None }
 
-  /** Claim, write and publish `df` as a new segment after `base` (Nil
-    * for a full version), then GC; `active` is the pointer read before.
-    */
-  private def publish(
-      spark: SparkSession, root: String, df: DataFrame, active: Option[Active],
-      base: Seq[String], key: Option[String], gcGraceMs: Long): String = {
+  /** Claim the next version of `root` and write `df` into its dir;
+    * returns the version's name. */
+  private def writeVersion(spark: SparkSession, root: String, df: DataFrame): String = {
     val rootP = new HPath(root)
     val f = fs(spark, rootP)
-    val ptr = new HPath(s"$root/$Pointer")
     if (!f.exists(rootP)) f.mkdirs(rootP)
     val floor = versionDirs(f, rootP).lastOption.fold(1)(_._1 + 1)
     val vName = claimNext(f, root, floor)
-    val vDir = s"$root/$vName"
-    df.write.mode("overwrite").parquet(vDir)
+    df.write.mode("overwrite").parquet(s"$root/$vName")
+    vName
+  }
+
+  /** Publish the written version `vName`, whose rows have `schema`, as a
+    * new segment after `base` (Nil for a full version), then GC;
+    * `active` is the pointer read before the write. Returns its dir.
+    */
+  private def publish(
+      spark: SparkSession, root: String, vName: String, schema: StructType,
+      active: Option[Active], base: Seq[String], key: Option[String], gcGraceMs: Long): String = {
+    val rootP = new HPath(root)
+    val f = fs(spark, rootP)
+    val ptr = new HPath(s"$root/$Pointer")
 
     // the version active until this instant stays retained for its
     // in-flight readers. ONLY a missing pointer means "first commit";
@@ -348,7 +378,7 @@ object Versioned {
     // place (FileContext supports OVERWRITE; the plain FileSystem.rename
     // does not)
     val segments = base :+ vName
-    val pointer = (Seq(segments.mkString(" "), nullable(df.schema).json) ++
+    val pointer = (Seq(segments.mkString(" "), nullable(schema).json) ++
       key.map(KeyTag + _)).mkString("\n")
     val tmp = new HPath(s"$root/._current.tmp")
     val out = f.create(tmp, true)
@@ -394,7 +424,7 @@ object Versioned {
       .filterNot(keep)
       .filterNot(v => f.exists(new HPath(s"$root/$v")))
       .foreach(v => f.delete(new HPath(s"$root/.$v.claim"), false))
-    vDir
+    s"$root/$vName"
   }
 
   /** Publish `df` at `path`: a [[commit]] when `versioned`, else a plain

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,59 +16,6 @@ import graft.multimodal.Multimodal
   * spec-covered in MultimodalSpec.
   */
 object MultimodalQueries {
-
-  /** Materialize independent modality relations CONCURRENTLY (guide
-    * §2.6: Spark happily runs several jobs at once inside one
-    * application — actions are sequential only because the driver
-    * calls them sequentially, and each eager checkpoint here is an
-    * action). Worker threads are created by the submitting thread at
-    * call time, so Spark's inheritable thread-locals (job group, job
-    * description — what Bench's watchdog cancels by) propagate into
-    * the pool. Result order matches input order; the first failure
-    * cancels the other modalities' Spark jobs, then rethrows.
-    */
-  private[queries] def materializeConcurrently(
-      sc: SparkContext, rel: Seq[(String, () => DataFrame)]): Seq[(String, DataFrame)] = {
-    // one job tag per call, added in each pool thread: a failure
-    // cancels exactly this call's jobs, and the caller's job group
-    // stays as it was (setJobGroup would overwrite it)
-    val tag = s"graft-modality-${java.util.UUID.randomUUID()}"
-    // named daemon threads: identifiable in dumps, never block JVM exit
-    val tf = new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger()
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-modality-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      }
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(rel.size, tf)
-    try {
-      val done = new java.util.concurrent.ExecutorCompletionService[DataFrame](pool)
-      val futs = rel.map { case (_, thunk) =>
-        done.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            sc.addJobTag(tag)
-            sc.setInterruptOnCancel(true)
-            thunk()
-          }
-        })
-      }
-      // wait in completion order, so a failure is seen when it happens,
-      // not after the modalities listed before it have finished
-      try rel.foreach(_ => done.take().get())
-      catch {
-        case e: Throwable =>
-          // one modality failed: interrupt the other threads and cancel
-          // their running Spark jobs (interrupting their tasks) instead
-          // of letting them hold executors past the query
-          futs.foreach(_.cancel(true))
-          sc.cancelJobsWithTag(tag)
-          throw (e match { case ee: java.util.concurrent.ExecutionException => ee.getCause; case _ => e })
-      }
-      rel.map(_._1).zip(futs.map(_.get()))
-    } finally pool.shutdownNow()
-  }
 
   def q29MultimodalFeatures(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.syntheticMedia(s, 1000)
@@ -296,7 +242,7 @@ object MultimodalQueries {
     // concurrently (guide §2.6: actions are only sequential because
     // the driver calls them sequentially; each pipeline's tail would
     // otherwise leave the other three waiting)
-    val rel = materializeConcurrently(s.sparkContext, Seq(
+    val rel = graft.core.Concurrent.run(s.sparkContext, Seq(
       "text" -> (() => once(graft.dedup.SimHashDedup
         .nearDuplicates(crossmodalTexts(s, groups), "doc_id", "text"))),
       "image" -> (() => once(graft.multimodal.ImagePhash
@@ -471,7 +417,7 @@ object MultimodalQueries {
       .select(col("id_b").as("probe_id"), col("id_a").as("index_id"))
     // the four index probes are independent — materialize concurrently
     // (guide §2.6; the q219 discipline)
-    val rel = materializeConcurrently(s.sparkContext, Seq(
+    val rel = graft.core.Concurrent.run(s.sparkContext, Seq(
       "text" -> (() => once(textPairs)),
       "image" -> (() => once(graft.multimodal.ImagePhash
         .nearDuplicatesAgainst(imgCorpus.filter(_.media_id >= 1000), imgIdx))),

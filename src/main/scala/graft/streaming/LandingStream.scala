@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake, Versioned}
+import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake, Maintenance, Versioned}
 
 /** Streaming landing→bronze (reference §2.9: Kinesis→Firehose delivery,
   * `infra/main.tf:66-124`, with batch layers polling afterwards).
@@ -27,6 +27,14 @@ object LandingStream {
 
   def stagingDir(lake: Lake, dataset: String): String =
     s"${lake.root}/bronze_staging/$dataset"
+
+  /** The longest segment chain [[finalizeBronze]] leaves: an append
+    * that makes the chain longer folds it into one segment. */
+  val MaxSegments = 32
+
+  /** The file size a fold of the chain aims at: Spark's default read
+    * split (`spark.sql.files.maxPartitionBytes`). */
+  private val CompactFileBytes = 128L << 20
 
   /** Start the landing→staging stream for one dataset. Streaming CSV
     * needs a declared schema: it is inferred from the landing dir by
@@ -71,6 +79,17 @@ object LandingStream {
     * [[Versioned.append]] segment. Incorporated staged files are then
     * removed, so each finalize costs O(new data) + one bronze-side join
     * — never a full-history rewrite. Returns the bronze root.
+    *
+    * No job asks whether the anti-join left any row: the append counts
+    * them inside its own write job and publishes nothing when there are
+    * none, so staging that holds only rows bronze already has leaves the
+    * pointer unchanged. The common path runs 3 Spark jobs: one stage
+    * per side of the anti-join, and the write.
+    *
+    * The chain stays bounded: an append that makes it longer than
+    * [[MaxSegments]] segments is folded into one
+    * ([[Maintenance.compactVersioned]]) under the same lock, so a
+    * bronze read's root list and each publish's GC pass stay short.
     *
     * Schema drift (a column appeared, disappeared or changed type
     * upstream) cannot be appended to the active schema: the rare path
@@ -128,11 +147,9 @@ object LandingStream {
           import graft.core.Cols.quoted
           val aligned = staged.select(bronze.columns.toSeq.map(c => staged(quoted(c))): _*)
           val dup = bronze.columns.map(c => aligned(quoted(c)) <=> bronze(quoted(c))).reduce(_ && _)
-          // cached: isEmpty and the append below share one evaluation of
-          // the staged-dedup + anti-join instead of running it twice
-          graft.core.Materialize.cached(aligned.join(bronze, dup, "left_anti")) { fresh =>
-            if (!fresh.isEmpty) Versioned.append(spark, bronzeRoot, fresh)
-          }
+          val appended = Versioned.append(spark, bronzeRoot, aligned.join(bronze, dup, "left_anti"))
+          if (appended.isDefined && Versioned.segments(spark, bronzeRoot).size > MaxSegments)
+            Maintenance.compactVersioned(spark, bronzeRoot, CompactFileBytes)
         }
       }
       stagedFiles.foreach(p => f.delete(p, false))

@@ -2,10 +2,13 @@ package graft.medallion
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.ListenerBuses
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkTestBase
 import graft.medallion.MedallionTestKit._
+import graft.streaming.FailingCommitProtocol
 
 /** [[GoldFlow.run]]'s cost and guards: one evaluation of reviews⟕music
   * feeds three tables, the job count is locked, and every empty guard
@@ -17,8 +20,9 @@ class GoldFlowSpec extends SparkTestBase {
   /** Spark jobs of one versioned gold run over the fixture lake. A join
     * and group-by per table, an empty probe per write, a range sort per
     * table and schema inference per silver read ran 32 here, in plans
-    * that scanned silver reviews 5 times. */
-  private val GoldJobs = 9
+    * that scanned silver reviews 5 times; a music probe and a count
+    * over the pinned aggregate for the empty guards ran 9. */
+  private val GoldJobs = 7
 
   test(s"versioned gold over the fixture lake runs $GoldJobs Spark jobs and scans silver reviews once") {
     val lake = versionedSilverLake(spark, "gold-jobs")
@@ -96,5 +100,51 @@ class GoldFlowSpec extends SparkTestBase {
     assert(Versioned.read(spark, lake.gold("band_avg_scores")).collect().toSeq
       .map(r => Option(r.get(r.fieldIndex("band_id")))) ==
       Seq(Some(10L), Some(12L), Some(11L), None))
+  }
+
+  test("a gold table whose write fails inside its job: siblings stop, every root keeps a committed version, a rerun equals a clean run") {
+    val brazil = Seq((100L, 1L, 9.5), (101L, 5L, 8.0))
+    val lake = silverLake("gold-fail", music, reviews(brazil: _*), versioned = true)
+    val first = GoldFlow.run(spark, lake, versioned = true)
+    val tables = first.keySet
+    assert(tables.size == 4)
+    val changed = reviews(brazil :+ ((102L, 1L, 7.0)): _*)
+    Versioned.commit(spark, lake.silver("reviews"), changed)
+
+    // the run's jobs, started and ended, by the job group set around it
+    val sc = spark.sparkContext
+    val group = s"gold-fail-${java.util.UUID.randomUUID}"
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          running.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = running.remove(e.jobId)
+    }
+    val key = "spark.sql.sources.commitProtocolClass"
+    spark.conf.set(key, classOf[FailingCommitProtocol].getName)
+    FailingCommitProtocol.under = "/band_avg_scores/"
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "failing gold run", interruptOnCancel = false)
+    val failed =
+      try scala.util.Try(GoldFlow.run(spark, lake, versioned = true))
+      finally {
+        sc.clearJobGroup()
+        spark.conf.unset(key)
+        FailingCommitProtocol.under = ""
+      }
+    ListenerBuses.drain(sc)
+    sc.removeSparkListener(listener)
+    assert(failed.isFailure, "the injected write failure did not surface")
+    assert(running.isEmpty, s"jobs $running of the failed run were still running when it returned")
+    tables.foreach(t => Versioned.resolve(spark, lake.gold(t)))
+    assert(Versioned.resolve(spark, lake.gold("band_avg_scores")) == first("band_avg_scores"))
+
+    def rows(lake: Lake, t: String): Seq[String] =
+      Versioned.read(spark, lake.gold(t)).collect().toSeq.map(_.toString)
+    val rerun = GoldFlow.run(spark, lake, versioned = true)
+    val clean = silverLake("gold-fail-clean", music, changed, versioned = true)
+    assert(GoldFlow.run(spark, clean, versioned = true).keySet == rerun.keySet)
+    rerun.keySet.foreach(t => assert(rows(lake, t) == rows(clean, t), t))
   }
 }

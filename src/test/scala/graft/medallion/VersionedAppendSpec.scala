@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import graft.medallion.MedallionTestKit._
+import graft.streaming.LandingStream
 
 /** [[Versioned.append]]: a version's pointer lists several segments,
   * each row lives in exactly one of them, [[Versioned.read]] reads them
@@ -22,6 +23,12 @@ class VersionedAppendSpec extends SparkTestBase {
   private def versionDirs(root: String): Set[String] =
     new java.io.File(root).list().filter(_.matches("v_\\d+")).toSet
 
+  private def claims(root: String): Set[String] =
+    new java.io.File(root).list().filter(_.matches("\\.v_\\d+\\.claim")).toSet
+
+  private def pointerBytes(root: String): Seq[Byte] =
+    Files.readAllBytes(Paths.get(root, "_current")).toSeq
+
   /** Rows in every parquet file under `root`, from the footers. */
   private def rowsOnDisk(root: String): Long = {
     val s = Files.walk(Paths.get(root))
@@ -36,7 +43,7 @@ class VersionedAppendSpec extends SparkTestBase {
   test("an append publishes only its rows as a new segment; read returns every segment with no inference job") {
     val root = Files.createTempDirectory("append").toString + "/t"
     val v1 = Versioned.commit(spark, root, frame(1, 2))
-    val v2 = Versioned.append(spark, root, frame(3))
+    val v2 = Versioned.append(spark, root, frame(3)).get
     assert(pointerLines(root).head == "v_000001 v_000002")
     assert(!pointerLines(root).exists(_.startsWith("input-key ")), "an append carries no input key")
     assert(spark.read.parquet(v2).as[(Long, String)].collect().toSeq == Seq(3L -> "r3"))
@@ -84,5 +91,46 @@ class VersionedAppendSpec extends SparkTestBase {
     Versioned.commit(spark, root, frame(5), gcGraceMs = 0L)
     assert(versionDirs(root) == Set("v_000004", "v_000005"))
     assert(Versioned.read(spark, root).count() == 1)
+  }
+
+  test("an empty append to an existing root publishes nothing: the pointer is unchanged, no version dir or claim is left") {
+    val root = Files.createTempDirectory("append-empty").toString + "/t"
+    Versioned.commit(spark, root, frame(1, 2))
+    Versioned.append(spark, root, frame(3))
+    val (pointer, dirs, claimed) = (pointerBytes(root), versionDirs(root), claims(root))
+    val (appended, jobs) = countingJobs(spark)(Versioned.append(spark, root, frame(1, 2).filter("id > 5")))
+    assert(appended.isEmpty)
+    assert(jobs == 1, s"an empty append ran $jobs Spark jobs: the count belongs to the write's own job")
+    assert(pointerBytes(root) == pointer, "the pointer changed")
+    assert(versionDirs(root) == dirs)
+    assert(claims(root) == claimed)
+    assert(Versioned.read(spark, root).count() == 3)
+  }
+
+  test("an empty first append to an absent root still publishes, so the root has its schema") {
+    val root = Files.createTempDirectory("append-empty-first").toString + "/t"
+    val dir = Versioned.append(spark, root, frame())
+    assert(dir.contains(s"$root/v_000001"))
+    assert(pointerLines(root).head == "v_000001")
+    val read = Versioned.read(spark, root)
+    assert(read.columns.toSeq == Seq("id", "name"))
+    assert(read.count() == 0)
+  }
+
+  test("finalizeBronze over all-duplicate staging leaves the pointer unchanged and clears staging") {
+    val lake = Lake(Files.createTempDirectory("append-dup-staging").toString)
+    val root = lake.bronze("d")
+    Versioned.commit(spark, root, spark.range(3).selectExpr("id", "id * 2 AS v"))
+    val staging = LandingStream.stagingDir(lake, "d")
+    // twice over: duplicates within staging and against bronze
+    Seq(0L, 2L).foreach(lo =>
+      spark.range(lo, 3).selectExpr("id", "id * 2 AS v").write.mode("append").parquet(staging))
+    val (pointer, dirs, claimed) = (pointerBytes(root), versionDirs(root), claims(root))
+    LandingStream.finalizeBronze(spark, lake, "d")
+    assert(pointerBytes(root) == pointer, "the pointer changed")
+    assert(versionDirs(root) == dirs)
+    assert(claims(root) == claimed)
+    assert(new java.io.File(staging).list().forall(!_.endsWith(".parquet")), "staging was not cleared")
+    assert(Versioned.read(spark, root).count() == 3)
   }
 }

@@ -6,11 +6,11 @@ import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJob
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.core.Materialize
+import graft.core.{Concurrent, Materialize}
 
-/** `MultimodalQueries.materializeConcurrently`: when one modality
-  * fails, the Spark jobs its siblings already started are cancelled,
-  * not left to run to completion on the executors.
+/** [[Concurrent.run]], as the modality queries call it: when one
+  * modality fails, the Spark jobs its siblings already started are
+  * cancelled, not left to run to completion on the executors.
   */
 class ConcurrentModalitiesSpec extends SparkTestBase {
 
@@ -39,7 +39,7 @@ class ConcurrentModalitiesSpec extends SparkTestBase {
       // the failing modality is listed AFTER the long one, so the
       // failure must be seen in completion order, not input order
       val e = intercept[IllegalStateException] {
-        MultimodalQueries.materializeConcurrently(sc, Seq(
+        Concurrent.run(sc, Seq(
           "slow" -> (() => Materialize.pin(
             spark.range(0, 2, 1, 2).select(sleepy(col("id")).as("x")))),
           "failing" -> (() => {

@@ -22,6 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the rolling per-round caches of `DedupClusters` and the session
   * memo of `ScaleOpsQueries`).
   *
+  * Concurrency, in `graft/core/Concurrent.scala`: the one place that
+  * creates a thread pool or starts a thread to run Spark work. Any other
+  * main source that does fails here; `Bench`'s watchdog thread, which
+  * runs one query under a cancellable job group, is the one exemption.
+  *
   * Comments are ignored.
   */
 class StructureSpec extends AnyFunSuite {
@@ -31,6 +36,8 @@ class StructureSpec extends AnyFunSuite {
   private val sinkFile = streamingRoot.resolve("BatchSink.scala")
   private val materializeFile = mainRoot.resolve("graft/core/Materialize.scala")
   private val longLivedCaches = Set("DedupClusters.scala", "ScaleOpsQueries.scala")
+  private val concurrentFile = mainRoot.resolve("graft/core/Concurrent.scala")
+  private val watchdogFile = mainRoot.resolve("graft/Bench.scala")
 
   private val startRules = Seq(
     """\.writeStream\b""" -> "starts a stream (use BatchSink.start)",
@@ -44,6 +51,12 @@ class StructureSpec extends AnyFunSuite {
     """\blocalCheckpoint\b""" -> "checkpoints locally (use Materialize.pin)",
     """\.checkpoint\(""" -> "checkpoints (use Materialize.pin)",
     """\bgetCheckpointDir\b""" -> "reads the checkpoint dir (use Materialize.pin)")
+  private val poolRules = Seq(
+    """\bExecutors\.""" -> "creates a thread pool (use Concurrent.run)",
+    """\b(ThreadPoolExecutor|ForkJoinPool|ExecutionContext\.from\w*)\b""" ->
+      "creates a thread pool (use Concurrent.run)")
+  private val threadRules = Seq(
+    """\bnew\s+Thread\b""" -> "starts a thread (use Concurrent.run)")
   private val cacheRules = Seq(
     """\.persist\(""" -> "persists (use Materialize.cached)",
     """\.cache\(\)""" -> "caches (use Materialize.cached)")
@@ -101,6 +114,20 @@ class StructureSpec extends AnyFunSuite {
     val found = violations(main, materializeFile, pinRules) ++
       violations(main.filterNot(f => longLivedCaches(f.getFileName.toString)),
         materializeFile, cacheRules)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("the concurrency rules match Concurrent.scala and the watchdog") {
+    val missed = unmatched(concurrentFile, poolRules.take(1) ++ threadRules)
+    assert(missed.isEmpty, s"rules that no longer match Concurrent.scala: $missed")
+    assert(unmatched(watchdogFile, threadRules).isEmpty,
+      s"$watchdogFile is exempt from the thread rule but no longer starts a thread")
+  }
+
+  test("only Concurrent creates a thread pool; Bench's watchdog is the one other thread") {
+    val main = scalaFiles(mainRoot)
+    val found = violations(main, concurrentFile, poolRules) ++
+      violations(main.filterNot(_ == watchdogFile), concurrentFile, threadRules)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

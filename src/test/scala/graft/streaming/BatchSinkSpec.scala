@@ -246,9 +246,17 @@ class BatchSinkSpec extends SparkTestBase {
   * `spark.sql.sources.commitProtocolClass`, it makes a file write fail
   * inside its own Spark job, after the job has set up its output
   * directory: the crash a sink must leave readers consistent through.
+  * Only writes whose path contains [[FailingCommitProtocol.under]] fail
+  * (every write, by default).
   */
 class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
     extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
   override def setupTask(taskContext: TaskAttemptContext): Unit =
-    throw new java.io.IOException(s"injected write-task failure under $path")
+    if (path.contains(FailingCommitProtocol.under))
+      throw new java.io.IOException(s"injected write-task failure under $path")
+    else super.setupTask(taskContext)
+}
+
+object FailingCommitProtocol {
+  @volatile var under: String = ""
 }

@@ -159,6 +159,49 @@ class StreamingSpec extends SparkTestBase {
     assert(rows(lake) == (0L until 5L).map(i => (i, i * 2)))
   }
 
+  test("finalize's common path runs 3 Spark jobs: no job only asks whether the anti-join is empty") {
+    val lake = Lake(Files.createTempDirectory("finalize-jobs").toString)
+    Versioned.commit(spark, lake.bronze("d"), spark.range(3).selectExpr("id", "id * 2 AS v"))
+    spark.range(2, 5).selectExpr("id", "id * 2 AS v").write.parquet(LandingStream.stagingDir(lake, "d"))
+    val (_, jobs) = graft.medallion.MedallionTestKit.countingJobs(spark)(
+      LandingStream.finalizeBronze(spark, lake, "d"))
+    assert(jobs == 3, s"finalize ran $jobs Spark jobs")
+    assert(Versioned.segments(spark, lake.bronze("d")).size == 2)
+    assert(Versioned.read(spark, lake.bronze("d")).count() == 5)
+  }
+
+  test(s"finalize folds a chain longer than ${LandingStream.MaxSegments} segments; bronze equals a clean run") {
+    def seeded(tag: String): Lake = {
+      val lake = Lake(Files.createTempDirectory(tag).toString)
+      Versioned.commit(spark, lake.bronze("d"), spark.range(3).selectExpr("id", "id * 2 AS v"))
+      lake
+    }
+    // each batch is new rows plus one row bronze already has
+    def stage(lake: Lake, k: Int): Unit =
+      spark.range(10L * k, 10L * k + 2).union(spark.range(k % 3, k % 3 + 1))
+        .selectExpr("id", "id * 2 AS v").write.mode("append").parquet(LandingStream.stagingDir(lake, "d"))
+    def rows(lake: Lake): Seq[(Long, Long)] = {
+      import spark.implicits._
+      Versioned.read(spark, lake.bronze("d")).as[(Long, Long)].collect().toSeq.sorted
+    }
+    val finalizes = LandingStream.MaxSegments + 1
+    val lake = seeded("finalize-fold")
+    val chain = (1 to finalizes).map { k =>
+      stage(lake, k)
+      LandingStream.finalizeBronze(spark, lake, "d")
+      Versioned.segments(spark, lake.bronze("d")).size
+    }
+    assert(chain.max <= LandingStream.MaxSegments, s"chain lengths ${chain.mkString(",")}")
+    // the seed plus 31 appends fill the chain; the 32nd append folds it
+    assert(chain.last == 2, s"chain lengths ${chain.mkString(",")}")
+
+    val clean = seeded("finalize-fold-clean")
+    (1 to finalizes).foreach(stage(clean, _))
+    LandingStream.finalizeBronze(spark, clean, "d")
+    assert(rows(lake) == rows(clean))
+    assert(rows(lake).size == 3 + 2 * finalizes)
+  }
+
   // Crash points of the landing stream. The stream appends each
   // micro-batch to staging in its foreachBatch, then commits the batch
   // to the checkpoint's commit log. A crash between the two replays the
