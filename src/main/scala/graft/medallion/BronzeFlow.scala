@@ -23,8 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Bronze is a [[Versioned]] root, like silver and gold (the reference's
   * lakehouse variant keeps bronze as a snapshot table,
   * `flows_iceberg/bronze_iceberg.py:36-44`): an ingest commits a full
-  * version, and [[graft.streaming.LandingStream.finalizeBronze]] appends
-  * segments. Read it with [[Versioned.read]].
+  * version, and each landing-stream micro-batch appends a segment
+  * ([[graft.streaming.LandingStream.appendBatch]]). Read it with
+  * [[Versioned.read]].
   */
 object BronzeFlow {
 

@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
   * `main.py:37-86`): albums⟕bands on differing key names, reviews⟖albums
   * right join, chained left join, final 9-column projection, and the
   * `!= 'None'` filters (null comparisons drop rows in both engines).
+  * Reads the [[Versioned]] silver tables that [[Flows.runAll]] publishes.
   */
 object FullDataset {
 
   def build(spark: SparkSession, lake: Lake): DataFrame = {
-    val bands = spark.read.parquet(lake.silver("bands"))
-    val albums = spark.read.parquet(lake.silver("albums"))
+    val bands = Versioned.read(spark, lake.silver("bands"))
+    val albums = Versioned.read(spark, lake.silver("albums"))
       .withColumnRenamed("id", "album_id") // main.py:25
-    val reviews = spark.read.parquet(lake.silver("reviews"))
+    val reviews = Versioned.read(spark, lake.silver("reviews"))
       .withColumnRenamed("album", "album_id") // main.py:34
 
     // main.py:37-52 — J4: albums ⟕ bands, left_on=band right_on=id

@@ -104,9 +104,9 @@ import java.security.MessageDigest
   * drops out of the chain (or the append's own segment does, if the
   * other flip lands last). Appends must therefore be serialized by
   * their caller — bronze's are, by the [[graft.core.FsLock]] that
-  * [[graft.streaming.LandingStream.finalizeBronze]] holds. Lock-free
-  * appends would need a compare-and-set on the base version, which this
-  * layout does not have.
+  * [[graft.streaming.LandingStream.appendBatch]] holds for each
+  * micro-batch. Lock-free appends would need a compare-and-set on the
+  * base version, which this layout does not have.
   *
   * Different roots share nothing — no pointer, no lock, no version
   * numbers — so a layer publishes its independent tables concurrently

@@ -7,7 +7,7 @@ import graft.functions.ZOrderKey
 
 /** Multi-dimensional data layout: write a table Z-ordered on two
   * columns so scans filtering on EITHER column skip most files and
-  * row groups via parquet min/max stats. Complements [[Bucketing]]
+  * row groups via parquet min/max stats. Complements bucketing
   * (which co-locates joins) and partitioned writes (which prune on
   * the partition column only): Z-ordering prunes on BOTH clustered
   * columns without directory explosion — the right layout for a

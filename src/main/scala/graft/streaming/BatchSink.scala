@@ -8,7 +8,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (every loop: [[LandingStream]], [[SchemaEvolveStream]],
   * [[AnnServeStream]]), and how a micro-batch's output is laid out and
   * becomes visible (the chain of [[SchemaEvolveStream]] and the log of
-  * [[AnnServeStream]]; [[LandingStream]] appends to a staging dir).
+  * [[AnnServeStream]]; [[LandingStream]] appends each batch to a
+  * [[graft.medallion.Versioned]] root instead).
   *
   * ==Replay contract==
   * Structured Streaming replays the latest uncommitted micro-batch after

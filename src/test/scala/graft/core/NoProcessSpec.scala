@@ -13,7 +13,8 @@ import graft.streaming.LandingStream
 
 /** Local lake I/O starts no OS process: a JFR recording of only
   * `jdk.ProcessStart` events sees none (see `Counted`) while a tiny
-  * lake commits, appends, locks, streams and finalizes. Hadoop's own
+  * lake commits, appends, locks and streams into bronze (each batch
+  * takes the lock and appends again). Hadoop's own
   * local filesystem starts over a hundred here (`chmod`, `readlink`). */
 class NoProcessSpec extends SparkTestBase {
 
@@ -23,7 +24,7 @@ class NoProcessSpec extends SparkTestBase {
     * run on their own threads at times no spec controls. */
   private val Counted = Seq("org.apache.hadoop.", "graft.")
 
-  test("commit, append, lock, landing stream and finalize start no OS process") {
+  test("commit, append, lock and landing stream start no OS process") {
     val lake = Lake(Files.createTempDirectory("no-process").toString)
     Chunker.deliver(Seq("id,text\n1,a\n", "id,text\n2,b\n"), lake.landing("reviews"), bufferBytes = 12)
     val table = s"${lake.root}/table"
@@ -40,7 +41,6 @@ class NoProcessSpec extends SparkTestBase {
         assert(Versioned.read(spark, table).count() == 5)
       }
       LandingStream.start(spark, lake, "reviews").awaitTermination()
-      LandingStream.finalizeBronze(spark, lake, "reviews")
     } finally {
       rec.stop()
       rec.close()

@@ -21,9 +21,9 @@ class FlowsSpec extends SparkTestBase {
     assert(spark.read.parquet(manifest("gold")("band_avg_scores")).count() == 4)
   }
 
-  test("runAll(versioned = true): atomic-publish manifests, rerun-safe for readers") {
+  test("runAll publishes atomically: versioned manifests, rerun-safe for readers") {
     val lake = Lake(Files.createTempDirectory("flows-versioned").toString)
-    val m1 = Flows.runAll(spark, fixtures, lake, maxChunkBytes = 100, versioned = true)
+    val m1 = Flows.runAll(spark, fixtures, lake, maxChunkBytes = 100)
     // silver and gold manifest entries are immutable committed version dirs
     (m1("silver").values ++ m1("gold").values).foreach { p =>
       assert(p.matches(".*/v_\\d{6}"), p)
@@ -48,7 +48,7 @@ class FlowsSpec extends SparkTestBase {
     reader.start()
     try {
       (1 to 2).foreach { _ =>
-        Flows.runAll(spark, fixtures, lake, maxChunkBytes = 100, versioned = true)
+        Flows.runAll(spark, fixtures, lake, maxChunkBytes = 100)
       }
     } finally { stop = true; reader.join() }
     assert(failures.isEmpty, failures.take(3).mkString("; "))

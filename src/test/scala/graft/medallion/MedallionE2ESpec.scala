@@ -157,7 +157,7 @@ class MedallionE2ESpec extends SparkTestBase {
   }
 
   test("full dataset ad-hoc chain: 5 reviewed albums with band context") {
-    val fd = FullDataset.build(spark, lake)
+    val fd = FullDataset.build(spark, MedallionTestKit.versionedSilverLake(spark, "full-dataset"))
     assert(fd.columns.toSeq == Seq("name", "country", "status", "formed_in",
       "title_album", "year_album", "title_review", "score", "content"))
     val rows = fd.orderBy("name", "title_review").collect()

@@ -117,20 +117,17 @@ class VersionedAppendSpec extends SparkTestBase {
     assert(read.count() == 0)
   }
 
-  test("finalizeBronze over all-duplicate staging leaves the pointer unchanged and clears staging") {
-    val lake = Lake(Files.createTempDirectory("append-dup-staging").toString)
+  test("a batch of rows bronze already has leaves the pointer unchanged") {
+    val lake = Lake(Files.createTempDirectory("append-dup-batch").toString)
     val root = lake.bronze("d")
     Versioned.commit(spark, root, spark.range(3).selectExpr("id", "id * 2 AS v"))
-    val staging = LandingStream.stagingDir(lake, "d")
-    // twice over: duplicates within staging and against bronze
-    Seq(0L, 2L).foreach(lo =>
-      spark.range(lo, 3).selectExpr("id", "id * 2 AS v").write.mode("append").parquet(staging))
+    // twice over: duplicates within the batch and against bronze
+    val batch = spark.range(0, 3).union(spark.range(2, 3)).selectExpr("id", "id * 2 AS v")
     val (pointer, dirs, claimed) = (pointerBytes(root), versionDirs(root), claims(root))
-    LandingStream.finalizeBronze(spark, lake, "d")
+    LandingStream.appendBatch(spark, lake, "d", batch)
     assert(pointerBytes(root) == pointer, "the pointer changed")
     assert(versionDirs(root) == dirs)
     assert(claims(root) == claimed)
-    assert(new java.io.File(staging).list().forall(!_.endsWith(".parquet")), "staging was not cleared")
     assert(Versioned.read(spark, root).count() == 3)
   }
 }

@@ -7,7 +7,7 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.TaskAttemptContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 
@@ -34,14 +34,7 @@ import graft.similarity.BinaryAnn
 class BatchSinkSpec extends SparkTestBase {
   import spark.implicits._
 
-  /** Run `body` with every file write task failing. */
-  private def withFailingWrites(body: => Unit): Try[Unit] = {
-    val key = "spark.sql.sources.commitProtocolClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, classOf[FailingCommitProtocol].getName)
-    try Try(body)
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  private def withFailingWrites(body: => Unit): Try[Unit] = FailingCommitProtocol.during(spark)(body)
 
   /** The parquet files of one published entry, by name and mtime. */
   private def files(entry: String): Set[(String, Long)] =
@@ -259,4 +252,13 @@ class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwri
 
 object FailingCommitProtocol {
   @volatile var under: String = ""
+
+  /** Run `body` with every file write task of `spark` failing. */
+  def during[T](spark: SparkSession)(body: => T): Try[T] = {
+    val key = "spark.sql.sources.commitProtocolClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[FailingCommitProtocol].getName)
+    try Try(body)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
