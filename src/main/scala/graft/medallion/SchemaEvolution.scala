@@ -176,27 +176,24 @@ object SchemaEvolution {
 
   /** Evolving commit to a [[Versioned]] root: the new version is the
     * previous ACTIVE version's rows aligned to the reconciled schema
-    * plus the aligned batch (`mode = "append"`), or the aligned batch
-    * alone (`"overwrite"`). The previous version dir is untouched —
-    * old readers keep their schema and their files; widening is
-    * metadata-only here because every version is a full snapshot.
-    * Returns the new version dir.
+    * plus the aligned batch, or the batch alone on a root with no
+    * version yet. The previous version dir is untouched — old readers
+    * keep their schema and their files; widening is metadata-only here
+    * because every version is a full snapshot. `batch` is a streaming
+    * micro-batch id: at or below the active version's, the commit
+    * publishes nothing ([[Versioned]]). Returns the new version dir.
     */
   def commitEvolved(
       spark: SparkSession, root: String, df: DataFrame,
-      mode: String = "append"): String = {
-    require(mode == "append" || mode == "overwrite", s"mode: $mode")
-    val prev =
-      try Some(Versioned.read(spark, root))
-      catch { case _: java.io.FileNotFoundException => None }
-    val content = prev match {
-      case None => df
-      case Some(old) =>
+      batch: Option[Long] = None): String = {
+    val content =
+      if (!Versioned.exists(spark, root)) df
+      else {
+        val old = Versioned.read(spark, root)
         val target = reconcile(old.schema, df.schema)
-        if (mode == "append") align(old, target).unionByName(align(df, target))
-        else align(df, target)
-    }
-    Versioned.commit(spark, root, content)
+        align(old, target).unionByName(align(df, target))
+      }
+    Versioned.commit(spark, root, content, batch = batch)
   }
 
   /** Footer-merging parquet read for heterogeneous-schema dirs. */

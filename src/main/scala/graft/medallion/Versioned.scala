@@ -36,20 +36,34 @@ import java.security.MessageDigest
   * empty, so the root gets its schema. The next line holds the schema the
   * version was committed with, as Spark schema JSON (every field
   * nullable, as a parquet read reports it), so [[read]] hands it to the
-  * reader and skips the footer-inference job. A last line tagged
+  * reader and skips the footer-inference job. A line tagged
   * `input-key ` holds the version's input key, when a [[commit]]ed
-  * frame has one:
+  * frame has one, and a line tagged `batch ` the id of the last
+  * streaming micro-batch published to the root:
   *
   * {{{
   *   v_000002 v_000005                    segments, oldest first
   *   {"type":"struct","fields":[...]}
   *   input-key 3f9a...                     keyed commits only
+  *   batch 7                               streaming sinks only
   * }}}
   *
   * A pointer without a schema line (written by older code, which left
   * it out for partitioned versions) reads by inference; one without a
   * key line (an append, a non-keyed frame, or older code) never matches
   * a commit.
+  *
+  * Publish each micro-batch once: a streaming sink passes its batch id
+  * to [[commit]] or [[append]]. A publish with batch N, when the active
+  * version's batch is ≥ N, writes nothing — no claim marker, no version
+  * dir, no GC pass. Structured Streaming replays only the latest batch
+  * whose offset commit was lost, so a batch at or below the recorded
+  * one is already published; the recorded id is all an idempotent sink
+  * needs (Armbrust et al., SIGMOD 2018). A publish without a batch id
+  * (a fold by [[Maintenance.compactVersioned]]) carries the active
+  * version's batch line forward, so a replay after the fold is still a
+  * no-op. A batch-keyed commit computes no input key: the batch id
+  * already names its input.
   *
   * Publish only what changed: the input key is a SHA-256 digest of what
   * decides the committed rows — every file the frame's analyzed plan
@@ -105,8 +119,11 @@ import java.security.MessageDigest
   * other flip lands last). Appends must therefore be serialized by
   * their caller — bronze's are, by the [[graft.core.FsLock]] that
   * [[graft.streaming.LandingStream.appendBatch]] holds for each
-  * micro-batch. Lock-free appends would need a compare-and-set on the
-  * base version, which this layout does not have.
+  * micro-batch; a serving log's
+  * ([[graft.streaming.AnnServeStream.serveBatch]]) are, by its one
+  * stream, which runs one micro-batch at a time. Lock-free appends
+  * would need a compare-and-set on the base version, which this layout
+  * does not have.
   *
   * Different roots share nothing — no pointer, no lock, no version
   * numbers — so a layer publishes its independent tables concurrently
@@ -119,14 +136,17 @@ object Versioned {
 
   private val Pointer = "_current"
 
-  /** The tag of the pointer line that holds the input key. */
+  /** The tags of the pointer lines that hold the input key and the
+    * batch id. */
   private val KeyTag = "input-key "
+  private val BatchTag = "batch "
 
   /** A parsed `_current`: the active version's segment names, and the
-    * schema and input key it was published with, where the pointer
-    * records them. */
+    * schema, input key and batch id it was published with, where the
+    * pointer records them. */
   private final case class Active(
-      root: String, segments: Seq[String], schema: Option[StructType], key: Option[String]) {
+      root: String, segments: Seq[String], schema: Option[StructType], key: Option[String],
+      batch: Option[Long]) {
     def dirs: Seq[String] = segments.map(v => s"$root/$v")
   }
 
@@ -186,10 +206,11 @@ object Versioned {
       finally in.close()
       val segments = lines.headOption.toSeq.flatMap(_.split(' ')).filter(_.nonEmpty)
       require(segments.nonEmpty, s"$ptr is empty")
-      val (keys, rest) = lines.drop(1).filter(_.nonEmpty).partition(_.startsWith(KeyTag))
+      val rest = lines.drop(1)
+      def tagged(tag: String) = rest.find(_.startsWith(tag)).map(_.stripPrefix(tag))
       Active(root, segments,
-        rest.headOption.map(DataType.fromJson(_).asInstanceOf[StructType]),
-        keys.headOption.map(_.stripPrefix(KeyTag)))
+        rest.find(_.startsWith("{")).map(DataType.fromJson(_).asInstanceOf[StructType]),
+        tagged(KeyTag), tagged(BatchTag).map(_.toLong))
     }
     var attempt = 0
     while (true) {
@@ -294,30 +315,37 @@ object Versioned {
   /** Write `df` as the next version and atomically publish it. Returns
     * the new version dir. Readers in flight keep their resolved dir;
     * new resolves see the new version the instant the pointer rename
-    * lands. When the active version's input key equals `df`'s (see the
-    * class doc), nothing is written and the active version dir is
+    * lands. When the active version's input key equals `df`'s, or
+    * `batch` is at or below the active version's (see the class doc),
+    * nothing is written and the active version's newest segment dir is
     * returned.
     */
   def commit(
       spark: SparkSession, root: String, df: DataFrame,
-      gcGraceMs: Long = DefaultGcGraceMs): String = {
-    val key = inputKey(df)
+      gcGraceMs: Long = DefaultGcGraceMs, batch: Option[Long] = None): String = {
     val active = activeOrNone(spark, root)
-    // a keyed pointer is always a commit's, so it has one segment
-    if (key.isDefined && active.exists(_.key == key)) active.get.dirs.head
-    else publish(spark, root, writeVersion(spark, root, df), df.schema, active, Nil, key, gcGraceMs)
+    lazy val key = if (batch.isDefined) None else inputKey(df)
+    if (published(active, batch) || (key.isDefined && active.exists(_.key == key)))
+      active.get.dirs.last
+    else publish(spark, root, writeVersion(spark, root, df), df.schema, active, Nil, key, batch,
+      gcGraceMs)
   }
 
   /** Append `df`'s rows to the active version: publish a version whose
     * segments are the active ones plus one new dir holding only `df`'s
     * rows, with no input key. `df` must have the active version's
-    * schema. Returns the new segment dir, or None when `df` has no rows
-    * and the root already has a version: the rows are counted inside
-    * the write's own job, and an empty segment is removed unpublished
-    * (class doc). Callers serialize appends to one root (class doc).
+    * schema. Returns the new segment dir, or None when nothing is
+    * published: `batch` is at or below the active version's (class
+    * doc), or `df` has no rows and the root already has a version (the
+    * rows are counted inside the write's own job, and an empty segment
+    * is removed unpublished). Callers serialize appends to one root
+    * (class doc).
     */
-  def append(spark: SparkSession, root: String, df: DataFrame): Option[String] = {
+  def append(
+      spark: SparkSession, root: String, df: DataFrame,
+      batch: Option[Long] = None): Option[String] = {
     val active = activeOrNone(spark, root)
+    if (published(active, batch)) return None
     active.flatMap(_.schema).foreach(s => require(s == nullable(df.schema),
       s"append to $root: schema ${df.schema.simpleString} differs from the active ${s.simpleString}"))
     val rows = Observation()
@@ -328,8 +356,12 @@ object Versioned {
       f.delete(new HPath(s"$root/.$vName.claim"), false)
       None
     } else Some(publish(spark, root, vName, df.schema, active,
-      active.fold(Seq.empty[String])(_.segments), None, DefaultGcGraceMs))
+      active.fold(Seq.empty[String])(_.segments), None, batch, DefaultGcGraceMs))
   }
+
+  /** True when the active version already holds micro-batch `batch`. */
+  private def published(active: Option[Active], batch: Option[Long]): Boolean =
+    batch.exists(n => active.exists(_.batch.exists(_ >= n)))
 
   /** The parsed pointer, or None before the first publish. A pointer
     * caught mid-rename reads as absent: a commit then publishes, which
@@ -353,11 +385,13 @@ object Versioned {
 
   /** Publish the written version `vName`, whose rows have `schema`, as a
     * new segment after `base` (Nil for a full version), then GC;
-    * `active` is the pointer read before the write. Returns its dir.
+    * `active` is the pointer read before the write, whose batch id
+    * carries forward when `batch` is None. Returns its dir.
     */
   private def publish(
       spark: SparkSession, root: String, vName: String, schema: StructType,
-      active: Option[Active], base: Seq[String], key: Option[String], gcGraceMs: Long): String = {
+      active: Option[Active], base: Seq[String], key: Option[String], batch: Option[Long],
+      gcGraceMs: Long): String = {
     val rootP = new HPath(root)
     val f = fs(spark, rootP)
     val ptr = new HPath(s"$root/$Pointer")
@@ -373,13 +407,13 @@ object Versioned {
       else try current(spark, root).segments
       catch { case _: java.io.FileNotFoundException => Nil }
 
-    // publish: write the pointer (the segments, the schema and the
-    // input key) beside _current, then atomic-overwrite rename it into
-    // place (FileContext supports OVERWRITE; the plain FileSystem.rename
-    // does not)
+    // publish: write the pointer (the segments, the schema, the input
+    // key and the batch id) beside _current, then atomic-overwrite
+    // rename it into place (FileContext supports OVERWRITE; the plain
+    // FileSystem.rename does not)
     val segments = base :+ vName
     val pointer = (Seq(segments.mkString(" "), nullable(schema).json) ++
-      key.map(KeyTag + _)).mkString("\n")
+      key.map(KeyTag + _) ++ batch.orElse(active.flatMap(_.batch)).map(BatchTag + _)).mkString("\n")
     val tmp = new HPath(s"$root/._current.tmp")
     val out = f.create(tmp, true)
     try out.write(pointer.getBytes(StandardCharsets.UTF_8)) finally out.close()

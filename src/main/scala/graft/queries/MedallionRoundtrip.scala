@@ -282,7 +282,8 @@ object MedallionRoundtrip {
     * ([[graft.streaming.SchemaEvolveStream]]): a producer lands three
     * parquet batches — v1 (INT key), v1+column (r_note), then the key
     * WIDENED to BIGINT at +100 offset — and the file-grain stream
-    * evolves its snapshot-chain bronze table per micro-batch, where a
+    * evolves its [[graft.medallion.Versioned]] bronze table with one
+    * batch-keyed commit per micro-batch, where a
     * declared-schema stream would have dropped the new column and a
     * static target would have refused the widen. Stream runs are
     * sequential AvailableNow passes over one checkpoint (arrival

@@ -884,12 +884,13 @@ object RetrievalQueries {
     * micro-batched parquet files, each batch probes the same decorated
     * code index via [[graft.streaming.AnnServeStream]] (slice predicate
     * BEFORE the Hamming cut, exact-cosine rerank per batch), and the
-    * accumulated serving log is the result. Probes are independent per
-    * query_id, so the batch boundary is invisible in the output and
-    * the EXACT q218 oracle applies verbatim — the streamed path is
-    * hash-held to the same DuckDB recomputation as the batch path
-    * (AnnServeStreamSpec additionally pins streamed ≡ batch and replay
-    * no-op at the stream grain).
+    * accumulated serving log — a [[graft.medallion.Versioned]] root,
+    * one batch-keyed append per micro-batch — is the result. Probes are
+    * independent per query_id, so the batch boundary is invisible in
+    * the output and the EXACT q218 oracle applies verbatim — the
+    * streamed path is hash-held to the same DuckDB recomputation as
+    * the batch path (AnnServeStreamSpec additionally pins streamed ≡
+    * batch and replay no-op at the stream grain).
     *
     * Scratch dirs are per-PID, rebuilt per call (the whole loop —
     * landing, stream, probe — is the measured unit), deleted at JVM

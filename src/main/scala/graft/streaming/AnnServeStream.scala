@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.medallion.Versioned
+
 /** Streaming metadata-filtered ANN SERVING — the RAG retrieval loop
   * over the q218 surface: a micro-batch stream of query embeddings
   * probes the [[graft.similarity.BinaryAnn.buildDecoratedIndex]]
@@ -17,10 +19,11 @@ import org.apache.spark.sql.types.StructType
   * anchoring the kernel itself.
   *
   * ==Replay contract==
-  * The serving log is one [[BatchSink]] partition per micro-batch; the
-  * probe is a pure function of (immutable code index, immutable corpus,
-  * batch), so a replay recomputes the same rows and no marker
-  * protocol is needed.
+  * The serving log is a [[Versioned]] root that each micro-batch
+  * appends to, its rows tagged with a `batch_id` column and the append
+  * keyed by the batch id: a replay of a published batch publishes
+  * nothing. The stream runs one batch at a time, which serializes the
+  * appends as [[Versioned]] requires.
   *
   * ==Scale shape==
   * Per batch: the slice predicate prunes the 16×-compressed code scan
@@ -45,30 +48,31 @@ object AnnServeStream {
     val reader = spark.readStream.schema(schema)
     // without this, AvailableNow folds every pending file into ONE
     // micro-batch — callers that want per-delivery serving batches
-    // (and the batch-partitioned log that goes with them) set it
+    // (and the per-batch log segments that go with them) set it
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
     BatchSink.start(reader.parquet(inDir), checkpointDir)(
       serveBatch(_, _, indexDir, corpus, predicate, outDir, k, candidates))
   }
 
   /** One micro-batch of the serving loop (exposed for direct batch use
-    * and the spec): filtered probe + exact rerank, published as the
-    * batch's own partition.
+    * and the spec): filtered probe + exact rerank, appended to the log
+    * as the batch's own segment. An empty batch publishes nothing (the
+    * append counts its rows inside the write), except on a log with no
+    * version yet, which it gives its schema.
     */
   def serveBatch(
       batch: DataFrame, batchId: Long, indexDir: String,
       corpus: DataFrame, predicate: Column, outDir: String,
-      k: Int, candidates: Int): Unit = {
-    if (batch.isEmpty) return
-    BatchSink.Partitions.publish(
+      k: Int, candidates: Int): Unit =
+    Versioned.append(batch.sparkSession, outDir,
       graft.similarity.BinaryAnn.filteredHammingTopKFromIndex(
-        indexDir, corpus, batch, predicate, k, candidates),
-      outDir, batchId)
-  }
+        indexDir, corpus, batch, predicate, k, candidates)
+        .withColumn("batch_id", lit(batchId)),
+      batch = Some(batchId))
 
-  /** The accumulated serving log (all batches), batch_id recovered
-    * from the partition path.
+  /** The accumulated serving log (all batches), with each row's
+    * `batch_id`.
     */
   def servingLog(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
+    Versioned.read(spark, outDir)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.medallion.SchemaEvolution
+import graft.medallion.{SchemaEvolution, Versioned}
 
 /** Streaming schema evolution — a bronze intake that SURVIVES a
   * mid-stream producer schema change. A plain `readStream.schema(...)`
@@ -20,16 +20,17 @@ import graft.medallion.SchemaEvolution
   * grain).
   *
   * ==Target layout==
-  * The evolving table is a [[BatchSink]] snapshot chain: batch N reads
-  * the newest version at or below N (the state before it) and publishes
-  * version N+1 with the full aligned content, so a replay never
-  * double-appends (the failure mode an append-per-batch target cannot
-  * avoid without row-level deletes). Widening is metadata-only here
-  * because every version is a full snapshot (the
-  * [[SchemaEvolution.commitEvolved]] argument); prior snapshots keep
-  * their original schema and stay readable.
+  * The evolving table is a [[Versioned]] root: batch N commits the
+  * active version's rows and the batch's, aligned to the reconciled
+  * schema, as one full version keyed by N
+  * ([[SchemaEvolution.commitEvolved]]). A replay of a published batch
+  * publishes nothing, so it never double-appends (the failure mode an
+  * append-per-batch target cannot avoid without row-level deletes).
+  * Widening is metadata-only here because every version is a full
+  * snapshot; version dirs are immutable, so prior versions keep their
+  * original schema and stay readable until `Versioned`'s GC reaps them.
   *
-  * Scale shape: the chain rewrites O(table) per batch — right for a
+  * Scale shape: each batch rewrites O(table) — right for a
   * bronze dimension/control table fed by an evolving producer (the
   * reference's Iceberg bronze is exactly that); a fact-scale stream
   * keeps [[LandingStream]]'s fixed-schema append and evolves on
@@ -38,23 +39,14 @@ import graft.medallion.SchemaEvolution
 object SchemaEvolveStream {
 
   /** One micro-batch: merge-read the batch's own files (their true
-    * schema), reconcile against the pre-batch snapshot, write the full
-    * aligned union as version batchId+1. Exposed for tests.
+    * schema) and commit them, reconciled with the active version, as
+    * the version of batch `batchId`. Exposed for tests.
     */
   def applyBatch(spark: SparkSession, paths: Seq[String], batchId: Long,
-      tableDir: String): Unit = {
-    if (paths.isEmpty) return
-    val batch = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    val next = BatchSink.Snapshots.latest(spark, tableDir, batchId) match {
-      case None => batch
-      case Some((_, prevDir)) =>
-        val prev = spark.read.parquet(prevDir)
-        val target = SchemaEvolution.reconcile(prev.schema, batch.schema)
-        SchemaEvolution.align(prev, target)
-          .unionByName(SchemaEvolution.align(batch, target))
-    }
-    BatchSink.Snapshots.advance(next, tableDir, batchId + 1)
-  }
+      tableDir: String): Unit =
+    if (paths.nonEmpty)
+      SchemaEvolution.commitEvolved(spark, tableDir,
+        spark.read.option("mergeSchema", "true").parquet(paths: _*), batch = Some(batchId))
 
   /** Start the landing→evolving-bronze stream over `inDir`'s parquet
     * files. File grain: each row of the source is a (path, metadata)
@@ -84,9 +76,9 @@ object SchemaEvolveStream {
     }
   }
 
-  /** The evolving table's current content (latest published snapshot).
+  /** The evolving table's current content (its active version).
     * Fails if no batch has committed yet.
     */
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    BatchSink.readSnapshot(spark, tableDir)
+    Versioned.read(spark, tableDir)
 }

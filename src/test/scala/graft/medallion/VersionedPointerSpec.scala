@@ -8,9 +8,11 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import graft.SparkTestBase
 import graft.medallion.MedallionTestKit._
 
-/** The `_current` pointer's optional schema line: [[Versioned.read]]
-  * takes the committed schema from it instead of inferring one from
-  * the parquet footers, and a one-line pointer reads as it always has.
+/** The `_current` pointer's optional lines. The schema line:
+  * [[Versioned.read]] takes the committed schema from it instead of
+  * inferring one from the parquet footers, and a one-line pointer reads
+  * as it always has. The batch line: a publish at or below the recorded
+  * micro-batch id writes nothing.
   */
 class VersionedPointerSpec extends SparkTestBase {
   import spark.implicits._
@@ -78,6 +80,27 @@ class VersionedPointerSpec extends SparkTestBase {
     assert(df.schema("n").dataType == LongType)
     assert(df.columns.toSeq == Seq("n", "s", "x"))
     assert(rows(df) == Set(Seq(1L, "a", null), Seq(2L, null, 0.5)))
+  }
+
+  test("a publish at or below the active batch writes nothing; an unbatched commit carries the batch forward") {
+    val root = Files.createTempDirectory("versioned-batch").toString + "/t"
+    def listing = Files.list(Paths.get(root)).toArray.map(_.toString).toSet
+    Versioned.commit(spark, root, frame, batch = Some(3L))
+    assert(pointerLines(root).last == "batch 3")
+    val (pointer, files) = (pointerLines(root), listing)
+    Versioned.commit(spark, root, frame, batch = Some(3L))
+    Versioned.commit(spark, root, frame, batch = Some(2L))
+    assert(Versioned.append(spark, root, frame, batch = Some(3L)).isEmpty)
+    assert(pointerLines(root) == pointer && listing == files,
+      "a replayed batch wrote a claim marker, a version dir or the pointer")
+
+    assert(Versioned.append(spark, root, frame, batch = Some(4L)).isDefined)
+    assert(pointerLines(root).last == "batch 4" && Versioned.segments(spark, root).size == 2)
+    Maintenance.compactVersioned(spark, root, 1L << 20)
+    assert(Versioned.segments(spark, root).size == 1)
+    assert(pointerLines(root).last == "batch 4", "the fold dropped the batch line")
+    assert(Versioned.append(spark, root, frame, batch = Some(4L)).isEmpty)
+    assert(Versioned.read(spark, root).count() == 4)
   }
 
   test("every silver and gold pointer's schema is the schema a parquet read infers") {

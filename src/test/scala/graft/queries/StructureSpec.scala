@@ -8,12 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Tooling guard for the policies that are decided once, in one file.
   *
-  * Streaming publish path, in `graft/streaming/BatchSink.scala`: how a
-  * loop starts, how its per-batch output is named, how a published
-  * entry is recognised and how long a chain is kept. Any other main
-  * source that starts a stream, and any other streaming source that
-  * spells a `batch_id=` or `snap_` path, probes `_SUCCESS` or defines
-  * `KeepSnapshots`, fails here.
+  * Streaming start, in `graft/streaming/BatchSink.scala`: how a loop
+  * starts. Any other main source that starts a stream fails here.
+  * Streaming publish, in `graft/medallion/Versioned.scala`: a streaming
+  * source that writes a frame itself, or probes `_SUCCESS`, fails here.
   *
   * Materialization, in `graft/core/Materialize.scala`: every eager
   * lineage cut and every scoped cache. Any other main source that
@@ -34,6 +32,7 @@ class StructureSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala")
   private val streamingRoot = mainRoot.resolve("graft/streaming")
   private val sinkFile = streamingRoot.resolve("BatchSink.scala")
+  private val versionedFile = mainRoot.resolve("graft/medallion/Versioned.scala")
   private val materializeFile = mainRoot.resolve("graft/core/Materialize.scala")
   private val longLivedCaches = Set("DedupClusters.scala", "ScaleOpsQueries.scala")
   private val concurrentFile = mainRoot.resolve("graft/core/Concurrent.scala")
@@ -42,11 +41,9 @@ class StructureSpec extends AnyFunSuite {
   private val startRules = Seq(
     """\.writeStream\b""" -> "starts a stream (use BatchSink.start)",
     """\bforeachBatch\b""" -> "runs a foreachBatch loop (use BatchSink.start)")
-  private val layoutRules = Seq(
-    "batch_id=" -> "spells a partition path (use BatchSink.Partitions)",
-    "snap_" -> "spells a snapshot path (use BatchSink.Snapshots)",
-    "_SUCCESS" -> "probes a commit marker (a published entry is complete)",
-    """\b(val|def|var)\s+KeepSnapshots\b""" -> "defines a retention (use BatchSink.KeepSnapshots)")
+  private val publishRules = Seq(
+    """\.write\b""" -> "writes a frame itself (publish through Versioned)",
+    "_SUCCESS" -> "probes a commit marker (a published version is complete)")
   private val pinRules = Seq(
     """\blocalCheckpoint\b""" -> "checkpoints locally (use Materialize.pin)",
     """\.checkpoint\(""" -> "checkpoints (use Materialize.pin)",
@@ -89,13 +86,13 @@ class StructureSpec extends AnyFunSuite {
   }
 
   test("the rules match the policy where it lives") {
-    val missed = unmatched(sinkFile, startRules ++ layoutRules.filter(_._1 != "_SUCCESS"))
-    assert(missed.isEmpty, s"rules that no longer match BatchSink.scala: $missed")
+    val missed = unmatched(sinkFile, startRules) ++ unmatched(versionedFile, publishRules.take(1))
+    assert(missed.isEmpty, s"rules that no longer match BatchSink.scala or Versioned.scala: $missed")
   }
 
   test("only BatchSink starts a stream or spells the publish layout") {
     val found = violations(scalaFiles(mainRoot), sinkFile, startRules) ++
-      violations(scalaFiles(streamingRoot), sinkFile, layoutRules)
+      violations(scalaFiles(streamingRoot), versionedFile, publishRules)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 

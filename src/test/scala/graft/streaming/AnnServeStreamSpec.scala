@@ -12,7 +12,7 @@ import graft.similarity.BinaryAnn
 /** Streaming metadata-filtered ANN serving (AnnServeStream): the q218
   * kernel under foreachBatch — streamed over micro-batched query files
   * ≡ the one-shot batch probe over the same probes, and a redelivered
-  * batch is a no-op (identical partition rewrite).
+  * batch is a no-op (its batch-keyed append publishes nothing).
   */
 class AnnServeStreamSpec extends SparkTestBase {
   import spark.implicits._
@@ -62,13 +62,15 @@ class AnnServeStreamSpec extends SparkTestBase {
       "a neighbor escaped the metadata slice")
 
     // replay: redeliver batch 0's probes under the same batch_id — the
-    // probe is pure in (index, corpus, batch), so the partition is
-    // rewritten with identical rows and the log is unchanged
+    // log already holds batches up to 1, so the append publishes nothing
     val before = canon(AnnServeStream.servingLog(spark, out))
+    val pointer = Files.readAllBytes(java.nio.file.Paths.get(out, "_current")).toSeq
     AnnServeStream.serveBatch(spark.read.parquet(s"$in/f1"), 0L, idx, vecs,
       col("label") === 3, out, k, cands)
     assert(canon(AnnServeStream.servingLog(spark, out)) == before,
       "replaying a batch must not change the serving log")
+    assert(Files.readAllBytes(java.nio.file.Paths.get(out, "_current")).toSeq == pointer,
+      "replaying a batch published a version")
   }
 
   test("a batch whose slice predicate matches nothing serves an empty partition, not a failure") {
@@ -80,6 +82,27 @@ class AnnServeStreamSpec extends SparkTestBase {
       vecs.filter($"vec_id" < 5).select($"vec_id", $"embedding"), 0L,
       idx, vecs, col("label") === 9999, out, k, cands)
     assert(AnnServeStream.servingLog(spark, out).count() == 0)
+  }
+
+  test("an empty probe batch gives a new log its schema and publishes nothing to an existing one") {
+    val vecs = Tables.load(spark, sf, "embeddings")
+    val root = Files.createTempDirectory("ann-serve-no-probes").toString
+    val (idx, out) = (s"$root/idx", s"$root/out")
+    BinaryAnn.buildDecoratedIndex(vecs, idx, Seq("label"))
+    val probes = vecs.select($"vec_id", $"embedding")
+    def serve(batch: DataFrame, id: Long): Unit =
+      AnnServeStream.serveBatch(batch, id, idx, vecs, col("label") === 3, out, k, cands)
+    def pointer = Files.readAllBytes(java.nio.file.Paths.get(out, "_current")).toSeq
+
+    serve(probes.filter($"vec_id" < 0), 0L)
+    val empty = AnnServeStream.servingLog(spark, out)
+    assert(empty.count() == 0 && empty.columns.contains("batch_id"))
+    serve(probes.filter($"vec_id" < 10), 1L)
+    val (rows, published) = (canon(AnnServeStream.servingLog(spark, out)), pointer)
+    assert(rows.nonEmpty)
+    serve(probes.filter($"vec_id" < 0), 2L)
+    assert(pointer == published, "an empty batch published a version")
+    assert(canon(AnnServeStream.servingLog(spark, out)) == rows)
   }
 
   test("the public start() entry point runs the loop end-to-end") {

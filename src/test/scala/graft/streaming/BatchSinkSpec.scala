@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.util.Try
 
@@ -13,39 +13,47 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.core.Tables
+import graft.medallion.Versioned
 import graft.similarity.BinaryAnn
 
-/** Crash points of the shared publish path ([[BatchSink]]), driven
-  * through the partition sink of [[AnnServeStream.serveBatch]] (the
-  * serving log) and the snapshot chain of
-  * [[SchemaEvolveStream.applyBatch]] (the evolving table).
+/** Crash points of the streams' publish path: the [[Versioned]]
+  * serving log that [[AnnServeStream.serveBatch]] appends to and the
+  * [[Versioned]] evolving table that [[SchemaEvolveStream.applyBatch]]
+  * commits to, each publish keyed by its micro-batch id.
   *
-  * Two kinds of crash:
+  * Three kinds of crash:
   *  - a write that fails inside its own Spark job: every write task of
   *    the attempt fails ([[FailingCommitProtocol]]) after the job has
   *    set up its output directory;
   *  - a stream whose batch was published but whose offset commit was
   *    lost: the checkpoint's last `commits/N` is deleted and the stream
-  *    restarted, so Structured Streaming replays batch N.
+  *    restarted, so Structured Streaming replays batch N;
+  *  - a stream whose batch fails inside its write: the offset is
+  *    logged, the commit is not, and the restart runs the batch again.
   *
-  * Either way readers see only complete entries, and a replay leaves a
-  * published entry's files in place.
+  * Either way readers see only complete versions, and a replay of a
+  * published batch leaves the pointer and the active segments' files
+  * as they were.
   */
 class BatchSinkSpec extends SparkTestBase {
   import spark.implicits._
 
   private def withFailingWrites(body: => Unit): Try[Unit] = FailingCommitProtocol.during(spark)(body)
 
-  /** The parquet files of one published entry, by name and mtime. */
-  private def files(entry: String): Set[(String, Long)] =
-    Option(new File(entry).listFiles()).toSet.flatten
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getName -> f.lastModified())
+  /** What a publish changes: the pointer's bytes, and the parquet
+    * files of the active version's segments, by path and mtime.
+    */
+  private def published(root: String): (Seq[Byte], Set[(String, Long)]) =
+    (Files.readAllBytes(Paths.get(root, "_current")).toSeq,
+      Versioned.segments(spark, root).toSet.flatMap((dir: String) =>
+        Option(new File(dir).listFiles()).toSet.flatten
+          .filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getPath -> f.lastModified())))
 
   private def tempRoot(tag: String): String =
     Files.createTempDirectory(s"sink-$tag").toString
 
-  // ---- partition sink: the ANN serving log ----
+  // ---- the ANN serving log ----
 
   private val (k, cands) = (5, 32)
   private val slice = col("label") === 3
@@ -70,7 +78,7 @@ class BatchSinkSpec extends SparkTestBase {
 
   private def logRoot(tag: String): String = tempRoot(tag) + "/log"
 
-  // ---- snapshot chain: the evolving table ----
+  // ---- the evolving table ----
 
   private val chainInput: String = tempRoot("chain-input")
 
@@ -103,50 +111,52 @@ class BatchSinkSpec extends SparkTestBase {
     dir
   }
 
+  private val evolved: Seq[(Long, String, Option[Long])] = Seq((1L, "alpha", None), (2L, "beta", None), (3L, "gamma", Some(7L)))
+
   test("partition sink: a write that fails inside its job publishes no batch_id=N") {
     val dir = logRoot("ann-fail")
     serve(probes0, 0L, dir)
-    val before = served(dir)
+    val (before, pointer) = (served(dir), published(dir))
     val attempt = withFailingWrites(serve(probes1, 1L, dir))
     assert(attempt.isFailure, "the injected failure must fail the write")
-    assert(!new File(dir, "batch_id=1").exists(),
-      "a failed write left a batch_id=1 partition for readers")
+    assert(published(dir) == pointer, "a failed write changed the published log")
+    assert(!served(dir).exists(_._1 == 1L), "a failed write published batch_id=1 rows")
     assert(served(dir) == before)
   }
 
   test("snapshot chain: after a failed write readCurrent still serves the previous version") {
     val dir = chainRoot("chain-fail")
-    val before = table(dir)
+    val (before, pointer) = (table(dir), published(dir))
     val attempt = withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
     assert(attempt.isFailure, "the injected failure must fail the write")
     assert(table(dir) == before)
-    assert(!new File(dir, "snap_00002").exists(), "a failed write left snap_00002")
+    assert(published(dir) == pointer, "a failed write changed the published table")
   }
 
   test("partition sink: a failed replay never removes the published partition") {
     val dir = logRoot("ann-replay-fail")
     serve(probes0, 0L, dir)
     serve(probes1, 1L, dir)
-    val published = served(dir)
+    val (rows, pointer) = (served(dir), published(dir))
     withFailingWrites(serve(probes1, 1L, dir))
-    assert(files(s"$dir/batch_id=1").nonEmpty,
-      "a failed replay emptied the published batch_id=1")
-    assert(served(dir) == published)
+    assert(published(dir) == pointer, "a failed replay changed the published log")
+    assert(served(dir) == rows)
   }
 
   test("snapshot chain: a failed replay never removes the published version") {
     val dir = chainRoot("chain-replay-fail")
     SchemaEvolveStream.applyBatch(spark, v2, 1L, dir)
-    val published = table(dir)
+    val (rows, pointer) = (table(dir), published(dir))
     withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
-    assert(table(dir) == published)
+    assert(published(dir) == pointer, "a failed replay changed the published table")
+    assert(table(dir) == rows)
   }
 
-  // A converged table alone cannot tell a staged publish from a direct
-  // overwrite, since the clean replay rewrites what the crash broke.
-  // So each of the next two also replays the published batch once more
-  // (its offset commit lost), through a failed and a clean attempt,
-  // and checks that the published files stayed in place.
+  // A converged table alone cannot tell a skipped replay from a
+  // republish of the same rows. So each of the next two also replays
+  // the published batch once more (its offset commit lost), through a
+  // failed and a clean attempt, and checks that the pointer and the
+  // published files stayed in place.
 
   test("partition sink: a clean replay after a failed attempt converges to a single run") {
     val once = logRoot("ann-once")
@@ -156,11 +166,11 @@ class BatchSinkSpec extends SparkTestBase {
     serve(probes0, 0L, dir)
     withFailingWrites(serve(probes1, 1L, dir))
     serve(probes1, 1L, dir)
-    val published = files(s"$dir/batch_id=1")
+    val pointer = published(dir)
     withFailingWrites(serve(probes1, 1L, dir))
     serve(probes1, 1L, dir)
     assert(served(dir) == served(once))
-    assert(files(s"$dir/batch_id=1") == published, "a replay rewrote batch_id=1")
+    assert(published(dir) == pointer, "a replay republished batch 1")
   }
 
   test("snapshot chain: a clean replay after a failed attempt converges to a single run") {
@@ -169,12 +179,12 @@ class BatchSinkSpec extends SparkTestBase {
     val dir = chainRoot("chain-converge")
     withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
     SchemaEvolveStream.applyBatch(spark, v2, 1L, dir)
-    val published = files(s"$dir/snap_00002")
+    val pointer = published(dir)
     withFailingWrites(SchemaEvolveStream.applyBatch(spark, v2, 1L, dir))
     SchemaEvolveStream.applyBatch(spark, v2, 1L, dir)
     assert(table(dir) == table(once))
-    assert(table(dir) == Seq((1L, "alpha", None), (2L, "beta", None), (3L, "gamma", Some(7L))))
-    assert(files(s"$dir/snap_00002") == published, "a replay rewrote snap_00002")
+    assert(table(dir) == evolved)
+    assert(published(dir) == pointer, "a replay republished batch 1")
   }
 
   // ---- stream level: published, offset commit lost ----
@@ -194,6 +204,16 @@ class BatchSinkSpec extends SparkTestBase {
   private def committed(checkpoint: String, n: Long): Boolean =
     new File(s"$checkpoint/commits/$n").exists()
 
+  private def logged(checkpoint: String, n: Long): Boolean =
+    new File(s"$checkpoint/offsets/$n").exists()
+
+  /** Copy one landed file into a stream's input dir, as a delivery. */
+  private def deliver(file: Seq[String], dir: String): Unit = {
+    val src = Paths.get(file.head)
+    Files.createDirectories(Paths.get(dir))
+    Files.copy(src, Paths.get(dir, src.getFileName.toString))
+  }
+
   test("stream: a snapshot chain batch published before its offset commit replays as a no-op") {
     val root = tempRoot("chain-stream")
     val (dir, cp) = (s"$root/table", s"$root/cp")
@@ -205,12 +225,12 @@ class BatchSinkSpec extends SparkTestBase {
     val single = table(dir)
     assert(single.size == 3 && committed(cp, 1) && !committed(cp, 2),
       "two files at maxFilesPerTrigger = 1 must commit batches 0 and 1")
-    val published = files(s"$dir/snap_00002")
+    val pointer = published(dir)
     assert(dropLastCommit(cp) == 1L)
     run()
     assert(committed(cp, 1), "the restart must replay and commit batch 1")
     assert(table(dir) == single)
-    assert(files(s"$dir/snap_00002") == published, "the replay rewrote snap_00002")
+    assert(published(dir) == pointer, "the replay republished batch 1")
   }
 
   test("stream: a serving-log batch published before its offset commit replays as a no-op") {
@@ -226,12 +246,57 @@ class BatchSinkSpec extends SparkTestBase {
     val single = served(log)
     assert(single.map(_._1) == Set(0L, 1L) && committed(cp, 1) && !committed(cp, 2),
       "two files at maxFilesPerTrigger = 1 must serve batches 0 and 1")
-    val published = files(s"$log/batch_id=1")
+    val pointer = published(log)
     assert(dropLastCommit(cp) == 1L)
     run()
     assert(committed(cp, 1), "the restart must replay and commit batch 1")
     assert(served(log) == single)
-    assert(files(s"$log/batch_id=1") == published, "the replay rewrote batch_id=1")
+    assert(published(log) == pointer, "the replay republished batch 1")
+  }
+
+  // ---- stream level: the batch's write fails ----
+
+  test("stream: an evolving-table batch whose write fails is logged, publishes nothing, and restarts clean") {
+    val root = tempRoot("chain-stream-fail")
+    val (in, dir, cp) = (s"$root/in", s"$root/table", s"$root/cp")
+    def run(): Unit = SchemaEvolveStream.start(spark, s"$in/*", dir, cp).awaitTermination()
+
+    deliver(v1, s"$in/f1")
+    run()
+    val pointer = published(dir)
+    deliver(v2, s"$in/f2")
+    val failed = FailingCommitProtocol.during(spark, under = dir)(run())
+    assert(failed.isFailure, "the injected write failure did not surface")
+    assert(logged(cp, 1) && !committed(cp, 1), "batch 1's offset must be logged, not committed")
+    assert(published(dir) == pointer, "a failed batch published")
+
+    run()
+    assert(committed(cp, 1), "the restart must run and commit batch 1")
+    assert(table(dir) == evolved)
+  }
+
+  test("stream: a serving-log batch whose write fails is logged, publishes nothing, and restarts clean") {
+    val once = logRoot("ann-stream-once")
+    serve(probes0, 0L, once)
+    serve(probes1, 1L, once)
+    val root = tempRoot("ann-stream-fail")
+    val (in, log, cp) = (s"$root/in", s"$root/log", s"$root/cp")
+    probes0.coalesce(1).write.parquet(s"$in/f1")
+    val schema = spark.read.parquet(s"$in/f1").schema
+    def run(): Unit = AnnServeStream.start(spark, s"$in/*", schema, annIndex, vecs,
+      slice, log, cp, k, cands).awaitTermination()
+
+    run()
+    val pointer = published(log)
+    probes1.coalesce(1).write.parquet(s"$in/f2")
+    val failed = FailingCommitProtocol.during(spark, under = log)(run())
+    assert(failed.isFailure, "the injected write failure did not surface")
+    assert(logged(cp, 1) && !committed(cp, 1), "batch 1's offset must be logged, not committed")
+    assert(published(log) == pointer, "a failed batch published")
+
+    run()
+    assert(committed(cp, 1), "the restart must run and commit batch 1")
+    assert(served(log) == served(once))
   }
 }
 
@@ -253,12 +318,18 @@ class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwri
 object FailingCommitProtocol {
   @volatile var under: String = ""
 
-  /** Run `body` with every file write task of `spark` failing. */
-  def during[T](spark: SparkSession)(body: => T): Try[T] = {
+  /** Run `body` with the file write tasks of `spark` failing: those
+    * whose path contains `under`, every one by default.
+    */
+  def during[T](spark: SparkSession, under: String = "")(body: => T): Try[T] = {
     val key = "spark.sql.sources.commitProtocolClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, classOf[FailingCommitProtocol].getName)
+    this.under = under
     try Try(body)
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally {
+      this.under = ""
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 }

@@ -12,7 +12,9 @@ import graft.medallion.SchemaEvolution
   * schema v1, then v1+column, then widened, land in one evolving
   * table; streamed content ≡ the batch appendEvolved replay; a
   * crash-replayed batch is a no-op; unsafe evolution fails the batch
-  * loudly; pre-evolution snapshots keep their original schema.
+  * loudly; pre-evolution versions keep their original schema, and
+  * superseded versions follow [[graft.medallion.Versioned]]'s
+  * retention.
   */
 class SchemaEvolveStreamSpec extends SparkTestBase {
   import spark.implicits._
@@ -69,18 +71,18 @@ class SchemaEvolveStreamSpec extends SparkTestBase {
       writeFiles(root, "b1", v2), 1L, table)
     val before = contents(SchemaEvolveStream.read(spark, table))
 
-    // replay batch 1: same files, same id → overwrites its own
-    // snapshot with identical content
+    // replay batch 1: same files, same id → the active version already
+    // holds batch 1, so nothing is published
     SchemaEvolveStream.applyBatch(spark,
       writeFiles(root, "b1r", v2), 1L, table)
     assert(contents(SchemaEvolveStream.read(spark, table)) == before,
       "replay changed the table")
 
-    // the pre-evolution snapshot (snap_00001, written by batch 0) is
+    // the pre-evolution version (v_000001, written by batch 0) is
     // untouched: original schema, no rating column
-    val snap1 = spark.read.parquet(s"$table/snap_00001")
-    assert(snap1.schema.fieldNames.toSeq == Seq("id", "title"))
-    assert(snap1.count() == 2)
+    val first = spark.read.parquet(s"$table/v_000001")
+    assert(first.schema.fieldNames.toSeq == Seq("id", "title"))
+    assert(first.count() == 2)
   }
 
   test("unsafe evolution (string arriving as int) fails the batch loudly, table untouched") {
@@ -105,12 +107,15 @@ class SchemaEvolveStreamSpec extends SparkTestBase {
       SchemaEvolveStream.applyBatch(spark,
         writeFiles(root, s"b$i", Seq((i, s"t$i")).toDF("id", "title")), i.toLong, table)
     }
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snaps = fs.listStatus(new org.apache.hadoop.fs.Path(table)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("snap_"))
-    assert(snaps.size == BatchSink.KeepSnapshots, s"snapshots: $snaps")
-    // and the surviving content accumulated all seven batches
+    // Versioned's retention: the active and the previous version are
+    // kept; every older one carries the tombstone that starts its GC
+    // grace, and stays readable until the grace runs out
+    val names = new java.io.File(table).list().toSet
+    val versions = (1 to 7).map(n => f"v_$n%06d")
+    assert(versions.forall(names), s"versions: $names")
+    assert(versions.map(v => names(s".$v.reap")) == Seq.fill(5)(true) ++ Seq(false, false),
+      s"tombstones: ${names.filter(_.endsWith(".reap"))}")
+    // and the active content accumulated all seven batches
     assert(SchemaEvolveStream.read(spark, table).count() == 7)
   }
 
