@@ -39,11 +39,13 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** Per-process managed-table warehouse, deleted at JVM exit: the
-    * in-memory catalog dies with the process, so its storage must too
-    * (a surviving dir is exactly the stale-file resurrection hazard
-    * appendEvolved refuses loudly on). NOT the [[Warehouse]] index
-    * store, which is cross-process by design.
+  /** Per-process catalog warehouse, deleted at JVM exit: the in-memory
+    * catalog dies with the process, so its storage must too (a
+    * surviving dir would strand a managed table's files where the next
+    * process's create of that table resurrects them as rows). Every
+    * table the engine registers is external, so only namespace dirs
+    * live here. NOT the [[Warehouse]] index store, which is
+    * cross-process by design.
     */
   lazy val managedWarehouse: String = {
     val dir = s"${sys.props("java.io.tmpdir")}/graft-warehouse-p${ProcessHandle.current().pid()}"
@@ -92,7 +94,7 @@ object Sessions {
       // nothing of value is stored here. The dir is PER-PROCESS: the
       // in-memory catalog forgets managed tables at JVM exit, so a
       // shared warehouse path would strand their files where the next
-      // process's saveAsTable resurrects them as rows (the r18 advice
+      // process's create resurrects them as rows (the r18 advice
       // finding) — catalog and storage must share a lifetime, which is
       // also why a shutdown hook deletes the dir (see managedWarehouse).
       .config("spark.sql.warehouse.dir", managedWarehouse)

@@ -29,12 +29,12 @@ import java.security.MessageDigest
   * full version, one segment; [[append]] publishes the active segments
   * plus one new dir that holds only the appended rows, so no row lives
   * in two segments of one version. An append of no rows to a root that
-  * already has a version publishes nothing: the rows are counted inside
-  * the write's own job (an `Observation`, no extra job), and the empty
-  * segment's dir and claim marker are removed, so the pointer stays as
-  * it was. The first publish of an absent root publishes even when
-  * empty, so the root gets its schema. The next line holds the schema the
-  * version was committed with, as Spark schema JSON (every field
+  * already has a version, at its schema, publishes nothing: the rows
+  * are counted inside the write's own job (an `Observation`, no extra
+  * job), and the empty segment's dir and claim marker are removed, so
+  * the pointer stays as it was. The first publish of an absent root
+  * publishes even when empty, so the root gets its schema. The next
+  * line holds the version's schema, as Spark schema JSON (every field
   * nullable, as a parquet read reports it), so [[read]] hands it to the
   * reader and skips the footer-inference job. A line tagged
   * `input-key ` holds the version's input key, when a [[commit]]ed
@@ -47,6 +47,22 @@ import java.security.MessageDigest
   *   input-key 3f9a...                     keyed commits only
   *   batch 7                               streaming sinks only
   * }}}
+  *
+  * Schema evolution is an append: the pointer's schema is the
+  * [[SchemaEvolution.reconcile]] of the schemas its segments were
+  * written with. An append whose frame adds a column, or widens int to
+  * long or float to double, writes its segment at the frame's own schema
+  * and publishes the reconciled one; earlier segments keep their files.
+  * A read takes every segment at the pointer's schema, and the parquet
+  * reader fills a column a segment lacks with nulls and widens a
+  * narrower physical type, so no data file is rewritten (the reference's
+  * Iceberg add-column and type promotion, metadata-only). An unsafe
+  * change throws before anything is written.
+  *
+  * The chain stays bounded: an append that leaves more than
+  * [[MaxSegments]] segments folds them into one
+  * ([[Maintenance.compactVersioned]]), so a read's root list and each
+  * publish's GC pass stay short.
   *
   * A pointer without a schema line (written by older code, which left
   * it out for partitioned versions) reads by inference; one without a
@@ -119,9 +135,10 @@ import java.security.MessageDigest
   * other flip lands last). Appends must therefore be serialized by
   * their caller — bronze's are, by the [[graft.core.FsLock]] that
   * [[graft.streaming.LandingStream.appendBatch]] holds for each
-  * micro-batch; a serving log's
-  * ([[graft.streaming.AnnServeStream.serveBatch]]) are, by its one
-  * stream, which runs one micro-batch at a time. Lock-free appends
+  * micro-batch; an evolving table's
+  * ([[graft.streaming.SchemaEvolveStream.applyBatch]]) and a serving
+  * log's ([[graft.streaming.AnnServeStream.serveBatch]]) are, by their
+  * one stream, which runs one micro-batch at a time. Lock-free appends
   * would need a compare-and-set on the base version, which this layout
   * does not have.
   *
@@ -154,6 +171,14 @@ object Versioned {
     * read of a superseded version to finish.
     */
   val DefaultGcGraceMs: Long = 60L * 60 * 1000
+
+  /** The longest segment chain [[append]] leaves: an append that makes
+    * the chain longer folds it into one segment. */
+  val MaxSegments = 32
+
+  /** The file size a fold aims at: Spark's default read split
+    * (`spark.sql.files.maxPartitionBytes`). */
+  private val CompactFileBytes = 128L << 20
 
   private def fs(spark: SparkSession, p: HPath): FileSystem =
     FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
@@ -333,30 +358,43 @@ object Versioned {
 
   /** Append `df`'s rows to the active version: publish a version whose
     * segments are the active ones plus one new dir holding only `df`'s
-    * rows, with no input key. `df` must have the active version's
-    * schema. Returns the new segment dir, or None when nothing is
-    * published: `batch` is at or below the active version's (class
-    * doc), or `df` has no rows and the root already has a version (the
+    * rows, at `df`'s own schema, with no input key. The pointer records
+    * the active schema reconciled with `df`'s
+    * ([[SchemaEvolution.reconcile]]; an unsafe change throws
+    * [[SchemaEvolution.IncompatibleSchemaException]] and writes
+    * nothing). Returns the new segment's dir (after a fold, the folded
+    * version's), or None when nothing is published: `batch` is at or
+    * below the active version's (class doc), or `df` has no rows, the
+    * root already has a version and the schema does not change (the
     * rows are counted inside the write's own job, and an empty segment
-    * is removed unpublished). Callers serialize appends to one root
-    * (class doc).
+    * is removed unpublished). An append that leaves more than
+    * [[MaxSegments]] segments folds the chain. Callers serialize
+    * appends to one root (class doc).
     */
   def append(
       spark: SparkSession, root: String, df: DataFrame,
       batch: Option[Long] = None): Option[String] = {
     val active = activeOrNone(spark, root)
     if (published(active, batch)) return None
-    active.flatMap(_.schema).foreach(s => require(s == nullable(df.schema),
-      s"append to $root: schema ${df.schema.simpleString} differs from the active ${s.simpleString}"))
+    val current = active.flatMap(_.schema)
+    val incoming = nullable(df.schema).asInstanceOf[StructType]
+    val schema = current.fold(incoming)(SchemaEvolution.reconcile(_, incoming))
     val rows = Observation()
     val vName = writeVersion(spark, root, df.observe(rows, count(lit(1)).as("rows")))
-    if (active.isDefined && rows.get("rows") == 0L) {
+    if (active.isDefined && rows.get("rows") == 0L && current.forall(_ == schema)) {
       val f = fs(spark, new HPath(root))
       f.delete(new HPath(s"$root/$vName"), true)
       f.delete(new HPath(s"$root/.$vName.claim"), false)
       None
-    } else Some(publish(spark, root, vName, df.schema, active,
-      active.fold(Seq.empty[String])(_.segments), None, batch, DefaultGcGraceMs))
+    } else {
+      val base = active.fold(Seq.empty[String])(_.segments)
+      val dir = publish(spark, root, vName, schema, active, base, None, batch, DefaultGcGraceMs)
+      if (base.size < MaxSegments) Some(dir)
+      else {
+        Maintenance.compactVersioned(spark, root, CompactFileBytes)
+        Some(resolve(spark, root))
+      }
+    }
   }
 
   /** True when the active version already holds micro-batch `batch`. */

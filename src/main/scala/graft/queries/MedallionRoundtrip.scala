@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.medallion.{BronzeFlow, Chunker, Lake}
+import graft.medallion.{BronzeFlow, Chunker, Lake, Versioned}
 
 /** End-to-end medallion ingestion as a driver-verifiable query: the
   * `nation` dim is round-tripped through messy CSV → chunked landing
@@ -27,17 +27,19 @@ object MedallionRoundtrip {
   private val cleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Register a PER-ROOT shutdown deletion (idempotent per path). A
-    * single global once-flag here was a leak: every caller passes its
-    * own scratch root (q15/q203/q216/q220 …) and only the first one
-    * ever got a hook — the rest accumulated one orphan dir per JVM.
+  /** A per-process scratch root, `graft-<tag>-<pid>` under the temp dir:
+    * emptied on each call and deleted at JVM exit (one hook per root),
+    * so it stays one dir per live JVM and concurrent JVMs never wipe
+    * each other's. Returns its path.
     */
-  private[queries] def registerCleanup(root: java.nio.file.Path): Unit =
-    if (cleanupRegistered.add(root.toString)) {
-      sys.addShutdownHook {
-        graft.core.LocalFs.deleteRecursively(root)
-      }
-    }
+  private[queries] def scratchRoot(tag: String): String = {
+    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft-$tag-${ProcessHandle.current().pid()}")
+    if (cleanupRegistered.add(root.toString))
+      sys.addShutdownHook(graft.core.LocalFs.deleteRecursively(root))
+    graft.core.LocalFs.deleteRecursively(root)
+    root.toString
+  }
 
   def q15MedallionRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val nation = Tables.load(s, dir, "nation")
@@ -53,14 +55,7 @@ object MedallionRoundtrip {
     val csv = ("  N NationKey ,N NAME,N RegionKey" +: (rows :+ rows.head))
       .mkString("", "\n", "\n")
 
-    // per-PROCESS scratch root, wiped per invocation and deleted by a
-    // shutdown hook: bounded to one dir per LIVE JVM without letting
-    // concurrent JVMs wipe each other's lake mid-query
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-q15-roundtrip-${ProcessHandle.current().pid()}")
-    MedallionRoundtrip.registerCleanup(tmp)
-    graft.core.LocalFs.deleteRecursively(tmp)
-    val lake = Lake(tmp.toString)
+    val lake = Lake(scratchRoot("q15-roundtrip"))
     // ~120-byte chunks, ~400-byte delivery buffer → several chunks per
     // landing object → embedded header lines in bronze input.
     Chunker.deliver(Chunker.split(csv, maxBytes = 120),
@@ -156,18 +151,18 @@ object MedallionRoundtrip {
     * narrowable slice of the reference's Iceberg gap,
     * `flows_iceberg/bronze_iceberg.py:40-41`): the `region` dim is
     * ingested from CSV at schema v1 (key, name), then RE-ingested at
-    * schema v2 with an added `r_note` column, both committed to one
-    * [[graft.medallion.Versioned]] root via
-    * [[graft.medallion.SchemaEvolution.commitEvolved]]. The emitted
-    * table is the evolved snapshot: v1 rows surface with NULL under
-    * the added column, v2 rows carry it — which the oracle states
-    * independently from the untouched parquet dim. Old-snapshot
-    * readability and the no-rewrite add-column property are
-    * spec-pinned (SchemaEvolutionSpec).
+    * schema v2 with an added `r_note` column, each appended to one
+    * [[graft.medallion.Versioned]] root by [[Versioned.append]], which
+    * evolves the pointer's schema. The emitted table is the evolved
+    * snapshot: v1 rows surface with NULL under the added column, v2
+    * rows carry it — which the oracle states independently from the
+    * untouched parquet dim. Old-snapshot readability and the
+    * no-rewrite add-column property are spec-pinned
+    * (SchemaEvolutionSpec, VersionedAppendSpec).
     *
     * region is a fixed 5-row dim, so the driver-side CSV producer is
-    * safe at any scale (the q15 argument); the evolution machinery
-    * itself is metadata-plus-one-commit — nothing corpus-sized moves.
+    * safe at any scale (the q15 argument); each evolving append writes
+    * its batch alone — nothing corpus-sized moves.
     */
   def q203SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val region = Tables.load(s, dir, "region")
@@ -180,20 +175,15 @@ object MedallionRoundtrip {
     val v2Csv = ("r_regionkey,r_name,r_note" +:
       rows.map { case (k, n) => s"$k,$n,note-$k" }).mkString("", "\n", "\n")
 
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-q203-evolution-${ProcessHandle.current().pid()}")
-    MedallionRoundtrip.registerCleanup(tmp)
-    graft.core.LocalFs.deleteRecursively(tmp)
+    val tmp = scratchRoot("q203-evolution")
     def ingest(csv: String, tag: String): String = {
       Chunker.deliver(Chunker.split(csv), s"$tmp/$tag/landing", bufferBytes = 1 << 20)
       BronzeFlow.ingest(s, s"$tmp/$tag/landing", s"$tmp/$tag/bronze")
     }
     val root = s"$tmp/versioned/region"
-    graft.medallion.SchemaEvolution.commitEvolved(s, root,
-      s.read.parquet(ingest(v1Csv, "v1")))
-    graft.medallion.SchemaEvolution.commitEvolved(s, root,
-      s.read.parquet(ingest(v2Csv, "v2")))
-    graft.medallion.Versioned.read(s, root)
+    Versioned.append(s, root, s.read.parquet(ingest(v1Csv, "v1")))
+    Versioned.append(s, root, s.read.parquet(ingest(v2Csv, "v2")))
+    Versioned.read(s, root)
       .select(col("r_regionkey").cast("long").as("r_regionkey"),
         col("r_name"), col("r_note").cast("string").as("r_note"))
       .orderBy(col("r_regionkey").asc, col("r_note").asc_nulls_first)
@@ -211,44 +201,47 @@ object MedallionRoundtrip {
       |SELECT r_regionkey, r_name, r_note FROM v
       |ORDER BY r_regionkey, r_note NULLS FIRST""".stripMargin
 
-  // ===== q206 — MANAGED-table schema evolution (ALTER TABLE path) =========
+  // ===== q206 — schema evolution through the catalog ====================
 
-  /** q203's evolving re-ingest through the MANAGED catalog table path
-    * ([[graft.medallion.SchemaEvolution.appendEvolved]]): the v1 batch
-    * creates `evo_gate.region` from its schema (the
-    * Arrow-schema-on-write behavior, S9), the v2 batch ADD-COLUMNs
-    * `r_note` metadata-only and appends — v1 rows read NULL from
-    * parquet files that never carried the column, which is exactly
-    * what the oracle states. The no-rewrite property itself is pinned
-    * in SchemaEvolutionSpec (original files stay live); this query
-    * pins the end state to the external gate.
+  /** q203's evolving re-ingest read through the catalog: the v1 batch
+    * and the v2 batch (which adds `r_note`) are [[Versioned.append]]ed
+    * to a per-process scratch root, which
+    * [[graft.sql.CatalogSurface.register]] registers as the external
+    * table `evo_gate.region`; `spark.table` reads it back. v1 rows read
+    * NULL from parquet files that never carried the column, which is
+    * exactly what the oracle states. The no-rewrite property itself is
+    * pinned in SchemaEvolutionSpec (the v1 files stay live); this query
+    * pins the catalog's view of the evolved root to the external gate.
     */
-  def q206SchemaEvolutionManaged(s: SparkSession, dir: String): DataFrame = {
+  def q206SchemaEvolutionCatalog(s: SparkSession, dir: String): DataFrame = {
     val region = Tables.load(s, dir, "region")
     val v1 = region.select(col("r_regionkey").cast("long").as("r_regionkey"),
       col("r_name"))
     val v2 = region.select(col("r_regionkey").cast("long").as("r_regionkey"),
       col("r_name"),
       concat(lit("note-"), col("r_regionkey").cast("string")).as("r_note"))
-    s.sql("DROP TABLE IF EXISTS evo_gate.region")
-    graft.medallion.SchemaEvolution.appendEvolved(s, "evo_gate.region", v1)
-    graft.medallion.SchemaEvolution.appendEvolved(s, "evo_gate.region", v2)
+    val root = s"${scratchRoot("q206-catalog")}/region"
+    Versioned.append(s, root, v1)
+    Versioned.append(s, root, v2)
+    graft.sql.CatalogSurface.register(s, "evo_gate.region", root)
     s.table("evo_gate.region")
       .select(col("r_regionkey"), col("r_name"), col("r_note").cast("string"))
       .orderBy(col("r_regionkey").asc, col("r_note").asc_nulls_first)
   }
 
-  // ===== q215 — type-widening evolution (the rewrite path) ================
+  // ===== q215 — type-widening evolution ===================================
 
   /** The widen face of schema evolution through the driver gate: the
-    * v1 batch creates `evo_gate.widen_t` with an INT measure, the v2
-    * batch arrives with the same column as LONG (plus values past
-    * int range, so a silent narrow would corrupt) —
-    * [[graft.medallion.SchemaEvolution.appendEvolved]] REWRITES the
-    * table at the promoted type (the honest plain-parquet cost of
-    * what Iceberg does metadata-only, loud by design) and appends.
-    * The oracle states the promoted union; the no-silent-corruption
-    * property is the row `5000000000` surviving intact.
+    * v1 batch has an INT measure, the v2 batch the same column as LONG
+    * (plus values past int range, so a silent narrow would corrupt).
+    * Both are [[Versioned.append]]ed to a per-process scratch root: the
+    * pointer's schema widens to LONG, the v1 segment keeps its INT
+    * files, and the parquet reader widens them on read. The root is
+    * registered as `evo_gate.widen_t`
+    * ([[graft.sql.CatalogSurface.register]]) and read back with
+    * `spark.table`. The oracle states the promoted union; the
+    * no-silent-corruption property is the row `5000000000` surviving
+    * intact.
     */
   def q215SchemaEvolutionWiden(s: SparkSession, dir: String): DataFrame = {
     val region = Tables.load(s, dir, "region")
@@ -256,9 +249,10 @@ object MedallionRoundtrip {
       col("r_name"), (col("r_regionkey") * 10L).cast("int").as("pop"))
     val v2 = region.select((col("r_regionkey") + 100L).cast("long").as("r_regionkey"),
       col("r_name"), (col("r_regionkey") + lit(5000000000L)).as("pop"))
-    s.sql("DROP TABLE IF EXISTS evo_gate.widen_t")
-    graft.medallion.SchemaEvolution.appendEvolved(s, "evo_gate.widen_t", v1)
-    graft.medallion.SchemaEvolution.appendEvolved(s, "evo_gate.widen_t", v2)
+    val root = s"${scratchRoot("q215-widen")}/widen_t"
+    Versioned.append(s, root, v1)
+    Versioned.append(s, root, v2)
+    graft.sql.CatalogSurface.register(s, "evo_gate.widen_t", root)
     s.table("evo_gate.widen_t")
       .select(col("r_regionkey").cast("long").as("r_regionkey"), col("r_name"),
         col("pop").cast("long").as("pop"))
@@ -283,7 +277,7 @@ object MedallionRoundtrip {
     * parquet batches — v1 (INT key), v1+column (r_note), then the key
     * WIDENED to BIGINT at +100 offset — and the file-grain stream
     * evolves its [[graft.medallion.Versioned]] bronze table with one
-    * batch-keyed commit per micro-batch, where a
+    * batch-keyed append per micro-batch, where a
     * declared-schema stream would have dropped the new column and a
     * static target would have refused the widen. Stream runs are
     * sequential AvailableNow passes over one checkpoint (arrival
@@ -300,10 +294,7 @@ object MedallionRoundtrip {
     val v3 = region.select((col("r_regionkey") + 100L).as("r_regionkey"),
       col("r_name"),
       concat(lit("wide-"), col("r_regionkey").cast("string")).as("r_note"))
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-q220-evolve-${ProcessHandle.current().pid()}")
-    registerCleanup(tmp)
-    graft.core.LocalFs.deleteRecursively(tmp)
+    val tmp = scratchRoot("q220-evolve")
     val (in, table, cp) = (s"$tmp/in", s"$tmp/table", s"$tmp/cp")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     def land(df: DataFrame, tag: String): Unit = {
@@ -346,13 +337,7 @@ object MedallionRoundtrip {
     */
   def q216MergeSchemaRead(s: SparkSession, dir: String): DataFrame = {
     val region = Tables.load(s, dir, "region")
-    // per-PROCESS scratch root (the q15 discipline): overwritten per
-    // invocation, deleted by the shutdown hook — repeated bench/driver
-    // runs never accumulate orphan dirs
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-q216-merge-${ProcessHandle.current().pid()}")
-    registerCleanup(tmp)
-    val out = tmp.toString
+    val out = scratchRoot("q216-merge")
     region.select(col("r_regionkey"), col("r_name"))
       .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=0")
     region.select(col("r_regionkey"), col("r_name"),
@@ -369,7 +354,7 @@ object MedallionRoundtrip {
     "q106_jsonl_roundtrip" -> (q106JsonlRoundtrip _),
     "q187_orc_roundtrip" -> (q187OrcRoundtrip _),
     "q203_schema_evolution" -> (q203SchemaEvolution _),
-    "q206_schema_evolution_managed" -> (q206SchemaEvolutionManaged _),
+    "q206_schema_evolution_managed" -> (q206SchemaEvolutionCatalog _),
     "q215_schema_evolution_widen" -> (q215SchemaEvolutionWiden _),
     "q216_mergeschema_read" -> (q216MergeSchemaRead _),
     "q220_streaming_schema_evolution" -> (q220StreamingSchemaEvolution _))
@@ -379,7 +364,7 @@ object MedallionRoundtrip {
     "q106_jsonl_roundtrip" -> q106Sql,
     "q187_orc_roundtrip" -> q187Sql,
     "q203_schema_evolution" -> q203Sql,
-    // same end state as the Versioned path — one oracle serves both
+    // the same end state read through the catalog — one oracle serves both
     "q206_schema_evolution_managed" -> q203Sql,
     "q215_schema_evolution_widen" -> q215Sql,
     // q216's merged read reproduces q203's evolved end state (v1 rows

@@ -903,10 +903,7 @@ object RetrievalQueries {
         s"$dir/embeddings.parquet", params = "words=32bit,meta=label")) { d =>
       graft.similarity.BinaryAnn.buildDecoratedIndex(vecs, d, Seq("label"))
     }
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-q225-serve-${ProcessHandle.current().pid()}")
-    MedallionRoundtrip.registerCleanup(tmp)
-    graft.core.LocalFs.deleteRecursively(tmp)
+    val tmp = MedallionRoundtrip.scratchRoot("q225-serve")
     val (in, out, cp) = (s"$tmp/in", s"$tmp/out", s"$tmp/cp")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val probes = vecs.filter(col("vec_id") < 50)

@@ -15,9 +15,11 @@ import graft.medallion.{Lake, Versioned}
   * a pipeline rerun after [[refreshAll]]; a [[Versioned]] root's table
   * (bronze always, silver and gold when versioned) points at the
   * version active when it was registered, so a rerun is visible after
-  * [[registerLake]] runs again. An Iceberg runtime would slot in via
-  * `spark.sql.catalog.*` without changing callers; nothing the
-  * reference queries depends on snapshots/branches (SURVEY §3 E2).
+  * [[registerLake]] runs again. [[register]] does the same for any one
+  * root, such as an evolving table (q206, q215). An Iceberg runtime
+  * would slot in via `spark.sql.catalog.*` without changing callers;
+  * nothing the reference queries depends on snapshots/branches
+  * (SURVEY §3 E2).
   */
 object CatalogSurface {
 
@@ -34,16 +36,23 @@ object CatalogSurface {
       silver: Seq[String] = Seq("albums", "bands", "reviews", "music_catalog", "album_reviews"),
       gold: Seq[String] = Seq("top10_by_country", "band_avg_scores", "brazilian_bands", "band_album_counts")): Unit = {
     Namespaces.foreach(ns => spark.sql(s"CREATE DATABASE IF NOT EXISTS $ns"))
-    def register(ns: String, name: String, path: String): Unit =
-      if (exists(spark, path)) {
-        val (columns, location) = source(spark, path)
-        spark.sql(s"DROP TABLE IF EXISTS $ns.$name")
-        spark.sql(
-          s"CREATE TABLE $ns.$name $columns USING PARQUET LOCATION '${q(location)}'")
-      }
-    bronze.foreach(d => register("bronze", d, lake.bronze(d)))
-    silver.foreach(d => register("silver", d, lake.silver(d)))
-    gold.foreach(d => register("gold", d, lake.gold(d)))
+    def registerIfExists(ns: String, name: String, path: String): Unit =
+      if (exists(spark, path)) register(spark, s"$ns.$name", path)
+    bronze.foreach(d => registerIfExists("bronze", d, lake.bronze(d)))
+    silver.foreach(d => registerIfExists("silver", d, lake.silver(d)))
+    gold.foreach(d => registerIfExists("gold", d, lake.gold(d)))
+  }
+
+  /** Register `path` as the external table `table` (`ns.name`, its
+    * namespace created if absent), replacing any table of that name.
+    * A [[Versioned]] root registers its active version, read under its
+    * pointer's schema — an evolved root's earlier segments included.
+    */
+  def register(spark: SparkSession, table: String, path: String): Unit = {
+    val (columns, location) = source(spark, path)
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${table.split('.').head}")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.sql(s"CREATE TABLE $table $columns USING PARQUET LOCATION '${q(location)}'")
   }
 
   /** The declared columns and the location of a table over `path`: a
@@ -64,21 +73,6 @@ object CatalogSurface {
     val fs = org.apache.hadoop.fs.FileSystem
       .get(p.toUri, spark.sparkContext.hadoopConfiguration)
     fs.exists(p)
-  }
-
-  /** Managed catalog write (the Iceberg-variant write path, S9:
-    * bronze overwrite / silver+gold append —
-    * `flows_iceberg/bronze_iceberg.py:40-44`, `silver_iceberg.py:26`).
-    * `saveAsTable` creates from the DataFrame schema when absent —
-    * the Arrow-schema-on-write behavior — and an Iceberg catalog
-    * would swap in via `spark.sql.catalog.*` with the same calls.
-    */
-  def writeManaged(
-      df: org.apache.spark.sql.DataFrame, table: String,
-      mode: String = "overwrite"): Unit = {
-    val ns = table.split('.').head
-    df.sparkSession.sql(s"CREATE DATABASE IF NOT EXISTS $ns")
-    df.write.mode(mode).saveAsTable(table)
   }
 
   /** Invalidate cached file listings after a flow rewrites a layer in

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.FsLock
-import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake, Maintenance, Versioned}
+import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake, Versioned}
 
 /** Streaming landing→bronze (reference §2.9: Kinesis→Firehose delivery,
   * `infra/main.tf:66-124`, with batch layers polling afterwards).
@@ -20,14 +20,6 @@ import graft.medallion.{BronzeFlow, ColumnNormalizer, Lake, Maintenance, Version
   * everything streamed (`flows/bronze.py:80`).
   */
 object LandingStream {
-
-  /** The longest segment chain [[appendBatch]] leaves: an append that
-    * makes the chain longer folds it into one segment. */
-  val MaxSegments = 32
-
-  /** The file size a fold of the chain aims at: Spark's default read
-    * split (`spark.sql.files.maxPartitionBytes`). */
-  private val CompactFileBytes = 128L << 20
 
   /** Start the landing→bronze stream for one dataset; each micro-batch
     * is one [[appendBatch]]. Streaming CSV needs a declared schema: it is
@@ -66,10 +58,8 @@ object LandingStream {
     * fixes them), every row is already in bronze, and the empty append
     * publishes nothing.
     *
-    * The chain stays bounded: an append that makes it longer than
-    * [[MaxSegments]] segments is folded into one
-    * ([[Maintenance.compactVersioned]]) under the same lock, so a
-    * bronze read's root list and each publish's GC pass stay short.
+    * The chain stays bounded: [[Versioned.append]] folds a chain longer
+    * than [[Versioned.MaxSegments]] segments, here under the same lock.
     *
     * Schema drift (a column appeared, disappeared or changed type
     * upstream) cannot be appended to the active schema: the rare path
@@ -99,9 +89,7 @@ object LandingStream {
           import graft.core.Cols.quoted
           val aligned = fresh.select(bronze.columns.toSeq.map(c => fresh(quoted(c))): _*)
           val dup = bronze.columns.map(c => aligned(quoted(c)) <=> bronze(quoted(c))).reduce(_ && _)
-          val appended = Versioned.append(spark, bronzeRoot, aligned.join(bronze, dup, "left_anti"))
-          if (appended.isDefined && Versioned.segments(spark, bronzeRoot).size > MaxSegments)
-            Maintenance.compactVersioned(spark, bronzeRoot, CompactFileBytes)
+          Versioned.append(spark, bronzeRoot, aligned.join(bronze, dup, "left_anti"))
         }
       }
     }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.medallion.{SchemaEvolution, Versioned}
+import graft.medallion.Versioned
 
 /** Streaming schema evolution — a bronze intake that SURVIVES a
   * mid-stream producer schema change. A plain `readStream.schema(...)`
@@ -13,39 +13,33 @@ import graft.medallion.{SchemaEvolution, Versioned}
   * sees the rows. So this stream reads the landing dir at FILE grain
   * (`binaryFile` source, paths only — content is pruned) and each
   * micro-batch re-reads its own files with `mergeSchema`, recovering
-  * every batch's TRUE schema; [[SchemaEvolution.reconcile]] then
-  * evolves the target per batch — add-column (old rows read NULL),
+  * every batch's TRUE schema; [[graft.medallion.SchemaEvolution.reconcile]]
+  * then evolves the target per batch — add-column (old rows read NULL),
   * int→long / float→double widening, anything unsafe throws loudly
   * and fails the batch (the lake-corruption guard, now at stream
   * grain).
   *
   * ==Target layout==
-  * The evolving table is a [[Versioned]] root: batch N commits the
-  * active version's rows and the batch's, aligned to the reconciled
-  * schema, as one full version keyed by N
-  * ([[SchemaEvolution.commitEvolved]]). A replay of a published batch
-  * publishes nothing, so it never double-appends (the failure mode an
-  * append-per-batch target cannot avoid without row-level deletes).
-  * Widening is metadata-only here because every version is a full
-  * snapshot; version dirs are immutable, so prior versions keep their
-  * original schema and stay readable until `Versioned`'s GC reaps them.
-  *
-  * Scale shape: each batch rewrites O(table) — right for a
-  * bronze dimension/control table fed by an evolving producer (the
-  * reference's Iceberg bronze is exactly that); a fact-scale stream
-  * keeps [[LandingStream]]'s fixed-schema append and evolves on
-  * a schedule via [[SchemaEvolution.appendEvolved]] instead.
+  * The evolving table is a [[Versioned]] root: batch N is one
+  * [[Versioned.append]] keyed by N, a new segment written at the
+  * batch's own schema under a pointer that records the reconciled one.
+  * Each batch is O(batch): earlier segments keep their files, and
+  * adding a column or widening a type rewrites none of them. A replay
+  * of a published batch publishes nothing, so the append-per-batch
+  * target never double-appends. Segment dirs are immutable, so a
+  * pre-evolution segment keeps its original schema; the chain stays
+  * bounded by [[Versioned]]'s fold.
   */
 object SchemaEvolveStream {
 
   /** One micro-batch: merge-read the batch's own files (their true
-    * schema) and commit them, reconciled with the active version, as
-    * the version of batch `batchId`. Exposed for tests.
+    * schema) and append them, reconciled with the active version, as
+    * the segment of batch `batchId`. Exposed for tests.
     */
   def applyBatch(spark: SparkSession, paths: Seq[String], batchId: Long,
       tableDir: String): Unit =
     if (paths.nonEmpty)
-      SchemaEvolution.commitEvolved(spark, tableDir,
+      Versioned.append(spark, tableDir,
         spark.read.option("mergeSchema", "true").parquet(paths: _*), batch = Some(batchId))
 
   /** Start the landing→evolving-bronze stream over `inDir`'s parquet

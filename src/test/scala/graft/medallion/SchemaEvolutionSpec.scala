@@ -8,10 +8,11 @@ import org.apache.spark.sql.types._
 import graft.SparkTestBase
 
 /** Schema evolution (the narrowable Iceberg gap): CSV re-ingest with a
-  * changed schema flows through bronze into an evolved catalog table /
-  * Versioned root — old rows read NULL under added columns, prior
-  * snapshots stay readable at their original schema, widening is
-  * loud-but-correct, and anything unsafe throws.
+  * changed schema flows through bronze into an evolving [[Versioned]]
+  * root by [[Versioned.append]] — old rows read NULL under added
+  * columns, no earlier file is rewritten, prior segments stay readable
+  * at their original schema, widening keeps every value, and anything
+  * unsafe throws.
   */
 class SchemaEvolutionSpec extends SparkTestBase {
   import spark.implicits._
@@ -23,97 +24,63 @@ class SchemaEvolutionSpec extends SparkTestBase {
     BronzeFlow.ingest(spark, s"$root/landing", s"$root/bronze")
   }
 
-  test("re-ingest with an added CSV column: old rows NULL, new column queryable, one ALTER no rewrite") {
+  private def evolving(tag: String): String =
+    Files.createTempDirectory(s"evo-$tag").toString + "/t"
+
+  test("re-ingest with an added CSV column: old rows NULL, new column queryable, no rewrite") {
     val v1 = ingestCsv("id,title\n1,alpha\n2,beta\n", "v1")
     val v2 = ingestCsv("id,title,rating\n3,gamma,7\n4,delta,9\n", "v2")
-    spark.sql("DROP TABLE IF EXISTS evo.albums")
-    SchemaEvolution.appendEvolved(spark, "evo.albums", spark.read.parquet(v1))
-    val firstFiles = spark.table("evo.albums").inputFiles.toSet
-    SchemaEvolution.appendEvolved(spark, "evo.albums", spark.read.parquet(v2))
+    val root = evolving("albums")
+    Versioned.append(spark, root, spark.read.parquet(v1))
+    val firstFiles = Versioned.read(spark, root).inputFiles.toSet
+    Versioned.append(spark, root, spark.read.parquet(v2))
     // add-column is metadata-only: every v1 data file is still live
-    assert(firstFiles.subsetOf(spark.table("evo.albums").inputFiles.toSet),
+    assert(firstFiles.subsetOf(Versioned.read(spark, root).inputFiles.toSet),
       "add-column evolution must not rewrite existing files")
-    val rows = spark.sql(
-      "SELECT id, title, rating FROM evo.albums ORDER BY id")
+    val rows = Versioned.read(spark, root).select("id", "title", "rating").orderBy("id")
       .as[(Long, String, Option[Long])].collect().toSeq
     assert(rows == Seq((1L, "alpha", None), (2L, "beta", None),
       (3L, "gamma", Some(7L)), (4L, "delta", Some(9L))), s"got $rows")
   }
 
-  test("widening re-ingest (int -> long) rewrites loudly and preserves old values") {
-    spark.sql("DROP TABLE IF EXISTS evo.widen")
-    SchemaEvolution.appendEvolved(spark, "evo.widen",
+  test("widening re-ingest (int -> long) rewrites nothing and preserves old values") {
+    val root = evolving("widen")
+    Versioned.append(spark, root,
       Seq((1, "a")).toDF("k", "v")
         .select(col("k").cast("int").as("k"), col("v")))
-    assert(spark.table("evo.widen").schema("k").dataType == IntegerType)
-    SchemaEvolution.appendEvolved(spark, "evo.widen",
-      Seq((9999999999L, "b")).toDF("k", "v"))
-    assert(spark.table("evo.widen").schema("k").dataType == LongType)
-    val rows = spark.table("evo.widen").orderBy("k")
+    assert(Versioned.read(spark, root).schema("k").dataType == IntegerType)
+    val firstFiles = Versioned.read(spark, root).inputFiles.toSet
+    Versioned.append(spark, root, Seq((9999999999L, "b")).toDF("k", "v"))
+    assert(Versioned.read(spark, root).schema("k").dataType == LongType)
+    assert(firstFiles.subsetOf(Versioned.read(spark, root).inputFiles.toSet),
+      "widening must not rewrite existing files")
+    val rows = Versioned.read(spark, root).orderBy("k")
       .as[(Long, String)].collect().toSeq
     assert(rows == Seq((1L, "a"), (9999999999L, "b")), s"got $rows")
   }
 
   test("unsafe evolution (string column arriving as int) throws, table untouched") {
-    spark.sql("DROP TABLE IF EXISTS evo.unsafe")
-    SchemaEvolution.appendEvolved(spark, "evo.unsafe",
-      Seq(("x", 1L)).toDF("name", "n"))
+    val root = evolving("unsafe")
+    Versioned.append(spark, root, Seq(("x", 1L)).toDF("name", "n"))
     intercept[SchemaEvolution.IncompatibleSchemaException] {
-      SchemaEvolution.appendEvolved(spark, "evo.unsafe",
-        Seq((5, 2L)).toDF("name", "n"))
+      Versioned.append(spark, root, Seq((5, 2L)).toDF("name", "n"))
     }
-    assert(spark.table("evo.unsafe").count() == 1)
-  }
-
-  test("create path: mixed-case name lands on the lowercased managed location, non-empty orphan dir fails loudly") {
-    spark.sql("DROP TABLE IF EXISTS evo.mixedcase")
-    // Spark lowercases managed-table dir names: a mixed-case request
-    // must create/probe evo.db/mixedcase, not evo.db/MixedCase
-    SchemaEvolution.appendEvolved(spark, "evo.MixedCase",
-      Seq((1L, "a")).toDF("id", "title"))
-    assert(spark.table("evo.mixedcase").count() == 1)
-
-    // drop the table behind the catalog's back, plant a file at the
-    // managed location: the next create must refuse — not silently
-    // recursive-delete data it cannot prove it owns
-    val loc = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(spark.catalog.getDatabase("evo").locationUri),
-      "orphaned")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(loc)
-    val f = fs.create(new org.apache.hadoop.fs.Path(loc, "stale.parquet"))
-    f.write(1); f.close()
-    val e = intercept[IllegalStateException] {
-      SchemaEvolution.appendEvolved(spark, "evo.Orphaned",
-        Seq((1L, "a")).toDF("id", "title"))
-    }
-    assert(e.getMessage.contains("non-empty"))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(loc, "stale.parquet")),
-      "refusal must leave the existing data untouched")
-    fs.delete(loc, true)
-
-    // an EMPTY leftover dir (crashed DROP) is cleared and the create proceeds
-    fs.mkdirs(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(spark.catalog.getDatabase("evo").locationUri),
-      "emptyleft"))
-    SchemaEvolution.appendEvolved(spark, "evo.EmptyLeft",
-      Seq((2L, "b")).toDF("id", "title"))
-    assert(spark.table("evo.emptyleft").count() == 1)
+    assert(Versioned.read(spark, root).count() == 1)
   }
 
   test("Versioned root: evolved commit leaves the prior snapshot readable at its OLD schema") {
-    val root = Files.createTempDirectory("evo-versioned").toString + "/docs"
-    SchemaEvolution.commitEvolved(spark, root,
+    val root = evolving("versioned")
+    Versioned.append(spark, root,
       Seq((1L, "alpha"), (2L, "beta")).toDF("id", "title"))
     val v1Dir = Versioned.resolve(spark, root)
-    SchemaEvolution.commitEvolved(spark, root,
+    Versioned.append(spark, root,
       Seq((3L, "gamma", 7L)).toDF("id", "title", "rating"))
     // current version: evolved schema, old rows NULL under the new col
     val cur = Versioned.read(spark, root).orderBy("id")
       .as[(Long, String, Option[Long])].collect().toSeq
     assert(cur == Seq((1L, "alpha", None), (2L, "beta", None),
       (3L, "gamma", Some(7L))), s"current: $cur")
-    // the pre-evolution snapshot is untouched: original schema, rows
+    // the pre-evolution segment is untouched: original schema, rows
     val old = spark.read.parquet(v1Dir)
     assert(old.schema.fieldNames.toSeq == Seq("id", "title"))
     assert(old.count() == 2)

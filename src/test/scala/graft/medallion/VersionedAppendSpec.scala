@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+
 import graft.SparkTestBase
 import graft.medallion.MedallionTestKit._
 import graft.streaming.LandingStream
@@ -12,7 +14,8 @@ import graft.streaming.LandingStream
 /** [[Versioned.append]]: a version's pointer lists several segments,
   * each row lives in exactly one of them, [[Versioned.read]] reads them
   * all with the pointer's schema, and GC keeps every segment a retained
-  * pointer lists.
+  * pointer lists. An append that evolves the schema rewrites no earlier
+  * segment, and one that cannot evolve it writes nothing.
   */
 class VersionedAppendSpec extends SparkTestBase {
   import spark.implicits._
@@ -72,9 +75,9 @@ class VersionedAppendSpec extends SparkTestBase {
     val root = Files.createTempDirectory("append-schema").toString + "/t"
     Versioned.commit(spark, root, frame(1))
     val before = pointerLines(root)
-    val e = intercept[IllegalArgumentException](
+    val e = intercept[SchemaEvolution.IncompatibleSchemaException](
       Versioned.append(spark, root, Seq((2L, 5)).toDF("id", "name")))
-    assert(e.getMessage.contains("append to"), e.getMessage)
+    assert(e.getMessage.contains("cannot evolve"), e.getMessage)
     assert(pointerLines(root) == before)
     assert(versionDirs(root) == Set("v_000001"))
   }
@@ -115,6 +118,69 @@ class VersionedAppendSpec extends SparkTestBase {
     val read = Versioned.read(spark, root)
     assert(read.columns.toSeq == Seq("id", "name"))
     assert(read.count() == 0)
+  }
+
+  /** (path, modification time) of every parquet file in the active segments. */
+  private def liveFiles(root: String): Set[(String, Long)] =
+    Versioned.segments(spark, root).flatMap(d => new java.io.File(d).listFiles().toSeq)
+      .filter(_.getName.endsWith(".parquet")).map(f => f.getPath -> f.lastModified).toSet
+
+  /** `body` under the row-at-a-time parquet reader, then the vectorized one. */
+  private def bothReaders[T](body: => T): Seq[T] =
+    Seq("false", "true").map { vectorized =>
+      spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      try body finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    }
+
+  test("an added column and an int→long widening each keep every earlier segment's files live; a value past int range survives") {
+    val root = Files.createTempDirectory("append-evolve").toString + "/t"
+    Versioned.commit(spark, root, Seq((1, "a")).toDF("n", "s"))
+    val first = liveFiles(root)
+    Versioned.append(spark, root, Seq((2, "b", 0.5)).toDF("n", "s", "x"))
+    val second = liveFiles(root)
+    assert(first.subsetOf(second), "adding a column rewrote an earlier segment")
+    Versioned.append(spark, root, Seq((5000000000L, "c", 1.5)).toDF("n", "s", "x"))
+    assert(second.subsetOf(liveFiles(root)), "widening rewrote an earlier segment")
+    assert(Versioned.segments(spark, root).size == 3)
+    val read = Versioned.read(spark, root)
+    assert(read.schema.map(f => f.name -> f.dataType) ==
+      Seq("n" -> LongType, "s" -> StringType, "x" -> DoubleType))
+    bothReaders(Versioned.read(spark, root).collect().map(_.toSeq).toSet).foreach { got =>
+      assert(got == Set(Seq(1L, "a", null), Seq(2L, "b", 0.5), Seq(5000000000L, "c", 1.5)), got)
+    }
+  }
+
+  test("a column that differs only in case from the table's reads under the table's name") {
+    val root = Files.createTempDirectory("append-case").toString + "/t"
+    Versioned.commit(spark, root, Seq((1L, 7.5)).toDF("id", "score"))
+    Versioned.append(spark, root, Seq((2L, 9.0)).toDF("id", "Score"))
+    assert(Versioned.read(spark, root).columns.toSeq == Seq("id", "score"))
+    bothReaders(Versioned.read(spark, root).as[(Long, Double)].collect().toSet).foreach { got =>
+      assert(got == Set(1L -> 7.5, 2L -> 9.0), got)
+    }
+  }
+
+  test("an unsafe change leaves the pointer bytes and the root listing unchanged") {
+    val root = Files.createTempDirectory("append-unsafe").toString + "/t"
+    Versioned.commit(spark, root, Seq((1L, 7.5)).toDF("id", "score"))
+    Versioned.append(spark, root, Seq((2L, 9.0, "x")).toDF("id", "score", "note"))
+    def listing = new java.io.File(root).list().toSet
+    val (pointer, names) = (pointerBytes(root), listing)
+    // one safe change (a new column) beside an unsafe one (double → string)
+    intercept[SchemaEvolution.IncompatibleSchemaException](
+      Versioned.append(spark, root, Seq((3L, "high", 1)).toDF("id", "score", "rank")))
+    assert(pointerBytes(root) == pointer, "the pointer changed")
+    assert(listing == names, "the refused append left files behind")
+  }
+
+  test("an empty frame that adds a column still publishes the new schema") {
+    val root = Files.createTempDirectory("append-empty-evolve").toString + "/t"
+    Versioned.commit(spark, root, frame(1, 2))
+    val added = frame().withColumn("note", org.apache.spark.sql.functions.lit("x"))
+    assert(Versioned.append(spark, root, added).isDefined)
+    val read = Versioned.read(spark, root)
+    assert(read.columns.toSeq == Seq("id", "name", "note"))
+    assert(read.count() == 2 && read.filter("note IS NULL").count() == 2)
   }
 
   test("a batch of rows bronze already has leaves the pointer unchanged") {

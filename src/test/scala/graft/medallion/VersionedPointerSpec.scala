@@ -72,10 +72,10 @@ class VersionedPointerSpec extends SparkTestBase {
     assert(rows(got) == rows(inferred) && rows(got) == rows(frame.select("id", "score", "country")))
   }
 
-  test("after commitEvolved widens a column, read returns the widened schema") {
+  test("after an append widens a column, read returns the widened schema") {
     val root = Files.createTempDirectory("versioned-widen").toString + "/t"
     Versioned.commit(spark, root, Seq((1, "a")).toDF("n", "s"))
-    SchemaEvolution.commitEvolved(spark, root, Seq((2L, 0.5)).toDF("n", "x"))
+    Versioned.append(spark, root, Seq((2L, 0.5)).toDF("n", "x"))
     val df = Versioned.read(spark, root)
     assert(df.schema("n").dataType == LongType)
     assert(df.columns.toSeq == Seq("n", "s", "x"))

@@ -20,6 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the rolling per-round caches of `DedupClusters` and the session
   * memo of `ScaleOpsQueries`).
   *
+  * Tables, in `graft/medallion/Versioned.scala`: every table publishes
+  * through a `Versioned` root, which the catalog registers as an
+  * external table. A main source that writes a managed catalog table
+  * (`saveAsTable`) fails here.
+  *
   * Concurrency, in `graft/core/Concurrent.scala`: the one place that
   * creates a thread pool or starts a thread to run Spark work. Any other
   * main source that does fails here; `Bench`'s watchdog thread, which
@@ -44,6 +49,8 @@ class StructureSpec extends AnyFunSuite {
   private val publishRules = Seq(
     """\.write\b""" -> "writes a frame itself (publish through Versioned)",
     "_SUCCESS" -> "probes a commit marker (a published version is complete)")
+  private val tableRules = Seq(
+    """\bsaveAsTable\b""" -> "writes a managed table (publish through Versioned)")
   private val pinRules = Seq(
     """\blocalCheckpoint\b""" -> "checkpoints locally (use Materialize.pin)",
     """\.checkpoint\(""" -> "checkpoints (use Materialize.pin)",
@@ -93,6 +100,17 @@ class StructureSpec extends AnyFunSuite {
   test("only BatchSink starts a stream or spells the publish layout") {
     val found = violations(scalaFiles(mainRoot), sinkFile, startRules) ++
       violations(scalaFiles(streamingRoot), versionedFile, publishRules)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("no main source writes a managed table") {
+    val planted = Files.createTempFile("planted", ".scala")
+    try {
+      Files.write(planted, "object P { def f(df: DataFrame) = df.write.saveAsTable(\"t\") }".getBytes("UTF-8"))
+      assert(violations(Seq(planted), versionedFile, tableRules).nonEmpty,
+        "the table rule misses a planted saveAsTable")
+    } finally Files.delete(planted)
+    val found = violations(scalaFiles(mainRoot), versionedFile, tableRules)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 

@@ -58,16 +58,18 @@ class CatalogSurfaceSpec extends SparkTestBase {
     assert(rows(spark.table("silver.reviews")) == rows(Versioned.read(spark, l.silver("reviews"))))
   }
 
-  test("managed write path: create-from-schema, overwrite and append modes") {
+  test("a registered evolved root reads the widened and added columns through spark.table") {
     import spark.implicits._
-    val df = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
-    CatalogSurface.writeManaged(df, "bronze.managed_probe")
-    assert(spark.table("bronze.managed_probe").count() == 2)
-    CatalogSurface.writeManaged(df, "bronze.managed_probe", mode = "append")
-    assert(spark.table("bronze.managed_probe").count() == 4)
-    CatalogSurface.writeManaged(df, "bronze.managed_probe") // overwrite resets
-    assert(spark.table("bronze.managed_probe").count() == 2)
-    spark.sql("DROP TABLE bronze.managed_probe")
+    val root = Files.createTempDirectory("catalog-evolved").toString + "/t"
+    Versioned.append(spark, root, Seq((1, "a")).toDF("n", "s"))
+    Versioned.append(spark, root, Seq((5000000000L, "b", 0.5)).toDF("n", "s", "x"))
+    CatalogSurface.register(spark, "evo_spec.evolved", root)
+    val table = spark.table("evo_spec.evolved")
+    assert(table.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("n" -> "bigint", "s" -> "string", "x" -> "double"))
+    assert(table.collect().map(_.toSeq).toSet ==
+      Set(Seq(1L, "a", null), Seq(5000000000L, "b", 0.5)))
+    spark.sql("DROP TABLE evo_spec.evolved")
   }
 
   test("band_score_ranking view: Trino DDL analogue over the catalog") {

@@ -6,15 +6,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
-import graft.medallion.SchemaEvolution
+import graft.medallion.{SchemaEvolution, Versioned}
 
 /** Streaming schema evolution (SchemaEvolveStream): micro-batches at
   * schema v1, then v1+column, then widened, land in one evolving
-  * table; streamed content ≡ the batch appendEvolved replay; a
+  * table; streamed content ≡ a batch [[Versioned.append]] replay; a
   * crash-replayed batch is a no-op; unsafe evolution fails the batch
-  * loudly; pre-evolution versions keep their original schema, and
-  * superseded versions follow [[graft.medallion.Versioned]]'s
-  * retention.
+  * loudly; pre-evolution segments keep their original schema, and each
+  * batch stays a live segment of the active version.
   */
 class SchemaEvolveStreamSpec extends SparkTestBase {
   import spark.implicits._
@@ -36,7 +35,7 @@ class SchemaEvolveStreamSpec extends SparkTestBase {
     df.select(col("id").cast("long"), col("title"), col("rating"))
       .orderBy("id").as[(Long, String, Option[Long])].collect().toSeq
 
-  test("v1 then +column then widened: streamed table equals the appendEvolved batch replay") {
+  test("v1 then +column then widened: streamed table equals a Versioned.append batch replay") {
     val root = Files.createTempDirectory("evolve-stream").toString
     val (in, table, cp) = (s"$root/in", s"$root/table", s"$root/cp")
     Files.createDirectories(java.nio.file.Paths.get(in))
@@ -54,12 +53,11 @@ class SchemaEvolveStreamSpec extends SparkTestBase {
     assert(streamed.schema("id").dataType == LongType, "id must have widened to long")
     assert(contents(streamed) == expected, s"streamed: ${contents(streamed)}")
 
-    // ≡ the batch path: appendEvolved replay of the same three versions
-    spark.sql("DROP TABLE IF EXISTS evo.stream_twin")
-    Seq(v1, v2, v3).foreach(df =>
-      SchemaEvolution.appendEvolved(spark, "evo.stream_twin", df))
-    assert(contents(spark.table("evo.stream_twin")) == contents(streamed),
-      "streamed table != appendEvolved batch replay")
+    // ≡ the batch path: an append replay of the same three versions
+    val twin = s"$root/twin"
+    Seq(v1, v2, v3).foreach(df => Versioned.append(spark, twin, df))
+    assert(contents(Versioned.read(spark, twin)) == contents(streamed),
+      "streamed table != Versioned.append batch replay")
   }
 
   test("crash-replayed batch is a no-op; pre-evolution snapshot keeps its schema") {
@@ -78,7 +76,7 @@ class SchemaEvolveStreamSpec extends SparkTestBase {
     assert(contents(SchemaEvolveStream.read(spark, table)) == before,
       "replay changed the table")
 
-    // the pre-evolution version (v_000001, written by batch 0) is
+    // the pre-evolution segment (v_000001, written by batch 0) is
     // untouched: original schema, no rating column
     val first = spark.read.parquet(s"$table/v_000001")
     assert(first.schema.fieldNames.toSeq == Seq("id", "title"))
@@ -100,21 +98,19 @@ class SchemaEvolveStreamSpec extends SparkTestBase {
     assert(state == before)
   }
 
-  test("snapshots are pruned to the trailing window") {
-    val root = Files.createTempDirectory("evolve-prune").toString
+  test("seven batches are seven live segments, none tombstoned") {
+    val root = Files.createTempDirectory("evolve-segments").toString
     val table = s"$root/table"
     (0 until 7).foreach { i =>
       SchemaEvolveStream.applyBatch(spark,
         writeFiles(root, s"b$i", Seq((i, s"t$i")).toDF("id", "title")), i.toLong, table)
     }
-    // Versioned's retention: the active and the previous version are
-    // kept; every older one carries the tombstone that starts its GC
-    // grace, and stays readable until the grace runs out
-    val names = new java.io.File(table).list().toSet
+    // each batch appends its own segment: every one stays in the active
+    // version, so none is superseded or tombstoned for GC
     val versions = (1 to 7).map(n => f"v_$n%06d")
-    assert(versions.forall(names), s"versions: $names")
-    assert(versions.map(v => names(s".$v.reap")) == Seq.fill(5)(true) ++ Seq(false, false),
-      s"tombstones: ${names.filter(_.endsWith(".reap"))}")
+    assert(Versioned.segments(spark, table) == versions.map(v => s"$table/$v"))
+    val names = new java.io.File(table).list().toSet
+    assert(!names.exists(_.endsWith(".reap")), s"tombstones: ${names.filter(_.endsWith(".reap"))}")
     // and the active content accumulated all seven batches
     assert(SchemaEvolveStream.read(spark, table).count() == 7)
   }

@@ -145,7 +145,7 @@ class StreamingSpec extends SparkTestBase {
     assert(Versioned.read(spark, lake.bronze("d")).count() == 5)
   }
 
-  test(s"a batch append folds a chain longer than ${LandingStream.MaxSegments} segments; bronze equals a clean run") {
+  test(s"a batch append folds a chain longer than ${Versioned.MaxSegments} segments; bronze equals a clean run") {
     def seeded(tag: String): Lake = {
       val lake = Lake(Files.createTempDirectory(tag).toString)
       Versioned.commit(spark, lake.bronze("d"), spark.range(3).selectExpr("id", "id * 2 AS v"))
@@ -159,13 +159,13 @@ class StreamingSpec extends SparkTestBase {
       import spark.implicits._
       Versioned.read(spark, lake.bronze("d")).as[(Long, Long)].collect().toSeq.sorted
     }
-    val batches = LandingStream.MaxSegments + 1
+    val batches = Versioned.MaxSegments + 1
     val lake = seeded("append-fold")
     val chain = (1 to batches).map { k =>
       LandingStream.appendBatch(spark, lake, "d", batch(k))
       Versioned.segments(spark, lake.bronze("d")).size
     }
-    assert(chain.max <= LandingStream.MaxSegments, s"chain lengths ${chain.mkString(",")}")
+    assert(chain.max <= Versioned.MaxSegments, s"chain lengths ${chain.mkString(",")}")
     // the seed plus 31 appends fill the chain; the 32nd append folds it
     assert(chain.last == 2, s"chain lengths ${chain.mkString(",")}")
 
